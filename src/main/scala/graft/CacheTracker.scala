@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -19,31 +20,38 @@ object CacheTracker {
 
   def track[T](ds: Dataset[T]): Dataset[T] = synchronized { live += ds; ds }
 
-  /** Plan-keyed metadata memo (canonicalized plan -> row count), scoped
-    * to the same lifecycle as the result caches: operators that derive a
-    * tuning constant from an eager count (nearDupPairs' adaptive LSH
-    * width) memoize it here so a query calling the operator twice over
-    * the same frame pays the count job once. Cleared by [[releaseAll]]
-    * (every harness query boundary), so a count can never go stale
-    * across queries — within one query the inputs are immutable by
+  /** Plan-keyed memo (kind, canonicalized plan) -> value, scoped to the
+    * same lifecycle as the result caches: an operator called twice over
+    * the same frame within one query pays its eager side job once —
+    * nearDupPairs' adaptive-width count ([[cachedCount]]), the
+    * classifiers' featurized checkpoint ([[cachedCheckpoint]]). Cleared
+    * by [[releaseAll]] (every harness query boundary), so a count can
+    * never go stale and a checkpoint is never read after [[drainAll]]
+    * freed its blocks — within one query the inputs are immutable by
     * contract. */
-  private val counts =
-    scala.collection.mutable.HashMap.empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long]
+  private val memo = scala.collection.mutable.HashMap.empty[(String, LogicalPlan), Any]
 
-  def cachedCount(df: org.apache.spark.sql.DataFrame): Long = {
-    val key = df.queryExecution.analyzed.canonicalized
-    val hit = synchronized(counts.get(key))
-    hit.getOrElse {
-      val n = df.count()
-      synchronized(counts.update(key, n))
-      n
-    }
+  private def memoized[T](kind: String, df: DataFrame)(compute: => T): T = {
+    val key = (kind, df.queryExecution.analyzed.canonicalized)
+    synchronized(memo.get(key)).getOrElse {
+      val v = compute
+      synchronized(memo.update(key, v))
+      v
+    }.asInstanceOf[T]
   }
+
+  def cachedCount(df: DataFrame): Long =
+    memoized("count", df)(df.count())
+
+  /** `df.localCheckpoint(eager = true)`, shared by every call on the same
+    * plan until the next [[releaseAll]]. */
+  def cachedCheckpoint(df: DataFrame): DataFrame =
+    memoized("checkpoint", df)(df.localCheckpoint(true))
 
   def releaseAll(): Unit = synchronized {
     live.foreach(ds => try ds.unpersist() catch { case _: Throwable => () })
     live.clear()
-    counts.clear()
+    memo.clear()
   }
 
   /** [[releaseAll]] plus every other persisted block on the context —

@@ -1,10 +1,15 @@
 package graft.ml
 
-import org.apache.spark.ml.Pipeline
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ml.{Pipeline, Transformer}
 import org.apache.spark.ml.classification.{LinearSVC, NaiveBayes}
-import org.apache.spark.ml.feature.{HashingTF, IDF, RegexTokenizer, SQLTransformer}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.feature.{HashingTF, IDF, RegexTokenizer}
+import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, Identifiable}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.operators.TextOps
 
@@ -20,8 +25,10 @@ import graft.operators.TextOps
   *    and reproducible by the DuckDB oracle (randomSplit is neither
   *    partition-stable nor reproducible outside Spark);
   *  - cleaning is the shared [[TextOps.cleanText]] chain;
-  *  - metrics stay DataFrames end-to-end (NB.scala:94's
-  *    `.rdd.map(...)` round-trip is exactly what loses codegen).
+  *  - metrics come from the confusion matrix, collected once: a few
+  *    cells whose weighted sums are computed locally, with no further
+  *    Spark job (NB.scala:94's `.rdd.map(...)` round-trip ships every
+  *    prediction instead).
   */
 object Sentiment {
 
@@ -35,10 +42,7 @@ object Sentiment {
   /** Featurize: clean → tokenize → HashingTF → IDF(minDocFreq), the
     * NB.scala:71-80 pipeline on a `label`/`text` frame. */
   def featurizer(numFeatures: Int = 1 << 16, minDocFreq: Int = 0): Pipeline = {
-    val clean = new SQLTransformer().setStatement(
-      "SELECT *, trim(regexp_replace(lower(regexp_replace(regexp_replace(regexp_replace(" +
-        "regexp_replace(text, '(?i)(https?://\\\\S+|www\\\\.\\\\S+)', ''), " +
-        "'[@#&]\\\\w+', ''), '\\\\d+', ''), '[^a-zA-Z ]', ' ')), '\\\\s+', ' ')) AS clean FROM __THIS__")
+    val clean = new TextCleaner()
     val tok = new RegexTokenizer().setInputCol("clean").setOutputCol("words")
       .setPattern("\\s+")
     val tf = new HashingTF().setInputCol("words").setOutputCol("rawFeatures")
@@ -71,11 +75,10 @@ object Sentiment {
                            clf: org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]): DataFrame = {
     // localCheckpoint: iterative estimators (LinearSVC does maxIter passes)
     // and the test-side transform must not re-run the featurize chain per
-    // pass — and under a multi-hundred-query official pass MEMORY_AND_DISK
-    // cache blocks were observed evicted+recomputed mid-fit (the r12-r14
-    // svm_predictions 1.95→2.84 s drift); checkpointed partitions cannot be
-    val withSplit = feats.withColumn("split", splitCol("id"))
-      .localCheckpoint(true)
+    // pass, and checkpointed partitions, unlike MEMORY_AND_DISK cache
+    // blocks, cannot be evicted and recomputed mid-fit. Every classifier
+    // fitted on the same frame within one query shares one checkpoint.
+    val withSplit = graft.CacheTracker.cachedCheckpoint(feats.withColumn("split", splitCol("id")))
     val train = withSplit.filter(col("split") === "train")
     val test = withSplit.filter(col("split") === "test")
     val fitted = clf.fit(train).asInstanceOf[org.apache.spark.ml.Model[_]]
@@ -117,61 +120,53 @@ object Sentiment {
     predictions.groupBy(col("label"), col("prediction")).agg(count(lit(1)).as("n"))
 
   /** Accuracy + weighted precision/recall/F1 from (label, prediction)
-    * (A16; NB.scala:98-99), entirely as DataFrame aggregation.
-    *
-    * Shape: per-class support / predicted / tp come from ONE union +
-    * groupBy over the confusion matrix (each cm row feeds its label's
-    * support+tp and its prediction's predicted count) instead of a
-    * five-way join fan-out — the earlier formulation planned 37 exchanges
-    * of sub-kilobyte frames; this one plans 4. */
+    * (A16; NB.scala:98-99) as a one-row local frame. The confusion matrix
+    * is collected once and the metrics are computed locally in one
+    * pass over its cells: per class, support (rows with that label),
+    * predicted (rows with that prediction) and true positives. Classes
+    * that are predicted but never a true label carry no weight. Each
+    * weighted metric sums its per-class terms in ascending order, so the
+    * result does not depend on cell order (the oracle sorts the same way
+    * with list_sort + list_reduce), then rounds to 6 dp HALF_UP like SQL
+    * `round`. Empty input gives a null accuracy and 0.0 for the rest.
+    * Label and prediction are expected to share a type. */
   def evalMetrics(predictions: DataFrame): DataFrame = {
-    val cm = confusionMatrix(predictions).cache()
-    val byLabel = cm.select(col("label").as("cls"), col("n"),
-      when(col("label") === col("prediction"), col("n")).otherwise(lit(0L)).as("tpn"),
-      lit(true).as("is_support"))
-    val byPred = cm.select(col("prediction").as("cls"), col("n"),
-      lit(0L).as("tpn"), lit(false).as("is_support"))
-    val perClass = byLabel.unionByName(byPred)
-      .groupBy("cls")
-      .agg(
-        sum(when(col("is_support"), col("n")).otherwise(lit(0L))).as("support"),
-        sum(when(!col("is_support"), col("n")).otherwise(lit(0L))).as("predicted"),
-        sum(col("tpn")).as("tp"))
-      // classes that are predicted but never a true label carry no weight
-      // (support 0) — excluded, matching the label-driven formulation
-      .filter(col("support") > 0)
-      .withColumn("precision",
-        when(col("predicted") > 0, col("tp").cast("double") / col("predicted")).otherwise(0.0))
-      .withColumn("recall",
-        when(col("support") > 0, col("tp").cast("double") / col("support")).otherwise(0.0))
-      .withColumn("f1",
-        when(col("precision") + col("recall") > 0,
-          lit(2.0) * col("precision") * col("recall") / (col("precision") + col("recall")))
-          .otherwise(0.0))
-    val tot = perClass.agg(sum("support").as("total"), sum("tp").as("correct"))
-    // double sums are order-sensitive in the last bits and aggregation
-    // order is nondeterministic — sort the handful of per-class terms and
-    // fold sequentially so the result is bit-stable (the oracle does the
-    // same with list_sort + list_reduce)
-    def stableSum(c: org.apache.spark.sql.Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (acc, x) => acc + x)
-    val out = perClass
-      .crossJoin(broadcast(tot))
-      .select(col("total"), col("correct"),
-        (col("f1") * col("support") / col("total")).as("wf1_part"),
-        (col("precision") * col("support") / col("total")).as("wp_part"),
-        (col("recall") * col("support") / col("total")).as("wr_part"))
-      .agg(
-        round(max(col("correct")).cast("double") / max(col("total")), 6).as("accuracy"),
-        round(stableSum(col("wp_part")), 6).as("weighted_precision"),
-        round(stableSum(col("wr_part")), 6).as("weighted_recall"),
-        round(stableSum(col("wf1_part")), 6).as("weighted_f1"))
-      .select("accuracy", "weighted_precision", "weighted_recall", "weighted_f1")
-    graft.CacheTracker.track(
-      out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    out.count()
-    cm.unpersist() // one-row result is cached; drop the confusion cache
-    out
+    final class PerClass { var support = 0L; var predicted = 0L; var tp = 0L }
+    val byClass = new java.util.HashMap[Any, PerClass]()
+    def of(cls: Any) = byClass.computeIfAbsent(cls, _ => new PerClass)
+    confusionMatrix(predictions)
+      .select(col("label"), col("prediction"), col("n"),
+        coalesce(col("label") === col("prediction"), lit(false)))
+      .collect()
+      .foreach { cell =>
+        val n = cell.getLong(2)
+        val byLabel = of(cell.get(0))
+        byLabel.support += n
+        if (cell.getBoolean(3)) byLabel.tp += n
+        of(cell.get(1)).predicted += n
+      }
+    val classes = byClass.values.asScala.filter(_.support > 0).toSeq
+    val total = classes.map(_.support).sum
+    def weighted(term: PerClass => Double): Double = {
+      val parts = classes.map(c => term(c) * c.support / total).toArray
+      java.util.Arrays.sort(parts)
+      parts.foldLeft(0.0)(_ + _)
+    }
+    def precision(c: PerClass) = if (c.predicted > 0) c.tp.toDouble / c.predicted else 0.0
+    def recall(c: PerClass) = c.tp.toDouble / c.support
+    def f1(c: PerClass) = {
+      val (p, r) = (precision(c), recall(c))
+      if (p + r > 0) 2.0 * p * r / (p + r) else 0.0
+    }
+    def round6(x: Double) =
+      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    val accuracy = if (total == 0) null else round6(classes.map(_.tp).sum.toDouble / total)
+    val schema = StructType(Seq("accuracy", "weighted_precision", "weighted_recall",
+      "weighted_f1").map(StructField(_, DoubleType)))
+    predictions.sparkSession.createDataFrame(
+      java.util.List.of(Row(accuracy, round6(weighted(precision)), round6(weighted(recall)),
+        round6(weighted(f1)))),
+      schema)
   }
 
   /** Positive/negative opinion words for [[lexiconScore]] — a fixed tiny
@@ -202,3 +197,26 @@ object Sentiment {
           / nullif(col("n_tokens"), lit(0L)), 6).as("polarity"))
   }
 }
+
+/** The featurizer's clean stage: `text` → `clean` through
+  * [[TextOps.cleanText]]. A plain persistable Transformer rather than a
+  * SQLTransformer, so it needs no SQL-registered function and runs in
+  * any session, with or without graft's extensions. */
+class TextCleaner(override val uid: String) extends Transformer with DefaultParamsWritable {
+
+  def this() = this(Identifiable.randomUID("textCleaner"))
+
+  override def transform(dataset: Dataset[_]): DataFrame = {
+    transformSchema(dataset.schema)
+    dataset.withColumn("clean", TextOps.cleanText(col("text")))
+  }
+
+  override def transformSchema(schema: StructType): StructType = {
+    require(schema.fieldNames.contains("text"), "TextCleaner needs a `text` column")
+    schema.add("clean", StringType)
+  }
+
+  override def copy(extra: ParamMap): TextCleaner = defaultCopy(extra)
+}
+
+object TextCleaner extends DefaultParamsReadable[TextCleaner]

@@ -2,16 +2,25 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 
-/** Text cleaning + tokenization + per-document text analysis, all as
-  * whole-stage-codegen'd Column expressions (no UDFs, no RDDs).
+import graft.functions.CleanText
+
+/** Text cleaning + tokenization + per-document text analysis, as Column
+  * expressions that whole-stage codegen compiles (no UDFs, no RDDs).
   *
-  * Semantics derived from the reference cleanup chain
+  * Cleaning follows the reference cleanup chain
   * (reference Spark/NB/src/main/scala/NB.scala:53-59): strip URLs, strip
   * mention/hashtag/entity tokens, strip digits, non-letters to space,
-  * lowercase, trim, collapse whitespace. Regexes are deliberately
-  * RE2-compatible (no lookahead, unlike NB.scala:53) so the same pattern
-  * runs identically in Java regex and in DuckDB/RE2 for the oracle.
+  * lowercase, collapse whitespace, trim. [[cleanText]] runs it as the
+  * native one-pass kernel [[graft.functions.CleanText]]. The regexes
+  * below state its semantics: CleanTextSpec rebuilds the
+  * `regexp_replace` chain from them and checks the kernel against it
+  * byte for byte, and `Oracles.clean` runs the same patterns in DuckDB.
+  * They avoid lookahead (unlike NB.scala:53) so RE2 runs them too; the
+  * two engines still differ at the edges (RE2's `\s` lacks \x0B, and its
+  * `(?i)` folds non-ASCII letters such as 'ſ' to 's'), which the
+  * oracle-checked testdata does not contain.
   *
   * Scale: every op here is narrow (per-row) — zero shuffle, scales
   * linearly to any number of executors.
@@ -24,17 +33,9 @@ object TextOps {
   val NonLetterRe = "[^a-zA-Z ]"
   val WsRe = "\\s+"
 
-  /** Full cleanup chain (NB.scala:53-59 semantics, RE2-safe regexes). */
+  /** Full cleanup chain (NB.scala:53-59 semantics) in one pass. */
   def cleanText(c: Column): Column =
-    trim(
-      regexp_replace(
-        lower(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(regexp_replace(c, UrlRe, ""), TagRe, ""),
-              DigitRe, ""),
-            NonLetterRe, " ")),
-        WsRe, " "))
+    ColumnShim.column(CleanText(ColumnShim.expression(c)))
 
   /** Whitespace tokenization of cleaned text, empty tokens dropped
     * (reference ml.Tokenizer, NB.scala:71). */

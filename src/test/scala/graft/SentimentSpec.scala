@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ml.classification.{LinearSVC, NaiveBayes}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import graft.ml.Sentiment
 
@@ -64,6 +66,64 @@ class SentimentSpec extends SparkSpec {
     assert(m.getAs[Double]("accuracy") === math.rint(4.0 / 6 * 1e6) / 1e6)
     // per-class: c1 p=2/3 r=2/3 f1=2/3; c0 p=2/3 r=2/3 f1=2/3 -> weighted = 2/3
     assert(m.getAs[Double]("weighted_f1") === math.rint(2.0 / 3 * 1e6) / 1e6)
+  }
+
+  test("evalMetrics edge cases: empty, null classes, predicted-only class, -0.0") {
+    def metrics(rows: Seq[(Option[Double], Option[Double])]): Seq[Option[Double]] = {
+      val r = Sentiment.evalMetrics(rows.toDF("label", "prediction")).head()
+      (0 until 4).map(i => if (r.isNullAt(i)) None else Some(r.getDouble(i)))
+    }
+    def row(xs: Double*) = xs.map(Some(_))
+    val (n0, n1, n2, nul) = (Some(0.0), Some(1.0), Some(2.0), None)
+    assert(metrics(Nil) === None +: row(0.0, 0.0, 0.0))
+    assert(metrics(Seq(nul -> n1, n1 -> n1, n0 -> n1, nul -> nul, n0 -> nul)) ===
+      row(0.2, 0.066667, 0.2, 0.1))
+    assert(metrics(Seq(n0 -> n0, n0 -> n2, n1 -> n1, n1 -> n2, n1 -> n0)) ===
+      row(0.4, 0.8, 0.4, 0.5))
+    assert(metrics(Seq(Some(-0.0) -> n0, n0 -> n0, n1 -> Some(-0.0))) ===
+      row(0.666667, 0.444444, 0.666667, 0.533333))
+  }
+
+  test("classifiers on one featurized frame share one checkpoint until drainAll") {
+    CacheTracker.drainAll(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_feats").toString
+    corpus.write.mode("overwrite").parquet(dir)
+    val data = spark.read.parquet(dir)
+    val feats = Sentiment.featurizer().fit(data).transform(data)
+    // stages that scan the parquet source: one per featurize-chain run
+    // (a read from checkpoint blocks has no file scan in its lineage)
+    @volatile var scans = 0
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans += 1
+    }
+    // listener delivery is async: poll until the counter holds still
+    def settle(): Int = {
+      var prev = scans; var stable = 0; var iters = 0
+      while (stable < 3 && iters < 50) {
+        Thread.sleep(10)
+        if (scans == prev) stable += 1 else { stable = 0; prev = scans }
+        iters += 1
+      }
+      scans
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val nb = Sentiment.fitPredictFeaturized(feats, new NaiveBayes())
+        .as[(Long, Double, Double)].collect().toSet
+      Sentiment.fitPredictFeaturized(feats, new LinearSVC().setMaxIter(10).setRegParam(0.1))
+      assert(settle() === 1, "both fits must share one featurize run")
+      // drainAll frees the checkpoint's blocks: the next call must featurize
+      // again, not read the freed blocks
+      CacheTracker.drainAll(spark)
+      val again = Sentiment.fitPredictFeaturized(feats, new NaiveBayes())
+        .as[(Long, Double, Double)].collect().toSet
+      assert(settle() === 2)
+      assert(again === nb)
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      CacheTracker.drainAll(spark)
+    }
   }
 
   test("fitted pipeline persists and reloads with identical predictions") {
