@@ -67,6 +67,13 @@ object Bench {
       .map(_.trim.split("\\s+")(1).toLong).getOrElse(-1L)
     catch { case _: Throwable => -1L }
 
+  /** Generated classes compiled in this JVM so far, by the driver and (in
+    * local mode) by executor tasks. The delta around a timed query counts
+    * the classes it compiled instead of finding in the codegen cache: 0
+    * for a warm query whose classes are still cached. */
+  private def compiledClasses(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Poll `counter` until it holds still for two consecutive 10 ms reads
     * (max 200 ms): a cheap stand-in for LiveListenerBus.waitUntilEmpty,
     * which is private[spark]. */
@@ -135,21 +142,12 @@ object Bench {
 
   private final case class QRes(name: String, sec: Double, gcMs: Long,
     spill: Long, jobs: Long, buildMs: Long, wallStart: Double, cpuMs: Long,
-    readBytes: Long, writeBytes: Long, cachedDeltaKb: Long)
+    readBytes: Long, writeBytes: Long, cachedDeltaKb: Long, compiled: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, default 100: a multi-hundred-query pass generates far
-      // more codegen'd classes than that, so the LRU thrashes and Janino
-      // recompiles the same stages all pass long — pure driver-side churn
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session(s"local[$cpus]", Some(cpus))
     // ERROR, not WARN: WindowExec/other WARNs interleave with (and in the
     // worst case split) the one-line JSON contract the driver tails for.
     spark.sparkContext.setLogLevel("ERROR")
@@ -179,6 +177,7 @@ object Bench {
       settle(() => spill.bytes.get())
       val (gc0, sp0, jb0) = (gcMillis(), spill.bytes.get(), spill.jobs.get())
       val (cpu0, (rd0, wr0), ca0) = (cpuMs(), diskIo(), cachedKb())
+      val cg0 = compiledClasses()
       val t0 = System.nanoTime()
       val wallStart = (t0 - passT0) / 1e9
       // build (plan construction + analysis + any operator-eager stats
@@ -192,6 +191,7 @@ object Bench {
       } catch { case _: Throwable => false }
       // a crashed query reports -1, never a fake timing
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      val compiled = compiledClasses() - cg0
       settle(() => spill.bytes.get())
       drainBlocks(spark) // release AFTER the timing: unpersist is bookkeeping, not query work
       val (cpu1, (rd1, wr1), ca1) = (cpuMs(), diskIo(), cachedKb())
@@ -201,7 +201,8 @@ object Bench {
         if (cpu0 >= 0 && cpu1 >= 0) cpu1 - cpu0 else -1L,
         if (rd0 >= 0 && rd1 >= 0) rd1 - rd0 else -1L,
         if (wr0 >= 0 && wr1 >= 0) wr1 - wr0 else -1L,
-        if (ca0 >= 0 && ca1 >= 0) ca1 - ca0 else 0L)
+        if (ca0 >= 0 && ca1 >= 0) ca1 - ca0 else 0L,
+        compiled)
     }
     val timings = results.map(r => r.name -> r.sec)
     // total covers successful queries only; failures stay visible as -1
@@ -266,6 +267,8 @@ object Bench {
     // interference window is identifiable from the artifact (wall >> own
     // CPU with small reads = starved by outside load; Cached: drop =
     // page-cache eviction) instead of consuming a verdict cycle.
+    // codegen_classes per query: classes compiled during the timed call,
+    // so a query that misses the codegen cache on every call shows up.
     // Harden the artifact write: a pass pointed at a fresh directory must
     // not run 47 minutes and then throw away every measurement because
     // the parent dir does not exist (reproduced in r18; ADVICE item).
@@ -287,6 +290,7 @@ object Bench {
         s""""disk_read_bytes":${jlong(results.map(r => r.name -> r.readBytes))},""" +
         s""""disk_write_bytes":${jlong(results.map(r => r.name -> r.writeBytes))},""" +
         s""""cached_delta_kb":${jlong(results.map(r => r.name -> r.cachedDeltaKb))},""" +
+        s""""codegen_classes":${jlong(results.map(r => r.name -> r.compiled))},""" +
         s""""solo_median":${jmap(soloMedians)},"sf":"$sfDir"}""")
     // subset runs (dev A/B) show exactly what was asked for
     val head = if (subset.nonEmpty) jmap(timings)

@@ -16,7 +16,17 @@ object Graft {
 
   /** Session builder with the graft extensions and scale-appropriate
     * defaults. `shufflePartitions` should track cluster parallelism
-    * (cores × executors at scale; cores here). */
+    * (cores × executors at scale; cores here).
+    *
+    * The codegen cache size is a static, JVM-wide conf: the first session
+    * that compiles generated code fixes it for the whole JVM. Spark's
+    * default of 100 classes is far below what a multi-query pass
+    * generates, so the LRU would evict and Janino recompile the same
+    * stages over and over. The cache is keyed by the generated source,
+    * and adaptive execution numbers a query's codegen stages in the order
+    * its stages happen to materialize, so the stage id is kept out of the
+    * class name: otherwise the same stage under another number is another
+    * class to compile. */
   def session(master: String = "local[*]",
               shufflePartitions: Option[Int] = None): SparkSession = {
     val b = SparkSession.builder()
@@ -25,6 +35,8 @@ object Graft {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
     shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n))
     b.getOrCreate()
   }
@@ -46,7 +58,7 @@ object Graft {
     * because the view must live — and execute — in THIS session's
     * catalog, that generation sets it on this session and leaves it set:
     * that is part of what mounting such a dataset means. Query lambdas
-    * that must not mutate the shared session read through a cloned
+    * that must not mutate the shared session read through a child
     * session instead (SparkEntry.events). */
   def registerTables(spark: SparkSession, dir: String): Unit = {
     install(spark)

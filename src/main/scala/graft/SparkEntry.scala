@@ -39,9 +39,9 @@ object SparkEntry {
     * TimestampType — with the UTC session TZ the NTZ→LTZ cast is
     * wall-clock-identity, matching the DuckDB oracle's naive reading —
     * so every downstream operator sees one stable type. The legacy conf
-    * is scoped to a cloned session (own SQLConf, shared SparkContext) so
-    * the caller's session is never mutated as a side effect; it is a
-    * no-op for non-nanos files. */
+    * is scoped to a child session (own SQLConf, shared SparkContext, see
+    * [[nanosSession]]) so the caller's session is never mutated as a side
+    * effect; it is a no-op for non-nanos files. */
   private[graft] def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -51,11 +51,25 @@ object SparkEntry {
       case _ => df
     }
 
-  private def events(spark: SparkSession, dir: String): DataFrame = {
-    val iso = spark.newSession()
-    iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(iso.read.parquet(s"$dir/events.parquet"))
-  }
+  /** One child session per parent session, with the legacy nanosAsLong
+    * conf set, for reading events.parquet in either generation. It is
+    * built once and reused, not built per call: Spark keys its codegen
+    * cache by class loader as well as by code, and each new session
+    * brings its own class loader, so a fresh child per call would compile
+    * every generated class of the query again. Weakly keyed, so a parent
+    * session nothing else holds can still be collected. */
+  private val nanosChildren =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, SparkSession])
+
+  private[graft] def nanosSession(spark: SparkSession): SparkSession =
+    nanosChildren.computeIfAbsent(spark, { (parent: SparkSession) =>
+      val child = parent.newSession()
+      child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      child
+    })
+
+  private[graft] def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeEventTs(nanosSession(spark).read.parquet(s"$dir/events.parquet"))
 
   /** Re-spread a coarse scan to cluster width before CPU-heavy per-row
     * stages. A single small parquet file scans as one partition, which

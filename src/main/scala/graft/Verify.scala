@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Extra args
@@ -12,17 +11,8 @@ object Verify {
     // a typo'd subset name would otherwise dump nothing and pass vacuously
     val unknown = subset.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, default 100: a multi-hundred-query pass generates far
-      // more codegen'd classes than that, so the LRU thrashes and Janino
-      // recompiles the same stages all pass long — pure driver-side churn
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session(s"local[$cpus]", Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A throwing query must stay VISIBLE in the correctness artifact: in

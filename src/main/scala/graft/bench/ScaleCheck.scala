@@ -86,12 +86,8 @@ object ScaleCheck {
     spark.sparkContext.setLogLevel("WARN")
     val width = spark.sparkContext.defaultParallelism
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet").repartition(width)
-    val iso = spark.newSession()
-    iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // schema-adaptive: testdata's ts type drifts between generations
-    val events0 = graft.SparkEntry
-      .normalizeEventTs(iso.read.parquet(s"$sfDir/events.parquet"))
-      .repartition(width)
+    val events0 = graft.SparkEntry.events(spark, sfDir).repartition(width)
     val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet").repartition(width)
 
     for (m <- ms) {

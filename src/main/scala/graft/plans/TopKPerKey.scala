@@ -57,6 +57,11 @@ case class TopKPerKeyExec(k: Int, partitionExprs: Seq[Expression],
     // there (the final phase re-merges), bounding memory like a
     // spilling partial aggregate. The final phase sees clustered keys.
     val flushKeys = conf.getConfString("graft.topk.flushKeys", (1 << 17).toString).toInt
+    // a heap grows on demand, so its initial size only saves regrowth for
+    // small k; sizing it k + 1 outright overflows at k = Int.MaxValue (a
+    // "no limit" rank filter the rewrite rule also turns into this node)
+    // and would allocate k slots per key for any large k
+    val heapInit = math.min(kLocal, 1024) + 1
     child.execute().mapPartitions { rows =>
       import scala.jdk.CollectionConverters._
       val keyProj = UnsafeProjection.create(partExprs, childOutput)
@@ -74,12 +79,12 @@ case class TopKPerKeyExec(k: Int, partitionExprs: Seq[Expression],
           if (isPartial && heaps.size() >= FlushKeys) {
             val flushed = heaps.values().asScala.toArray.flatMap(_.iterator().asScala)
             heaps.clear()
-            heap = new java.util.PriorityQueue[InternalRow](kLocal + 1, rowOrd.reverse)
+            heap = new java.util.PriorityQueue[InternalRow](heapInit, rowOrd.reverse)
             heaps.put(key.copy(), heap)
             heap.add(row.copy())
             flushed.iterator
           } else {
-            heap = new java.util.PriorityQueue[InternalRow](kLocal + 1, rowOrd.reverse)
+            heap = new java.util.PriorityQueue[InternalRow](heapInit, rowOrd.reverse)
             heaps.put(key.copy(), heap)
             heap.add(row.copy())
             Iterator.empty

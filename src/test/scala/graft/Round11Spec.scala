@@ -123,13 +123,9 @@ class Round11Spec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val total = SparkEntry.queries("attribution_last_touch")(spark, dir)
       .agg(sum("attributed_cents")).head.getLong(0)
-    val expected = {
-      val e = spark.newSession()
-      e.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      SparkEntry.normalizeEventTs(e.read.parquet(s"$dir/events.parquet"))
-        .filter(col("event_type") === "purchase")
-        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)"))).head.getLong(0)
-    }
+    val expected = SparkEntry.events(spark, dir)
+      .filter(col("event_type") === "purchase")
+      .agg(sum(expr("CAST(round(value * 100) AS BIGINT)"))).head.getLong(0)
     assert(total === expected, "last-touch attributes every purchase exactly once")
     // linear attribution conserves cents over the attributed subset:
     // every touched purchase's cents split+remainder sums back exactly -

@@ -10,9 +10,7 @@ class Round16Spec extends SparkSpec {
 
   private def eventsDf = {
     assumeTestdata(sf)
-    val iso = spark.newSession()
-    iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    SparkEntry.normalizeEventTs(iso.read.parquet(s"$sf/events.parquet"))
+    SparkEntry.events(spark, sf)
   }
 
   test("bitmap_window_distinct is EXACT: n_distinct equals the raw windowed countDistinct") {
@@ -254,9 +252,7 @@ class Round16Spec extends SparkSpec {
     assumeTestdata(sf)
     val out = SparkEntry.queries("sql_bag_set_ops")(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val iso = spark.newSession()
-    iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = SparkEntry.normalizeEventTs(iso.read.parquet(s"$sf/events.parquet"))
+    val ev = SparkEntry.events(spark, sf)
     val nClick = ev.filter(col("event_type") === "click").count()
     // |c| = INTERSECT ALL + EXCEPT ALL (each click row either matches a
     // view multiplicity slot or survives the clamped difference)

@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", Some(4))
 
   /** Skip (not fail) a test that reads the driver-generated testdata on
     * a machine where it was never generated — TestdataDriftSpec's

@@ -35,11 +35,8 @@ class TestdataDriftSpec extends SparkSpec {
 
   test("events loader normalizes ts to TimestampType on every SF") {
     for (dir <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val path = s"/root/testdata/$dir/events.parquet"
-      assume(new java.io.File(path).exists())
-      val iso = spark.newSession()
-      iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = SparkEntry.normalizeEventTs(iso.read.parquet(path))
+      assume(new java.io.File(s"/root/testdata/$dir/events.parquet").exists())
+      val df = SparkEntry.events(spark, s"/root/testdata/$dir")
       assert(df.schema("ts").dataType == TimestampType,
         s"$dir: ts is ${df.schema("ts").dataType}, want TimestampType")
     }

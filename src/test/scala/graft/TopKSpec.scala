@@ -60,4 +60,10 @@ class TopKSpec extends SparkSpec {
       .select("k", "id").as[(Long, Long)].collect().toSet
     assert(out === Set((1L, 1L), (1L, 2L), (2L, 3L)))
   }
+
+  test("k = Int.MaxValue keeps every row") {
+    TopK.register(spark)
+    val out = TopK.topKPerKey(data, Seq("k"), Seq("score" -> true, "id" -> true), Int.MaxValue)
+    assert(out.count() === 10000)
+  }
 }

@@ -8,8 +8,9 @@ THIS output, byte-for-byte, so the status can never drift from the file.
 
 Usage: python3 tools/bench_summary.py [BENCH_FULL.json]
 
-Prints: total, query count, per-query mean/median/p90, spill total, and the
-full >2.5×-solo outlier list (official vs solo_median), ready to paste.
+Prints: total, query count, per-query mean/median/p90, spill total, classes
+compiled in the timed calls, and the full >2.5×-solo outlier list (official
+vs solo_median), ready to paste.
 """
 import json
 import sys
@@ -44,6 +45,14 @@ def main() -> None:
     print(f"unadjudicated_outliers: "
           f"{unadj if unadj is not None else 'not in artifact (pre-r18)'}")
     print(f"spill_bytes total: {spill}")
+    compiled = b.get("codegen_classes")
+    if compiled is None:
+        print("codegen_classes total: not in artifact")
+    else:
+        recompiling = sum(1 for v in compiled.values() if v > 0)
+        print(f"codegen_classes total: {sum(compiled.values())} "
+              f"({recompiling} of {len(compiled)} queries compiled in "
+              f"their timed call)")
     print(f"failed (-1): {failed if failed else 'none'}")
     print(f"solo_median coverage: {len(solo)} queries")
     cpu = b.get("cpu_ms", {})
