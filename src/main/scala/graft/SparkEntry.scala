@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ml.Sentiment
 import graft.operators._
@@ -13,7 +14,7 @@ import graft.operators._
 object SparkEntry {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
 
   /** Root of the checked-in sample-ingest fixtures (csv/jsonl/orc/avro/
     * schema-evolution parquet). Resolved at first use so a checkout not
@@ -51,25 +52,79 @@ object SparkEntry {
       case _ => df
     }
 
-  /** One child session per parent session, with the legacy nanosAsLong
-    * conf set, for reading events.parquet in either generation. It is
-    * built once and reused, not built per call: Spark keys its codegen
-    * cache by class loader as well as by code, and each new session
-    * brings its own class loader, so a fresh child per call would compile
-    * every generated class of the query again. Weakly keyed, so a parent
-    * session nothing else holds can still be collected. */
-  private val nanosChildren =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, SparkSession])
+  /** What SparkEntry keeps per session: the nanosAsLong child it reads
+    * events.parquet through, and the schema of each parquet path it has
+    * read. Both are built once and reused, not built per call. Spark keys
+    * its codegen cache by class loader as well as by code, and each new
+    * session brings its own class loader, so a fresh child per call would
+    * compile every generated class of the query again. A parquet read
+    * with no schema runs a Spark job to read the footers, so a schema
+    * already seen saves one job per table read. Weakly keyed, and the
+    * holder keeps no reference to its session, so a session nothing else
+    * holds can still be collected. */
+  private final class SessionMemo {
+    private var nanos: SparkSession = null
+    val schemas = new java.util.concurrent.ConcurrentHashMap[String, (FileStamp, StructType)]
+
+    def nanosChild(parent: SparkSession): SparkSession = synchronized {
+      if (nanos == null) {
+        nanos = parent.newSession()
+        nanos.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      }
+      nanos
+    }
+  }
+
+  private val memos =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, SessionMemo])
+
+  private def memo(spark: SparkSession): SessionMemo =
+    memos.computeIfAbsent(spark, _ => new SessionMemo)
 
   private[graft] def nanosSession(spark: SparkSession): SparkSession =
-    nanosChildren.computeIfAbsent(spark, { (parent: SparkSession) =>
-      val child = parent.newSession()
-      child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      child
-    })
+    memo(spark).nanosChild(spark)
+
+  /** File count, total length and latest modification time under a path
+    * (all zero when it does not exist): a rewritten table changes it, so
+    * its schema is inferred again. */
+  private final case class FileStamp(files: Long, bytes: Long, mtime: Long)
+
+  private def fileStamp(spark: SparkSession, path: String): FileStamp = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var stamp = FileStamp(0L, 0L, 0L)
+    if (fs.exists(p)) {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        stamp = FileStamp(stamp.files + 1, stamp.bytes + f.getLen,
+          math.max(stamp.mtime, f.getModificationTime))
+      }
+    }
+    stamp
+  }
+
+  /** Read a parquet table with the schema this session last inferred for
+    * the same path and file stamp, inferring it (one job) only on a miss.
+    * Each call still builds a new Dataset. A missing path raises the same
+    * PATH_NOT_FOUND AnalysisException as a plain read: its stamp matches
+    * no inferred one, and the inference read raises it. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val schemas = memo(spark).schemas
+    val stamp = fileStamp(spark, path)
+    val known = schemas.get(path)
+    val schema =
+      if (known != null && known._1 == stamp) known._2
+      else {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(path, (stamp, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
 
   private[graft] def events(spark: SparkSession, dir: String): DataFrame =
-    normalizeEventTs(nanosSession(spark).read.parquet(s"$dir/events.parquet"))
+    normalizeEventTs(readParquet(nanosSession(spark), s"$dir/events.parquet"))
 
   /** Re-spread a coarse scan to cluster width before CPU-heavy per-row
     * stages. A single small parquet file scans as one partition, which

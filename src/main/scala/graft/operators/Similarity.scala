@@ -480,43 +480,19 @@ object Similarity {
       lit(0.0), (acc, x) => acc + x), 9)
 
   /** The deterministic IVF coarse quantizer shared by
-    * [[annIvfKmeansDet]] and [[annNprobeSweep]]: Lloyd-fit centroids
-    * (init = lowest vec_ids, two-level sorted folds, ties to lowest
-    * cluster), the cell-assigned corpus, and the cached vector frame.
+    * [[annIvfKmeansDet]] and [[annNprobeSweep]]: the [[lloydFit]]
+    * centroids, the cell-assigned corpus, and the cached vector frame.
     * Factored out so the sweep reuses ONE fit across probe widths
     * instead of re-running Lloyd per width. */
   private def ivfDetParts(emb: DataFrame, nCells: Int, iters: Int,
-                          dims: Int): (DataFrame, DataFrame, DataFrame) = {
+                          dims: Int): (DataFrame, Seq[Centroid], DataFrame) = {
     val vecs = graft.CacheTracker.track(
       emb.select(col("vec_id"), col("embedding"),
           expr(s"transform(slice(embedding, 1, $dims), x -> CAST(x AS DOUBLE))").as("e"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     vecs.count()
-    def assign(cent: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cluster"))
-      vecs.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("embedding"), col("e"), col("cluster"),
-          sqDist(col("e"), col("c")).as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .drop("rn", "dist")
-    }
-    var cent = vecs.filter(col("vec_id") < nCells)
-      .select(col("vec_id").cast("long").as("cluster"), col("e").as("c"))
-    for (_ <- 1 to iters) {
-      // two-level fold (Folds): cell membership grows with the corpus
-      cent = assign(cent)
-        .select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-        .groupBy(col("cluster"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
-        .groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
-        .select(col("cluster"), transform(col("pc"), x => x.getField("cm")).as("c"))
-    }
-    val assigned = assign(cent)
+    val cent = lloydFit(vecs, nCells, iters)
+    val assigned = lloydAssign(vecs, cent)
       .select(col("cluster"), col("vec_id").as("n_id"), col("embedding").as("n_emb"))
     (vecs, cent, assigned)
   }
@@ -524,14 +500,14 @@ object Similarity {
   /** Query-side centroid probing: each query ranked against every FINAL
     * centroid (9 dp fold, ties to lowest cluster), ALL ranks kept so
     * callers slice `probe_rank <= p` for any probe width. */
-  private def ivfProbe(vecs: DataFrame, cent: DataFrame,
+  private def ivfProbe(vecs: DataFrame, cent: Seq[Centroid],
                        maxQueryId: Long): DataFrame = {
     val wq = Window.partitionBy("q_id").orderBy(col("qdist"), col("cluster"))
     vecs.filter(col("vec_id") < maxQueryId)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("e").as("q_e"))
-      .crossJoin(broadcast(cent))
-      .select(col("q_id"), col("q_emb"), col("cluster"),
-        sqDist(col("q_e"), col("c")).as("qdist"))
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("e").as("q_e"),
+        explode(typedLit(cent)).as("s"))
+      .select(col("q_id"), col("q_emb"), col("s.cluster"),
+        sqDist(col("q_e"), col("s.c")).as("qdist"))
       .withColumn("probe_rank", row_number().over(wq))
   }
 
@@ -1138,59 +1114,88 @@ object Similarity {
     proj(v1, "p1").join(proj(v2, "p2"), "vec_id")
   }
 
+  /** One Lloyd centroid: cluster id and centroid vector (null when the
+    * initial vector is null), as a driver-side value. */
+  private final case class Centroid(cluster: Long, c: Option[Seq[Option[Double]]])
+
+  /** Deterministic Lloyd fit shared by [[kmeansLloyd]],
+    * [[kmeansSilhouette]] and the IVF quantizer ([[ivfDetParts]]): init
+    * is the k lowest vec_ids' vectors, each round assigns every vector to
+    * its nearest centroid ([[lloydAssign]]) and recenters with the
+    * two-level sorted fold ([[recenter]]). `vecs` holds (vec_id, e) and
+    * is cached by the caller: it is read once per round.
+    *
+    * The k×dims centroids live on the driver between rounds, so a round
+    * is one narrow projection plus one collect of two aggregations —
+    * no join, window or checkpoint, and the plan of a round does not
+    * embed the rounds before it. */
+  private def lloydFit(vecs: DataFrame, k: Int, iters: Int): Seq[Centroid] = {
+    val init = vecs.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("long").as("cluster"), col("e").as("c"))
+    (1 to iters).foldLeft(collectCentroids(init)) { (cent, _) =>
+      recenter(lloydAssign(vecs, cent))
+    }
+  }
+
+  private def collectCentroids(df: DataFrame): Seq[Centroid] =
+    df.collect().toSeq.map { r =>
+      Centroid(r.getLong(0),
+        Option(r.getSeq[java.lang.Double](1)).map(_.map(x => Option(x).map(_.doubleValue))))
+    }.sortBy(_.cluster)
+
+  /** `vecs` plus each vector's nearest centroid (`cluster`) and its 9 dp
+    * squared-L2 distance (`dist`). The minimum is taken by (dist,
+    * cluster) in sort order — a null distance first, NaN last, ties to the
+    * lowest cluster — so it is the row_number-over-window pick without
+    * the window. With no centroids there is no row. */
+  private def lloydAssign(vecs: DataFrame, cent: Seq[Centroid]): DataFrame =
+    vecs.withColumn("nearest", array_min(transform(typedLit(cent), c =>
+        struct(sqDist(col("e"), c.getField("c")).as("dist"), c.getField("cluster").as("cluster")))))
+      .filter(col("nearest").isNotNull)
+      .withColumn("cluster", col("nearest.cluster"))
+      .withColumn("dist", col("nearest.dist"))
+      .drop("nearest")
+
+  /** Lloyd recentering: the per-position mean of each cluster's vectors,
+    * folded in two levels — values sorted within each (cluster, pos,
+    * vec_id % B) sub-bucket, then the sub-sums sorted within (cluster,
+    * pos) — at 9 dp, and collected into one vector per cluster. A null
+    * value counts but adds nothing; a cluster with no values drops out. */
+  private def recenter(assigned: DataFrame): Seq[Centroid] =
+    assigned.select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
+      .groupBy(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")))
+      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
+      .groupBy(col("cluster"), col("pos"))
+      .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
+      .collect().toSeq
+      .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      .map { case (cluster, ms) =>
+        Centroid(cluster, Some(ms.sortBy(_.getInt(1)).map(m => Some(m.getDouble(2)))))
+      }
+
   /** Oracle-checkable Lloyd's k-means (B70): deterministic where MLlib's
     * KMeans is seed-bound — init is the k lowest vec_ids, every
     * squared-L2 distance folds the dimension axis in INDEX order (9 dp),
-    * assignment ties break on cluster id via row_number, and centroid
-    * means fold sorted per-dim lists. Three unrolled iterations plus the
+    * assignment ties break on cluster id, and centroid means fold sorted
+    * per-dim lists ([[lloydFit]]). Three unrolled iterations plus the
     * final assignment mirror the DuckDB twin bit-for-bit.
     *
-    * Scale: the vector frame is cached once; each round is one broadcast
-    * of the k×dims centroid table against it (no shuffle of the data),
-    * plus one (k·dims)-bounded aggregate. Exactly the distributed Lloyd
-    * step — what changes at 100 TB is only the number of partitions the
-    * broadcast probes. */
+    * Scale: the vector frame is checkpointed once; each round projects
+    * it against the k×dims centroids held on the driver (no shuffle of
+    * the data), plus one (k·dims)-bounded aggregate. Exactly the
+    * distributed Lloyd step — what changes at 100 TB is only the number
+    * of partitions the projection runs over. */
   def kmeansLloyd(emb: DataFrame, k: Int = 4, dims: Int = 8,
                   iters: Int = 3): DataFrame = {
-    // localCheckpoint, not persist+count: every round reads this frame
-    // twice (assign + fold), and under a multi-hundred-query official
-    // pass MEMORY_AND_DISK blocks were evicted and recomputed mid-round
-    // (r14 official 4.4 s vs 1.1-1.9 s solo); checkpointed partitions
-    // cannot be evicted and the eager materialization replaces the count
+    // localCheckpoint, not persist+count: every round reads this frame,
+    // and under a multi-hundred-query official pass MEMORY_AND_DISK
+    // blocks were evicted and recomputed mid-round (r14 official 4.4 s
+    // vs 1.1-1.9 s solo); checkpointed partitions cannot be evicted and
+    // the eager materialization replaces the count
     val vecs = emb.select(col("vec_id"),
         expr(s"transform(slice(embedding, 1, $dims), x -> CAST(x AS DOUBLE))").as("e"))
       .localCheckpoint(true)
-    def assign(cent: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cluster"))
-      vecs.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("e"), col("cluster"),
-          round(aggregate(zip_with(col("e"), col("c"), (a, b) => (a - b) * (a - b)),
-            lit(0.0), (acc, x) => acc + x), 9).as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .drop("rn")
-    }
-    var cent = vecs.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("long").as("cluster"), col("e").as("c"))
-    for (_ <- 1 to iters) {
-      // two-level fold (Folds): cluster membership grows with the corpus;
-      // sub-bucket by vec_id % B so no buffer holds a whole cluster
-      cent = assign(cent)
-        .select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-        .groupBy(col("cluster"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
-        .groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
-        .select(col("cluster"), transform(col("pc"), x => x.getField("cm")).as("c"))
-        // k×dims rows: truncating the per-round lineage here keeps round
-        // r's plan from re-embedding rounds 1..r-1 (the bradley_terry
-        // localCheckpoint discipline — planning cost stays flat in iters)
-        .localCheckpoint(true)
-    }
-    assign(cent)
+    lloydAssign(vecs, lloydFit(vecs, k, iters))
       .select(col("vec_id"), col("cluster"), round(col("dist"), 6).as("dist"))
   }
 
@@ -1477,38 +1482,15 @@ object Similarity {
           expr(s"transform(slice(embedding, 1, $dims), x -> CAST(x AS DOUBLE))").as("e"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     vecs.count()
-    def sqdist = round(aggregate(zip_with(col("e"), col("c"),
-      (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x), 9)
-    def assign(cent: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cluster"))
-      vecs.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("e"), col("cluster"), sqdist.as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .drop("rn")
-    }
-    var cent = vecs.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("long").as("cluster"), col("e").as("c"))
-    for (_ <- 1 to iters) {
-      cent = assign(cent)
-        .select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-        .groupBy(col("cluster"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
-        .groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
-        .select(col("cluster"), transform(col("pc"), x => x.getField("cm")).as("c"))
-    }
-    val own = assign(cent).select(col("vec_id"), col("cluster").as("own_cluster"))
-    val dAll = vecs.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cluster"),
-        round(sqrt(sqdist), 9).as("d"))
-    dAll.join(own, "vec_id")
-      .groupBy("vec_id", "own_cluster")
-      .agg(min(when(col("cluster") === col("own_cluster"), col("d"))).as("a"),
-        min(when(col("cluster") =!= col("own_cluster"), col("d"))).as("b"))
+    val cent = lloydFit(vecs, k, iters)
+    // a = distance to the own centroid, b = the nearest other one (array_min
+    // skips nulls and ranks NaN last, as min does)
+    lloydAssign(vecs, cent)
+      .select(col("cluster").as("own_cluster"),
+        round(sqrt(col("dist")), 9).as("a"),
+        array_min(transform(
+          filter(typedLit(cent), c => c.getField("cluster") =!= col("cluster")),
+          c => round(sqrt(sqDist(col("e"), c.getField("c"))), 9))).as("b"))
       .select(col("own_cluster"),
         when(greatest(col("a"), col("b")) > 0,
           round((col("b") - col("a")) / greatest(col("a"), col("b")), 6))

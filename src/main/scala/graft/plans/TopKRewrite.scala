@@ -17,8 +17,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * and replan it as [[TopKPerKeyPlan]], the two-phase bounded-heap
   * operator — so code written in the window style still avoids sorting
   * every group. The rewrite only fires when the rank attribute is dropped
-  * by the enclosing Project (its values are not observable) and the
-  * window has exactly the one row_number expression.
+  * by the enclosing Project (its values are not observable), the window
+  * has exactly the one row_number expression, and k is at most
+  * `spark.sql.optimizer.windowGroupLimitThreshold` (Spark's own bound for
+  * its window group limit): the heaps hold up to k rows per key in memory
+  * and cannot spill, where the Window path sorts and spills.
   */
 object TopKRewriteRule extends Rule[LogicalPlan] {
 
@@ -47,7 +50,7 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
         if partSpec.nonEmpty && orderSpec.nonEmpty &&
           !projectList.exists(_.references.contains(al.toAttribute)) =>
       asTopK(cond, al.toAttribute) match {
-        case Some(k) if k > 0 =>
+        case Some(k) if k > 0 && k <= conf.windowGroupLimitThreshold =>
           Project(projectList, TopKPerKeyPlan(k, partSpec, orderSpec, stripGroupLimit(child)))
         case _ => p
       }

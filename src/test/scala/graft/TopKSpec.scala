@@ -61,6 +61,21 @@ class TopKSpec extends SparkSpec {
     assert(out === Set((1L, 1L), (1L, 2L), (2L, 3L)))
   }
 
+  test("the window rewrite stops at the window group limit threshold") {
+    graft.plans.TopKRewrite.register(spark)
+    val w = Window.partitionBy("k").orderBy(col("score").desc, col("id"))
+    def optimized(k: Int) = data.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k).select("k", "id").queryExecution.optimizedPlan
+    assert(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold") === "1000")
+    // past the threshold the rows of a key would sit in an unspillable heap
+    val large = optimized(5000)
+    assert(large.collect { case p: graft.plans.TopKPerKeyPlan => p }.isEmpty, large)
+    assert(large.collect { case p: org.apache.spark.sql.catalyst.plans.logical.Window => p }
+      .nonEmpty, large)
+    val small = optimized(10)
+    assert(small.collect { case p: graft.plans.TopKPerKeyPlan => p.k } === Seq(10), small)
+  }
+
   test("k = Int.MaxValue keeps every row") {
     TopK.register(spark)
     val out = TopK.topKPerKey(data, Seq("k"), Seq("score" -> true, "id" -> true), Int.MaxValue)

@@ -9,8 +9,8 @@ THIS output, byte-for-byte, so the status can never drift from the file.
 Usage: python3 tools/bench_summary.py [BENCH_FULL.json]
 
 Prints: total, query count, per-query mean/median/p90, spill total, classes
-compiled in the timed calls, and the full >2.5×-solo outlier list (official
-vs solo_median), ready to paste.
+compiled in the timed calls, Spark jobs in the timed calls, and the full
+>2.5×-solo outlier list (official vs solo_median), ready to paste.
 """
 import json
 import sys
@@ -53,6 +53,13 @@ def main() -> None:
         print(f"codegen_classes total: {sum(compiled.values())} "
               f"({recompiling} of {len(compiled)} queries compiled in "
               f"their timed call)")
+    jobs = b.get("jobs")
+    if jobs is None:
+        print("jobs total: not in artifact")
+    else:
+        many = sum(1 for v in jobs.values() if v > 10)
+        print(f"jobs total: {sum(jobs.values())} ({many} of {len(jobs)} "
+              f"queries ran more than 10 jobs in their timed call)")
     print(f"failed (-1): {failed if failed else 'none'}")
     print(f"solo_median coverage: {len(solo)} queries")
     cpu = b.get("cpu_ms", {})
