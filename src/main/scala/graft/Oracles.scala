@@ -1445,11 +1445,12 @@ object Oracles {
          |FROM j""".stripMargin,
 
     // GRPO-style group z-score of quality per (lang, source): two-level
-    // sub-bucketed sorted folds for mean and population variance
+    // sub-bucketed sorted folds for mean and population variance, each
+    // sum re-rounded to its terms' dp before the divide
     "reward_normalize" ->
       s"""WITH q AS (SELECT doc_id, lang, source, $qualitySql AS quality FROM documents),
          |m1 AS (SELECT lang, source, CAST(sum(sub_n) AS BIGINT) AS n_grp,
-         |    round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) / sum(sub_n), 9) AS mean_q
+         |    round(round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b), 6) / sum(sub_n), 9) AS mean_q
          |  FROM (SELECT lang, source, doc_id % 1024 AS sb, count(*) AS sub_n,
          |        list_reduce(list_sort(list(quality)), (a, b) -> a + b) AS sub_s
          |        FROM q GROUP BY 1, 2, 3)
@@ -1458,7 +1459,7 @@ object Oracles {
          |    round((q.quality - m1.mean_q) * (q.quality - m1.mean_q), 9) AS d2
          |  FROM q JOIN m1 ON m1.lang = q.lang AND m1.source = q.source),
          |m2 AS (SELECT lang, source,
-         |    round(list_reduce(list_sort(list(sub_d)), (a, b) -> a + b) / sum(sub_n), 9) AS var_q
+         |    round(round(list_reduce(list_sort(list(sub_d)), (a, b) -> a + b), 9) / sum(sub_n), 9) AS var_q
          |  FROM (SELECT lang, source, doc_id % 1024 AS sb, count(*) AS sub_n,
          |        list_reduce(list_sort(list(d2)), (a, b) -> a + b) AS sub_d
          |        FROM d GROUP BY 1, 2, 3)
@@ -4160,8 +4161,8 @@ object Oracles {
          |FROM zf""".stripMargin,
 
     // per-term contributions rounded to 6 dp BEFORE the sorted-list fold,
-    // so the sum is partition-independent and bit-identical to Spark's
-    // aggregate(sort_array(...)) (init 0.0 + x == x exactly)
+    // so the sum agrees with Spark's exact sum at 6 dp; the mean divides
+    // that 6 dp sum, so an ulp of the raw sum never decides a tie
     "unigram_logprob" ->
       s"""WITH t AS (SELECT doc_id, unnest($toks) AS token FROM documents),
          |tf AS (SELECT doc_id, token, count(*) AS tf FROM t GROUP BY 1, 2),
@@ -4172,7 +4173,7 @@ object Oracles {
          |g AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
          |      list_reduce(list_sort(list(contrib)), (a, b) -> a + b) AS s FROM x GROUP BY 1)
          |SELECT doc_id, n_tokens, round(s, 6) AS sum_logprob,
-         |  round(s / n_tokens, 6) AS avg_logprob FROM g""".stripMargin,
+         |  round(round(s, 6) / n_tokens, 6) AS avg_logprob FROM g""".stripMargin,
 
     // entropy terms written p*ln(n/tf) (all non-negative — never -0.0)
     "token_entropy" ->
@@ -9141,40 +9142,41 @@ object Oracles {
 
     // Huber IRLS trend: 3 unrolled steps, scale re-estimated per step as
     // 1.4826 x the rank-based lower median of |residuals|, 9dp weighted
-    // folds, full 2x2 re-solve
+    // folds in days since the first day, 2x2 re-solve at 6dp
     "huber_trend" -> {
       def step(pPrev: String, i: Int) =
-        s"""r$i AS MATERIALIZED (SELECT n, day_idx, cents,
+        s"""r$i AS MATERIALIZED (SELECT n, x0, day_idx - x0 AS x, day_idx, cents,
            |  abs(round(CAST(cents AS DOUBLE) - b0 - b1 * day_idx, 6)) AS ae
            |  FROM daily CROSS JOIN $pPrev),
            |sc$i AS MATERIALIZED (SELECT round(ae * 1.4826, 9) AS s FROM
            |  (SELECT ae, n, row_number() OVER (ORDER BY ae, day_idx) AS rn FROM r$i)
            |  WHERE rn = CAST(ceil(n / 2.0) AS BIGINT)),
-           |s$i AS (SELECT n, s,
+           |s$i AS (SELECT n, x0, s,
            |  list_reduce(list_sort(list(w)), (a, b) -> a + b) AS sw,
-           |  list_reduce(list_sort(list(round(w * day_idx, 9))), (a, b) -> a + b) AS swx,
-           |  list_reduce(list_sort(list(round(w * day_idx * day_idx, 9))), (a, b) -> a + b) AS swxx,
+           |  list_reduce(list_sort(list(round(w * x, 9))), (a, b) -> a + b) AS swx,
+           |  list_reduce(list_sort(list(round(w * x * x, 9))), (a, b) -> a + b) AS swxx,
            |  list_reduce(list_sort(list(round(w * cents, 9))), (a, b) -> a + b) AS swy,
-           |  list_reduce(list_sort(list(round(w * day_idx * cents, 9))), (a, b) -> a + b) AS swxy
-           |  FROM (SELECT n, s, day_idx, cents,
+           |  list_reduce(list_sort(list(round(w * x * cents, 9))), (a, b) -> a + b) AS swxy
+           |  FROM (SELECT n, x0, s, x, cents,
            |        round(CASE WHEN ae <= 1.345 * s THEN 1.0
            |              ELSE 1.345 * s / ae END, 9) AS w
            |        FROM r$i CROSS JOIN sc$i)
-           |  GROUP BY 1, 2),
-           |p$i AS (SELECT n,
-           |  round((swxx * swy - swx * swxy) / (sw * swxx - swx * swx), 9) AS b0,
-           |  round((sw * swxy - swx * swy) / (sw * swxx - swx * swx), 9) AS b1
-           |  FROM s$i)""".stripMargin
+           |  GROUP BY 1, 2, 3),
+           |p$i AS (SELECT n, x0, b1,
+           |  round(round((swy - b1 * swx) / sw, 6) - b1 * x0, 6) AS b0
+           |  FROM (SELECT n, x0, sw, swx, swy,
+           |    round((sw * swxy - swx * swy) / (sw * swxx - swx * swx), 6) AS b1
+           |    FROM s$i))""".stripMargin
       s"""WITH daily AS MATERIALIZED (SELECT epoch_ns(ts) // 1000 // 86400000000 AS day_idx,
          |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
          |  FROM events GROUP BY 1),
-         |m AS (SELECT count(*) AS n, CAST(sum(day_idx) AS BIGINT) AS sx,
+         |m AS (SELECT count(*) AS n, min(day_idx) AS x0, CAST(sum(day_idx) AS BIGINT) AS sx,
          |  CAST(sum(cents) AS BIGINT) AS sy,
          |  sum(CAST(day_idx AS HUGEINT) * cents) AS sxy,
          |  sum(CAST(day_idx AS HUGEINT) * day_idx) AS sxx FROM daily),
-         |p0 AS (SELECT n, b1,
+         |p0 AS (SELECT n, x0, b1,
          |  round(CAST(sy AS DOUBLE) / n - b1 * (CAST(sx AS DOUBLE) / n), 9) AS b0
-         |  FROM (SELECT n, sx, sy,
+         |  FROM (SELECT n, x0, sx, sy,
          |    round(CAST(CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
          |      / CAST(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE), 9) AS b1
          |    FROM m)),

@@ -1289,8 +1289,8 @@ object SparkEntry {
     // B272: decontamination n-gram width sweep (4 / 8 / 13)
     "decontam_ngram_sweep" -> ((s, d) =>
       TextOps.decontamNgramSweep(spread(t(s, d, "documents")))),
-    // B273: per-lang lognormal length fit (method of moments, ln terms
-    // through the two-level sorted fold)
+    // B273: per-lang lognormal length fit (method of moments, exact sums
+    // of the ln terms)
     "length_lognormal_fit" -> ((s, d) =>
       TextOps.lengthLognormalFit(spread(t(s, d, "documents")))),
     // C251: inline VALUES dimension join — literal lookup tables in the

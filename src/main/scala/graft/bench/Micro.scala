@@ -1,6 +1,6 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
+import graft.Graft
 
 /** Repeat-timing for individual SparkEntry queries — separates real
   * regressions from single-run variance that the one-pass Bench cannot.
@@ -12,13 +12,8 @@ object Micro {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(s"local[$cpus]", Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)

@@ -1,9 +1,9 @@
 package graft.bench
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AsOf, Dedup, Folds, LangModel, Relational, Similarity}
+import graft.operators.{AsOf, Dedup, LangModel, Relational, Similarity}
 
 /** Output-sensitivity scaling check (BASELINE.md "Scaling check" table):
   * the corpus is multiplied m-way IN MEMORY with shifted ids, so every
@@ -48,17 +48,6 @@ object ScaleCheck {
       emb.withColumn("vec_id", col("vec_id") + lit(i * 10_000_000L)))
       .reduce(_ unionByName _)
 
-  /** The PRE-round-10 one-level per-dim stats shape (one sorted fold over
-    * ALL vectors per dim) — kept here only as the buffer-scaling contrast
-    * for [[Similarity.embedStandardize]]'s two-level fold. */
-  private def oneLevelDimStats(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .select((col("pos") + 1).cast("long").as("dim"), col("x").cast("double").as("x"))
-      .groupBy("dim").agg(
-        count(lit(1)).as("n"),
-        Folds.sortedSum(col("x")).as("s"),
-        Folds.sortedSum(col("x") * col("x")).as("ss"))
-
   /** collect_list's aggregation buffer holds exactly its group's rows, so
     * max group cardinality IS the peak buffer size in elements. It has to
     * be measured at the DATA level: TaskMetrics.peakExecutionMemory reads
@@ -76,13 +65,8 @@ object ScaleCheck {
     val (mArgs, sections) = args.drop(1).partition(a => a.nonEmpty && a.forall(_.isDigit))
     val embOnly = sections.contains("emb")
     val ms = if (mArgs.nonEmpty) mArgs.map(_.toInt).toSeq else Seq(1, 4, 16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Graft.session(s"local[$cpus]", Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
     val width = spark.sparkContext.defaultParallelism
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet").repartition(width)
@@ -98,8 +82,12 @@ object ScaleCheck {
         val (tNdp, nNdp) = timedForce(Similarity.nearDupPairs(emb))
         val ndpBits = Similarity.adaptiveSignBits(emb.count())
         graft.CacheTracker.releaseAll()
+        // per-dim stats over ALL vectors: exact sums with partial
+        // aggregation, so time must stay about linear in m
+        val (tStd, nStd) = timedForce(Similarity.embedStandardize(emb))
         println(s"""{"m":$m,"vecs":${emb.count()},""" +
-          s""""near_dup_pairs":{"sec":$tNdp,"pairs":$nNdp,"bits":$ndpBits}}""")
+          s""""near_dup_pairs":{"sec":$tNdp,"pairs":$nNdp,"bits":$ndpBits},""" +
+          s""""embed_standardize":{"sec":$tStd,"rows":$nStd}}""")
         emb.unpersist()
       } else if (sections.contains("r13")) {
         // round-13 rows only: the chargram classifier (must stay linear
@@ -476,10 +464,10 @@ object ScaleCheck {
       // linear (no cross-user state, no data-sized window)
       val (tPpm, nPpm) =
         timedForce(graft.operators.Sessionize.pathPatternMatch(events))
-      // the md5-sub-bucketed two-level fold over the bigram-TYPE frame:
-      // under m-way duplication the type frame is CONSTANT while counts
-      // grow, so the curve must flatten (cost tracks distinct bigrams,
-      // not corpus mass) once the token explode is paid
+      // the exact sum over the bigram-TYPE frame: under m-way
+      // duplication the type frame is CONSTANT while counts grow, so the
+      // curve must flatten (cost tracks distinct bigrams, not corpus
+      // mass) once the token explode is paid
       val (tBce, nBce) =
         timedForce(graft.operators.LangModel.bigramCondEntropy(docs))
 
@@ -505,16 +493,12 @@ object ScaleCheck {
         timedForce(graft.operators.Relational.survivalCurve(events))
       graft.CacheTracker.releaseAll()
 
-      // embedding stats: time both shapes (must stay linear in m), and
-      // measure each shape's largest aggregation group — the collect_list
-      // buffer's element count. The one-level per-dim group is the whole
-      // corpus (grows with m); the two-level level-1 group is a vec_id%B
-      // sub-bucket (~group/1024) and its level-2 roll-up is ≤1024 rows.
+      // embedding stats: per-dim exact sums over ALL vectors, time must
+      // stay about linear in m
       val emb = multiplyEmb(emb0, m)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       emb.count()
-      val (tStd2, nStd2) = timedForce(Similarity.embedStandardize(emb))
-      val (tStd1, nStd1) = timedForce(oneLevelDimStats(emb))
+      val (tStd, nStd) = timedForce(Similarity.embedStandardize(emb))
       // near_dup_pairs under m-way duplication is the sign-LSH stress
       // case: every vector is an m-way exact duplicate, so TRUE pairs
       // grow ~m²/2 per base vector while input grows m — pair cost must
@@ -522,9 +506,6 @@ object ScaleCheck {
       // never input²: adaptiveSignBits widens the blocking as n grows so
       // non-duplicate co-residents per bucket stay bounded
       val (tNdp, nNdp) = timedForce(Similarity.nearDupPairs(emb))
-      val xpl = emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      val buf1 = maxGroupRows(xpl, col("pos"))
-      val buf2 = maxGroupRows(xpl, col("pos"), Folds.subBucket(col("vec_id")))
       val ndpBits = Similarity.adaptiveSignBits(emb.count())
       emb.unpersist()
 
@@ -546,8 +527,7 @@ object ScaleCheck {
         s""""session_concurrency":{"sec":$tConc,"rows":$nConc},""" +
         s""""survival_curve":{"sec":$tSurv,"rows":$nSurv},""" +
         s""""near_dup_pairs":{"sec":$tNdp,"pairs":$nNdp,"bits":$ndpBits},""" +
-        s""""embed_standardize_2level":{"sec":$tStd2,"rows":$nStd2,"max_agg_buffer_rows":$buf2,"rollup_rows":${Folds.DefaultBuckets}},""" +
-        s""""dim_stats_1level":{"sec":$tStd1,"rows":$nStd1,"max_agg_buffer_rows":$buf1}}""")
+        s""""embed_standardize":{"sec":$tStd,"rows":$nStd}}""")
       docs.unpersist(); events.unpersist()
       }
     }

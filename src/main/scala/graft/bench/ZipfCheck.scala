@@ -3,6 +3,8 @@ package graft.bench
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Graft
+
 /** Prefix-filter demonstration on a ZIPFIAN corpus (BASELINE.md round 9).
   *
   * The engine's synthetic bench corpus is anti-Zipfian (31 tokens, all
@@ -56,13 +58,8 @@ object ZipfCheck {
     val nDocs = args.headOption.map(_.toInt).getOrElse(5000)
     val vocab = args.lift(1).map(_.toInt).getOrElse(2000)
     val perDoc = args.lift(2).map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(s"local[$cpus]", Some(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     val docs = zipfDocs(spark, nDocs, vocab, perDoc)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

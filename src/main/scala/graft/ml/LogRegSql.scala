@@ -1,6 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.Folds.exactSum
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic batch-gradient-descent logistic regression, declarative
@@ -16,26 +17,20 @@ import org.apache.spark.sql.functions._
   * from w = 0.
   *
   * Float discipline (the house rules for iterative operators): every
-  * per-element product rounds to 9 dp and folds over a SORTED list, the
-  * sigmoid (the one transcendental) rounds to 6 dp immediately, and
-  * weights round to 9 dp per update — partition-count independent and
-  * bit-identical to the DuckDB CTE chain.
+  * per-element product rounds to 9 dp and sums exactly
+  * ([[graft.operators.Folds.exactSum]]), the sigmoid (the one
+  * transcendental) rounds to 6 dp immediately, and weights round to 9 dp
+  * per update — partition-count independent and equal to the DuckDB CTE
+  * chain.
   *
   * Scale shape: the weight frame is dims-sized and broadcasts every
   * round; the corpus-sized (vec, dim) frame shuffles once per round to
-  * vec_id (for z) and once to (dim, sub-bucket) for g with map-side
-  * partial folds. The per-dim gradient fold is TWO-LEVEL
-  * (operators/Folds): its group holds all vectors, so a one-level
-  * sorted fold would grow one aggregation buffer with the corpus — the
-  * sub-bucketed fold keeps state O(group/B + B) and stays bit-stable.
+  * vec_id (for z) and once to dim for g, both partially aggregated.
   * Lineage grows linearly in `iters` (no loop-carried driver state); at
   * 100 TB each round is two partial-agg shuffles of the exploded
   * embedding frame.
   */
 object LogRegSql {
-
-  private def sortedFold(c: Column): Column =
-    aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
 
   /** (i, w): learned weight per 1-based dimension after `iters` rounds. */
   def weights(emb: DataFrame, iters: Int = 3, lr: Double = 1.0): DataFrame =
@@ -65,19 +60,12 @@ object LogRegSql {
     for (_ <- 1 to iters) {
       val z = cached.join(broadcast(w), "i")
         .select(col("vec_id"), col("y"), round(col("w") * col("x"), 9).as("c"))
-        .groupBy("vec_id", "y").agg(sortedFold(col("c")).as("z"))
+        .groupBy("vec_id", "y").agg(exactSum(col("c")).as("z"))
       val err = z.select(col("vec_id"),
         (round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6) - col("y")).as("e"))
-      // two-level fold (operators/Folds): the per-dim gradient group holds
-      // ALL vectors — one-level collect_list would grow its aggregation
-      // buffer with the corpus (the exact embed_standardize OOM shape).
-      // Sub-bucket by vec_id % B, fold each sub-bucket sorted, fold the
-      // ≤B sub-totals sorted; O(group/B + B) state, oracle mirrors it.
       val grad = cached.join(err, "vec_id")
-        .select(col("i"), graft.operators.Folds.subBucket(col("vec_id")),
-          round(col("e") * col("x"), 9).as("c"))
-        .groupBy("i", "sb").agg(sortedFold(col("c")).as("sub"))
-        .groupBy("i").agg(sortedFold(col("sub")).as("sc"))
+        .select(col("i"), round(col("e") * col("x"), 9).as("c"))
+        .groupBy("i").agg(exactSum(col("c")).as("sc"))
         .crossJoin(broadcast(n))
         .select(col("i"), round(col("sc") / col("n_vecs"), 9).as("g"))
       w = w.join(grad, Seq("i"), "left")
@@ -101,7 +89,7 @@ object LogRegSql {
     cached
       .join(broadcast(wts), "i")
       .select(col("vec_id"), col("y"), round(col("w") * col("x"), 9).as("c"))
-      .groupBy("vec_id", "y").agg(sortedFold(col("c")).as("z"))
+      .groupBy("vec_id", "y").agg(exactSum(col("c")).as("z"))
       .select(col("vec_id"), col("y"),
         round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6).as("p"))
       .withColumn("pred", when(col("p") >= 0.5, 1.0).otherwise(0.0))

@@ -203,7 +203,7 @@ object Eval {
     * recalibration can remove; resolution = Σ_b n_b(ȳ_b − ȳ)²/N is the
     * score's real discriminative power; uncertainty = ȳ(1−ȳ) is the
     * data's floor. Per-bin contributions compute from the SAME exact
-    * integer sums as the diagram (9 dp-rounded terms, sorted fold over
+    * integer sums as the diagram (9 dp-rounded terms, exact sum over
     * the 10-row frame); the one-row result divides last. */
   def brierDecomposition(docs: DataFrame): DataFrame = {
     val bins = binnedExact(docs)
@@ -216,8 +216,8 @@ object Eval {
         round(col("n") * pow(col("n_pos").cast("double") / col("n")
           - col("pp").cast("double") / col("nn"), 2), 9).as("res_term"))
       .groupBy("nn", "pp", "ss")
-      .agg(Folds.sortedSum(col("rel_term")).as("rel_sum"),
-        Folds.sortedSum(col("res_term")).as("res_sum"))
+      .agg(Folds.exactSum(col("rel_term")).as("rel_sum"),
+        Folds.exactSum(col("res_term")).as("res_sum"))
       .select(col("nn").as("n"),
         round(col("pp").cast("double") / col("nn"), 6).as("base_rate"),
         round(col("rel_sum") / col("nn"), 6).as("reliability"),
@@ -428,13 +428,9 @@ object Eval {
               - col("len_b").cast("double") / col("len_a")), 9))
             * sqrt(col("p1") * col("p2")), 6).as("bleu2"))
     perPair
-      .select(col("lang"), struct(col("a_id"), col("b_id"), col("bleu2")).as("t"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_pairs"),
-        array_sort(collect_list(col("t"))).as("ts"))
-      .select(col("lang"), col("n_pairs"),
-        round(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("bleu2"))
-          / col("n_pairs"), 6).as("self_bleu"))
+        round(Folds.exactSum(col("bleu2")) / count(lit(1)), 6).as("self_bleu"))
   }
 
   /** chrF2 between the same near-duplicate candidate pairs (B209): the
@@ -573,7 +569,7 @@ object Eval {
     *
     * Determinism: σ_h comes from exact integer moments in one fixed
     * closed form; Neyman weights round at 9 dp and their normalizer
-    * folds SORTED over the strata-bounded list; remainder ranking and
+    * is an exact sum over the strata; remainder ranking and
     * the all-strata windows run on the |langs|-bounded frame only. The
     * md5 pre-rank runs as a literal-k top-budget bounded heap
     * (TopKRewriteRule — no stratum is ever sorted whole on one task);
@@ -594,9 +590,7 @@ object Eval {
           - (col("sx").cast("double") / col("n_docs"))
             * (col("sx").cast("double") / col("n_docs"))).as("sd_raw"))
       .withColumn("w", round(col("n_docs") * col("sd_raw"), 9))
-    val tot = m.agg(
-      aggregate(sort_array(collect_list(col("w"))), lit(0.0),
-        (acc, x) => acc + x).as("w_tot"))
+    val tot = m.agg(Folds.exactSum(col("w")).as("w_tot"))
     val exact = m.crossJoin(broadcast(tot))
       .withColumn("n_exact", lit(budget.toDouble) * col("w") / col("w_tot"))
       .withColumn("base", floor(col("n_exact")))
@@ -693,30 +687,24 @@ object Eval {
     * story: a full second-order optimizer runs distributed and
     * DETERMINISTIC because the sufficient statistics aggregate over the
     * per-DISTINCT-SCORE count frame (≤ 1e6+1 rows — the rocAuc
-    * discipline), every gradient/Hessian sum rides the two-level
-    * sub-bucketed sorted fold, the 2×2 Newton solve is closed-form on
+    * discipline), every gradient/Hessian sum is exact
+    * ([[Folds.exactSum]]), the 2×2 Newton solve is closed-form on
     * the driver-free one-row frame, and (a, b) round at 9 dp per step
     * (the power-iteration discipline). Each step's one-row (a, b) is
     * localCheckpointed so plan depth stays flat in `steps`. */
   def plattScaling(docs: DataFrame, steps: Int = 8): DataFrame = {
     val sc = scoreCounts(docs)
       .withColumn("n", col("n_pos") + col("n_neg"))
-      .withColumn("sb", round(col("score") * 1e6).cast("long") % 1024)
       .localCheckpoint(true)
-    def fold2(df: DataFrame, terms: Seq[(String, Column)]): DataFrame = {
-      val l1 = df.groupBy("sb")
-        .agg(Folds.sortedSum(terms.head._2).as(terms.head._1),
-          terms.tail.map { case (nm, c) => Folds.sortedSum(c).as(nm) }: _*)
-      l1.agg(Folds.sortedSum(col(terms.head._1)).as(terms.head._1),
-        terms.tail.map { case (nm, _) => Folds.sortedSum(col(nm)).as(nm) }: _*)
-    }
+    def sums(df: DataFrame, terms: Seq[(String, Column)]): DataFrame =
+      df.select(terms.map { case (nm, c) => Folds.exactSum(c).as(nm) }: _*)
     val spark = docs.sparkSession
     var ab = spark.range(1).select(lit(0.0).as("a"), lit(0.0).as("b"))
       .localCheckpoint(true)
     for (_ <- 1 to steps) {
       val p = lit(1.0) / (lit(1.0) + exp(-(col("a") * col("score") + col("b"))))
       val withP = sc.crossJoin(broadcast(ab)).withColumn("p", p)
-      val s = fold2(withP, Seq(
+      val s = sums(withP, Seq(
         ("ga", col("score") * (col("n") * col("p") - col("n_pos"))),
         ("gb", col("n") * col("p") - col("n_pos")),
         ("haa", col("n") * col("p") * (lit(1.0) - col("p")) * col("score") * col("score")),
@@ -737,7 +725,7 @@ object Eval {
         .localCheckpoint(true)
     }
     val pF = lit(1.0) / (lit(1.0) + exp(-(col("a") * col("score") + col("b"))))
-    val nll = fold2(sc.crossJoin(broadcast(ab)).withColumn("p", pF), Seq(
+    val nll = sums(sc.crossJoin(broadcast(ab)).withColumn("p", pF), Seq(
       ("nll", -(col("n_pos") * log(col("p")) + col("n_neg") * log(lit(1.0) - col("p"))))))
     ab.crossJoin(broadcast(nll))
       .select(lit(steps.toLong).as("n_steps"),

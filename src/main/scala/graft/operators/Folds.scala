@@ -1,48 +1,33 @@
 package graft.operators
 
+import graft.functions.ExactSum
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 
-/** Bit-stable floating-point summation helpers.
+/** The engine's one floating-point sum.
   *
   * Double addition is not associative, so a plain `sum` over a shuffled
-  * frame gives partitioning-dependent low bits. The engine's convention
-  * (shared with the DuckDB oracle, which runs the literal same fold via
-  * `list_reduce(list_sort(list(x)), ...)`) is to fold values in SORTED
-  * order — order-independent by construction.
+  * frame gives partitioning-dependent low bits. [[exactSum]] adds the
+  * inputs exactly and rounds once: the result is the correctly rounded
+  * double of the exact sum, bit-identical under any partitioning, row
+  * order or merge order. It aggregates partially like `sum`, and its
+  * state is bounded by the double exponent range (a few hundred bytes),
+  * not by the group size, so a group that grows with the corpus needs
+  * nothing special.
   *
-  * [[sortedSum]] collects the whole group, so its aggregation buffer is
-  * group-sized: fine when the group is bounded (per-doc tokens, per-vec
-  * dims, a vocab key), a guaranteed executor OOM when the group grows
-  * with the corpus (per-dim over ALL vectors at 1B rows = gigabytes in
-  * one buffer). For those, use the two-level [[subBucket]] pattern: key
-  * each value to one of `buckets` sub-buckets by a deterministic row id,
-  * sorted-fold within the sub-bucket (buffer ≤ group/B values), then
-  * sorted-fold the ≤B sub-totals (buffer ≤ B). State is O(group/B + B) —
-  * minimized at B ≈ √group — instead of O(group), and the value stays
-  * bit-stable at any partitioning because both levels are order-
-  * independent folds of deterministic multisets. The result differs from
-  * the one-level fold only in ulp-level association error (a parity spec
-  * pins the 6 dp-rounded values equal on the test corpora); the oracle
-  * SQL mirrors the identical two-level structure so driver hashes stay
-  * exact.
+  * Contract: the input is cast to double; nulls are skipped; an empty or
+  * all-null group gives 0.0; any NaN gives NaN; +Inf with -Inf gives NaN;
+  * the result is never null. It works as a grouped aggregate and as a
+  * window function.
+  *
+  * The DuckDB twins in `Oracles` keep the sorted fold
+  * (`list_reduce(list_sort(list(x)), ...)`) as the reference. The two
+  * differ by at most a few ulps, which the 6 or 9 dp rounding of every
+  * emitted value absorbs.
   */
 object Folds {
 
-  /** Fold `c` over the group in sorted order: bit-stable under any
-    * partitioning. Buffer is GROUP-SIZED — only for bounded groups. */
-  def sortedSum(c: Column): Column =
-    aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
-
-  /** Default sub-bucket fan-out for the two-level fold. 1024 bounds the
-    * level-2 buffer at 8 KiB of doubles while dividing the level-1
-    * buffer 1024-fold; a deployment at 10^12-row groups would raise it
-    * toward √group (10^6) — both levels stay in the kilobyte-to-megabyte
-    * range instead of the one-level fold's gigabytes. */
-  val DefaultBuckets = 1024
-
-  /** Deterministic sub-bucket key from a non-negative row id. Plain `%`
-    * (not pmod) so the DuckDB oracle's `id % B` matches verbatim. */
-  def subBucket(id: Column, buckets: Int = DefaultBuckets): Column =
-    (id % buckets).as("sb")
+  /** Exact, correctly rounded sum of `c` over the group or window. */
+  def exactSum(c: Column): Column =
+    ColumnShim.column(ExactSum(ColumnShim.expression(c.cast("double"))).toAggregateExpression())
 }

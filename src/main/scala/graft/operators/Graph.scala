@@ -22,8 +22,8 @@ object Graph {
     * cached, and re-joined per iteration; each iteration is one
     * hash-shuffle on dst. Nothing driver-side — N broadcasts as a
     * one-row frame. Float discipline: per-edge contributions round to
-    * 9 dp and per-node sums fold over sorted lists, so results are
-    * partition-count independent and mirror the DuckDB twin exactly. */
+    * 9 dp and per-node sums are exact ([[Folds.exactSum]]), so results
+    * are partition-count independent. */
   def tokenPagerank(docs: DataFrame, iters: Int = 5, d: Double = 0.85): DataFrame = {
     val toked = docs.select(TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
@@ -66,8 +66,7 @@ object Graph {
         .select(col("dst"),
           round(lit(d) * col("r") * col("w") / col("outw"), 9).as("c"))
       ranks = contrib.groupBy(col("dst"))
-        .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (acc, v) => acc + v), 9).as("sum_c"))
+        .agg(round(Folds.exactSum(col("c")), 9).as("sum_c"))
         .select(col("dst").as("token"),
           round((lit(1.0) - lit(d)) / lit(n) + col("sum_c"), 9)
             .as("r"))
@@ -384,14 +383,12 @@ object Graph {
       a = maxNorm(ew.join(h, ew("src") === h("token"))
         .select(col("dst"), round(col("w") * col("h"), 9).as("c"))
         .groupBy(col("dst").as("token"))
-        .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (acc, v) => acc + v), 9).as("a")), "a")
+        .agg(round(Folds.exactSum(col("c")), 9).as("a")), "a")
         .localCheckpoint(true)
       h = maxNorm(ew.join(a, ew("dst") === a("token"))
         .select(col("src"), round(col("w") * col("a"), 9).as("c"))
         .groupBy(col("src").as("token"))
-        .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (acc, v) => acc + v), 9).as("h")), "h")
+        .agg(round(Folds.exactSum(col("c")), 9).as("h")), "h")
         .localCheckpoint(true)
     }
     nodes
@@ -410,9 +407,7 @@ object Graph {
     * the external-validity audit for the community detector, exactly
     * as B250/B282 audit the clusterer. Every count is an exact long
     * (m undirected edges, within-community edges e_c, degree sums
-    * d_c); per-community 9 dp terms fold through the md5-bucketed
-    * two-level fold (the community frame is vocabulary-bounded — a
-    * one-level fold would buffer it whole). */
+    * d_c); per-community 9 dp terms sum exactly. */
   def communityModularity(docs: DataFrame, rounds: Int = 3): DataFrame = {
     val toked = docs.select(TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
@@ -477,12 +472,10 @@ object Graph {
     val terms = byLabel
       .crossJoin(broadcast(m))
       .select(
-        expr("CAST(conv(substr(md5(label), 1, 4), 16, 10) AS BIGINT) % 1024").as("sb"),
         round(col("e_c").cast("double") / col("m")
           - (col("d_c").cast("double") / (col("m") * 2))
             * (col("d_c").cast("double") / (col("m") * 2)), 9).as("term"))
-    val q = terms.groupBy("sb").agg(Folds.sortedSum(col("term")).as("sub_s"))
-      .agg(round(Folds.sortedSum(col("sub_s")), 6).as("modularity"))
+    val q = terms.agg(round(Folds.exactSum(col("term")), 6).as("modularity"))
     val counts = labels.agg(count(lit(1)).as("n_nodes"),
       countDistinct(col("label")).as("n_communities"))
     q.crossJoin(broadcast(m)).crossJoin(broadcast(counts))
@@ -676,10 +669,9 @@ object Graph {
     * each normalized by its max (L∞ — max of 9 dp-rounded values is
     * exactly partial-aggregatable, unlike an L1/L2 normalizer which
     * would need a global float fold). Per-edge products round to 9 dp
-    * and per-node sums fold in exact BIGINT nano-units (order-free, so
-    * results are partition-count independent and bit-equal to the
-    * oracle's sorted double fold). Scale posture: the directed edge
-    * frame is vocab²-bounded, persisted once, and re-joined per
+    * and per-node sums are exact ([[Folds.exactSum]]), so results are
+    * partition-count independent at any edge weight. Scale posture: the
+    * directed edge frame is vocab²-bounded, persisted once, and re-joined per
     * iteration (two key-shuffles + two one-row max broadcasts each);
     * per-round aRaw/hRaw are vocab-bounded and localCheckpoint'd so the
     * iteration lineage never re-executes the corpus joins; nothing
@@ -700,39 +692,33 @@ object Graph {
       return e.select(col("src").as("token"), lit(0.0).as("hub"),
         lit(0.0).as("authority"))
     }
+    hitsRounds(e, iters)
+  }
+
+  /** `iters` HITS rounds over a weighted directed edge frame
+    * (src, dst, w): (token, hub, authority) for every node. */
+  private[graft] def hitsRounds(e: DataFrame, iters: Int): DataFrame = {
     val nodes = e.select(col("src").as("token"))
       .unionByName(e.select(col("dst").as("token"))).distinct()
     var h = nodes.select(col("token"), lit(1.0).as("h"))
     var a = nodes.limit(0).select(col("token"), lit(0.0).as("a"))
-    // Per-node sums fold in EXACT BIGINT nano-units (the docEmbedHash /
-    // topicLabels pattern): each addend round(w·x, 9) is the nearest
-    // double of a 9 dp decimal, so ·1e9 recovers its integer nanos
-    // exactly and one codegen'd long sum with map-side partial
-    // aggregation replaces the collect_list fold — whose per-node buffer
-    // grew unboundedly on hub tokens (a stopword collects millions of
-    // elements in ONE aggregation buffer at scale) and shipped every
-    // element through the shuffle. nanos div-back by 1e9 is one exact
-    // long→double cast + correctly-rounded divide = the same nearest
-    // double the sorted fold produced.
     // localCheckpoint discipline: aRaw/hRaw are vocab-bounded and each
     // is referenced twice (max + normalize join) while the next round
     // references the result again — unpinned, the r18 plan re-executed
     // the corpus joins ~4^iters times (669 jobs, 28.4 s).
     for (_ <- 1 to iters) {
       val aRaw = e.join(h, e("src") === h("token"))
-        .select(col("dst"),
-          round(round(col("w") * col("h"), 9) * lit(1e9)).cast("long").as("cn"))
+        .select(col("dst"), round(col("w") * col("h"), 9).as("c"))
         .groupBy("dst")
-        .agg((sum(col("cn")).cast("double") / lit(1e9)).as("ar"))
+        .agg(Folds.exactSum(col("c")).as("ar"))
         .localCheckpoint(true)
       val aMax = aRaw.agg(max(col("ar")).as("am"))
       a = aRaw.crossJoin(broadcast(aMax))
         .select(col("dst").as("token"), round(col("ar") / col("am"), 9).as("a"))
       val hRaw = e.join(a, e("dst") === a("token"))
-        .select(col("src"),
-          round(round(col("w") * col("a"), 9) * lit(1e9)).cast("long").as("cn"))
+        .select(col("src"), round(col("w") * col("a"), 9).as("c"))
         .groupBy("src")
-        .agg((sum(col("cn")).cast("double") / lit(1e9)).as("hr"))
+        .agg(Folds.exactSum(col("c")).as("hr"))
         .localCheckpoint(true)
       val hMax = hRaw.agg(max(col("hr")).as("hm"))
       h = hRaw.crossJoin(broadcast(hMax))

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * at TF-IDF; these extend the same exploded-token frames).
   *
   * Float discipline (SURVEY.md §5): every transcendental term is rounded
-  * to 6 dp BEFORE summation and sums fold over SORTED lists, so the
-  * result is independent of partitioning and bit-identical to the DuckDB
-  * oracle's `list_reduce(list_sort(...))`. Integer counts stay exact at
+  * to 6 dp BEFORE summation and sums are exact ([[Folds.exactSum]]), so
+  * the result is independent of partitioning and matches the DuckDB
+  * oracle's `list_reduce(list_sort(...))` at 6 dp. Integer counts stay exact at
   * any scale; ratios divide exact longs inside double range (< 2^53).
   *
   * Scale: all inputs are the (doc_id, token) exploded frame — one
@@ -60,7 +60,7 @@ object LangModel {
     * "perplexity" quality proxy: documents of rare tokens score low,
     * boilerplate of frequent tokens scores high. p(t) is the corpus MLE
     * (exact long counts); each tf·ln p term is rounded to 6 dp, then the
-    * per-doc terms fold over a sorted list.
+    * per-doc terms sum exactly.
     */
   def unigramLogprob(docs: DataFrame): DataFrame = {
     val tf = docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
@@ -73,11 +73,11 @@ object LangModel {
         round(col("tf") * log(col("cnt").cast("double") / col("total")), 6).as("contrib"))
       .groupBy("doc_id")
       .agg(sum(col("tf")).as("n_tokens"),
-        aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, x) => acc + x).as("s"))
-      .select(col("doc_id"), col("n_tokens"),
-        round(col("s"), 6).as("sum_logprob"),
-        round(col("s") / col("n_tokens"), 6).as("avg_logprob"))
+        Folds.exactSum(col("contrib")).as("s"))
+      .select(col("doc_id"), col("n_tokens"), round(col("s"), 6).as("sum_logprob"))
+      // the mean divides the 6 dp sum: s / n often lands on a 7th-decimal
+      // tie, which an ulp of s would otherwise decide
+      .withColumn("avg_logprob", round(col("sum_logprob") / col("n_tokens"), 6))
   }
 
   /** Per-document Shannon entropy of the within-doc token distribution
@@ -99,13 +99,12 @@ object LangModel {
       .groupBy("doc_id")
       .agg(first(col("n")).as("n_tokens"),
         count(lit(1)).as("n_distinct"),
-        round(aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, x) => acc + x), 6).as("entropy"))
+        round(Folds.exactSum(col("contrib")), 6).as("entropy"))
 
   /** KL divergence of each language's token distribution from the corpus
     * distribution — the drift/mixture diagnostic for a multi-language
     * corpus. Both distributions are exact-count MLEs; per-token terms are
-    * rounded then sorted-folded per lang. The corpus-level frame is
+    * rounded then summed exactly per lang. The corpus-level frame is
     * vocab-sized; the final aggregation is |langs| rows.
     */
   def langKl(docs: DataFrame): DataFrame = {
@@ -126,8 +125,7 @@ object LangModel {
       .groupBy("lang")
       .agg(first(col("tot_l")).as("n_tokens"),
         count(lit(1)).as("n_distinct"),
-        round(aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, x) => acc + x), 6).as("kl"))
+        round(Folds.exactSum(col("contrib")), 6).as("kl"))
   }
 
   /** Pointwise mutual information over within-document token
@@ -166,7 +164,7 @@ object LangModel {
     * p(w2|w1) = (c(w1 w2) + 1) / (c(w1 ·) + V), where c(w1 ·) is w1's
     * count as a bigram left context and V the corpus vocabulary size.
     * All counts exact longs; each tf·ln p term rounds to 6 dp and the
-    * per-doc sum folds over a sorted list. Docs with fewer than two
+    * per-doc sum is exact. Docs with fewer than two
     * tokens have no bigrams and are excluded (stated, not NULL-padded).
     * Shape: bigram counts shuffle on the pair string with map-side
     * partial agg; the context and vocab frames are vocab-bounded. */
@@ -192,8 +190,7 @@ object LangModel {
           .as("contrib"))
       .groupBy("doc_id")
       .agg(sum(col("tf")).as("n_bigrams"),
-        aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, x) => acc + x).as("s"))
+        Folds.exactSum(col("contrib")).as("s"))
       .select(col("doc_id"), col("n_bigrams"),
         round(col("s"), 6).as("sum_logprob"),
         round(col("s") / col("n_bigrams"), 6).as("avg_logprob"))
@@ -239,7 +236,7 @@ object LangModel {
     * groupBys OVER it (vocabulary²-bounded, far smaller than the token
     * stream), and the type count is a one-row broadcast. Per-row
     * arithmetic over exact integer counts — no float aggregation, so the
-    * result is partitioning-independent without sorted folds. */
+    * result is partitioning-independent without any float sum. */
   def knBigram(docs: DataFrame, discount: Double = 0.75): DataFrame = {
     val toked = docs.select(TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
@@ -270,7 +267,7 @@ object LangModel {
     * [[bigramLm]] (trained on the same corpus, so every observed bigram
     * has an LM row — self-scoring needs no OOV backoff); the join is
     * vocabulary²-bounded on (w1, w2). Float discipline: logp terms are
-    * 6 dp-rounded in the LM, per-doc sums fold over sorted lists, and
+    * 6 dp-rounded in the LM, per-doc sums are exact, and
     * the final mean divides the rounded sum once. */
   def docPerplexity(docs: DataFrame, k: Double = 0.5): DataFrame = {
     val lm = bigramLm(docs, k).select(col("w1"), col("w2"), col("logp"))
@@ -285,8 +282,7 @@ object LangModel {
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_bigrams"),
-        round(aggregate(sort_array(collect_list(col("logp"))), lit(0.0),
-          (acc, v) => acc + v), 6).as("sum_logp"))
+        round(Folds.exactSum(col("logp")), 6).as("sum_logp"))
       .select(col("doc_id"), col("n_bigrams"), col("sum_logp"),
         round(-col("sum_logp") / col("n_bigrams"), 6).as("nll"))
   }
@@ -300,7 +296,7 @@ object LangModel {
     * mixture toward the target domain without a trained classifier.
     *
     * Float discipline: each token's tf·ln(ratio) contribution is rounded
-    * to 6 dp, per-doc sums fold over sorted lists. Count frames are
+    * to 6 dp, per-doc sums are exact. Count frames are
     * exact longs; the two LM tables are vocabulary-sized and broadcast
     * via AQE. */
   def importanceWeights(docs: DataFrame, targetLang: String = "en"): DataFrame = {
@@ -330,8 +326,7 @@ object LangModel {
     contrib.groupBy("doc_id")
       .agg(
         sum(col("tf")).as("n_tokens"),
-        round(aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, v) => acc + v), 6).as("log_ratio"))
+        round(Folds.exactSum(col("contrib")), 6).as("log_ratio"))
   }
 
   /** Reciprocal-rank fusion of two retrieval signals (B56): a BM25
@@ -384,8 +379,8 @@ object LangModel {
   /** BM25 keyword search (B82): score every document against a literal
     * query (sum of its [[bm25]] weights for the query terms it
     * contains), return the global top-k — the retrieval API over the
-    * same weighting the ranking ops use. The per-doc sum folds the ≤
-    * |query| rounded terms in sorted order; the global top-k plans as
+    * same weighting the ranking ops use. The per-doc sum adds the ≤
+    * |query| rounded terms exactly; the global top-k plans as
     * TakeOrderedAndProject (per-partition heads, single tiny merge —
     * never a full sort) with ties broken on doc_id. */
   def bm25Search(docs: DataFrame, query: Seq[String] = Seq("query", "join", "scan"),
@@ -395,8 +390,7 @@ object LangModel {
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_matched"),
-        round(aggregate(sort_array(collect_list(col("bm25"))), lit(0.0),
-          (a, b) => a + b), 6).as("score"))
+        round(Folds.exactSum(col("bm25")), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topK)
 
@@ -441,8 +435,7 @@ object LangModel {
           .as("term"))
     ad.agg(
         max(when(col("d") === k, col("x"))).as("overlap_at_k"),
-        round(lit(1.0 - p) * aggregate(sort_array(collect_list(col("term"))),
-          lit(0.0), (acc, t) => acc + t), 6).as("rbo_trunc"))
+        round(lit(1.0 - p) * Folds.exactSum(col("term")), 6).as("rbo_trunc"))
       .select(lit(k.toLong).as("k"), col("overlap_at_k"), col("rbo_trunc"))
   }
 
@@ -467,8 +460,7 @@ object LangModel {
     val feedback = weights
       .filter(col("token").isInCollection(query))
       .groupBy("doc_id")
-      .agg(round(aggregate(sort_array(collect_list(col("bm25"))), lit(0.0),
-        (a, b) => a + b), 6).as("score"))
+      .agg(round(Folds.exactSum(col("bm25")), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(fb)
       .select("doc_id")
@@ -480,8 +472,7 @@ object LangModel {
       .join(broadcast(feedback), "doc_id")
       .filter(!col("token").isInCollection(query))
       .groupBy("token")
-      .agg(round(aggregate(sort_array(collect_list(col("bm25"))), lit(0.0),
-        (a, b) => a + b), 6).as("rsv"))
+      .agg(round(Folds.exactSum(col("bm25")), 6).as("rsv"))
       .withColumn("rank", row_number().over(wExp).cast("long"))
       .filter(col("rank") <= k)
   }
@@ -512,8 +503,7 @@ object LangModel {
       .agg(count_distinct(col("token")).as("q_n")))
     val scores = bm25(docs).join(qdf, "token")
       .groupBy("query_id", "doc_id")
-      .agg(round(aggregate(sort_array(collect_list(col("bm25"))), lit(0.0),
-        (a, b) => a + b), 6).as("score"))
+      .agg(round(Folds.exactSum(col("bm25")), 6).as("score"))
     val relv = docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
       .join(qdf, "token")
       .groupBy("query_id", "doc_id")
@@ -530,8 +520,7 @@ object LangModel {
       round(rel.cast("double") / log((rnk + 1).cast("double")), 9)
     val dcg = topk
       .groupBy("query_id")
-      .agg(round(aggregate(sort_array(collect_list(dcgTerm(col("rel"), col("rnk")))),
-        lit(0.0), (a, b) => a + b), 6).as("dcg"))
+      .agg(round(Folds.exactSum(dcgTerm(col("rel"), col("rnk"))), 6).as("dcg"))
     val mrr = topk.join(qn, "query_id")
       .groupBy("query_id")
       .agg(coalesce(round(lit(1.0) /
@@ -543,8 +532,7 @@ object LangModel {
       .withColumn("irnk", row_number().over(wI).cast("long"))
       .filter(col("irnk") <= k)
       .groupBy("query_id")
-      .agg(round(aggregate(sort_array(collect_list(dcgTerm(col("rel"), col("irnk")))),
-        lit(0.0), (a, b) => a + b), 6).as("idcg"))
+      .agg(round(Folds.exactSum(dcgTerm(col("rel"), col("irnk"))), 6).as("idcg"))
     dcg.join(mrr, "query_id").join(idcg, "query_id")
       .select(col("query_id"), col("mrr"), col("dcg"), col("idcg"),
         round(col("dcg") / col("idcg"), 6).as("ndcg"))
@@ -554,20 +542,18 @@ object LangModel {
     * on ln(frequency) over the vocabulary — natural language keeps its
     * frequent words short (negative slope); a corpus that loses the
     * effect is ID dumps, hashes or template noise wearing a language
-    * tag. Same vocab-bounded sorted-fold OLS discipline as
+    * tag. Same vocab-bounded exact-sum OLS discipline as
     * [[zipfSlope]] (which fits rank–frequency; this fits the
     * length–frequency law), 9 dp terms, 6 dp coefficients. */
   def zipfAbbreviation(docs: DataFrame): DataFrame = {
-    def fold(c: org.apache.spark.sql.Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     docs.select(explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .select(round(log(col("cnt").cast("double")), 9).as("x"),
         length(col("token")).cast("double").as("y"))
       .agg(count(lit(1)).as("n_tokens"),
-        fold(col("x")).as("sx"), fold(col("y")).as("sy"),
-        fold(round(col("x") * col("y"), 9)).as("sxy"),
-        fold(round(col("x") * col("x"), 9)).as("sxx"))
+        Folds.exactSum(col("x")).as("sx"), Folds.exactSum(col("y")).as("sy"),
+        Folds.exactSum(round(col("x") * col("y"), 9)).as("sxy"),
+        Folds.exactSum(round(col("x") * col("x"), 9)).as("sxx"))
       .filter(col("n_tokens") > 1
         && col("n_tokens") * col("sxx") - col("sx") * col("sx") =!= 0.0)
       .select(col("n_tokens"),
@@ -635,7 +621,7 @@ object LangModel {
     * "how different are these slices really" (lang_kl measures each
     * lang against the corpus; JS compares langs to EACH OTHER and
     * doesn't blow up on disjoint support). Shares round at 9 dp,
-    * contributions fold sorted per pair (lang_kl's vocab-bounded
+    * contributions sum exactly per pair (lang_kl's vocab-bounded
     * discipline), result at 6 dp. One token shuffle; everything after
     * lives on (pair, vocab)-keyed frames. */
   def langJsMatrix(docs: DataFrame): DataFrame = {
@@ -666,7 +652,7 @@ object LangModel {
         9))
     joined.groupBy("lang_a", "lang_b")
       .agg(count(lit(1)).as("n_tokens_union"),
-        round(lit(0.5) * Folds.sortedSum(col("contrib")), 6).as("js"))
+        round(lit(0.5) * Folds.exactSum(col("contrib")), 6).as("js"))
   }
 
   /** Nucleus (top-p) vocabulary truncation per language (B181): the
@@ -704,12 +690,9 @@ object LangModel {
     * over the corpus vocabulary — the power-law health check (natural
     * corpora sit near −1; pathological or synthetic mixes drift). Ranks
     * assign on the vocab-sized frame (count desc, token ties); each ln
-    * rounds to 9 dp and every double sum folds over a sorted list, so
-    * the closed-form slope/intercept are partition-independent and
-    * mirror the oracle exactly. */
+    * rounds to 9 dp and every double sum is exact, so the closed-form
+    * slope/intercept are partition-independent. */
   def zipfSlope(docs: DataFrame): DataFrame = {
-    def fold(c: org.apache.spark.sql.Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     val cnt = docs.select(explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
     // rank via the two-pass range-partitioned machinery: the vocabulary
@@ -724,9 +707,9 @@ object LangModel {
         round(log(col("cnt").cast("double")), 9).as("y"))
       .agg(
         count(lit(1)).as("n_tokens"),
-        fold(col("x")).as("sx"), fold(col("y")).as("sy"),
-        fold(round(col("x") * col("y"), 9)).as("sxy"),
-        fold(round(col("x") * col("x"), 9)).as("sxx"))
+        Folds.exactSum(col("x")).as("sx"), Folds.exactSum(col("y")).as("sy"),
+        Folds.exactSum(round(col("x") * col("y"), 9)).as("sxy"),
+        Folds.exactSum(round(col("x") * col("x"), 9)).as("sxx"))
       // a 1-token vocabulary has no rank spread: the OLS denominator is
       // exactly 0 and the slope undefined — emit nothing, loudly typed
       .filter(col("n_tokens") > 1)
@@ -741,7 +724,7 @@ object LangModel {
     * the source's language mix — the corpus-composition monitor next to
     * [[langKl]]'s distribution drift. Counts are exact longs off one
     * tiny (source, lang) aggregate; each −p·ln p term rounds to 6 dp
-    * and the ≤|langs| terms fold sorted, the house transcendental
+    * and the ≤|langs| terms sum exactly, the house transcendental
     * discipline. */
   def sourceLangEntropy(docs: DataFrame): DataFrame = {
     val c = docs.groupBy("source", "lang").agg(count(lit(1)).as("cnt"))
@@ -753,8 +736,7 @@ object LangModel {
       .groupBy("source")
       .agg(first(col("n_docs")).as("n_docs"),
         count(lit(1)).as("n_langs"),
-        round(aggregate(sort_array(collect_list(col("term"))), lit(0.0),
-          (a, x) => a + x), 6).as("entropy"))
+        round(Folds.exactSum(col("term")), 6).as("entropy"))
   }
 
   /** Token burstiness (B83): the index of dispersion (variance/mean) of
@@ -823,7 +805,7 @@ object LangModel {
     * Scale: LM frames are vocabulary²-bounded and AQE-broadcast against
     * the test bigram stream; the vocab total is one broadcast row.
     * Float discipline: each logp is rounded 6 dp per row, per-doc sums
-    * fold over sorted lists, the final mean divides once. */
+    * are exact, the final mean divides once. */
   def heldoutPerplexity(docs: DataFrame, k: Double = 0.5): DataFrame = {
     val toked = docs.select(col("doc_id"),
         when(pmod(col("doc_id"), lit(4)) < 3, lit("train")).otherwise(lit("test"))
@@ -854,8 +836,7 @@ object LangModel {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("oov")).as("n_oov"),
-        round(aggregate(sort_array(collect_list(col("logp"))), lit(0.0),
-          (acc, x) => acc + x), 6).as("sum_logp"))
+        round(Folds.exactSum(col("logp")), 6).as("sum_logp"))
       .select(col("doc_id"), col("n_bigrams"), col("n_oov"), col("sum_logp"),
         round(-col("sum_logp") / col("n_bigrams"), 6).as("nll"))
   }
@@ -873,8 +854,8 @@ object LangModel {
     *
     * Scale: three count tables (trigram/bigram/unigram) from partial-agg
     * shuffles; context totals reuse the same tables; the score join is
-    * hash-partitioned on the n-gram key. Per-doc log folds are sorted
-    * (9 dp terms), doc-bounded buffers. */
+    * hash-partitioned on the n-gram key. Per-doc log sums are exact
+    * (9 dp terms). */
   def stupidBackoff(docs: DataFrame, alpha: Double = 0.4): DataFrame = {
     val toked = docs.select(col("doc_id"),
         when(pmod(col("doc_id"), lit(4)) < 3, lit("train")).otherwise(lit("test"))
@@ -923,7 +904,7 @@ object LangModel {
       .agg(count(lit(1)).as("n_trigrams"),
         sum(when(col("lvl") === 1, 1L).otherwise(0L)).as("n_backoff1"),
         sum(when(col("lvl") === 2, 1L).otherwise(0L)).as("n_backoff2"),
-        round(Folds.sortedSum(col("logs")), 6).as("sum_logs"))
+        round(Folds.exactSum(col("logs")), 6).as("sum_logs"))
       .select(col("doc_id"), col("n_trigrams"), col("n_backoff1"),
         col("n_backoff2"), col("sum_logs"),
         round(col("sum_logs") / col("n_trigrams"), 6).as("mean_logs"))
@@ -933,8 +914,7 @@ object LangModel {
     * companion to [[tokenEntropy]]'s unigram view — how predictable is
     * the next token given the current one, corpus-wide. Written as
     * −Σ c₁₂·ln(c₁₂/c₁) / N over bigram TYPES (all counts exact BIGINTs),
-    * each 6 dp contribution folded two-level (md5-bucketed: the bigram
-    * type frame is data-sized at web scale). Reported next to the
+    * each 6 dp contribution summed exactly. Reported next to the
     * counts so perplexity falls out downstream. */
   def bigramCondEntropy(docs: DataFrame): DataFrame = {
     val toked = docs.select(TextOps.tokens(col("text")).as("toks"))
@@ -946,20 +926,10 @@ object LangModel {
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
     val cBig = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val cW1 = cBig.groupBy("w1").agg(sum(col("c12")).as("c1"))
-    val contrib = cBig.join(cW1, "w1")
-      .select(
-        expr("CAST(conv(substr(md5(concat(w1, ' ', w2)), 1, 4), 16, 10) AS BIGINT) % 1024")
-          .as("sb"),
-        col("c12"),
-        round(col("c12") * log(col("c12").cast("double") / col("c1")), 6)
-          .as("contrib"))
-    contrib
-      .groupBy("sb")
-      .agg(sum(col("c12")).as("sub_n"), count(lit(1)).as("sub_t"),
-        Folds.sortedSum(col("contrib")).as("sub_s"))
-      .agg(sum(col("sub_n")).as("n_bigrams"),
-        sum(col("sub_t")).as("n_bigram_types"),
-        round(Folds.sortedSum(col("sub_s")), 6).as("s"))
+    cBig.join(cW1, "w1")
+      .agg(sum(col("c12")).as("n_bigrams"), count(lit(1)).as("n_bigram_types"),
+        round(Folds.exactSum(
+          round(col("c12") * log(col("c12").cast("double") / col("c1")), 6)), 6).as("s"))
       .select(col("n_bigrams"), col("n_bigram_types"),
         round(-col("s") / col("n_bigrams"), 6).as("h_cond"))
   }
@@ -989,7 +959,7 @@ object LangModel {
     * [[zipfSlope]]'s order-statistics sibling (the regression uses the
     * whole curve; Hill uses only the tail where the power law actually
     * holds). Counts are exact BIGINTs; each ln-ratio term rounds at
-    * 6 dp and the ≤(k−1)-element mean folds sorted; degenerate tails
+    * 6 dp and the ≤(k−1)-element mean is an exact sum; degenerate tails
     * (all-equal counts, vocab < 2) report 0.
     *
     * Scale: the only data-sized pass is the token count shuffle; the
@@ -1010,7 +980,7 @@ object LangModel {
         round(log(col("cnt").cast("double") / col("x_k")), 6).as("term"))
     terms.groupBy("k_used", "x_k")
       .agg(count(lit(1)).as("n_terms"),
-        round(Folds.sortedSum(col("term")), 6).as("s"))
+        round(Folds.exactSum(col("term")), 6).as("s"))
       .select(col("k_used"), col("x_k"), col("n_terms"),
         when(col("s") > 0, round(col("n_terms").cast("double") / col("s"), 6))
           .otherwise(lit(0.0)).as("hill_alpha"))
@@ -1026,35 +996,28 @@ object LangModel {
     * them).
     *
     * Float discipline: per-(source, token) contributions round at 6 dp
-    * and fold two-level (md5-bucketed: a 100 TB domain's vocabulary is
-    * data-sized, so level-1 buffers are bucket-bounded); loss and the
-    * exp-update round at 9 dp; the normalizer folds the domain-bounded
-    * w′ list sorted. Scale: two token-keyed shuffles + domain-bounded
-    * frames; nothing data-sized sits in one buffer or window. */
+    * and sum exactly; loss and the exp-update round at 9 dp; the
+    * normalizer is an exact sum over the domains. Scale: two
+    * token-keyed shuffles + domain-bounded frames; nothing data-sized
+    * sits in one buffer or window. */
   def doremiStep(docs: DataFrame, eta: Double = 0.1): DataFrame = {
     val tok = docs.select(col("source"),
       explode(TextOps.tokens(col("text"))).as("token"))
     val sf = tok.groupBy("source", "token").agg(count(lit(1)).as("tf"))
     val cnt = sf.groupBy("token").agg(sum(col("tf")).as("cnt"))
     val tot = cnt.agg(sum(col("cnt")).as("total"))
-    val contrib = sf.join(cnt, "token").crossJoin(broadcast(tot))
-      .select(col("source"), col("tf"),
-        expr("CAST(conv(substr(md5(token), 1, 4), 16, 10) AS BIGINT) % 1024").as("sb"),
-        round(col("tf") * log(col("cnt").cast("double") / col("total")), 6)
-          .as("contrib"))
-    val dom = contrib
-      .groupBy("source", "sb")
-      .agg(sum(col("tf")).as("sub_n"), Folds.sortedSum(col("contrib")).as("sub_s"))
+    val dom = sf.join(cnt, "token").crossJoin(broadcast(tot))
       .groupBy("source")
-      .agg(sum(col("sub_n")).as("n_tokens"),
-        round(Folds.sortedSum(col("sub_s")), 6).as("s"))
+      .agg(sum(col("tf")).as("n_tokens"),
+        round(Folds.exactSum(
+          round(col("tf") * log(col("cnt").cast("double") / col("total")), 6)), 6).as("s"))
       .select(col("source"), col("n_tokens"),
         round(-col("s") / col("n_tokens"), 9).as("loss"))
     val w = dom.crossJoin(broadcast(tot))
       .select(col("source"), col("n_tokens"), col("loss"),
         round(col("n_tokens").cast("double") / col("total"), 9).as("w0"))
       .withColumn("w_up", round(col("w0") * exp(lit(eta) * col("loss")), 9))
-    val z = w.agg(Folds.sortedSum(col("w_up")).as("z"))
+    val z = w.agg(Folds.exactSum(col("w_up")).as("z"))
     w.crossJoin(broadcast(z))
       .select(col("source"), col("n_tokens"), round(col("loss"), 6).as("loss"),
         round(col("w0"), 6).as("w0"),
@@ -1168,7 +1131,7 @@ object LangModel {
     * lexicographic) become its profile with log-probability
     * ln(cnt/total). Score the held-out half: per (doc, candidate lang),
     * Σ count_doc(g)·ln p(g|lang) over profile hits (9 dp-rounded terms,
-    * sorted fold); argmax with lexicographic tie-break; docs matching no
+    * exact sum); argmax with lexicographic tie-break; docs matching no
     * profile trigram predict 'und'. Deliverable: the (true lang →
     * predicted) confusion matrix.
     *
@@ -1206,7 +1169,7 @@ object LangModel {
     val tg = test.groupBy("doc_id", "lang", "gram").agg(count(lit(1)).as("cnt"))
     val scored = tg.join(broadcast(profile), "gram")
       .groupBy("doc_id", "lang", "plang")
-      .agg(Folds.sortedSum(round(col("cnt") * col("lnp"), 9)).as("score"))
+      .agg(Folds.exactSum(round(col("cnt") * col("lnp"), 9)).as("score"))
     val wBest = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("score").desc, col("plang"))
     val best = scored.withColumn("rn", row_number().over(wBest))
@@ -1261,8 +1224,8 @@ object LangModel {
     *
     * Determinism: per-(prefix, heldout-token) surprisal terms are
     * (h_cnt/n_held)·ln((n_train+V)/(cnt+1)) — each bounded by the max
-    * model surprisal so 6 dp rounding is never sub-ulp — folded SORTED
-    * per prefix; the 3-point OLS folds sorted 9 dp products. Scale: ONE
+    * model surprisal so 6 dp rounding is never sub-ulp — summed exactly
+    * per prefix; the 3-point OLS sums 9 dp products exactly. Scale: ONE
     * pass tags each training token with every prefix containing it (no
     * per-prefix rescans); everything after the (m, token) partial-agg
     * shuffle is vocab-bounded. */
@@ -1292,20 +1255,15 @@ object LangModel {
             / (coalesce(col("cnt"), lit(0L)) + 1L).cast("double")), 6)
           .as("contrib"))
     val xent = terms.groupBy("m", "n_train")
-      .agg(round(aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-        (acc, x) => acc + x), 6).as("heldout_xent"))
+      .agg(round(Folds.exactSum(col("contrib")), 6).as("heldout_xent"))
     val pts = xent.select(col("m"), col("n_train"), col("heldout_xent"),
       log(col("n_train").cast("double")).as("x"))
     val mom = pts.agg(
       count(lit(1)).cast("double").as("kk"),
-      aggregate(sort_array(collect_list(col("x"))), lit(0.0),
-        (acc, x) => acc + x).as("sx"),
-      aggregate(sort_array(collect_list(col("heldout_xent"))), lit(0.0),
-        (acc, x) => acc + x).as("sy"),
-      aggregate(sort_array(collect_list(round(col("x") * col("heldout_xent"), 9))),
-        lit(0.0), (acc, x) => acc + x).as("sxy"),
-      aggregate(sort_array(collect_list(round(col("x") * col("x"), 9))),
-        lit(0.0), (acc, x) => acc + x).as("sxx"))
+      Folds.exactSum(col("x")).as("sx"),
+      Folds.exactSum(col("heldout_xent")).as("sy"),
+      Folds.exactSum(round(col("x") * col("heldout_xent"), 9)).as("sxy"),
+      Folds.exactSum(round(col("x") * col("x"), 9)).as("sxx"))
     val fit = mom.select(
       round((col("kk") * col("sxy") - col("sx") * col("sy"))
         / (col("kk") * col("sxx") - col("sx") * col("sx")), 6).as("loglog_slope"),
@@ -1331,9 +1289,9 @@ object LangModel {
     * Scale + determinism: one corpus token-count pass; everything after
     * runs on the (sources × topK)-bounded grid (absent cells coalesce to
     * 0 — the grid is a crossJoin of two tiny frames). Relative
-    * frequencies are exact-long divides rounded at 9 dp; μ/σ fold over
-    * SORTED per-token lists (sources-bounded); z rounds at 6 dp; the
-    * per-pair mean folds over the SORTED ≤topK |Δz| list. Zero-variance
+    * frequencies are exact-long divides rounded at 9 dp; μ/σ are exact
+    * per-token sums (sources-bounded); z rounds at 6 dp; the per-pair
+    * mean is an exact sum over the ≤topK |Δz| values. Zero-variance
     * tokens are dropped by a `var > 0` gate on the plain double (never a
     * NaN comparison — engines disagree on NaN ordering). */
   def burrowsDelta(docs: DataFrame, topK: Int = 20): DataFrame = {
@@ -1351,10 +1309,8 @@ object LangModel {
         round(coalesce(col("c"), lit(0L)).cast("double") / col("tot"), 9).as("f"))
     val stats = grid.groupBy("token")
       .agg(count(lit(1)).as("ns"),
-        aggregate(sort_array(collect_list(col("f"))), lit(0.0),
-          (a, x) => a + x).as("sf"),
-        aggregate(sort_array(collect_list(col("f") * col("f"))), lit(0.0),
-          (a, x) => a + x).as("sf2"))
+        Folds.exactSum(col("f")).as("sf"),
+        Folds.exactSum(col("f") * col("f")).as("sf2"))
       .select(col("token"), (col("sf") / col("ns")).as("mu"),
         (col("sf2") / col("ns") - (col("sf") / col("ns")) * (col("sf") / col("ns")))
           .as("variance"))

@@ -1411,7 +1411,7 @@ object Relational {
         sum(col("r").cast("decimal(38,0)") * col("r")).as("sg2"))
     val tot = gm.agg(count(lit(1)).as("k_dow"), sum(col("n_g")).as("n_days"),
       sum(col("sg")).as("s"), sum(col("sg2")).as("s2"),
-      Folds.sortedSum(col("sg").cast("double") * col("sg").cast("double")
+      Folds.exactSum(col("sg").cast("double") * col("sg").cast("double")
         / col("n_g")).as("bsum"))
     tot.select(col("n_days"), col("k_dow"),
         (col("s2").cast("double")
@@ -1817,7 +1817,7 @@ object Relational {
     * χ² statistic — the classic fabricated-data / fraud screen a finance
     * warehouse runs over money columns. All 9 digits always present
     * (grid left-join, zero-filled); χ² contributions round at 9 dp and
-    * fold sorted over the 9-row frame. Scale: one partial-agg pass over
+    * sum exactly over the 9-row frame. Scale: one partial-agg pass over
     * the fact table; everything after is digit-bounded. */
   def benfordCheck(orders: DataFrame): DataFrame = {
     val expCase = "CASE digit " + BenfordP.map { case (d, p) =>
@@ -1836,7 +1836,7 @@ object Relational {
         round((col("n_obs") - col("n") * col("exp_p"))
           * (col("n_obs") - col("n") * col("exp_p"))
           / (col("n") * col("exp_p")), 9))
-    val chi2 = filled.agg(round(Folds.sortedSum(col("chi2_term")), 6).as("chi2"))
+    val chi2 = filled.agg(round(Folds.exactSum(col("chi2_term")), 6).as("chi2"))
     filled.crossJoin(broadcast(chi2))
       .select(col("digit"), col("n_obs"),
         round(col("n_obs").cast("double") / col("n"), 6).as("obs_p"),
@@ -2317,8 +2317,8 @@ object Relational {
     * log-linear rate model log λ_t = b₀ + b₁·t fit by 4 unrolled
     * NEWTON-RAPHSON steps — the COUNT-model sibling of platt_scaling's
     * logistic calibrator (same distributed-second-order-optimizer
-    * discipline: per-step sufficient statistics as 9 dp sorted folds
-    * over the calendar-bounded day frame, closed-form 2×2 solve,
+    * discipline: per-step sufficient statistics as exact sums of 9 dp
+    * terms over the calendar-bounded day frame, closed-form 2×2 solve,
     * parameters re-rounded 9 dp per step so both engines walk the
     * identical trajectory). exp(b₁) is the daily growth multiplier —
     * the statistically right trend readout for COUNTS, where the OLS
@@ -2352,11 +2352,11 @@ object Relational {
           round(col("t") * lam, 9).as("tl"),
           round(col("t") * col("t") * lam, 9).as("ttl"))
       val sums = terms.groupBy("n_days", "b0", "b1")
-        .agg(Folds.sortedSum(col("r")).as("g0"),
-          Folds.sortedSum(col("tr")).as("g1"),
-          Folds.sortedSum(col("l")).as("h00"),
-          Folds.sortedSum(col("tl")).as("h01"),
-          Folds.sortedSum(col("ttl")).as("h11"))
+        .agg(Folds.exactSum(col("r")).as("g0"),
+          Folds.exactSum(col("tr")).as("g1"),
+          Folds.exactSum(col("l")).as("h00"),
+          Folds.exactSum(col("tl")).as("h01"),
+          Folds.exactSum(col("ttl")).as("h11"))
       // singular Hessian on a zero-variance day axis (single-day
       // stream): NULL params, never an ANSI divide-by-zero throw
       val det = col("h00") * col("h11") - col("h01") * col("h01")
@@ -2384,17 +2384,20 @@ object Relational {
     * outlier-hostage OLS line and theil_sen's median slope: 95%
     * Gaussian efficiency AND bounded outlier influence, the trend a
     * revenue series with promo spikes actually wants. Initial fit from
-    * exact DECIMAL(38,0) moments; per-step weighted sums are 9 dp
-    * sorted folds over the calendar-bounded day frame (its windows are
-    * config-sized); parameters re-round 9 dp per step so both engines
-    * walk the identical trajectory. */
+    * exact DECIMAL(38,0) moments. Each step solves in days since the
+    * first day (x'), not in raw day_idx: the raw 2×2 normal equations
+    * at day_idx ≈ 2·10⁴ cancel away ~7 of the 16 digits, so an ulp in
+    * any weighted sum moved the slope's 6th decimal. Weighted sums are
+    * exact sums of 9 dp terms over the calendar-bounded day frame (its
+    * windows are config-sized); the slope, then the intercept at x' = 0,
+    * then the intercept at day 0 re-round at 6 dp per step. */
   def huberTrend(events: DataFrame, iters: Int = 3): DataFrame = {
     val daily = graft.CacheTracker.track(events
       .select(expr("unix_micros(ts) div 86400000000").as("day_idx"),
         cents(col("value")).as("c"))
       .groupBy("day_idx").agg(sum(col("c")).as("cents"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val m = daily.agg(count(lit(1)).as("n"),
+    val m = daily.agg(count(lit(1)).as("n"), min(col("day_idx")).as("x0"),
       sum(col("day_idx")).as("sx"), sum(col("cents")).as("sy"),
       sum(col("day_idx").cast("decimal(38,0)") * col("cents")).as("sxy"),
       sum(col("day_idx").cast("decimal(38,0)") * col("day_idx")).as("sxx"))
@@ -2403,12 +2406,12 @@ object Relational {
     // NULL fit on a zero-variance day axis (single-day stream) — the
     // ANSI divide-by-zero guard; NULLs then flow through every IRLS
     // step's null-short-circuiting arithmetic
-    val ols = m.select(col("n"),
+    val ols = m.select(col("n"), col("x0"),
       round(when(denom0 =!= 0.0,
         (col("n").cast("decimal(38,0)") * col("sxy") -
           col("sx").cast("decimal(38,0)") * col("sy")).cast("double") / denom0), 9)
         .as("b1"), col("sx"), col("sy"))
-      .select(col("n"), col("b1"),
+      .select(col("n"), col("x0"), col("b1"),
         round(col("sy").cast("double") / col("n")
           - col("b1") * (col("sx").cast("double") / col("n")), 9).as("b0"))
     // params and scale are ONE-ROW frames: localCheckpoint each step so
@@ -2416,14 +2419,15 @@ object Relational {
     // params), not the whole k-step prefix — the bradley_terry lineage
     // discipline; this query read 101 scheduler jobs for 3 IRLS steps
     // on a calendar-bounded frame before the pins (r17).
-    var params = ols.select(col("n"), col("b0"), col("b1"))
+    var params = ols.select(col("n"), col("x0"), col("b0"), col("b1"))
       .localCheckpoint(true)
     var lastScale: DataFrame = null
     for (_ <- 1 to iters) {
       val e = round(col("cents").cast("double") - col("b0")
         - col("b1") * col("day_idx"), 6)
       val resid = daily.crossJoin(broadcast(params))
-        .select(col("n"), col("day_idx"), col("cents"), abs(e).as("ae"))
+        .select(col("n"), col("x0"), (col("day_idx") - col("x0")).as("x"), col("day_idx"),
+          col("cents"), abs(e).as("ae"))
       // rank-based lower median of |e|: the ⌈n/2⌉-th smallest — an
       // observed value, immune to interpolation-convention drift
       val wMed = org.apache.spark.sql.expressions.Window
@@ -2437,26 +2441,26 @@ object Relational {
       val w = round(when(col("ae") <= lit(1.345) * col("s"), lit(1.0))
         .otherwise(lit(1.345) * col("s") / col("ae")), 9)
       val terms = resid.crossJoin(broadcast(scale))
-        .select(col("n"), col("s"),
+        .select(col("n"), col("x0"), col("s"),
           w.as("w"),
-          round(w * col("day_idx"), 9).as("wx"),
-          round(w * col("day_idx") * col("day_idx"), 9).as("wxx"),
+          round(w * col("x"), 9).as("wx"),
+          round(w * col("x") * col("x"), 9).as("wxx"),
           round(w * col("cents"), 9).as("wy"),
-          round(w * col("day_idx") * col("cents"), 9).as("wxy"))
-      val sums = terms.groupBy("n", "s")
-        .agg(Folds.sortedSum(col("w")).as("sw"),
-          Folds.sortedSum(col("wx")).as("swx"),
-          Folds.sortedSum(col("wxx")).as("swxx"),
-          Folds.sortedSum(col("wy")).as("swy"),
-          Folds.sortedSum(col("wxy")).as("swxy"))
+          round(w * col("x") * col("cents"), 9).as("wxy"))
+      val sums = terms.groupBy("n", "x0", "s")
+        .agg(Folds.exactSum(col("w")).as("sw"),
+          Folds.exactSum(col("wx")).as("swx"),
+          Folds.exactSum(col("wxx")).as("swxx"),
+          Folds.exactSum(col("wy")).as("swy"),
+          Folds.exactSum(col("wxy")).as("swxy"))
       val det = col("sw") * col("swxx") - col("swx") * col("swx")
-      params = sums.select(col("n"),
-        round(when(det =!= 0.0,
-          (col("swxx") * col("swy") - col("swx") * col("swxy")) / det), 9)
-          .as("b0"),
-        round(when(det =!= 0.0,
-          (col("sw") * col("swxy") - col("swx") * col("swy")) / det), 9)
-          .as("b1"))
+      val a0 = round((col("swy") - col("b1") * col("swx")) / col("sw"), 6)
+      params = sums
+        .select(col("n"), col("x0"), col("sw"), col("swx"), col("swy"),
+          round(when(det =!= 0.0,
+            (col("sw") * col("swxy") - col("swx") * col("swy")) / det), 6).as("b1"))
+        .select(col("n"), col("x0"),
+          round(a0 - col("b1") * col("x0"), 6).as("b0"), col("b1"))
         .localCheckpoint(true)
     }
     params.crossJoin(broadcast(lastScale))
@@ -2540,8 +2544,8 @@ object Relational {
     * means the "trend" is hiding autocorrelation and every CI computed
     * from these residuals is too narrow (the assumption check behind
     * theil_sen_trend / retention fits). The day frame is
-    * calendar-bounded, so its one ordered window and 6 dp sorted folds
-    * are config-sized, not data-sized. */
+    * calendar-bounded, so its one ordered window and the exact sums of
+    * its 6 dp terms are config-sized, not data-sized. */
   def durbinWatson(events: DataFrame): DataFrame = {
     val dailyCents = events
       .select(expr("unix_micros(ts) div 86400000000").as("day_idx"),
@@ -2572,21 +2576,14 @@ object Relational {
           - col("slope") * col("day_idx"), 6).as("e"))
       .withColumn("e_prev", lag(col("e"), 1).over(w))
     resid
-      .select(col("n"), col("slope"), col("intercept"),
-        struct(col("day_idx"),
-          round(col("e") * col("e"), 6).as("e2"),
-          when(col("e_prev").isNotNull,
-            round((col("e") - col("e_prev")) * (col("e") - col("e_prev")), 6))
-            .otherwise(lit(0.0)).as("d2")).as("t"))
       .groupBy("n", "slope", "intercept")
-      .agg(array_sort(collect_list(col("t"))).as("ts"))
+      .agg(Folds.exactSum(round(col("e") * col("e"), 6)).as("e2"),
+        Folds.exactSum(when(col("e_prev").isNotNull,
+          round((col("e") - col("e_prev")) * (col("e") - col("e_prev")), 6))
+          .otherwise(lit(0.0))).as("d2"))
       .select(col("n").as("n_days"), col("slope"), col("intercept"),
         // a perfect fit (Σe² = 0) leaves DW undefined: NULL, not a throw
-        round(when(
-          aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("e2")) =!= 0.0,
-          aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("d2"))
-            / aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("e2"))), 6)
-          .as("dw"))
+        round(when(col("e2") =!= 0.0, col("d2") / col("e2")), 6).as("dw"))
   }
 
   /** Gumbel extreme-value fit of the daily maximum purchase (C257):
@@ -2754,10 +2751,8 @@ object Relational {
     * pair with nothing rather than silently shifting the series.
     *
     * Exactness: daily revenue is an exact BIGINT cents sum; the mean
-    * rounds at 9 dp; deviation products round at 6 dp and fold sorted
-    * ([[Folds.sortedSum]]) — the day frame is time-bounded (≤ a few
-    * thousand rows for years of data), so group-sized fold buffers are
-    * safe at any corpus scale. One data-sized shuffle total (the daily
+    * rounds at 9 dp; deviation products round at 6 dp and sum exactly
+    * ([[Folds.exactSum]]). One data-sized shuffle total (the daily
     * aggregate); everything after lives on the day frame. */
   def revenueAcf(events: DataFrame, maxLag: Int = 7): DataFrame = {
     val days = events
@@ -2767,7 +2762,7 @@ object Relational {
       round(sum(col("r")).cast("double") / count(lit(1)), 9).as("mean_r"))
     val dev = days.crossJoin(broadcast(stats))
       .select(col("day_idx"), (col("r") - col("mean_r")).as("dev"))
-    val den = dev.agg(round(Folds.sortedSum(round(col("dev") * col("dev"), 6)),
+    val den = dev.agg(round(Folds.exactSum(round(col("dev") * col("dev"), 6)),
       6).as("den"))
     val lagged = dev.select(
         explode(array((1 to maxLag).map(lit(_)): _*)).as("k"),
@@ -2775,7 +2770,7 @@ object Relational {
     dev.join(lagged, Seq("day_idx"))
       .groupBy("k")
       .agg(count(lit(1)).as("n_pairs"),
-        round(Folds.sortedSum(round(col("dev") * col("dev_lag"), 6)), 6)
+        round(Folds.exactSum(round(col("dev") * col("dev_lag"), 6)), 6)
           .as("num"))
       .crossJoin(broadcast(den))
       .select(col("k").as("lag_days"), col("n_pairs"),
@@ -3523,26 +3518,17 @@ object Relational {
     // no dt > 0 filter: zero-churn times contribute exact-0 terms, and
     // keeping them makes the query TOTAL — a corpus with no churn at all
     // still yields its one summary row (chi2 NULL) instead of vanishing
-    val terms = risk
-      .select(col("tot_a"), col("tot_b"),
-        struct(col("t"),
-          round(dt * fr, 9).as("e1_t"),
-          when(nt > 1,
-            round(dt * fr * (lit(1.0) - fr) * (nt - dt) / (nt - 1), 9))
-            .otherwise(lit(0.0)).as("v_t")).as("u"),
-        col("d_a"))
-    terms.groupBy("tot_a", "tot_b")
+    risk.groupBy("tot_a", "tot_b")
       .agg(sum(col("d_a")).as("o1"),
-        array_sort(collect_list(col("u"))).as("ts"))
+        Folds.exactSum(round(dt * fr, 9)).as("e"),
+        Folds.exactSum(when(nt > 1,
+          round(dt * fr * (lit(1.0) - fr) * (nt - dt) / (nt - 1), 9))
+          .otherwise(lit(0.0))).as("v"))
       .select(col("tot_a").as("n_users_a"), col("tot_b").as("n_users_b"),
         col("o1"),
-        round(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("e1_t")), 6)
-          .as("e1"),
-        round({
-          val e = aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("e1_t"))
-          val v = aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("v_t"))
-          when(v > 0.0, (col("o1") - e) * (col("o1") - e) / v)
-        }, 6).as("chi2"),
+        round(col("e"), 6).as("e1"),
+        round(when(col("v") > 0.0,
+          (col("o1") - col("e")) * (col("o1") - col("e")) / col("v")), 6).as("chi2"),
         lit(1L).as("dof"))
   }
 
@@ -4144,8 +4130,7 @@ object Relational {
     * "how much inequality lives within vs between segments" is the next
     * question. T = (1/N)·Σ (x/μ)·ln(x/μ) over per-customer spend; μ is
     * one broadcast aggregate, each term rounds at 9 dp at creation, and
-    * the sum is the two-level sub-bucketed sorted fold (Folds) — no
-    * buffer ever holds the customer population. Zero-spend customers
+    * the sum is exact ([[Folds.exactSum]]). Zero-spend customers
     * contribute an exact 0 (lim x→0 x·ln x = 0, taken by CASE, not by
     * NaN). */
   def spendTheil(orders: DataFrame): DataFrame = {
@@ -4153,16 +4138,12 @@ object Relational {
       .agg(sum(cents(col("o_totalprice"))).as("spend_cents"))
     val mu = perCust.agg(count(lit(1)).as("n"), sum(col("spend_cents")).as("tot"))
     val terms = perCust.crossJoin(broadcast(mu))
-      .select(col("o_custkey"), col("n"),
+      .select(col("n"),
         when(col("spend_cents") > 0L,
           round((col("spend_cents").cast("double") * col("n") / col("tot"))
             * log(col("spend_cents").cast("double") * col("n") / col("tot")), 9))
           .otherwise(lit(0.0)).as("t"))
-    terms
-      .groupBy(col("n"), Folds.subBucket(col("o_custkey")))
-      .agg(Folds.sortedSum(col("t")).as("sub_s"))
-      .groupBy("n")
-      .agg(Folds.sortedSum(col("sub_s")).as("s"))
+    terms.groupBy("n").agg(Folds.exactSum(col("t")).as("s"))
       .select(col("n").as("n_customers"),
         round(col("s") / col("n"), 6).as("theil_t"))
   }
@@ -4170,8 +4151,8 @@ object Relational {
   /** Theil within/between decomposition by market segment (C237): the
     * reason [[spendTheil]] exists — T = Σ s_g·T_g + Σ s_g·ln(μ_g/μ)
     * exactly, so "is spend inequality a segment story or a
-    * within-segment story" is one table. Per-segment inner folds are
-    * the same two-level sub-bucketed sorted sums; the between terms are
+    * within-segment story" is one table. Per-segment inner sums are
+    * exact, as in [[spendTheil]]; the between terms are
     * segment-bounded one-liners; every ratio is a fixed-order double
     * expression off exact cents. */
   def spendTheilDecomp(orders: DataFrame, customer: DataFrame): DataFrame = {
@@ -4183,16 +4164,12 @@ object Relational {
       .agg(count(lit(1)).as("n_g"), sum(col("sc")).as("tot_g"))
     val tot = segAgg.agg(sum(col("n_g")).as("n"), sum(col("tot_g")).as("tot"))
     val terms = pc.join(broadcast(segAgg), "segment")
-      .select(col("segment"), col("o_custkey"),
+      .select(col("segment"),
         when(col("sc") > 0L,
           round((col("sc").cast("double") * col("n_g") / col("tot_g"))
             * log(col("sc").cast("double") * col("n_g") / col("tot_g")), 9))
           .otherwise(lit(0.0)).as("t"))
-    val within = terms
-      .groupBy(col("segment"), Folds.subBucket(col("o_custkey")))
-      .agg(Folds.sortedSum(col("t")).as("sub_s"))
-      .groupBy("segment")
-      .agg(Folds.sortedSum(col("sub_s")).as("s"))
+    val within = terms.groupBy("segment").agg(Folds.exactSum(col("t")).as("s"))
     within.join(broadcast(segAgg), "segment").crossJoin(broadcast(tot))
       .select(col("segment"), col("n_g").as("n_customers"),
         round(col("tot_g").cast("double") / col("tot"), 6).as("spend_share"),
@@ -4241,7 +4218,7 @@ object Relational {
     * (their counterfactual is unidentified — absence, not a fake 0,
     * the ipsEval convention). Everything reduces to the ≤ |g|·|arms|
     * cell frame: exact integer cents sums, q̂/p̂/terms rounded 9 dp,
-    * cell folds sorted by (g, arm), one global row out — no per-event
+    * exact cell sums, one global row out — no per-event
     * weighting pass at any scale. */
   def doublyRobustEval(events: DataFrame): DataFrame = {
     val base = events.select(
@@ -4265,30 +4242,20 @@ object Relational {
     val qhat = round(col("scm").cast("double") / col("nm"), 9)
     val phat = round(col("nm").cast("double") / col("nmg"), 9)
     val nEvalG = evalC.groupBy("g").agg(sum(col("ne")).as("neg"))
-    // per-context direct-method mass: n_eval_g · (Σ_a q̂(g, a))/K, the
-    // arm fold sorted (arms-bounded)
+    // per-context direct-method mass: n_eval_g · (Σ_a q̂(g, a))/K
     val dmG = model.join(nEvalG, "g").crossJoin(broadcast(karms))
-      .select(col("g"), col("neg"), col("k"),
-        struct(col("arm"), qhat.as("q")).as("u"))
+      .select(col("g"), col("neg"), col("k"), qhat.as("q"))
       .groupBy("g", "neg", "k")
-      .agg(aggregate(array_sort(collect_list(col("u"))), lit(0.0),
-        (a, u) => a + u.getField("q")).as("sum_q"))
+      .agg(Folds.exactSum(col("q")).as("sum_q"))
       .select(col("g"), round(col("neg") * col("sum_q") / col("k"), 9).as("dm_g"))
     val cellTerms = evalC.crossJoin(broadcast(karms))
       .select(
-        struct(col("g"), col("arm"),
-          round((col("sce").cast("double") - col("ne") * qhat)
-            / (col("k") * phat), 9).as("corr"),
-          round(col("sce").cast("double") / (col("k") * phat), 9).as("ips_t"))
-          .as("u"))
-    val gTot = dmG.select(struct(col("g"), col("dm_g")).as("u"))
-      .agg(aggregate(array_sort(collect_list(col("u"))), lit(0.0),
-        (a, u) => a + u.getField("dm_g")).as("dm_sum"))
-    val cTot = cellTerms
-      .agg(aggregate(array_sort(collect_list(col("u"))), lit(0.0),
-          (a, u) => a + u.getField("corr")).as("corr_sum"),
-        aggregate(array_sort(collect_list(col("u"))), lit(0.0),
-          (a, u) => a + u.getField("ips_t")).as("ips_sum"))
+        round((col("sce").cast("double") - col("ne") * qhat)
+          / (col("k") * phat), 9).as("corr"),
+        round(col("sce").cast("double") / (col("k") * phat), 9).as("ips_t"))
+    val gTot = dmG.agg(Folds.exactSum(col("dm_g")).as("dm_sum"))
+    val cTot = cellTerms.agg(Folds.exactSum(col("corr")).as("corr_sum"),
+      Folds.exactSum(col("ips_t")).as("ips_sum"))
     val nE = evalC.agg(coalesce(sum(col("ne")), lit(0L)).as("n_eval"))
     val nM = base.filter(col("is_model")).agg(count(lit(1)).as("n_model"))
     nE.crossJoin(broadcast(nM)).crossJoin(broadcast(karms))

@@ -486,11 +486,9 @@ object Sessionize {
     * none. Report: attributed value by click hour-of-day.
     *
     * Exactness: weights round at 9 dp; the per-purchase normalizer and
-    * the final per-hour totals are sorted folds ([[Folds.sortedSum]] —
-    * per-purchase groups are lookback-bounded, hour groups are
-    * touch-count-bounded and folded at 4 dp), so every value is
-    * partition-order independent and the DuckDB twin matches by
-    * construction.
+    * the final per-hour totals (at 4 dp) are exact sums
+    * ([[Folds.exactSum]]), so every value is partition-order
+    * independent.
     *
     * Scale: the purchase→click pairing rides [[Relational.rangeJoin]]'s
     * binned (user_id, 24h-bin) equi-join — same discipline as
@@ -513,13 +511,11 @@ object Sessionize {
         exp(-((col("us") - col("click_us")) / lit(1000000.0)) / lit(tauS)), 9))
     val perPurchase = Window.partitionBy("event_id")
     touches
-      .withColumn("denom", round(aggregate(
-        sort_array(collect_list(col("w")).over(perPurchase)),
-        lit(0.0), (a, b) => a + b), 9))
+      .withColumn("denom", round(Folds.exactSum(col("w")).over(perPurchase), 9))
       .withColumn("att", round(col("cents") * col("w") / col("denom"), 4))
       .groupBy(expr("pmod(click_us div 3600000000, 24)").as("click_hour"))
       .agg(count(lit(1)).as("n_touches"),
-        round(Folds.sortedSum(col("att")), 4).as("attributed_value"))
+        round(Folds.exactSum(col("att")), 4).as("attributed_value"))
   }
 
   /** Position-based (U-shaped) attribution (C253) — the fifth member of
@@ -557,7 +553,7 @@ object Sessionize {
     w.withColumn("att", round(col("cents") * col("w"), 4))
       .groupBy(expr("pmod(click_us div 3600000000, 24)").as("click_hour"))
       .agg(count(lit(1)).as("n_touches"),
-        round(Folds.sortedSum(col("att")), 4).as("attributed_value"))
+        round(Folds.exactSum(col("att")), 4).as("attributed_value"))
   }
 
   /** Touches-to-convert distribution (C173): for converting users, how
@@ -698,8 +694,8 @@ object Sessionize {
     * unrolled power steps from the uniform vector: the transition
     * matrix is states²-bounded (broadcast, localCheckpointed so the
     * plan stays flat in iterations — the bpe_train discipline), each
-    * step's products round at 9 dp and fold in from-state order
-    * (bounded sorted list), so both engines walk identical doubles. */
+    * step's products round at 9 dp and sum exactly
+    * ([[Folds.exactSum]]), so the result is partition-order independent. */
   def markovStationary(events: DataFrame, iters: Int = 12): DataFrame = {
     val order = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val tr = events
@@ -720,13 +716,8 @@ object Sessionize {
       .localCheckpoint(true)
     for (_ <- 1 to iters) {
       pi = pi.join(m, col("s") === col("f"))
-        .select(col("t"),
-          struct(col("f"), round(col("pi") * col("p"), 9).as("x")).as("u"))
-        .groupBy("t")
-        .agg(array_sort(collect_list(col("u"))).as("us"))
-        .select(col("t").as("s"),
-          round(aggregate(col("us"), lit(0.0), (a, x) => a + x.getField("x")), 9)
-            .as("pi"))
+        .groupBy(col("t").as("s"))
+        .agg(round(Folds.exactSum(round(col("pi") * col("p"), 9)), 9).as("pi"))
         .localCheckpoint(true)
     }
     pi.select(col("s").as("event_type"), round(col("pi"), 6).as("stationary_p"))
@@ -861,9 +852,9 @@ object Sessionize {
         round(col("n").cast("double") / col("n_out"), 9).as("p"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-    // driver twins of the engine's numeric discipline: HALF_UP decimal
-    // rounding (what Spark's round() does) and the ascending sorted fold
-    // (what aggregate(sort_array(collect_list)) does) — bit-identical
+    // driver twins of the oracle's numeric discipline: HALF_UP decimal
+    // rounding (what round() does) and the ascending sorted fold (what
+    // the DuckDB twin's list_reduce(list_sort(..)) does) — bit-identical
     def rnd(x: Double, s: Int): Double =
       BigDecimal(x).setScale(s, BigDecimal.RoundingMode.HALF_UP).toDouble
     def fold(vs: Seq[Double]): Double = vs.sorted.foldLeft(0.0)(_ + _)
@@ -968,9 +959,9 @@ object Sessionize {
     * e^H, the effective number of distinct journeys) of the
     * [[sessionPaths]] distribution — one number for "how templated is
     * user behavior?", the diversity gauge a funnel redesign is judged
-    * by. The path frame is |event_types|³-bounded, so the sorted-fold
-    * sum over 6 dp-rounded −p·ln p terms is the sourceLangEntropy
-    * discipline on a bounded frame. */
+    * by. The exact sum over 6 dp-rounded −p·ln p terms is the
+    * sourceLangEntropy discipline on the |event_types|³-bounded path
+    * frame. */
   def pathEntropy(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val paths = sessionPaths(events, gapMinutes)
     val tot = paths.agg(sum(col("n_sessions")).as("n_total"))
@@ -980,8 +971,7 @@ object Sessionize {
           log(col("n_sessions").cast("double") / col("n_total")), 6).as("term"))
       .groupBy("n_total")
       .agg(count(lit(1)).as("n_paths"),
-        round(aggregate(sort_array(collect_list(col("term"))), lit(0.0),
-          (a, x) => a + x), 6).as("entropy"))
+        round(Folds.exactSum(col("term")), 6).as("entropy"))
       .select(col("n_total").as("n_sessions"), col("n_paths"), col("entropy"),
         round(exp(col("entropy")), 6).as("perplexity"))
   }

@@ -449,7 +449,7 @@ object Similarity {
     * MLlib's seed-bound fit replaced by [[kmeansLloyd]]'s deterministic
     * Lloyd machinery (init = the nCells lowest vec_ids' dim-slices,
     * index-order distance folds at 9 dp, ties to the lowest cluster,
-    * sub-bucketed sorted-fold recentering), so every centroid — and
+    * exact-sum recentering), so every centroid — and
     * therefore every probe set and every result row — is reproducible
     * by the DuckDB oracle CTE-for-CTE.
     *
@@ -555,34 +555,24 @@ object Similarity {
   }
 
   /** Per-label embedding centroids (B17): posexplode to (label, dim, x),
-    * then the two-level bit-stable mean ([[Folds]]): a (label, dim)
-    * group holds ALL N_label vectors' values — corpus-sized, so a
-    * one-level sorted fold's collect_list buffer is gigabytes at 1B
-    * vectors. Level 1 folds each vec_id%B sub-bucket (buffer ≤ N/B),
-    * level 2 folds the ≤B sub-totals (buffer ≤ B). Two partial-agg
-    * shuffles, the second over the tiny (labels × dims × B) frame;
-    * value bit-stable at any partitioning, oracle mirrors the same
-    * two-level structure. */
+    * then the exact mean ([[Folds.exactSum]]) per (label, dim), one
+    * partial-agg shuffle. */
   def embedCentroids(emb: DataFrame): DataFrame =
-    emb.select(col("label"), col("vec_id"),
-        posexplode(col("embedding")).as(Seq("pos", "x")))
-      .select(col("label"), (col("pos") + 1).cast("long").as("dim"),
-        col("x").cast("double").as("x"), Folds.subBucket(col("vec_id")))
-      .groupBy("label", "dim", "sb")
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
+    emb.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
+      .select(col("label"), (col("pos") + 1).cast("long").as("dim"), col("x"))
       .groupBy("label", "dim")
       .agg(
-        sum(col("sub_n")).as("n_vecs"),
-        round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 6).as("centroid"))
+        count(lit(1)).as("n_vecs"),
+        round(Folds.exactSum(col("x")) / count(lit(1)), 6).as("centroid"))
 
   /** SemDeDup-style semantic deduplication (B57): sign-LSH buckets stand
     * in for the k-means clusters of the paper (deterministic and
     * oracle-reproducible where k-means is seed-bound), each bucket keeps
     * its most central member — the vector with max cosine to the
     * bucket's dim-wise mean centroid — and reports how many semantic
-    * duplicates it represents. Centroid means fold over SORTED per-dim
-    * lists (6 dp), cosines fold in index order, ties break on vec_id, so
-    * the keeper choice is bit-deterministic at any partitioning.
+    * duplicates it represents. Centroid means are exact sums (6 dp),
+    * cosines fold in index order, ties break on vec_id, so the keeper
+    * choice is bit-deterministic at any partitioning.
     *
     * Scale: one shuffle to the bounded bucket key for centroids, one
     * broadcast-sized centroid join back, one TopK-style rank per bucket.
@@ -593,17 +583,10 @@ object Similarity {
           signBucket(col("embedding"), bits).as("bucket"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     b.count()
-    // two-level fold (Folds): a bucket's membership grows with the
-    // corpus, so the per-(bucket, dim) mean must not collect every
-    // member in one aggregation buffer — sub-bucket by vec_id % B first
     val cent = b
-      .select(col("bucket"), col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .select(col("bucket"), col("pos"), Folds.subBucket(col("vec_id")),
-        col("x").cast("double").as("x"))
-      .groupBy("bucket", "pos", "sb")
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
+      .select(col("bucket"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy("bucket", "pos")
-      .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 6).as("c"))
+      .agg(round(Folds.exactSum(col("x")) / count(lit(1)), 6).as("c"))
       .groupBy("bucket")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         s => s.getField("c")).as("centroid"))
@@ -627,12 +610,10 @@ object Similarity {
     * block — documents sharing no token never meet; at 100 TB the block
     * key is an LSH band and ultra-frequent tokens are df-pruned before
     * the join (prefix filtering), both of which bound the pair space.
-    * Per-doc norms and per-pair dots fold over SORTED weight lists so
-    * every double is bit-identical to the DuckDB oracle. */
+    * Per-doc norms are exact sums ([[Folds.exactSum]]), so every double
+    * is partition-independent. */
   def docSimilarity(docs: DataFrame, blockCol: String = "source",
                     simMin: Double = 0.8): DataFrame = {
-    def stableSum(c: Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     // the weighted frame feeds three subtrees (norms + both join sides):
     // cache it so the TF-IDF pipeline runs once, not three times — the
     // cache is CacheTracker-scoped, released by the harness after use.
@@ -645,7 +626,7 @@ object Similarity {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     w.count()
     val norms = w.groupBy("doc_id")
-      .agg(sqrt(stableSum(col("tfidf") * col("tfidf"))).as("nrm"))
+      .agg(sqrt(Folds.exactSum(col("tfidf") * col("tfidf"))).as("nrm"))
     val ids = w.select(col("blk"), col("token"), col("doc_id"))
     val cands = ids.select(col("blk"), col("token"), col("doc_id").as("a_id"))
       .join(ids.select(col("blk"), col("token"), col("doc_id").as("b_id")),
@@ -763,8 +744,6 @@ object Similarity {
   def docSimilarityPruned(docs: DataFrame, blockCol: String = "source",
                           simMin: Double = 0.8, maxDfFrac: Double = 0.5,
                           bypassFloor: Double = 0.05): DataFrame = {
-    def stableSum(c: Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     // PERSISTED — the one operator where the recompute-beats-persist
     // streak (doc_lang_coherence / source_overlap / rrf_fusion, BASELINE
     // r8-r9) does NOT transfer, because the eager stats read below is a
@@ -813,7 +792,7 @@ object Similarity {
     val rareFrac = Option(sel.head().get(0))
       .map(_.asInstanceOf[Double]).getOrElse(1.0) // empty corpus → 0/0 → null
     val norms = w.groupBy("doc_id")
-      .agg(sqrt(stableSum(col("tfidf") * col("tfidf"))).as("nrm"))
+      .agg(sqrt(Folds.exactSum(col("tfidf") * col("tfidf"))).as("nrm"))
     val cand =
       if (rareFrac < bypassFloor) {
         // Dense vocabulary (the measured worst case): the gate is
@@ -899,36 +878,26 @@ object Similarity {
     * triangle): the second-moment statistics a whitening / PCA pass over
     * an embedding corpus needs. Each row expands to its dims·(dims+1)/2
     * pair products NARROWLY (no self-join — the classic one-pass outer
-    * product accumulation), then the two-level bit-stable fold ([[Folds]])
-    * onto the bounded (dim_i, dim_j) key space: each cell's group holds
-    * ALL N vectors' products, so a one-level sorted fold would buffer the
-    * corpus in one collect_list; level 1 folds each vec_id%B sub-bucket
-    * (buffer ≤ N/B), level 2 the ≤B sub-totals. Products of two float32
-    * values are exact in double (24+24 < 53 mantissa bits); both fold
-    * levels are order-independent, so the value is bit-stable under any
-    * partitioning and the oracle mirrors the identical structure.
-    * cov = E[xy] − E[x]E[y], rounded last. */
+    * product accumulation), then exact sums ([[Folds.exactSum]]) onto
+    * the bounded (dim_i, dim_j) key space. Products of two float32
+    * values are exact in double (24+24 < 53 mantissa bits), so the value
+    * is bit-stable under any partitioning. cov = E[xy] − E[x]E[y],
+    * rounded last. */
   def embedCovariance(emb: DataFrame, dims: Int = 8): DataFrame = {
     val cells = for (i <- 1 to dims; j <- i to dims) yield
       struct(lit(i.toLong).as("dim_i"), lit(j.toLong).as("dim_j"),
         element_at(col("embedding"), i).cast("double").as("x"),
         element_at(col("embedding"), j).cast("double").as("y"))
+    val n = count(lit(1))
     emb
-      .select(col("vec_id"), explode(array(cells: _*)).as("c"))
-      .select(col("c.dim_i"), col("c.dim_j"), col("c.x"), col("c.y"),
-        Folds.subBucket(col("vec_id")))
-      .groupBy("dim_i", "dim_j", "sb")
-      .agg(count(lit(1)).as("sub_n"),
-        Folds.sortedSum(col("x") * col("y")).as("sub_sxy"),
-        Folds.sortedSum(col("x")).as("sub_sx"),
-        Folds.sortedSum(col("y")).as("sub_sy"))
+      .select(explode(array(cells: _*)).as("c"))
+      .select(col("c.dim_i"), col("c.dim_j"), col("c.x"), col("c.y"))
       .groupBy("dim_i", "dim_j")
       .agg(
-        sum(col("sub_n")).as("n_vecs"),
+        n.as("n_vecs"),
         round(
-          Folds.sortedSum(col("sub_sxy")) / sum(col("sub_n"))
-            - (Folds.sortedSum(col("sub_sx")) / sum(col("sub_n")))
-            * (Folds.sortedSum(col("sub_sy")) / sum(col("sub_n"))), 6).as("cov"))
+          Folds.exactSum(col("x") * col("y")) / n
+            - (Folds.exactSum(col("x")) / n) * (Folds.exactSum(col("y")) / n), 6).as("cov"))
   }
 
   /** Hard-negative mining for contrastive training (B45): for each query
@@ -990,9 +959,8 @@ object Similarity {
     * over the data; the iteration runs on the dims²-bounded matrix).
     * The mirrored full matrix is cached once; each round is one
     * matrix-vector join + one dim-keyed aggregate. Float discipline:
-    * per-cell products round to 9 dp, per-dim sums fold over sorted
-    * lists, and the norm divides once per round — bit-identical to the
-    * unrolled DuckDB twin. Output: per-dim loading of the dominant
+    * per-cell products round to 9 dp, per-dim sums are exact, and the
+    * norm divides once per round. Output: per-dim loading of the dominant
     * eigenvector plus the final Rayleigh-norm eigenvalue estimate. */
   def pcaPower(emb: DataFrame, dims: Int = 8, iters: Int = 5): DataFrame = {
     val cu = embedCovariance(emb, dims).select("dim_i", "dim_j", "cov")
@@ -1007,7 +975,7 @@ object Similarity {
 
   /** The power-iteration core shared by [[pcaPower]] and
     * [[pcaExplained]]: `iters` rounds of v ← Cv / ‖Cv‖ from the uniform
-    * start, 9 dp sorted-fold discipline throughout; returns (dim, v,
+    * start, 9 dp terms and exact sums throughout; returns (dim, v,
     * eig) with eig = the final ‖Cv‖ Rayleigh estimate. */
   private def powerEigen(C: DataFrame, dims: Int, iters: Int): DataFrame = {
     val spark = C.sparkSession
@@ -1028,11 +996,8 @@ object Similarity {
       val w = C.join(v.select(col("dim"), col("v")), C("dim_j") === col("dim"))
         .select(col("dim_i"), round(col("cov") * col("v"), 9).as("c"))
         .groupBy(col("dim_i"))
-        .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (a, b) => a + b), 9).as("w"))
-      val nrm = round(sqrt(aggregate(
-        sort_array(collect_list(col("w") * col("w")).over(wFull)), lit(0.0),
-        (a, b) => a + b)), 9)
+        .agg(round(Folds.exactSum(col("c")), 9).as("w"))
+      val nrm = round(sqrt(Folds.exactSum(col("w") * col("w")).over(wFull)), 9)
       // a zero iterate (all-constant embeddings → zero covariance)
       // normalizes to the zero vector with eig 0 — never an ANSI
       // divide-by-zero throw
@@ -1057,7 +1022,7 @@ object Similarity {
     val (c, v1, v2) = deflatedEigenPair(emb, dims, iters)
     val C = c
     val tr = C.filter(col("dim_i") === col("dim_j"))
-      .agg(round(Folds.sortedSum(col("cov")), 9).as("trace"))
+      .agg(round(Folds.exactSum(col("cov")), 9).as("trace"))
     val e1 = v1.agg(max(col("eig")).as("eigenvalue"))
       .select(lit(1).as("component"), col("eigenvalue"))
     val e2 = v2.agg(max(col("eig")).as("eigenvalue"))
@@ -1095,7 +1060,7 @@ object Similarity {
     * components (B205): the 2-D coordinates a corpus-map / scatter
     * visualization or a cheap spectral filter needs, from the SAME
     * eigenvectors [[pcaExplained]] reports on. p_k(x) = Σ_d x_d·v_k,d
-    * over the first `dims` dimensions (9 dp-rounded terms, sorted fold,
+    * over the first `dims` dimensions (9 dp-rounded terms, exact sum,
     * 6 dp result). The eigen machinery is dims²-bounded after one
     * covariance pass; the projection is one narrow explode + a
     * broadcast join of the 2×dims loadings — linear in the corpus. */
@@ -1110,7 +1075,7 @@ object Similarity {
     def proj(v: DataFrame, name: String): DataFrame =
       x.join(broadcast(v.select(col("dim"), col("v"))), "dim")
         .groupBy("vec_id")
-        .agg(round(Folds.sortedSum(round(col("x") * col("v"), 9)), 6).as(name))
+        .agg(round(Folds.exactSum(round(col("x") * col("v"), 9)), 6).as(name))
     proj(v1, "p1").join(proj(v2, "p2"), "vec_id")
   }
 
@@ -1122,7 +1087,7 @@ object Similarity {
     * [[kmeansSilhouette]] and the IVF quantizer ([[ivfDetParts]]): init
     * is the k lowest vec_ids' vectors, each round assigns every vector to
     * its nearest centroid ([[lloydAssign]]) and recenters with the
-    * two-level sorted fold ([[recenter]]). `vecs` holds (vec_id, e) and
+    * exact per-dim means ([[recenter]]). `vecs` holds (vec_id, e) and
     * is cached by the caller: it is read once per round.
     *
     * The k×dims centroids live on the driver between rounds, so a round
@@ -1157,16 +1122,13 @@ object Similarity {
       .drop("nearest")
 
   /** Lloyd recentering: the per-position mean of each cluster's vectors,
-    * folded in two levels — values sorted within each (cluster, pos,
-    * vec_id % B) sub-bucket, then the sub-sums sorted within (cluster,
-    * pos) — at 9 dp, and collected into one vector per cluster. A null
-    * value counts but adds nothing; a cluster with no values drops out. */
+    * an exact sum over the count at 9 dp, collected into one vector per
+    * cluster. A null value counts but adds nothing; a cluster with no
+    * values drops out. */
   private def recenter(assigned: DataFrame): Seq[Centroid] =
-    assigned.select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-      .groupBy(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")))
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
+    assigned.select(col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
       .groupBy(col("cluster"), col("pos"))
-      .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
+      .agg(round(Folds.exactSum(col("x")) / count(lit(1)), 9).as("cm"))
       .collect().toSeq
       .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
       .map { case (cluster, ms) =>
@@ -1176,9 +1138,9 @@ object Similarity {
   /** Oracle-checkable Lloyd's k-means (B70): deterministic where MLlib's
     * KMeans is seed-bound — init is the k lowest vec_ids, every
     * squared-L2 distance folds the dimension axis in INDEX order (9 dp),
-    * assignment ties break on cluster id, and centroid means fold sorted
-    * per-dim lists ([[lloydFit]]). Three unrolled iterations plus the
-    * final assignment mirror the DuckDB twin bit-for-bit.
+    * assignment ties break on cluster id, and centroid means are exact
+    * per-dim sums ([[lloydFit]]). Three unrolled iterations plus the
+    * final assignment mirror the DuckDB twin.
     *
     * Scale: the vector frame is checkpointed once; each round projects
     * it against the k×dims centroids held on the driver (no shuffle of
@@ -1207,8 +1169,8 @@ object Similarity {
     * of any embedding or clustering change. Purity = Σ_c max_l n_cl / N;
     * NMI = I(C;L)/√(H(C)·H(L)). Every count is exact off one
     * (cluster × label) contingency aggregate (k·|labels|-bounded);
-    * entropies and MI fold 6 dp-rounded terms in sorted cell order
-    * (bounded lists); degenerate entropies (one cluster or one label)
+    * entropies and MI are exact sums of 6 dp-rounded terms;
+    * degenerate entropies (one cluster or one label)
     * yield NULL NMI, not NaN. */
   def clusterPurity(emb: DataFrame, k: Int = 4, dims: Int = 8,
                     iters: Int = 3): DataFrame = {
@@ -1225,21 +1187,16 @@ object Similarity {
       .select(col(key),
         round(-(col("n_k").cast("double") / col("n"))
           * log(col("n_k").cast("double") / col("n")), 6).as("term"))
-      .agg(array_sort(collect_list(struct(col(key), col("term")))).as("ts"))
-      .select(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("term"))
-        .as(s"h_$key"))
+      .agg(Folds.exactSum(col("term")).as(s"h_$key"))
     val mi = cells.crossJoin(broadcast(n))
       .join(broadcast(cells.groupBy("cluster").agg(sum(col("n_cl")).as("n_c"))),
         "cluster")
       .join(broadcast(cells.groupBy("label").agg(sum(col("n_cl")).as("n_l"))),
         "label")
-      .select(struct(col("cluster"), col("label"),
-        round((col("n_cl").cast("double") / col("n"))
-          * log(col("n").cast("double") * col("n_cl")
-            / (col("n_c").cast("double") * col("n_l"))), 6).as("term")).as("t"))
-      .agg(array_sort(collect_list(col("t"))).as("ts"))
-      .select(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("term"))
-        .as("mi"))
+      .select(round((col("n_cl").cast("double") / col("n"))
+        * log(col("n").cast("double") * col("n_cl")
+          / (col("n_c").cast("double") * col("n_l"))), 6).as("term"))
+      .agg(Folds.exactSum(col("term")).as("mi"))
     best.crossJoin(broadcast(n)).crossJoin(broadcast(mi))
       .crossJoin(broadcast(entropyOf("cluster")))
       .crossJoin(broadcast(entropyOf("label")))
@@ -1255,7 +1212,7 @@ object Similarity {
     * single NMI hides: homogeneity = MI/H(label) falls when a cluster
     * mixes labels, completeness = MI/H(cluster) falls when a label
     * splits across clusters, and which one is low says whether k is too
-    * small or too large. Same exact contingency + 6 dp sorted-fold
+    * small or too large. Same exact contingency + 6 dp exact-sum
     * entropy/MI machinery as clusterPurity (cells are k·|labels|-
     * bounded); degenerate entropies yield NULL for that component and
     * for V. */
@@ -1272,21 +1229,16 @@ object Similarity {
       .select(col(key),
         round(-(col("n_k").cast("double") / col("n"))
           * log(col("n_k").cast("double") / col("n")), 6).as("term"))
-      .agg(array_sort(collect_list(struct(col(key), col("term")))).as("ts"))
-      .select(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("term"))
-        .as(s"h_$key"))
+      .agg(Folds.exactSum(col("term")).as(s"h_$key"))
     val mi = cells.crossJoin(broadcast(n))
       .join(broadcast(cells.groupBy("cluster").agg(sum(col("n_cl")).as("n_c"))),
         "cluster")
       .join(broadcast(cells.groupBy("label").agg(sum(col("n_cl")).as("n_l"))),
         "label")
-      .select(struct(col("cluster"), col("label"),
-        round((col("n_cl").cast("double") / col("n"))
-          * log(col("n").cast("double") * col("n_cl")
-            / (col("n_c").cast("double") * col("n_l"))), 6).as("term")).as("t"))
-      .agg(array_sort(collect_list(col("t"))).as("ts"))
-      .select(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("term"))
-        .as("mi"))
+      .select(round((col("n_cl").cast("double") / col("n"))
+        * log(col("n").cast("double") * col("n_cl")
+          / (col("n_c").cast("double") * col("n_l"))), 6).as("term"))
+      .agg(Folds.exactSum(col("term")).as("mi"))
     val homog = when(col("h_label") > 0.0, col("mi") / col("h_label"))
     val compl = when(col("h_cluster") > 0.0, col("mi") / col("h_cluster"))
     broadcast(n).crossJoin(broadcast(mi))
@@ -1352,26 +1304,17 @@ object Similarity {
     * exactly). Reads beside [[embedLabelDrift]]'s split-half cosine:
     * that one grades stability of ONE group, this one distance BETWEEN
     * groups. Per-(label, dim) sums and per-label norm sums are 9 dp
-    * two-level vec_id-bucketed folds; the pair grid and dot products
+    * exact sums; the pair grid and dot products
     * are (labels × dims)-bounded. */
   def embedMmd(emb: DataFrame, dims: Int = 8): DataFrame = {
     val base = emb.select(col("label").cast("long").as("label"), col("vec_id"),
       posexplode(expr(
         s"transform(slice(embedding, 1, $dims), x -> CAST(x AS DOUBLE))"))
         .as(Seq("pos", "x")))
-    val sums = base
-      .select(col("label"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-      .groupBy("label", "pos", "sb")
-      .agg(Folds.sortedSum(round(col("x"), 9)).as("sub_s"))
-      .groupBy("label", "pos")
-      .agg(round(Folds.sortedSum(col("sub_s")), 9).as("s"))
-    val qn = base
-      .select(col("label"), Folds.subBucket(col("vec_id")),
-        round(col("x") * col("x"), 9).as("x2"))
-      .groupBy("label", "sb")
-      .agg(Folds.sortedSum(col("x2")).as("sub_q"))
-      .groupBy("label")
-      .agg(round(Folds.sortedSum(col("sub_q")), 9).as("q"))
+    val sums = base.groupBy("label", "pos")
+      .agg(round(Folds.exactSum(round(col("x"), 9)), 9).as("s"))
+    val qn = base.groupBy("label")
+      .agg(round(Folds.exactSum(round(col("x") * col("x"), 9)), 9).as("q"))
     val counts = emb.select(col("label").cast("long").as("label"))
       .groupBy("label").agg(count(lit(1)).as("n"))
     val perLabel = counts.join(qn, "label")
@@ -1380,9 +1323,7 @@ object Similarity {
         "pos")
       .filter(col("label_a") <= col("label_b"))
       .groupBy("label_a", "label_b")
-      .agg(aggregate(array_sort(collect_list(
-        struct(col("pos"), round(col("sa") * col("sb_"), 9).as("t")))),
-        lit(0.0), (a, t) => a + t.getField("t")).as("dot"))
+      .agg(Folds.exactSum(round(col("sa") * col("sb_"), 9)).as("dot"))
     val self = dots.filter(col("label_a") === col("label_b"))
       .select(col("label_a").as("label"), col("dot").as("s2"))
     val stats = perLabel.join(self, "label")
@@ -1408,8 +1349,8 @@ object Similarity {
     * reliability check: if re-embedding half the data moves a label's
     * centroid (cos ≪ 1), downstream centroid classifiers and IVF cells
     * are unstable and any drift alarm keyed on centroids will be
-    * noisy. Centroids are 9 dp sorted-fold means per (label, half,
-    * dim); the cosine folds dim-ordered 9 dp terms — all bounded
+    * noisy. Centroids are 9 dp exact means per (label, half, dim); the
+    * cosine sums 9 dp terms exactly — all bounded
     * frames after one corpus aggregate. */
   def embedLabelDrift(emb: DataFrame, dims: Int = 8): DataFrame = {
     val base = emb.select(col("label").cast("long").as("label"),
@@ -1419,27 +1360,19 @@ object Similarity {
           .as(Seq("pos", "x")))
     val cent = base.groupBy("label", "half", "pos")
       .agg(count(lit(1)).as("n"),
-        round(aggregate(sort_array(collect_list(col("x"))), lit(0.0),
-          (a, b) => a + b) / count(lit(1)), 9).as("c"))
+        round(Folds.exactSum(col("x")) / count(lit(1)), 9).as("c"))
     val c0 = cent.filter(col("half") === 0)
       .select(col("label"), col("pos"), col("c").as("c0"), col("n").as("rows0"))
     val c1 = cent.filter(col("half") === 1)
       .select(col("label"), col("pos"), col("c").as("c1"), col("n").as("rows1"))
     c0.join(c1, Seq("label", "pos"))
-      .select(col("label"), col("rows0"), col("rows1"),
-        struct(col("pos"),
-          round(col("c0") * col("c1"), 9).as("td"),
-          round(col("c0") * col("c0"), 9).as("t0"),
-          round(col("c1") * col("c1"), 9).as("t1")).as("t"))
       .groupBy("label")
       .agg(max(col("rows0")).as("n_half0"), max(col("rows1")).as("n_half1"),
-        array_sort(collect_list(col("t"))).as("ts"))
+        Folds.exactSum(round(col("c0") * col("c1"), 9)).as("td"),
+        Folds.exactSum(round(col("c0") * col("c0"), 9)).as("t0"),
+        Folds.exactSum(round(col("c1") * col("c1"), 9)).as("t1"))
       .select(col("label"), col("n_half0"), col("n_half1"),
-        round(
-          aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("td"))
-            / (sqrt(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("t0")))
-              * sqrt(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("t1")))),
-          6).as("drift_cos"))
+        round(col("td") / (sqrt(col("t0")) * sqrt(col("t1"))), 6).as("drift_cos"))
   }
 
   /** Embedding-dimension correlation audit (B198): the full Pearson
@@ -1507,24 +1440,22 @@ object Similarity {
     * any embedding model exists. Centroids divide exact sums by the
     * full language population (absent tokens are true zeros), live on
     * the vocab-bounded (lang, token) frame, and broadcast; per-doc dot
-    * products and norms fold 9 dp-rounded terms over sorted lists, so
-    * the score is partition-independent and oracle-exact. */
+    * products and norms are exact sums of 9 dp-rounded terms, so the
+    * score is partition-independent. */
   def docLangCoherence(docs: DataFrame): DataFrame = {
-    def fold(c: Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     val w = TfIdf.tfidf(docs)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
     val nl = docs.groupBy("lang").agg(count(lit(1)).as("n_l"))
     val cent = w.groupBy("lang", "token")
-      .agg(fold(col("tfidf")).as("s"))
+      .agg(Folds.exactSum(col("tfidf")).as("s"))
       .join(broadcast(nl), "lang")
       .select(col("lang"), col("token"), round(col("s") / col("n_l"), 9).as("c"))
     val cnorm = cent.groupBy("lang")
-      .agg(sqrt(fold(round(col("c") * col("c"), 9))).as("c_nrm"))
+      .agg(sqrt(Folds.exactSum(round(col("c") * col("c"), 9))).as("c_nrm"))
     val dots = w.join(broadcast(cent), Seq("lang", "token"))
       .groupBy("doc_id", "lang")
-      .agg(fold(round(col("tfidf") * col("c"), 9)).as("dot"),
-        sqrt(fold(round(col("tfidf") * col("tfidf"), 9))).as("d_nrm"))
+      .agg(Folds.exactSum(round(col("tfidf") * col("c"), 9)).as("dot"),
+        sqrt(Folds.exactSum(round(col("tfidf") * col("tfidf"), 9))).as("d_nrm"))
     dots.join(broadcast(cnorm), "lang")
       .select(col("doc_id"), col("lang"),
         round(col("dot") / (col("d_nrm") * col("c_nrm")), 6).as("coherence"))
@@ -1546,24 +1477,22 @@ object Similarity {
     * shared with each centroid and inflate the score of nearly-disjoint
     * candidates. The reported `cos` is the true cosine. */
   def nearestCentroidLang(docs: DataFrame): DataFrame = {
-    def fold(c: Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     val w = TfIdf.tfidf(docs)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
     val nl = docs.groupBy("lang").agg(count(lit(1)).as("n_l"))
     val cent = w.groupBy("lang", "token")
-      .agg(fold(col("tfidf")).as("s"))
+      .agg(Folds.exactSum(col("tfidf")).as("s"))
       .join(broadcast(nl), "lang")
       .select(col("lang").as("cand_lang"), col("token"),
         round(col("s") / col("n_l"), 9).as("c"))
     val cnorm = cent.groupBy("cand_lang")
-      .agg(sqrt(fold(round(col("c") * col("c"), 9))).as("c_nrm"))
+      .agg(sqrt(Folds.exactSum(round(col("c") * col("c"), 9))).as("c_nrm"))
     val dnorm = w.groupBy("doc_id")
-      .agg(sqrt(fold(round(col("tfidf") * col("tfidf"), 9))).as("d_nrm"))
+      .agg(sqrt(Folds.exactSum(round(col("tfidf") * col("tfidf"), 9))).as("d_nrm"))
     val scored = w.select(col("doc_id"), col("token"), col("tfidf"))
       .join(broadcast(cent), "token")
       .groupBy("doc_id", "cand_lang")
-      .agg(fold(round(col("tfidf") * col("c"), 9)).as("dot"))
+      .agg(Folds.exactSum(round(col("tfidf") * col("c"), 9)).as("dot"))
       .join(dnorm, "doc_id")
       .join(broadcast(cnorm), "cand_lang")
       .select(col("doc_id"), col("cand_lang"),
@@ -1628,15 +1557,10 @@ object Similarity {
     var cent = vecs.filter(col("vec_id") < k)
       .select(col("sub"), col("vec_id").cast("long").as("code"), col("e").as("c"))
     for (_ <- 1 to iters) {
-      // two-level fold (Folds): a PQ cell's membership grows with the
-      // corpus — same sub-bucketed recentering as kmeansLloyd
       cent = assign(cent)
-        .select(col("vec_id"), col("sub"), col("code"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("sub"), col("code"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-        .groupBy(col("sub"), col("code"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
+        .select(col("sub"), col("code"), posexplode(col("e")).as(Seq("pos", "x")))
         .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
+        .agg(round(Folds.exactSum(col("x")) / count(lit(1)), 9).as("cm"))
         .groupBy("sub", "code")
         .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
         .select(col("sub"), col("code"), transform(col("pc"), x => x.getField("cm")).as("c"))
@@ -1741,7 +1665,7 @@ object Similarity {
     * seeded RNG matrix is not. The projection matrix never materializes
     * driver-side: the sign is a per-(i,j) expression over the exploded
     * (vec, dim) frame crossed with the broadcast k-row output-dim frame.
-    * Contributions round 9 dp and fold sorted per output dim. */
+    * Contributions round 9 dp and sum exactly per output dim. */
   def randomProjection(emb: DataFrame, outDims: Int = 16): DataFrame = {
     val x = emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "xf")))
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("i"),
@@ -1756,22 +1680,16 @@ object Similarity {
     x.crossJoin(jDim)
       .select(col("vec_id"), col("j"), (sign * col("x")).as("c"))
       .groupBy("vec_id", "j")
-      .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-        (a, b) => a + b) / sqrt(lit(outDims.toDouble)), 9).as("y"))
+      .agg(round(Folds.exactSum(col("c")) / sqrt(lit(outDims.toDouble)), 9).as("y"))
   }
 
   /** Per-dimension z-standardization of the embedding matrix (B66) —
     * the feature-scaling pass before distance-based ops (k-means, PQ
     * codebooks) so no dimension dominates by raw variance. Dim-wise
-    * mean/std use the two-level bit-stable fold ([[Folds]]): a per-dim
-    * group holds ALL N vectors' values, so the one-level sorted fold
-    * would buffer the corpus in one collect_list; level 1 folds each
-    * vec_id%B sub-bucket, level 2 the ≤B sub-totals — order-independent
-    * at any partitioning, O(N/B + B) state. The per-vector summary
-    * (z sum and z norm over the 6 dp-rounded z values, folded in sorted
-    * order) stays a ONE-level fold — that group is dims-bounded. Three
-    * shuffles: sub-bucketed stats, the tiny (dims × B) roll-up, one back
-    * per vec_id. Constant dimensions (std = 0) are dropped before
+    * mean/std and the per-vector summary (z sum and z norm over the 6
+    * dp-rounded z values) are exact sums ([[Folds.exactSum]]). Two
+    * shuffles: per-dim stats, one back per vec_id. Constant dimensions
+    * (std = 0) are dropped before
     * scoring — z would be Inf/NaN there, and Inf/NaN propagation is
     * exactly where engines disagree; skipping the degenerate dimension
     * (n_dims reflects the kept ones) mirrors eventsAnomaly's var_c > 0
@@ -1780,16 +1698,11 @@ object Similarity {
     val x = emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("dim"),
         col("x").cast("double").as("x"))
-    val stats = x.select(col("dim"), col("x"), Folds.subBucket(col("vec_id")))
-      .groupBy("dim", "sb")
-      .agg(count(lit(1)).as("sub_n"),
-        Folds.sortedSum(col("x")).as("sub_s"),
-        Folds.sortedSum(col("x") * col("x")).as("sub_ss"))
-      .groupBy("dim")
+    val stats = x.groupBy("dim")
       .agg(
-        sum(col("sub_n")).as("n"),
-        Folds.sortedSum(col("sub_s")).as("s"),
-        Folds.sortedSum(col("sub_ss")).as("ss"))
+        count(lit(1)).as("n"),
+        Folds.exactSum(col("x")).as("s"),
+        Folds.exactSum(col("x") * col("x")).as("ss"))
       .select(col("dim"), (col("s") / col("n")).as("mean"),
         sqrt(col("ss") / col("n")
           - (col("s") / col("n")) * (col("s") / col("n"))).as("std"))
@@ -1800,10 +1713,8 @@ object Similarity {
       .groupBy("vec_id")
       .agg(
         count(lit(1)).as("n_dims"),
-        round(aggregate(sort_array(collect_list(col("z"))), lit(0.0),
-          (a, b) => a + b), 6).as("z_sum"),
-        round(sqrt(aggregate(sort_array(collect_list(col("z") * col("z"))), lit(0.0),
-          (a, b) => a + b)), 6).as("z_norm"))
+        round(Folds.exactSum(col("z")), 6).as("z_sum"),
+        round(sqrt(Folds.exactSum(col("z") * col("z"))), 6).as("z_norm"))
   }
 
   /** Greedy k-center coreset selection (B161): the farthest-point
@@ -1858,21 +1769,16 @@ object Similarity {
     * nearest-centroid model is trained on the (possibly noisy) labels
     * themselves, exactly the confident-learning setup.
     *
-    * Determinism: centroids are 9 dp two-level folds (the
-    * [[embedCentroids]] machinery), distances fold index-order over
+    * Determinism: centroids are 9 dp exact means (as in
+    * [[embedCentroids]]), distances fold index-order over
     * zip_with (9 dp), argmin ties break on the label. Scale: the
     * centroid frame is label×dim-bounded and broadcast; the per-vec
     * candidate explosion is ×labels (bounded); the argmin window
     * partitions on vec_id. */
   def labelNoise(emb: DataFrame): DataFrame = {
-    val cent = emb.select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("pos", "xf")))
-      .select(col("label"), col("pos"), Folds.subBucket(col("vec_id")),
-        col("xf").cast("double").as("x"))
-      .groupBy("label", "pos", "sb")
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
+    val cent = emb.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy("label", "pos")
-      .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
+      .agg(round(Folds.exactSum(col("x")) / count(lit(1)), 9).as("cm"))
       .groupBy("label")
       .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
       .select(col("label").as("cand"),
@@ -1954,11 +1860,10 @@ object Similarity {
     * [[embedOutliers]] (per-vector) and pca_explained (spectrum mass)
     * with the single corpus-level health number.
     *
-    * Determinism: unit components round at 9 dp; per-dim sums ride the
-    * two-level sub-bucketed sorted fold (Folds — bounded buffers at any
-    * corpus size); ‖S‖² folds the 64 per-dim sums sorted; the diagonal
-    * Σ‖u_i‖² rides its own two-level fold rather than assuming exactly
-    * n (9 dp units are not bit-exactly unit). */
+    * Determinism: unit components round at 9 dp; the per-dim sums,
+    * ‖S‖² over them and the diagonal Σ‖u_i‖² are exact sums
+    * ([[Folds.exactSum]]); the diagonal is summed rather than assumed to
+    * be exactly n (9 dp units are not bit-exactly unit). */
   def embedIsotropy(emb: DataFrame): DataFrame = {
     // graft_unit_norm: one native O(dims) pass per row. The HOF form it
     // replaces re-evaluated the squared-norm fold inside the transform
@@ -1971,18 +1876,11 @@ object Similarity {
         graft.functions.GraftFunctions.unitNorm(col("embedding")).as("u"))
       .filter(col("u").isNotNull)
     val perDim = unit
-      .select(col("vec_id"), posexplode(col("u")).as(Seq("pos", "x")))
-      .select((col("pos") + 1).cast("long").as("dim"), col("x"),
-        Folds.subBucket(col("vec_id")))
-      .groupBy("dim", "sb").agg(Folds.sortedSum(col("x")).as("ss"))
-      .groupBy("dim").agg(Folds.sortedSum(col("ss")).as("s"))
-    val s2 = perDim.agg(Folds.sortedSum(col("s") * col("s")).as("norm_s2"))
+      .select(posexplode(col("u")).as(Seq("pos", "x")))
+      .groupBy("pos").agg(Folds.exactSum(col("x")).as("s"))
+    val s2 = perDim.agg(Folds.exactSum(col("s") * col("s")).as("norm_s2"))
     val diag = unit
-      .select(col("vec_id"),
-        aggregate(col("u"), lit(0.0), (a, x) => a + x * x).as("uu"),
-        Folds.subBucket(col("vec_id")))
-      .groupBy("sb").agg(Folds.sortedSum(col("uu")).as("ss"))
-      .agg(Folds.sortedSum(col("ss")).as("q"))
+      .agg(Folds.exactSum(aggregate(col("u"), lit(0.0), (a, x) => a + x * x)).as("q"))
     val n = unit.agg(count(lit(1)).as("n_vecs"))
     n.crossJoin(broadcast(s2)).crossJoin(broadcast(diag))
       .select(col("n_vecs"),

@@ -361,21 +361,15 @@ object TextOps {
     * directly as fit quality (≈1: lognormal holds; ≫1: the tail is
     * heavier, see hill_tail_index). The distribution-fitting row beside
     * heaps_law_fit (vocab growth) and zipf_slope (rank-frequency). ln
-    * terms round at 9 dp and ride the two-level sub-bucketed sorted
-    * fold — bounded buffers at any corpus size. */
+    * terms round at 9 dp and sum exactly ([[Folds.exactSum]]). */
   def lengthLognormalFit(docs: DataFrame): DataFrame = {
     val terms = docs.filter(col("n_chars") > 0)
       .select(col("lang"), col("n_chars"),
-        round(log(col("n_chars").cast("double")), 9).as("l"),
-        Folds.subBucket(col("doc_id")))
-    val l1 = terms.groupBy("lang", "sb")
-      .agg(count(lit(1)).as("c"), sum(col("n_chars")).as("sc"),
-        Folds.sortedSum(col("l")).as("sl"),
-        Folds.sortedSum(col("l") * col("l")).as("sl2"))
-    val m = l1.groupBy("lang")
-      .agg(sum(col("c")).as("n_docs"), sum(col("sc")).as("sum_chars"),
-        Folds.sortedSum(col("sl")).as("sl"),
-        Folds.sortedSum(col("sl2")).as("sl2"))
+        round(log(col("n_chars").cast("double")), 9).as("l"))
+    val m = terms.groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
+        Folds.exactSum(col("l")).as("sl"),
+        Folds.exactSum(col("l") * col("l")).as("sl2"))
     val n = col("n_docs").cast("double")
     val mu = col("sl") / n
     val sigma = sqrt(col("sl2") / n - mu * mu)
@@ -394,24 +388,19 @@ object TextOps {
     * assuming ln-lengths are normal; this one tests the assumption
     * (JB = n/6·(S² + (K−3)²/4) ~ χ²(2); large JB = the fitted μ/σ are
     * summarizing a distribution they don't describe). Skewness and
-    * excess kurtosis come from raw ln-moments up to the 4th, each a
-    * two-level doc_id-bucketed fold of 9 dp terms (the lognormal-fit
-    * discipline, two moments deeper); the central-moment algebra and
-    * the two divisions are the only float steps after the folds. */
+    * excess kurtosis come from raw ln-moments up to the 4th, each an
+    * exact sum of 9 dp terms (the lognormal-fit discipline, two moments
+    * deeper); the central-moment algebra and the two divisions are the
+    * only float steps after the sums. */
   def jarqueBera(docs: DataFrame): DataFrame = {
     val terms = docs.filter(col("n_chars") > 0)
-      .select(col("lang"), round(log(col("n_chars").cast("double")), 9).as("l"),
-        Folds.subBucket(col("doc_id")))
-    val l1 = terms.groupBy("lang", "sb")
-      .agg(count(lit(1)).as("c"),
-        Folds.sortedSum(col("l")).as("s1"),
-        Folds.sortedSum(col("l") * col("l")).as("s2"),
-        Folds.sortedSum(col("l") * col("l") * col("l")).as("s3"),
-        Folds.sortedSum(col("l") * col("l") * col("l") * col("l")).as("s4"))
-    val m = l1.groupBy("lang")
-      .agg(sum(col("c")).as("n_docs"),
-        Folds.sortedSum(col("s1")).as("s1"), Folds.sortedSum(col("s2")).as("s2"),
-        Folds.sortedSum(col("s3")).as("s3"), Folds.sortedSum(col("s4")).as("s4"))
+      .select(col("lang"), round(log(col("n_chars").cast("double")), 9).as("l"))
+    val m = terms.groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"),
+        Folds.exactSum(col("l")).as("s1"),
+        Folds.exactSum(col("l") * col("l")).as("s2"),
+        Folds.exactSum(col("l") * col("l") * col("l")).as("s3"),
+        Folds.exactSum(col("l") * col("l") * col("l") * col("l")).as("s4"))
       .filter(col("n_docs") > 3)
     val n = col("n_docs").cast("double")
     val mu = col("s1") / n
@@ -856,9 +845,7 @@ object TextOps {
     * and q2 names the head concentration outright. Σc² stays EXACT
     * through DECIMAL(38,0) so inverse Simpson is one double division of
     * exact integers; Shannon terms are 9 dp over the vocabulary-sized
-    * type frame through the two-level token-bucketed fold (no buffer
-    * holds a source's whole vocabulary); Pielou evenness H/ln(q0)
-    * rides along. */
+    * type frame, summed exactly; Pielou evenness H/ln(q0) rides along. */
   def hillNumbers(docs: DataFrame): DataFrame = {
     val counts = docs.select(col("source"), explode(tokens(col("text"))).as("token"))
       .groupBy("source", "token").agg(count(lit(1)).as("c"))
@@ -867,16 +854,12 @@ object TextOps {
         sum(col("c").cast("decimal(38,0)") * col("c")).as("sc2"))
     val h = counts.join(broadcast(totals.select(col("source"), col("n_tokens"))), "source")
       .select(col("source"),
-        // md5 sub-bucket (the bigramCondEntropy discipline — DuckDB has
-        // no xxhash64); term is the all-non-negative p·ln(n/c) form so a
-        // singleton vocabulary can never emit IEEE -0.0
-        expr("CAST(conv(substr(md5(token), 1, 4), 16, 10) AS BIGINT) % 1024").as("sb"),
+        // term is the all-non-negative p·ln(n/c) form so a singleton
+        // vocabulary can never emit IEEE -0.0
         round((col("c").cast("double") / col("n_tokens"))
           * log(col("n_tokens").cast("double") / col("c")), 9).as("term"))
-      .groupBy("source", "sb")
-      .agg(Folds.sortedSum(col("term")).as("sub_s"))
       .groupBy("source")
-      .agg(Folds.sortedSum(col("sub_s")).as("h"))
+      .agg(Folds.exactSum(col("term")).as("h"))
     totals.join(h, "source")
       .select(col("source"), col("n_tokens"), col("q0"),
         round(exp(col("h")), 6).as("hill1"),
@@ -891,7 +874,7 @@ object TextOps {
     * tokenizer across a multilingual corpus (a language at 2× fertility
     * pays 2× the sequence length for the same text). Sums are exact
     * longs; only the final ratios are floating (rounded 6 dp), so the
-    * result is partitioning-independent without any sorted fold. One
+    * result is partitioning-independent without any float sum. One
     * partial-agg shuffle on lang. */
   def tokenFertility(docs: DataFrame): DataFrame =
     docs.select(col("lang"),
@@ -1556,8 +1539,7 @@ object TextOps {
     * high-quality sources, the standard LLM data-mixing move), normalized
     * into sampling weights and an allocation of `budgetTokens`. One
     * partial-aggregated shuffle onto |sources| rows; the normalizing
-    * total folds over a SORTED list of 6-dp-rounded terms so the double
-    * is bit-identical to the oracle. */
+    * total is an exact sum of 6-dp-rounded terms. */
   def mixtureWeights(docs: DataFrame, alpha: Double = 0.7,
                      budgetTokens: Long = 1000000L): DataFrame = {
     val perSource = docs
@@ -1566,7 +1548,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
       .withColumn("w_raw", round(pow(col("n_tokens").cast("double"), alpha), 6))
     val total = perSource.agg(
-      aggregate(sort_array(collect_list(col("w_raw"))), lit(0.0), (a, b) => a + b)
+      Folds.exactSum(col("w_raw"))
         .as("w_total"))
     perSource.crossJoin(broadcast(total))
       .select(col("source"), col("n_docs"), col("n_tokens"),
@@ -1653,13 +1635,9 @@ object TextOps {
     * and whitespace fraction — the cheap signals that flag
     * under-segmenting corpora (CJK without spacing, minified HTML)
     * before a tokenizer run. Per-doc ratios round to 6 dp, the
-    * per-source mean folds over the SORTED ratio list so the double is
-    * bit-identical to the oracle. Narrow scan + one partial-agg shuffle
-    * onto |sources| rows. */
+    * per-source mean is an exact sum over the count. Narrow scan + one
+    * partial-agg shuffle onto |sources| rows. */
   def compressionRatio(docs: DataFrame): DataFrame = {
-    def stableMean(c: Column) =
-      round(aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
-        / count(lit(1)), 6)
     docs
       .select(col("source"),
         length(col("text")).cast("double").as("len"),
@@ -1673,8 +1651,8 @@ object TextOps {
       .groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),
-        stableMean(col("cpt")).as("chars_per_token"),
-        stableMean(col("wsr")).as("ws_ratio"))
+        round(Folds.exactSum(col("cpt")) / count(lit(1)), 6).as("chars_per_token"),
+        round(Folds.exactSum(col("wsr")) / count(lit(1)), 6).as("ws_ratio"))
   }
 
   /** Robust per-language length profile (B52): exact interpolated median
@@ -1705,8 +1683,8 @@ object TextOps {
     * a whole long, the [[lengthMad]] trick), per-source sufficient
     * stats are exact (n, Σz₂ as long, Σz₂² as DECIMAL(38,0) — squared
     * deviations overflow a long at ~10⁹ docs), and the F statistic
-    * assembles from 9 dp per-source terms folded in sorted source
-    * order over the |sources|-bounded frame. One broadcast of the
+    * assembles from exact sums of 9 dp per-source terms over the
+    * |sources|-bounded frame. One broadcast of the
     * median table, one partial-agg shuffle — corpus involvement ends
     * there. */
   def brownForsythe(docs: DataFrame): DataFrame = {
@@ -1725,15 +1703,11 @@ object TextOps {
     val zbarI = col("s1").cast("double") / (col("n_i") * 2).cast("double")
     val zbar = col("s1t").cast("double") / (col("n_docs") * 2).cast("double")
     val terms = per.crossJoin(broadcast(grand))
-      .select(struct(col("source"),
-        round(col("n_i") * (zbarI - zbar) * (zbarI - zbar), 9).as("ssb_i"),
-        round((col("s2").cast("double")
+      .agg(
+        Folds.exactSum(round(col("n_i") * (zbarI - zbar) * (zbarI - zbar), 9)).as("ssb"),
+        Folds.exactSum(round((col("s2").cast("double")
           - col("s1").cast("double") * col("s1").cast("double")
-            / col("n_i").cast("double")) / 4.0, 9).as("ssw_i")).as("t"))
-      .agg(array_sort(collect_list(col("t"))).as("ts"))
-      .select(
-        aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("ssb_i")).as("ssb"),
-        aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("ssw_i")).as("ssw"))
+            / col("n_i").cast("double")) / 4.0, 9)).as("ssw"))
     terms.crossJoin(broadcast(grand))
       .select(col("k_groups"), col("n_docs"),
         round(col("ssb"), 6).as("ssb"), round(col("ssw"), 6).as("ssw"),
@@ -1780,8 +1754,7 @@ object TextOps {
     * Mood and Kruskal disagree, the difference is in the tails, not
     * the centers. Grand median in exact ×2 integer space; the 2×k
     * contingency and its margins are exact longs; expected counts and
-    * (o−e)²/e terms are 6 dp folded in sorted (source, side) order
-    * over the 2k-bounded grid. */
+    * (o−e)²/e terms are 6 dp, summed exactly over the 2k-bounded grid. */
   def moodMedian(docs: DataFrame): DataFrame = {
     val med = docs.agg((expr("percentile(n_chars, 0.5)") * 2).cast("long").as("med2"))
     val cells = docs.crossJoin(broadcast(med))
@@ -1800,18 +1773,16 @@ object TextOps {
             (col("n_i").cast("double") * (col("n") - col("a")) / col("n")).as("e"))))
           .as("t"))
       .select(col("k_groups"), col("n"),
-        struct(col("source"), col("t.side").as("side"),
-          // a zero expected cell (every doc at/below the grand median —
-          // a constant corpus) leaves Pearson's term undefined: NULL
-          // poisons the fold into a NULL chi2, never an ANSI throw
-          round(when(col("t.e") > 0.0,
-            pow(col("t.o").cast("double") - col("t.e"), 2.0) / col("t.e")), 6)
-            .as("term")).as("u"))
+        // a zero expected cell (every doc at/below the grand median —
+        // a constant corpus) leaves Pearson's term undefined: one NULL
+        // term makes chi2 NULL, never an ANSI throw
+        round(when(col("t.e") > 0.0,
+          pow(col("t.o").cast("double") - col("t.e"), 2.0) / col("t.e")), 6)
+          .as("term"))
       .groupBy("k_groups", "n")
-      .agg(array_sort(collect_list(col("u"))).as("ts"))
-    terms.select(col("n").as("n_docs"), col("k_groups"),
-      round(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("term")), 6)
-        .as("chi2"),
+      .agg(when(count(col("term")) === count(lit(1)), Folds.exactSum(col("term")))
+        .as("chi2"))
+    terms.select(col("n").as("n_docs"), col("k_groups"), round(col("chi2"), 6).as("chi2"),
       (col("k_groups") - 1).as("dof"))
   }
 
@@ -2076,7 +2047,7 @@ object TextOps {
     * flat) and template/filler runs (low) — orthogonal to
     * [[compressionRatio]]'s repetition view because entropy here is
     * order-free. Per (doc, char) counts aggregate narrowly; each doc's
-    * ≤ alphabet-sized contribution list folds sorted at 9 dp; the
+    * ≤ alphabet-sized contributions sum exactly at 9 dp; the
     * entropy rounds once at 6 dp. */
   def charEntropy(docs: DataFrame): DataFrame = {
     val c = docs.select(col("doc_id"), cleanText(col("text")).as("clean"))
@@ -2090,7 +2061,7 @@ object TextOps {
           * log(col("cnt").cast("double") / col("len")), 9).as("term"))
       .groupBy("doc_id", "len")
       .agg(count(lit(1)).as("n_distinct_chars"),
-        round(Folds.sortedSum(col("term")), 6).as("entropy_nats"))
+        round(Folds.exactSum(col("term")), 6).as("entropy_nats"))
       .select(col("doc_id"), col("len").as("n_chars_clean"),
         col("n_distinct_chars"), col("entropy_nats"))
   }
@@ -2505,29 +2476,17 @@ object TextOps {
     * corpus, so a plain `ntile(10).over(Window.orderBy(...))` would
     * move every document to one task; [[Ranks.ntileFromRank]] derives
     * the identical bucket arithmetic from (rank, n). Quality terms are
-    * the shared 6 dp composite and use the two-level bit-stable fold
-    * ([[Folds]]): a decile holds N/10 documents — corpus-sized, so the
-    * one-level sorted fold would buffer a tenth of the corpus in one
-    * collect_list; level 1 folds each doc_id%B sub-bucket, level 2 the
-    * ≤B sub-totals (min/max/count are order-independent and just
-    * re-aggregate). */
+    * the shared 6 dp composite, summed exactly ([[Folds.exactSum]]). */
   def qualityByLengthDecile(docs: DataFrame): DataFrame = {
     Ranks.withGlobalRowNumber(
         docs.select(col("doc_id"), col("n_chars"), qualityComposite.as("quality")),
         "_rnk", "_n", Seq(col("n_chars"), col("doc_id")))
       .withColumn("decile", Ranks.ntileFromRank(col("_rnk"), col("_n"), 10).cast("long"))
-      .select(col("decile"), col("n_chars"), col("quality"),
-        Folds.subBucket(col("doc_id")))
-      .groupBy("decile", "sb")
-      .agg(count(lit(1)).as("sub_n"),
-        min(col("n_chars")).as("sub_min"),
-        max(col("n_chars")).as("sub_max"),
-        Folds.sortedSum(col("quality")).as("sub_s"))
       .groupBy("decile")
-      .agg(sum(col("sub_n")).as("n_docs"),
-        min(col("sub_min")).as("min_chars"),
-        max(col("sub_max")).as("max_chars"),
-        round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 6).as("mean_quality"))
+      .agg(count(lit(1)).as("n_docs"),
+        min(col("n_chars")).as("min_chars"),
+        max(col("n_chars")).as("max_chars"),
+        round(Folds.exactSum(col("quality")) / count(lit(1)), 6).as("mean_quality"))
   }
 
   /** Lang ⊥ source independence chi-square (B96): the one-number audit
@@ -2537,7 +2496,7 @@ object TextOps {
     * margin cross product (tiny: |langs|·|sources| rows) with observed
     * counts left-joined in, never from observed pairs alone. Expected
     * counts derive from exact-long margins; each cell's (o−e)²/e term
-    * rounds to 6 dp and folds sorted; dof = (|langs|−1)(|sources|−1).
+    * rounds to 6 dp and sums exactly; dof = (|langs|−1)(|sources|−1).
     * One partial-agg shuffle ends the corpus involvement. */
   def langSourceChi2(docs: DataFrame): DataFrame = {
     val c = docs.groupBy("lang", "source").agg(count(lit(1)).as("o"))
@@ -2557,8 +2516,7 @@ object TextOps {
           .as("term"),
         col("lang"), col("source"))
       .agg(
-        round(aggregate(sort_array(collect_list(col("term"))), lit(0.0),
-          (a, b) => a + b), 6).as("chi2"),
+        round(Folds.exactSum(col("term")), 6).as("chi2"),
         ((count_distinct(col("lang")) - 1) * (count_distinct(col("source")) - 1))
           .as("dof"))
   }
@@ -2570,7 +2528,7 @@ object TextOps {
     * language uncertainty provenance removes (0 = useless, 1 = source
     * determines lang), and U(source|lang) the reverse — the pair tells
     * which direction the metadata actually predicts. All three
-    * entropies fold 6 dp terms in sorted key order over bounded frames
+    * entropies are exact sums of 6 dp terms over bounded frames
     * (margins and the |langs|·|sources| cell grid); counts are exact
     * longs off the one corpus aggregate; degenerate margins (single
     * lang or single source → H = 0) yield NULL for that direction. */
@@ -2580,13 +2538,9 @@ object TextOps {
     def entropy(keys: Seq[String], out: String): DataFrame = cells
       .groupBy(keys.map(col): _*).agg(sum(col("o")).as("n_k"))
       .crossJoin(broadcast(n))
-      .select(struct(keys.map(col) :+
-        round(-(col("n_k").cast("double") / col("n_docs"))
-          * log(col("n_k").cast("double") / col("n_docs")), 6).as("term"): _*)
-        .as("t"))
-      .agg(array_sort(collect_list(col("t"))).as("ts"))
-      .select(aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("term"))
-        .as(out))
+      .select(round(-(col("n_k").cast("double") / col("n_docs"))
+        * log(col("n_k").cast("double") / col("n_docs")), 6).as("term"))
+      .agg(Folds.exactSum(col("term")).as(out))
     val hl = entropy(Seq("lang"), "h_lang")
     val hs = entropy(Seq("source"), "h_source")
     val hj = entropy(Seq("lang", "source"), "h_joint")
@@ -3232,13 +3186,13 @@ object TextOps {
         .join(pi.select(col("item").as("opp"), col("rating").as("pi_j")), Seq("opp"))
         .select(col("item"),
           round(col("n_ij") / (col("pi_i") + col("pi_j")), 9).as("term"))
-        .groupBy("item").agg(Folds.sortedSum(col("term")).as("denom"))
+        .groupBy("item").agg(Folds.exactSum(col("term")).as("denom"))
       val unnorm = items
         .join(wins, Seq("item"), "left")
         .join(denom, Seq("item"))
         .select(col("item"),
           round(coalesce(col("n_wins"), lit(0L)) / col("denom"), 9).as("u"))
-      val tot = unnorm.agg(Folds.sortedSum(col("u")).as("tot"),
+      val tot = unnorm.agg(Folds.exactSum(col("u")).as("tot"),
         count(lit(1)).as("ni"))
       // localCheckpoint, not persist: denom references pi TWICE, so the
       // LOGICAL plan doubles per round and Catalyst re-analysis blows up
@@ -3416,29 +3370,22 @@ object TextOps {
     * policy optimization, and the calibration step before mixing scored
     * shards from different sources.
     *
-    * Exactness: mean and population variance fold through the two-level
-    * [[Folds.subBucket]] pattern (strata grow with the corpus, so a
-    * one-level sorted fold's buffer would be data-sized), 9 dp at each
-    * fold level; zero-variance strata emit z = 0, never NULL/NaN. Cost:
-    * two partial-agg shuffles on the stratum key plus broadcast joins
-    * of the strata-bounded moment tables. */
+    * Exactness: mean and population variance divide exact sums
+    * ([[Folds.exactSum]]) re-rounded to their terms' 6 and 9 dp, so an
+    * ulp of the sum never decides a tie of the 9 dp quotient;
+    * zero-variance strata emit z = 0, never NULL/NaN. Cost: two partial-agg shuffles on the stratum key
+    * plus broadcast joins of the strata-bounded moment tables. */
   def rewardNormalize(docs: DataFrame): DataFrame = {
     val scored = docs.select(col("doc_id"), col("lang"), col("source"),
       qualityComposite.as("quality"))
-    val m1 = scored
-      .groupBy(col("lang"), col("source"), Folds.subBucket(col("doc_id")))
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("quality")).as("sub_s"))
-      .groupBy("lang", "source")
-      .agg(sum(col("sub_n")).as("n_grp"),
-        round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("mean_q"))
+    val m1 = scored.groupBy("lang", "source")
+      .agg(count(lit(1)).as("n_grp"),
+        round(round(Folds.exactSum(col("quality")), 6) / count(lit(1)), 9).as("mean_q"))
     val dev = scored.join(broadcast(m1), Seq("lang", "source"))
       .withColumn("d2", round((col("quality") - col("mean_q"))
         * (col("quality") - col("mean_q")), 9))
-    val m2 = dev
-      .groupBy(col("lang"), col("source"), Folds.subBucket(col("doc_id")))
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("d2")).as("sub_d"))
-      .groupBy("lang", "source")
-      .agg(round(Folds.sortedSum(col("sub_d")) / sum(col("sub_n")), 9).as("var_q"))
+    val m2 = dev.groupBy("lang", "source")
+      .agg(round(round(Folds.exactSum(col("d2")), 9) / count(lit(1)), 9).as("var_q"))
     dev.join(broadcast(m2), Seq("lang", "source"))
       .select(col("doc_id"), col("lang"), col("source"), col("quality"),
         when(col("var_q") > 0,
@@ -3451,7 +3398,7 @@ object TextOps {
     * up-samples tail domains, down-samples the head. T = 2 is chosen
     * deliberately: p^(1/2) = sqrt(p), and IEEE sqrt is EXACTLY rounded
     * on every engine (unlike pow/exp/ln), so the whole chain is
-    * bit-deterministic: exact count ratio → sqrt → 9 dp → sorted-fold
+    * bit-deterministic: exact count ratio → sqrt → 9 dp → exact-sum
     * normalizer over the domain-bounded frame → 6 dp share. */
   def mixtureTemperature(docs: DataFrame): DataFrame = {
     val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
@@ -3460,7 +3407,7 @@ object TextOps {
       .select(col("source"), col("n_docs"),
         round(col("n_docs").cast("double") / col("total"), 9).as("share"),
         round(sqrt(col("n_docs").cast("double") / col("total")), 9).as("w_raw"))
-    val z = w.agg(Folds.sortedSum(col("w_raw")).as("z"))
+    val z = w.agg(Folds.exactSum(col("w_raw")).as("z"))
     w.crossJoin(broadcast(z))
       .select(col("source"), col("n_docs"), col("share"),
         round(col("w_raw") / col("z"), 6).as("w_temp"),
@@ -4093,8 +4040,7 @@ object TextOps {
     * view, robust to tokenization). The cleaned alphabet is closed
     * (a-z + space), so every source char has corpus mass — no smoothing
     * seam. Char counts are exact longs off one (source, char) aggregate;
-    * each entropy is a sorted fixed-order fold over ≤ 27 terms, rounded
-    * once at 6 dp. */
+    * each entropy is an exact sum over ≤ 27 terms, rounded once at 6 dp. */
   def charLmXent(docs: DataFrame): DataFrame = {
     val chars = docs.select(col("source"),
         explode(split(cleanText(col("text")), "")).as("ch"))
@@ -4103,27 +4049,22 @@ object TextOps {
     val corpus = chars.groupBy("ch").agg(count(lit(1)).as("c_cnt"))
     val corpusTot = chars.agg(count(lit(1)).as("c_tot"))
     val srcTot = bySrc.groupBy("source").agg(sum(col("cnt")).as("s_tot"))
-    // per (source, char): p_src, ln p_src, ln p_corpus — folded in char
-    // order so the double sum is bit-identical to the oracle's
+    // per (source, char): p_src, ln p_src, ln p_corpus
     val terms = bySrc
       .join(broadcast(corpus), "ch")
       .join(broadcast(srcTot), "source")
       .crossJoin(broadcast(corpusTot))
       .select(col("source"), col("s_tot"),
-        struct(col("ch"),
-          (col("cnt").cast("double") / col("s_tot")
-            * log(col("c_cnt").cast("double") / col("c_tot"))).as("xent_t"),
-          (col("cnt").cast("double") / col("s_tot")
-            * log(col("cnt").cast("double") / col("s_tot"))).as("ent_t")).as("t"))
+        (col("cnt").cast("double") / col("s_tot")
+          * log(col("c_cnt").cast("double") / col("c_tot"))).as("xent_t"),
+        (col("cnt").cast("double") / col("s_tot")
+          * log(col("cnt").cast("double") / col("s_tot"))).as("ent_t"))
     terms.groupBy("source", "s_tot")
-      .agg(array_sort(collect_list(col("t"))).as("ts"))
-      .select(col("source"), col("s_tot").as("n_chars"),
-        round(-aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("xent_t")), 6)
-          .as("xent"),
-        round(-aggregate(col("ts"), lit(0.0), (a, t) => a + t.getField("ent_t")), 6)
-          .as("entropy"),
-        round(aggregate(col("ts"), lit(0.0), (a, t) =>
-          a + (t.getField("ent_t") - t.getField("xent_t"))), 6).as("kl"))
+      .agg(round(-Folds.exactSum(col("xent_t")), 6).as("xent"),
+        round(-Folds.exactSum(col("ent_t")), 6).as("entropy"),
+        round(Folds.exactSum(col("ent_t") - col("xent_t")), 6).as("kl"))
+      .select(col("source"), col("s_tot").as("n_chars"), col("xent"), col("entropy"),
+        col("kl"))
   }
 
   /** Repeated-span profile (B253): per document, the LONGEST dyadic
@@ -4184,8 +4125,7 @@ object TextOps {
     * of a tie run of t starting after c values is (2c + t + 1)/2, so
     * 2·rank is the exact long 2c + t + 1); per-language rank sums stay
     * long, their squares widen to DECIMAL(38,0) before the one double
-    * divide per language, and the language-term sum folds in sorted
-    * language order (bounded list). H = 12/(N(N+1))·ΣR²_h/n_h − 3(N+1),
+    * divide per language, and the language terms sum exactly. H = 12/(N(N+1))·ΣR²_h/n_h − 3(N+1),
     * tie-corrected by C = 1 − Σ(t³−t)/(N³−N). Scale: the rank sweep is
     * [[Ranks.withGlobalCumSum]]'s two-pass range-partitioned machinery
     * over the DISTINCT-length frame (value-bounded, never a data-sized
@@ -4202,15 +4142,11 @@ object TextOps {
       .agg(sum(col("n_lv")).as("n_h"),
         sum(col("n_lv") * col("r2")).as("rr2"),
         max(col("n_total")).as("n_total"))
-    val terms = perLang.select(col("n_total"),
-      struct(col("lang"),
-        ((col("rr2").cast("decimal(38,0)") * col("rr2")).cast("double")
-          / (lit(4.0) * col("n_h"))).as("term")).as("s"))
-    val sFold = terms.groupBy("n_total")
-      .agg(count(lit(1)).as("n_groups"),
-        array_sort(collect_list(col("s"))).as("ss"))
-      .select(col("n_total"), col("n_groups"),
-        aggregate(col("ss"), lit(0.0), (a, s) => a + s.getField("term")).as("s_sum"))
+    val sFold = perLang
+      .select(col("n_total"), ((col("rr2").cast("decimal(38,0)") * col("rr2")).cast("double")
+        / (lit(4.0) * col("n_h"))).as("term"))
+      .groupBy("n_total")
+      .agg(count(lit(1)).as("n_groups"), Folds.exactSum(col("term")).as("s_sum"))
     val ties = vals.filter(col("t") > 1L)
       .agg(coalesce(sum(col("t").cast("decimal(38,0)") * col("t") * col("t")
         - col("t")), lit(0L).cast("decimal(38,0)")).as("tie_term"))
@@ -4321,7 +4257,7 @@ object TextOps {
     *
     * Every frame is (langs × sources)-bounded, so iterations are
     * broadcast joins against marginal-sum frames; each divide rounds to
-    * 9 dp and each marginal folds sorted, making all 5 rounds
+    * 9 dp and each marginal is an exact sum, making all 5 rounds
     * bit-replayable in SQL. Output keeps the raw count next to the
     * balanced weight so the sampler can derive per-cell rates. */
   def sinkhornBalance(docs: DataFrame, iters: Int = 5): DataFrame = {
@@ -4343,13 +4279,13 @@ object TextOps {
         col("n_docs").cast("double").as("w"))
     for (_ <- 1 to iters) {
       val rs = w.groupBy("lang")
-        .agg(round(Folds.sortedSum(col("w")), 9).as("rs"))
+        .agg(round(Folds.exactSum(col("w")), 9).as("rs"))
       val rowNorm = w.join(broadcast(rs), "lang")
         .select(col("lang"), col("source"), col("n_docs"), col("b"), col("k"),
           round(col("w") / col("rs") / col("b"), 9).as("w"))
         .localCheckpoint(true)
       val cs = rowNorm.groupBy("source")
-        .agg(round(Folds.sortedSum(col("w")), 9).as("cs"))
+        .agg(round(Folds.exactSum(col("w")), 9).as("cs"))
       w = rowNorm.join(broadcast(cs), "source")
         .select(col("lang"), col("source"), col("n_docs"), col("b"), col("k"),
           round(col("w") / col("cs") / col("k"), 9).as("w"))
@@ -4369,7 +4305,7 @@ object TextOps {
     * Same bounded-grid discipline as the KS operator: lengths truncate
     * into ≤`maxBucket`+1 buckets, ECDFs are exact-integer window
     * cumsums over the (langs × buckets) grid divided once and rounded
-    * 9 dp, and the per-lang sum of |ΔF| folds sorted. Nothing is
+    * 9 dp, and the per-lang sum of |ΔF| is exact. Nothing is
     * corpus-sized after the first aggregation. */
   def wassersteinLength(docs: DataFrame, bucketWidth: Int = 100,
                         maxBucket: Int = 100): DataFrame = {
@@ -4399,7 +4335,7 @@ object TextOps {
       .withColumn("term", round(abs(col("f_l") - col("f_all")), 9))
       .groupBy("lang")
       .agg(max(col("n_l")).as("n_docs"),
-        round(Folds.sortedSum(col("term")), 6).as("w1_buckets"))
+        round(Folds.exactSum(col("term")), 6).as("w1_buckets"))
       .withColumn("bucket_width", lit(bucketWidth.toLong))
   }
 
@@ -4413,20 +4349,14 @@ object TextOps {
     * complete-block, and the tie-corrected statistic divides out
     * within-block rank ties.
     *
-    * Cell means fold through the two-level sub-bucket pattern (cells
-    * are data-sized); everything after is (langs × sources)-bounded.
+    * Cell means are exact sums ([[Folds.exactSum]]); everything after
+    * is (langs × sources)-bounded.
     * Rank sums are exact multiples of 0.5, so Σ R_j² is exact and the
     * statistic's only float work is the mirrored final expression. */
   def friedmanTest(docs: DataFrame): DataFrame = {
-    val scored = docs.select(col("lang"), col("source"), col("doc_id"),
-      qualityComposite.as("q"))
-    val cellMeans = scored
-      .groupBy(col("lang"), col("source"), Folds.subBucket(col("doc_id")))
-      .agg(count(lit(1)).as("sub_n"),
-        round(Folds.sortedSum(col("q")), 9).as("sub_s"))
-      .groupBy("lang", "source")
-      .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 6)
-        .as("mean_q"))
+    val scored = docs.select(col("lang"), col("source"), qualityComposite.as("q"))
+    val cellMeans = scored.groupBy("lang", "source")
+      .agg(round(Folds.exactSum(col("q")) / count(lit(1)), 6).as("mean_q"))
     val nLangs = cellMeans.select("lang").distinct()
       .agg(count(lit(1)).as("b"))
     val complete = cellMeans.groupBy("source")
@@ -4573,7 +4503,7 @@ object TextOps {
     * exploded position range (intermediate is N·w rows, w = 25 — linear
     * in the corpus, never quadratic), then one (doc, window) exact
     * distinct count and one doc-keyed fold. Per-window TTRs round to
-    * 9 dp before the doc-bounded sorted-fold mean, so partitioning
+    * 9 dp before the doc-bounded exact-sum mean, so partitioning
     * never shows in the result. Docs shorter than `w` are excluded (no
     * full window exists; their plain TTR is in [[lexicalRichness]]). */
   def mattr(docs: DataFrame, w: Int = 25): DataFrame = {
@@ -4594,7 +4524,7 @@ object TextOps {
       .withColumn("ttr_w", round(col("dct").cast("double") / w, 9))
     val perDoc = perWin.groupBy("doc_id")
       .agg(count(lit(1)).as("n_windows"),
-        round(Folds.sortedSum(col("ttr_w")), 9).as("sum_ttr"))
+        round(Folds.exactSum(col("ttr_w")), 9).as("sum_ttr"))
     perDoc
       .join(toked.select(col("doc_id"), col("n").as("n_tokens"),
         size(array_distinct(col("toks"))).cast("long").as("vocab")), "doc_id")

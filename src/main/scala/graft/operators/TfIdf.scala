@@ -277,7 +277,7 @@ object TfIdf {
         Seq("doc_id", "grp"))
       .join(wordStats, "token")
       .groupBy(col("doc_id"), col("grp"), col("phrase"), col("plen"))
-      .agg(round(Folds.sortedSum(col("wscore")), 6).as("score"))
+      .agg(round(Folds.exactSum(col("wscore")), 6).as("score"))
     phraseScores
       .select(col("phrase"), col("plen").as("n_words"), col("score"))
       .groupBy("phrase", "n_words", "score")
@@ -400,7 +400,7 @@ object TfIdf {
     * (Mimno et al. 2011). The candidate token set is topics × k (tiny),
     * so the document-frequency and co-document joins run on a
     * semi-join-restricted slice of the doc-token frame; each topic sums
-    * ≤ k(k−1)/2 terms via the 6 dp-rounded sorted fold. */
+    * ≤ k(k−1)/2 6 dp-rounded terms exactly. */
   def topicCoherence(docs: DataFrame, signDims: Int = 4, k: Int = 5): DataFrame = {
     // tl is a topics×k (≈80-row) frame whose LINEAGE is the full
     // tf-idf + docEmbedHash pipeline, and it is referenced three times
@@ -434,7 +434,6 @@ object TfIdf {
           .as("term"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_pairs"),
-        round(aggregate(sort_array(collect_list(col("term"))), lit(0.0),
-          (a, x) => a + x), 6).as("coherence"))
+        round(Folds.exactSum(col("term")), 6).as("coherence"))
   }
 }

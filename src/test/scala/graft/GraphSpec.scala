@@ -6,6 +6,43 @@ import org.apache.spark.sql.functions._
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
+  test("hitsRounds: edge weights near 1e12 give finite scores equal to a BigDecimal reference") {
+    import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
+    // one edge of 1e12 already puts a node's weighted in-degree past the
+    // ~9.2e9 at which a sum in 1e-9 units overflows a long
+    val edges = Seq(("a", "b", 1000000000000L), ("a", "c", 2000000000000L),
+      ("b", "c", 3000000000000L), ("c", "a", 1000000000000L),
+      ("b", "a", 5000000000000L), ("d", "a", 4000000000000L))
+    val iters = 3
+    val got = Graph.hitsRounds(edges.toDF("src", "dst", "w"), iters)
+      .as[(String, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    // the same rounds in decimal arithmetic: a(v) = Σ w·h(u) over u→v,
+    // normalized by the max and rounded at 9 dp; then h likewise from a
+    def r9(x: JBigDecimal) = x.setScale(9, RoundingMode.HALF_UP)
+    def norm(raw: Map[String, JBigDecimal]): Map[String, JBigDecimal] = {
+      val mx = raw.values.reduce((x, y) => x.max(y))
+      raw.map { case (k, v) => k -> r9(v.divide(mx, MathContext.DECIMAL128)) }
+    }
+    val w = edges.map { case (s, d, x) => (s, d, new JBigDecimal(x)) }
+    var h = edges.flatMap(e => Seq(e._1, e._2)).distinct.map(_ -> JBigDecimal.ONE).toMap
+    var a = Map.empty[String, JBigDecimal]
+    for (_ <- 1 to iters) {
+      a = norm(w.filter(e => h.contains(e._1)).groupBy(_._2).map { case (v, es) =>
+        v -> es.map(e => r9(e._3.multiply(h(e._1)))).reduce(_ add _) })
+      h = norm(w.filter(e => a.contains(e._2)).groupBy(_._1).map { case (u, es) =>
+        u -> es.map(e => r9(e._3.multiply(a(e._2)))).reduce(_ add _) })
+    }
+    assert(got.keySet === Set("a", "b", "c", "d"))
+    got.foreach { case (node, (hub, auth)) =>
+      assert(!hub.isNaN && !hub.isInfinite && !auth.isNaN && !auth.isInfinite)
+      assert(r9(new JBigDecimal(hub)).compareTo(h.getOrElse(node, JBigDecimal.ZERO)) == 0,
+        s"hub($node) = $hub, want ${h.get(node)}")
+      assert(r9(new JBigDecimal(auth)).compareTo(a.getOrElse(node, JBigDecimal.ZERO)) == 0,
+        s"authority($node) = $auth, want ${a.get(node)}")
+    }
+    assert(got("d")._2 == 0.0 && got("d")._1 > 0.0)
+  }
+
   test("tokenPagerank: hub token outranks leaf tokens; ranks positive and bounded") {
     // star graph: 'hub' co-occurs with every leaf, leaves only with hub
     val d = Seq(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => Check}
 
-import graft.operators.{Folds, Similarity}
+import graft.operators.Similarity
 
 /** The deterministic Lloyd fit (centroids on the driver, one projection
   * and two aggregations per round) against the window chain it replaced,
@@ -13,6 +13,12 @@ import graft.operators.{Folds, Similarity}
   * row for row and bit for bit on generated embedding frames. */
 class LloydSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The two-level sorted fold the Lloyd recentering used: each value
+    * sorted-folded within its (cluster, pos, vec_id % 1024) sub-bucket,
+    * then the sub-sums sorted-folded within (cluster, pos). */
+  private def sortedSum(c: org.apache.spark.sql.Column) =
+    aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
 
   private def sqdist = round(aggregate(zip_with(col("e"), col("c"),
     (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x), 9)
@@ -36,11 +42,11 @@ class LloydSpec extends SparkSpec {
     for (_ <- 1 to iters) {
       cent = assign(cent)
         .select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
+        .select(col("cluster"), col("pos"), (col("vec_id") % 1024).as("sb"), col("x"))
         .groupBy(col("cluster"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
+        .agg(count(lit(1)).as("sub_n"), sortedSum(col("x")).as("sub_s"))
         .groupBy(col("cluster"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
+        .agg(round(sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
         .groupBy("cluster")
         .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
         .select(col("cluster"), transform(col("pc"), x => x.getField("cm")).as("c"))
