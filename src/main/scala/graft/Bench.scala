@@ -104,18 +104,6 @@ object Bench {
     }
   }
 
-  /** Release EVERY block a query left in the BlockManager, not just the
-    * CacheTracker-registered result caches: iterative operators pin
-    * per-round localCheckpoint blocks (bradley_terry, token_label_prop,
-    * kmeans variants) that CacheTracker never sees, because unpersisting
-    * a checkpointed frame mid-consumption would be a correctness bug.
-    * Across a 376-query pass those orphans accumulate (they free only on
-    * GC + ContextCleaner), bloating the BlockManager until later queries'
-    * MEMORY_AND_DISK caches thrash — the round-12 official-vs-internal
-    * 2× inflation signature. Between queries every block is garbage by
-    * contract (each query rebuilds its own caches), so drain them all. */
-  private def drainBlocks(spark: SparkSession): Unit = CacheTracker.drainAll(spark)
-
   /** JVM warm-in before the FIRST timed slot: position 1 otherwise runs
     * on a cold JVM whose C2 tiers haven't compiled the scan/shuffle/agg
     * hot paths the rest of the pass enjoys — the r16/r17 artifacts both
@@ -165,11 +153,11 @@ object Bench {
     // their warmup). Steady-state is warm-then-time back to back.
     val spill = new SpillListener
     spark.sparkContext.addSparkListener(spill)
-    (1 to 3).foreach { _ => warmNeutral(spark, sfDir); drainBlocks(spark) }
+    (1 to 3).foreach { _ => warmNeutral(spark, sfDir); CacheTracker.drainAll(spark) }
     val passT0 = System.nanoTime()
     val results = ordered.map { case (name, fn) =>
       try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-      drainBlocks(spark)
+      CacheTracker.drainAll(spark)
       // listener delivery is async and the bus is private[spark]: settle
       // the spill counter (poll until stable) so the warmup's task-end
       // events don't bleed into the timed delta. Outside t0, so per-query
@@ -193,7 +181,7 @@ object Bench {
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       val compiled = compiledClasses() - cg0
       settle(() => spill.bytes.get())
-      drainBlocks(spark) // release AFTER the timing: unpersist is bookkeeping, not query work
+      CacheTracker.drainAll(spark) // release AFTER the timing: unpersist is bookkeeping, not query work
       val (cpu1, (rd1, wr1), ca1) = (cpuMs(), diskIo(), cachedKb())
       QRes(name, dt, gcMillis() - gc0, spill.bytes.get() - sp0,
         spill.jobs.get() - jb0, (tBuild - t0) / 1000000L,
@@ -230,7 +218,7 @@ object Bench {
       else soloSet.map { r =>
         val fn = SparkEntry.queries(r.name)
         val ts = (1 to 3).map { _ =>
-          drainBlocks(spark)
+          CacheTracker.drainAll(spark)
           settle(() => spill.bytes.get())
           val t0 = System.nanoTime()
           val ok = try { force(fn(spark, sfDir)); true }

@@ -43,11 +43,18 @@ object Graft {
 
   /** Wire graft's extension points into an ALREADY-RUNNING session (one
     * the caller built without `spark.sql.extensions`): the native SQL
-    * functions and the TopKPerKey strategy + rewrite rule. Idempotent. */
-  def install(spark: SparkSession): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    graft.plans.TopK.register(spark)
-  }
+    * functions, the TopKPerKey strategy and both optimizer rules
+    * (TopKRewriteRule, RangeJoinRewriteRule). Does nothing on a session
+    * whose `spark.sql.extensions` already names GraftExtensions, such as
+    * every [[session]]. Idempotent. Operators rely on these being in
+    * place: run them on a session from [[session]] or after [[install]]. */
+  def install(spark: SparkSession): Unit =
+    if (!spark.conf.getOption("spark.sql.extensions").exists(
+        _.split(",").map(_.trim).contains(classOf[graft.functions.GraftExtensions].getName))) {
+      graft.functions.GraftFunctions.register(spark)
+      graft.plans.TopKRewrite.register(spark)
+      graft.plans.RangeJoinRewrite.register(spark)
+    }
 
   /** Mount every parquet table under `dir` as a temp view, so the full
     * engine surface is reachable from SQL. events gets its `ts` column

@@ -30,9 +30,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
       }
-      // operator result caches are query-scoped; drainAll additionally
-      // frees the localCheckpoint blocks iterative operators leave behind
-      // (376 queries of orphans otherwise bloat the BlockManager)
+      // free the query's cached and pinned frames before the next one
       CacheTracker.drainAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

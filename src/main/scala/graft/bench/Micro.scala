@@ -21,7 +21,7 @@ object Micro {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         dt
       }
       println(f"MICRO $name%-28s ${times.map(t => f"$t%.2f").mkString(" ")}  min=${times.min}%.2f")

@@ -81,7 +81,7 @@ object ScaleCheck {
         emb.count()
         val (tNdp, nNdp) = timedForce(Similarity.nearDupPairs(emb))
         val ndpBits = Similarity.adaptiveSignBits(emb.count())
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         // per-dim stats over ALL vectors: exact sums with partial
         // aggregation, so time must stay about linear in m
         val (tStd, nStd) = timedForce(Similarity.embedStandardize(emb))
@@ -97,15 +97,10 @@ object ScaleCheck {
         val docs = multiplyDocs(docs0, m)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         docs.count()
-        // releaseAll (tracked operator caches only) between timed
-        // sections — drainAll would also unpersist the still-in-use
-        // `docs` frame above and the bleu timing would silently include
-        // rebuilding the m-way multiplied corpus. drainAll runs after
-        // the final read, at the true query boundary.
         val (tLic, nLic) = timedForce(LangModel.langIdChargram(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tBleu, nBleu) = timedForce(graft.operators.Eval.bleuPairs(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},""" +
           s""""lang_id_chargram":{"sec":$tLic,"rows":$nLic},""" +
           s""""bleu_pairs":{"sec":$tBleu,"pairs":$nBleu}}""")
@@ -132,9 +127,9 @@ object ScaleCheck {
         val daRow = da.head()
         val (nMin, nSim, nBoth) =
           (daRow.getLong(0), daRow.getLong(1), daRow.getLong(2))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tChrf, nChrf) = timedForce(graft.operators.Eval.chrfPairs(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},""" +
           s""""detector_agreement":{"sec":$tDa,"n_minhash":$nMin,"n_simhash":$nSim,"n_both":$nBoth},""" +
           s""""chrf_pairs":{"sec":$tChrf,"pairs":$nChrf}}""")
@@ -157,17 +152,17 @@ object ScaleCheck {
         hll.write.format("noop").mode("overwrite").save()
         val tHll = (System.nanoTime() - tH0) / 1e9
         val hRow = hll.head()
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val tC0 = System.nanoTime()
         val cms = graft.operators.Sketches.countMinErr(docs)
         cms.write.format("noop").mode("overwrite").save()
         val tCms = (System.nanoTime() - tC0) / 1e9
         val maxOver = cms.agg(max(col("overcount"))).head.getLong(0)
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tTypo, nTypo) = timedForce(graft.operators.TextOps.typoRecovery(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tBoot, nBoot) = timedForce(graft.operators.Eval.bootstrapCi(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},""" +
           s""""hll_det":{"sec":$tHll,"n_true":${hRow.getLong(0)},"estimate":${hRow.getDouble(2)}},""" +
           s""""countmin_err":{"sec":$tCms,"max_overcount":$maxOver},""" +
@@ -186,9 +181,9 @@ object ScaleCheck {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         events.count()
         val (tPt, _) = timedForce(Relational.permutationTest(events))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tBh, _) = timedForce(Relational.bhFdr(events))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val nUsers = events.select("user_id").distinct().count()
         println(s"""{"m":$m,"users":$nUsers,""" +
           s""""permutation_test":{"sec":$tPt},"bh_fdr":{"sec":$tBh}}""")
@@ -207,10 +202,10 @@ object ScaleCheck {
         docs.count()
         val capN = 2000 // well under the sf0.1 per-lang count at every m
         val (tCap, _) = timedForce(graft.operators.Eval.bootstrapCi(docs, maxN = capN))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tUncap, _) = timedForce(
           graft.operators.Eval.bootstrapCi(docs, maxN = Int.MaxValue))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},""" +
           s""""bootstrap_ci_cap$capN":{"sec":$tCap},""" +
           s""""bootstrap_ci_uncapped":{"sec":$tUncap}}""")
@@ -227,9 +222,9 @@ object ScaleCheck {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         docs.count()
         val (tWmh, nWmh) = timedForce(Dedup.weightedMinhashPairs(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tHt, nHt) = timedForce(Dedup.headTailOverlap(docs, win = 3))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},""" +
           s""""dedup_wminhash":{"sec":$tWmh,"pairs":$nWmh},""" +
           s""""head_tail_overlap":{"sec":$tHt,"pairs":$nHt}}""")
@@ -247,9 +242,9 @@ object ScaleCheck {
         events.count()
         val (tWd, nWd) = timedForce(
           graft.operators.Sketches.hllWindowDistinct(events))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tNu, nNu) = timedForce(graft.operators.Sketches.hllNewUsers(events))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"events":${events.count()},""" +
           s""""hll_window_distinct":{"sec":$tWd,"rows":$nWd},""" +
           s""""hll_new_users":{"sec":$tNu,"rows":$nNu}}""")
@@ -272,11 +267,11 @@ object ScaleCheck {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         events.count()
         val (tAa, nAa) = timedForce(graft.operators.Graph.adamicAdar(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tRl, nRl) = timedForce(Dedup.rougeLPairs(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tCm, nCm) = timedForce(Relational.caliperMatch(events))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},"events":${events.count()},""" +
           s""""adamic_adar":{"sec":$tAa,"pairs":$nAa},""" +
           s""""rouge_l_pairs":{"sec":$tRl,"pairs":$nRl},""" +
@@ -298,10 +293,10 @@ object ScaleCheck {
           graft.operators.TextOps.tokenBudgetSelect(docs))
         val keptSel = graft.operators.TextOps.tokenBudgetSelect(docs)
           .agg(max(col("cum_tokens"))).head().getLong(0)
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tDen, nDen) = timedForce(
           graft.operators.TextOps.tokenBudgetDensity(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},""" +
           s""""token_budget_select":{"sec":$tSel,"kept_rows":$nSel,"kept_tokens":$keptSel},""" +
           s""""token_budget_density":{"sec":$tDen,"kept_rows":$nDen}}""")
@@ -339,19 +334,19 @@ object ScaleCheck {
             .distinct().count()
         }
         val (tHits, nHits) = timedForce(graft.operators.Graph.tokenHits(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tLp, nLp) = timedForce(graft.operators.Graph.tokenLabelProp(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tMod, _) =
           timedForce(graft.operators.Graph.communityModularity(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val emb = multiplyEmb(emb0, m)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         emb.count()
         val (tMmd, _) = timedForce(Similarity.embedMmd(emb))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tVm, _) = timedForce(Similarity.vMeasure(emb))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},"edge_rows":$edgeRows,""" +
           s""""token_hits":{"sec":$tHits,"rows":$nHits},""" +
           s""""token_label_prop":{"sec":$tLp,"rows":$nLp},""" +
@@ -378,16 +373,16 @@ object ScaleCheck {
         events.count()
         val bufChar = maxGroupRows(docs, col("lang"))
         val (tCp, _) = timedForce(graft.operators.TextOps.charPercentiles(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tCpA, _) =
           timedForce(graft.operators.TextOps.approxCharPercentiles(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val bufVal = maxGroupRows(events, col("event_type"))
         val (tVp, _) =
           timedForce(Relational.valuePercentilesByType(events))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tIa, _) = timedForce(Relational.interarrivalStats(events))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},"events":${events.count()},""" +
           s""""max_group_rows":{"char_percentiles":$bufChar,"value_percentiles_by_type":$bufVal},""" +
           s""""char_percentiles":{"sec":$tCp},""" +
@@ -408,9 +403,9 @@ object ScaleCheck {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         docs.count()
         val (tDeh, nDeh) = timedForce(graft.operators.TfIdf.docEmbedHash(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         val (tTl, nTl) = timedForce(graft.operators.TfIdf.topicLabels(docs))
-        graft.CacheTracker.releaseAll()
+        graft.CacheTracker.drainAll(spark)
         println(s"""{"m":$m,"docs":${docs.count()},""" +
           s""""doc_embed_hash":{"sec":$tDeh,"rows":$nDeh},""" +
           s""""topic_labels":{"sec":$tTl,"rows":$nTl}}""")
@@ -428,7 +423,7 @@ object ScaleCheck {
       val (tMinhash, nMinhash) = timedForce(Dedup.minhashPairs(docs))
       val (tNgram, nNgram) = timedForce(Dedup.ngramJaccard(docs))
       val (tComp, nComp) = timedForce(Dedup.components(Dedup.minhashPairs(docs)))
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
       // aggregation-shaped contrast to the join-shaped rows: BM25 is
       // bounded by partial-agg shuffles over the exploded token stream,
       // so it must scale LINEARLY even as true duplicate pairs explode
@@ -447,7 +442,7 @@ object ScaleCheck {
       // pays per epoch. Must scale ~linearly in m (parallel local sorts +
       // a config-bounded offset fold), never like a one-partition sort
       val (tMix, nMix) = timedForce(graft.operators.TextOps.mixtureEpoch(docs))
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
       val e = events.select(col("event_id"), col("user_id"),
         col("event_type"), unix_micros(col("ts")).as("us"))
       val p = e.filter(col("event_type") === "purchase").select("event_id", "user_id", "us")
@@ -480,18 +475,18 @@ object ScaleCheck {
       // duplication) after the token-stream explodes — near-flat curve
       val (tJm, nJm) =
         timedForce(graft.operators.LangModel.jmBigram(docs))
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
       // the ±1 interval sweep: 2 rows per session, sessions grow with m
       // (duplicated users are independent), range-partitioned cumsum —
       // must scale linearly, never like a one-task ordered window
       val (tConc, nConc) =
         timedForce(graft.operators.Sessionize.sessionConcurrency(events))
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
       // survival_curve: user-bounded aggregate then duration-bounded
       // Ranks passes — the curves' cost tracks users, not events
       val (tSurv, nSurv) =
         timedForce(graft.operators.Relational.survivalCurve(events))
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
 
       // embedding stats: per-dim exact sums over ALL vectors, time must
       // stay about linear in m

@@ -73,14 +73,14 @@ object ZipfCheck {
     val dfCap = 0.05
     // warm both paths once, then time
     timeForce(Similarity.docSimilarity(docs, simMin = 0.5))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     timeForce(Similarity.docSimilarityPruned(docs, simMin = 0.5, maxDfFrac = dfCap))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val (tFull, nFull) = timeForce(Similarity.docSimilarity(docs, simMin = 0.5))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val (tPruned, nPruned) = timeForce(
       Similarity.docSimilarityPruned(docs, simMin = 0.5, maxDfFrac = dfCap))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     spark.stop()
     println(s"""{"n_docs":$nDocs,"vocab":$vocab,"tokens_per_doc":$perDoc,""" +
       s""""unpruned":{"sec":$tFull,"pairs":$nFull},""" +

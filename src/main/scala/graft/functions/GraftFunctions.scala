@@ -14,84 +14,49 @@ object GraftFunctions {
     ExpressionUtils.column(
       CosineSimilarity(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  private val cosineInfo = new ExpressionInfo(
-    classOf[CosineSimilarity].getCanonicalName, "graft_cosine")
-
-  private def builder(children: Seq[Expression]): Expression = {
-    require(children.length == 2, "graft_cosine expects exactly 2 arguments")
-    CosineSimilarity(children.head, children(1))
-  }
-
   /** Unicode accent-strip normalization as a typed Column. */
   def normalize(c: Column): Column =
     ExpressionUtils.column(UnicodeNormalize(ExpressionUtils.expression(c)))
-
-  private val normalizeInfo = new ExpressionInfo(
-    classOf[UnicodeNormalize].getCanonicalName, "graft_normalize")
 
   /** Morton (z-order) interleave as a typed Column. */
   def morton(x: Column, y: Column): Column =
     ExpressionUtils.column(
       MortonInterleave(ExpressionUtils.expression(x), ExpressionUtils.expression(y)))
 
-  private val mortonInfo = new ExpressionInfo(
-    classOf[MortonInterleave].getCanonicalName, "graft_morton")
-
   /** Hilbert-curve index as a typed Column. */
   def hilbert(x: Column, y: Column): Column =
     ExpressionUtils.column(
       HilbertIndex(ExpressionUtils.expression(x), ExpressionUtils.expression(y)))
-
-  private val hilbertInfo = new ExpressionInfo(
-    classOf[HilbertIndex].getCanonicalName, "graft_hilbert")
 
   /** Jaro-Winkler similarity as a typed Column. */
   def jaroWinkler(a: Column, b: Column): Column =
     ExpressionUtils.column(
       JaroWinkler(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  private val jaroWinklerInfo = new ExpressionInfo(
-    classOf[JaroWinkler].getCanonicalName, "graft_jaro_winkler")
-
   /** Sorted-distinct-array Jaccard as a typed Column. */
   def jaccard(a: Column, b: Column): Column =
     ExpressionUtils.column(
       SortedArrayJaccard(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  private val jaccardInfo = new ExpressionInfo(
-    classOf[SortedArrayJaccard].getCanonicalName, "graft_jaccard")
 
   /** Sorted-entry-array sparse dot product as a typed Column. */
   def sortedDot(a: Column, b: Column): Column =
     ExpressionUtils.column(
       SortedDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  private val sortedDotInfo = new ExpressionInfo(
-    classOf[SortedDot].getCanonicalName, "graft_sorted_dot")
-
   /** Token-array LCS length as a typed Column. */
   def lcsLen(a: Column, b: Column): Column =
     ExpressionUtils.column(
       LcsLength(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  private val lcsLenInfo = new ExpressionInfo(
-    classOf[LcsLength].getCanonicalName, "graft_lcs_len")
 
   /** Token-array word-level Levenshtein distance as a typed Column. */
   def wordLev(a: Column, b: Column): Column =
     ExpressionUtils.column(
       WordLevenshtein(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  private val wordLevInfo = new ExpressionInfo(
-    classOf[WordLevenshtein].getCanonicalName, "graft_word_lev")
-
   /** Exponential-race weighted-MinHash signature as a typed Column. */
   def wminhashSig(tokens: Column, numHashes: Int): Column =
     ExpressionUtils.column(
       WeightedMinHashSig(ExpressionUtils.expression(tokens), numHashes))
-
-  private val wminhashSigInfo = new ExpressionInfo(
-    classOf[WeightedMinHashSig].getCanonicalName, "graft_wminhash_sig")
 
   /** Fold the numHashes argument to Int with a clear error: a foldable
     * non-INT literal (CAST(16 AS BIGINT), a smallint) must raise the
@@ -113,90 +78,44 @@ object GraftFunctions {
   def simhash(tokens: Column): Column =
     ExpressionUtils.column(SimHash32(ExpressionUtils.expression(tokens)))
 
-  private val simhashInfo = new ExpressionInfo(
-    classOf[SimHash32].getCanonicalName, "graft_simhash")
-
   /** Single-pass L2 unit-normalize (9-dp components) as a typed Column. */
   def unitNorm(embedding: Column): Column =
     ExpressionUtils.column(UnitNormalize(ExpressionUtils.expression(embedding)))
 
-  private val unitNormInfo = new ExpressionInfo(
-    classOf[UnitNormalize].getCanonicalName, "graft_unit_norm")
-
-  private def wminhashSigBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 2,
-      "graft_wminhash_sig expects (tokens, numHashes)")
-    WeightedMinHashSig(children.head, evalNumHashes(children(1)))
+  /** Every SQL function graft provides: (name, info, builder), read by
+    * both [[register]] and [[GraftExtensions]]. */
+  private[graft] val Functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def fn(name: String, cls: Class[_], arity: Int, args: String = "")(
+        build: Seq[Expression] => Expression) = {
+      val expects =
+        if (args.nonEmpty) s"$name expects $args"
+        else s"$name expects exactly $arity argument${if (arity == 1) "" else "s"}"
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getCanonicalName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == arity, expects)
+          build(children)
+        })
+    }
+    Seq(
+      fn("graft_cosine", classOf[CosineSimilarity], 2)(c => CosineSimilarity(c(0), c(1))),
+      fn("graft_normalize", classOf[UnicodeNormalize], 1)(c => UnicodeNormalize(c(0))),
+      fn("graft_morton", classOf[MortonInterleave], 2)(c => MortonInterleave(c(0), c(1))),
+      fn("graft_jaro_winkler", classOf[JaroWinkler], 2)(c => JaroWinkler(c(0), c(1))),
+      fn("graft_hilbert", classOf[HilbertIndex], 2)(c => HilbertIndex(c(0), c(1))),
+      fn("graft_jaccard", classOf[SortedArrayJaccard], 2)(c => SortedArrayJaccard(c(0), c(1))),
+      fn("graft_lcs_len", classOf[LcsLength], 2)(c => LcsLength(c(0), c(1))),
+      fn("graft_sorted_dot", classOf[SortedDot], 2)(c => SortedDot(c(0), c(1))),
+      fn("graft_word_lev", classOf[WordLevenshtein], 2)(c => WordLevenshtein(c(0), c(1))),
+      fn("graft_wminhash_sig", classOf[WeightedMinHashSig], 2, "(tokens, numHashes)")(
+        c => WeightedMinHashSig(c(0), evalNumHashes(c(1)))),
+      fn("graft_simhash", classOf[SimHash32], 1)(c => SimHash32(c(0))),
+      fn("graft_unit_norm", classOf[UnitNormalize], 1)(c => UnitNormalize(c(0))))
   }
 
   /** Imperative registration so `spark.sql("SELECT graft_cosine(a, b)")`
     * works on an existing session (e.g. the driver-created one). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cosine"), cosineInfo, builder _)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_normalize"), normalizeInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_normalize expects exactly 1 argument")
-        UnicodeNormalize(children.head)
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_morton"), mortonInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_morton expects exactly 2 arguments")
-        MortonInterleave(children.head, children(1))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_jaro_winkler"), jaroWinklerInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_jaro_winkler expects exactly 2 arguments")
-        JaroWinkler(children.head, children(1))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_hilbert"), hilbertInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_hilbert expects exactly 2 arguments")
-        HilbertIndex(children.head, children(1))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_jaccard"), jaccardInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_jaccard expects exactly 2 arguments")
-        SortedArrayJaccard(children.head, children(1))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_wminhash_sig"), wminhashSigInfo,
-      wminhashSigBuilder _)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_lcs_len"), lcsLenInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_lcs_len expects exactly 2 arguments")
-        LcsLength(children.head, children(1))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sorted_dot"), sortedDotInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_sorted_dot expects exactly 2 arguments")
-        SortedDot(children.head, children(1))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_word_lev"), wordLevInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_word_lev expects exactly 2 arguments")
-        WordLevenshtein(children.head, children(1))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_simhash"), simhashInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_simhash expects exactly 1 argument")
-        SimHash32(children.head)
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_unit_norm"), unitNormInfo,
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_unit_norm expects exactly 1 argument")
-        UnitNormalize(children.head)
-      })
+  def register(spark: SparkSession): Unit = Functions.foreach { case (id, info, build) =>
+    spark.sessionState.functionRegistry.registerFunction(id, info, build)
   }
 }
 
@@ -205,90 +124,7 @@ object GraftFunctions {
   * SURVEY.md §3 for deployments that can't call register() imperatively. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getCanonicalName, "graft_cosine"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_cosine expects exactly 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getCanonicalName, "graft_normalize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_normalize expects exactly 1 argument")
-        UnicodeNormalize(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_morton"),
-      new ExpressionInfo(classOf[MortonInterleave].getCanonicalName, "graft_morton"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_morton expects exactly 2 arguments")
-        MortonInterleave(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getCanonicalName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_jaro_winkler expects exactly 2 arguments")
-        JaroWinkler(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hilbert"),
-      new ExpressionInfo(classOf[HilbertIndex].getCanonicalName, "graft_hilbert"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_hilbert expects exactly 2 arguments")
-        HilbertIndex(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaccard"),
-      new ExpressionInfo(classOf[SortedArrayJaccard].getCanonicalName, "graft_jaccard"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_jaccard expects exactly 2 arguments")
-        SortedArrayJaccard(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_lcs_len"),
-      new ExpressionInfo(classOf[LcsLength].getCanonicalName, "graft_lcs_len"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_lcs_len expects exactly 2 arguments")
-        LcsLength(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sorted_dot"),
-      new ExpressionInfo(classOf[SortedDot].getCanonicalName, "graft_sorted_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_sorted_dot expects exactly 2 arguments")
-        SortedDot(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_word_lev"),
-      new ExpressionInfo(classOf[WordLevenshtein].getCanonicalName, "graft_word_lev"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_word_lev expects exactly 2 arguments")
-        WordLevenshtein(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_wminhash_sig"),
-      new ExpressionInfo(classOf[WeightedMinHashSig].getCanonicalName, "graft_wminhash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_wminhash_sig expects (tokens, numHashes)")
-        WeightedMinHashSig(children.head, GraftFunctions.evalNumHashes(children(1)))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash32].getCanonicalName, "graft_simhash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_simhash expects exactly 1 argument")
-        SimHash32(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_unit_norm"),
-      new ExpressionInfo(classOf[UnitNormalize].getCanonicalName, "graft_unit_norm"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_unit_norm expects exactly 1 argument")
-        UnitNormalize(children.head)
-      }))
+    GraftFunctions.Functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewriteRule)

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.CacheTracker
+
 import graft.operators.Folds.exactSum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -45,8 +47,7 @@ object LogRegSql {
         posexplode(col("embedding")).as(Seq("p0", "x")))
       .select(col("vec_id"), col("y"), (col("p0") + 1).cast("long").as("i"),
         col("x").cast("double").as("x"))
-    val cached = graft.CacheTracker.track(
-      x.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cached = CacheTracker.cache(x)
     cached.count()
     cached
   }

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -94,24 +96,22 @@ object NaiveBayesSql {
     // testTf / docLen each re-ran the regex tokenizer end to end).
     // The pinned frame is the per-(doc, token) tf table — the same
     // persisted-featurize-frame discipline as the NB/SVM pipelines.
-    val testTf = graft.CacheTracker.track(
+    val testTf = CacheTracker.cache(
       base.select(col("doc_id"), col("label"), col("fold"),
           explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy("fold", "label", "doc_id", "token")
-        .agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(count(lit(1)).as("tf")))
     val cntF = testTf.groupBy("fold", "label", "token")
       .agg(sum(col("tf")).as("c"))
     val cntAll = cntF.groupBy("label", "token").agg(sum(col("c")).as("ca"))
     val folds = base.select("fold").distinct()
     // fold × vocab × label-bounded and consumed three times (classTot,
     // vocab, the scoring join): pin it
-    val comp = graft.CacheTracker.track(folds.crossJoin(cntAll)
+    val comp = CacheTracker.cache(folds.crossJoin(cntAll)
       .join(cntF, Seq("fold", "label", "token"), "left")
       .select(col("fold"), col("label"), col("token"),
         (col("ca") - coalesce(col("c"), lit(0L))).as("cnt"))
-      .filter(col("cnt") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .filter(col("cnt") > 0))
     val classTot = comp.groupBy("fold", "label").agg(sum(col("cnt")).as("ct"))
     val vocab = comp.select("fold", "token").distinct()
       .groupBy("fold").agg(count(lit(1)).as("v"))

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.CacheTracker
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ml.{Pipeline, Transformer}
@@ -73,11 +75,10 @@ object Sentiment {
     * pass an array column through [[vectorize]] first. */
   def fitPredictFeaturized(feats: DataFrame,
                            clf: org.apache.spark.ml.Estimator[_ <: org.apache.spark.ml.Model[_]]): DataFrame = {
-    // localCheckpoint: iterative estimators (LinearSVC does maxIter passes)
-    // and the test-side transform must not re-run the featurize chain per
-    // pass, and checkpointed partitions, unlike MEMORY_AND_DISK cache
-    // blocks, cannot be evicted and recomputed mid-fit. Every classifier
-    // fitted on the same frame within one query shares one checkpoint.
+    // pinned: iterative estimators (LinearSVC does maxIter passes) and the
+    // test-side transform must not re-run the featurize chain per pass.
+    // Every classifier fitted on the same frame within one query shares
+    // one checkpoint.
     val withSplit = graft.CacheTracker.cachedCheckpoint(feats.withColumn("split", splitCol("id")))
     val train = withSplit.filter(col("split") === "train")
     val test = withSplit.filter(col("split") === "test")
@@ -95,17 +96,11 @@ object Sentiment {
     // session-free regardless of session history.
     val model = fitted.copy(org.apache.spark.ml.param.ParamMap.empty)
       .asInstanceOf[org.apache.spark.ml.Model[_]]
-    // materialize the small prediction frame so the big featurized cache
-    // can be released instead of pinning executor memory for the session;
-    // the result cache itself is CacheTracker-scoped (harness releases it)
-    val preds = graft.CacheTracker.track(
-      model.transform(test).select(col("id"), col("label"), col("prediction"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // materialize the small prediction frame: it and the featurized
+    // checkpoint are freed at the caller's CacheTracker.drainAll
+    val preds = CacheTracker.cache(
+      model.transform(test).select(col("id"), col("label"), col("prediction")))
     preds.count()
-    // the featurized checkpoint blocks release at the harness query
-    // boundary (CacheTracker.drainAll) — Dataset.unpersist is a no-op on
-    // a localCheckpoint, which is exactly why preds above must still
-    // materialize before this function returns
     preds
   }
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -126,8 +128,7 @@ object Dedup {
     * the corpus once and shares the cached array frame. */
   private def lshCandidatesFromToked(toked0: DataFrame, numHashes: Int,
                             bandSize: Int): (DataFrame, DataFrame, DataFrame) = {
-    val dt = graft.CacheTracker.track(shingleRows(toked0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val dt = CacheTracker.cache(shingleRows(toked0))
     dt.count()
     val (bands, sigs) = bandRows(dt, numHashes, bandSize)
     val cand = bands.select(col("band"), col("bh"), col("doc_id").as("a_id"))
@@ -321,10 +322,10 @@ object Dedup {
     // partitions cannot be evicted, so each builds exactly once.
     val sigArr = sigs.select(col("doc_id"),
       array((0 until numHashes).map(i => col(s"sig$i")): _*).as("sig"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val docArr = dt.groupBy("doc_id")
       .agg(sort_array(collect_list(col("token"))).as("arr"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     cand
       .join(sigArr.select(col("doc_id").as("a_id"), col("sig").as("a_sig")), "a_id")
       .join(sigArr.select(col("doc_id").as("b_id"), col("sig").as("b_sig")), "b_id")
@@ -662,13 +663,11 @@ object Dedup {
     * component = min node id reachable. */
   def components(pairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
                  maxIter: Int = 20): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .persist(lvl)
+    val edges = CacheTracker.cache(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("component"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     def labelSum(df: DataFrame): Long = // coalesce: an empty pair set must not NPE
       df.agg(coalesce(sum(col("component")), lit(0L))).head.getLong(0)
     var prevSum = labelSum(labels)
@@ -690,7 +689,7 @@ object Dedup {
         .join(prop.select(col("id").as("component"), col("component").as("jump")),
           Seq("component"))
         .select(col("id"), least(col("component"), col("jump")).as("component"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
       val nextSum = labelSum(next)
       labels = next
       converged = nextSum == prevSum
@@ -1196,16 +1195,12 @@ object Dedup {
     // corpus: tokenize ONCE into a materialized frame and feed each
     // detector the pre-tokenized rows, so the scan + regex pass (the
     // shared front half) is paid once, not per detector.
-    // localCheckpoint, not persist: the r13/r14 official benches showed
-    // the MEMORY_AND_DISK blocks being evicted and recomputed across the
-    // downstream branches under a multi-hundred-query pass (24.6 s
-    // official vs ~4 s solo); checkpointed partitions cannot be evicted.
     val toked = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val m = minhashLshPairsFromToked(toked, 16, 8, 0.9)
-      .select("a_id", "b_id").localCheckpoint(true)
+      .select("a_id", "b_id").transform(CacheTracker.pin)
     val sp = simhashDetPairsFromToked(toked, 3)
-      .select("a_id", "b_id").localCheckpoint(true)
+      .select("a_id", "b_id").transform(CacheTracker.pin)
     // ONE aggregation job over the two bounded pair frames (a full outer
     // join on the pair key) instead of three separate count branches —
     // the branch structure was the other half of the official-pass
@@ -1249,7 +1244,7 @@ object Dedup {
     * whole-band buckets stay near-dup-selective. */
   def weightedMinhashPairs(docs: DataFrame, numHashes: Int = 16,
                            simMin: Double = 0.9): DataFrame = {
-    val sigArr = wminhashSigArr(docs, numHashes).localCheckpoint(true)
+    val sigArr = wminhashSigArr(docs, numHashes).transform(CacheTracker.pin)
     val banded = wminhashBanded(sigArr, numHashes)
     val cand = banded.select(col("doc_id").as("a_id"), col("band"), col("bh"))
       .join(banded.select(col("doc_id").as("b_id"), col("band"), col("bh")),

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -312,10 +314,9 @@ object Eval {
     * Exact integer clipped counts; precisions round at 9 dp, BLEU at
     * 6 dp after one closed-form expression both engines share. */
   def bleuPairs(docs: DataFrame, simMin: Double = 0.3): DataFrame = {
-    val pairs = graft.CacheTracker.track(
+    val pairs = CacheTracker.cache(
       graft.operators.Dedup.ngramJaccard(docs, simMin = simMin)
-        .select("a_id", "b_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("a_id", "b_id"))
     // the n-gram streams below only ever join against candidate-pair
     // docs: gate the corpus FIRST (left-semi on the tiny pair-doc set),
     // so candidate generation is the only corpus-wide pass — at sf0.1
@@ -323,7 +324,7 @@ object Eval {
     val candDocs = pairs.select(col("a_id").as("doc_id"))
       .union(pairs.select(col("b_id").as("doc_id")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val toked = docs.join(candDocs, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
     val lens = toked.select(col("doc_id"), size(col("toks")).cast("long").as("len"))
@@ -379,14 +380,12 @@ object Eval {
     * 6 dp terms in sorted pair order. Gram joins fan out ≤ k² per
     * (lang, gram) — sample-bounded, never corpus-paired. */
   def selfBleu(docs: DataFrame, k: Int = 16): DataFrame = {
-    graft.plans.TopK.register(docs.sparkSession)
-    val sample = graft.CacheTracker.track(
+    val sample = CacheTracker.cache(
       graft.plans.TopK.topKPerKey(
           docs.select(col("lang"), col("doc_id"),
             graft.operators.TextOps.tokens(col("text")).as("toks"))
             .filter(size(col("toks")) >= 2),
-          Seq("lang"), Seq("doc_id" -> true), k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          Seq("lang"), Seq("doc_id" -> true), k))
     val lens = sample.select(col("lang"), col("doc_id"),
       size(col("toks")).cast("long").as("len"))
     def grams(n: Int): DataFrame = {
@@ -441,16 +440,15 @@ object Eval {
     * chrF2 = 5PR/(4P+R). Same bounded candidate machinery and join
     * shape as [[bleuPairs]]; gram totals are per-doc narrow work. */
   def chrfPairs(docs: DataFrame, simMin: Double = 0.3): DataFrame = {
-    val pairs = graft.CacheTracker.track(
+    val pairs = CacheTracker.cache(
       graft.operators.Dedup.ngramJaccard(docs, simMin = simMin)
-        .select("a_id", "b_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("a_id", "b_id"))
     // same candidate-doc gate as bleuPairs: the trigram stream feeds
     // only pair joins, so the corpus semi-joins down to pair docs first
     val candDocs = pairs.select(col("a_id").as("doc_id"))
       .union(pairs.select(col("b_id").as("doc_id")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val c = docs.join(candDocs, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), TextOps.cleanText(col("text")).as("clean"))
       .filter(length(col("clean")) >= 3)
@@ -577,10 +575,6 @@ object Eval {
     * the drawn set per stratum is ≤ budget rows, so the fingerprint's
     * collect_list is budget-bounded. */
   def neymanAllocation(docs: DataFrame, budget: Int = 100): DataFrame = {
-    // imperative registration: Verify/Bench sessions are built without the
-    // GraftExtensions config, and the stage-1 draw below depends on the
-    // TopKRewriteRule replan for its scale shape
-    graft.plans.TopKRewrite.register(docs.sparkSession)
     val m = docs.groupBy("lang").agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("sx"),
@@ -695,12 +689,12 @@ object Eval {
   def plattScaling(docs: DataFrame, steps: Int = 8): DataFrame = {
     val sc = scoreCounts(docs)
       .withColumn("n", col("n_pos") + col("n_neg"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     def sums(df: DataFrame, terms: Seq[(String, Column)]): DataFrame =
       df.select(terms.map { case (nm, c) => Folds.exactSum(c).as(nm) }: _*)
     val spark = docs.sparkSession
     var ab = spark.range(1).select(lit(0.0).as("a"), lit(0.0).as("b"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     for (_ <- 1 to steps) {
       val p = lit(1.0) / (lit(1.0) + exp(-(col("a") * col("score") + col("b"))))
       val withP = sc.crossJoin(broadcast(ab)).withColumn("p", p)
@@ -722,7 +716,7 @@ object Eval {
           round(when(det =!= 0.0,
             col("b") - (col("haa") * col("gb") - col("hab") * col("ga")) / det)
             .otherwise(col("b")), 9).as("b"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
     }
     val pF = lit(1.0) / (lit(1.0) + exp(-(col("a") * col("score") + col("b"))))
     val nll = sums(sc.crossJoin(broadcast(ab)).withColumn("p", pF), Seq(

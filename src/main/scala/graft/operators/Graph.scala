@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,9 +42,7 @@ object Graph {
       .unionByName(dir.select(col("dst").as("src"), col("src").as("dst"), col("w0")))
       .groupBy("src", "dst").agg(sum(col("w0")).as("w"))
     val outw = edges.groupBy("src").agg(sum(col("w")).as("outw"))
-    val ew = graft.CacheTracker.track(
-      edges.join(outw, "src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val ew = CacheTracker.cache(edges.join(outw, "src"))
     ew.count() // materialize once; every iteration re-joins this frame
     // N = node count, read ONCE as a scalar off the persisted edge
     // frame (src and dst sets coincide on an undirected graph) — a
@@ -145,14 +145,13 @@ object Graph {
       .filter(col("df") >= minPairDocs)
       .select("token")
     val d = d0.join(qualified, Seq("token"), "left_semi")
-    val edges = graft.CacheTracker.track(
+    val edges = CacheTracker.cache(
       d.select(col("doc_id"), col("token").as("a"))
         .join(d.select(col("doc_id"), col("token").as("b")), "doc_id")
         .filter(col("a") < col("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
         .filter(col("n_ab") >= minPairDocs)
-        .select("a", "b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("a", "b"))
     val tri = edges
       .join(edges.select(col("a").as("b"), col("b").as("c")), "b")
       .join(edges.select(col("a"), col("b").as("c")), Seq("a", "c"))
@@ -217,10 +216,9 @@ object Graph {
     // per reference (105 shuffles in round-12's PLAN_AUDIT).
     // localCheckpoint truncates each hop to a LogicalRDD, so the final
     // plan is one anti-join + union per hop over pinned inputs.
-    val d0 = graft.CacheTracker.track(
+    val d0 = CacheTracker.cache(
       docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .distinct())
     val counts = d0.groupBy("token").agg(count(lit(1)).as("df"))
     val qualified = counts.filter(col("df") >= minPairDocs).select("token")
     val d = d0.join(qualified, Seq("token"), "left_semi")
@@ -230,18 +228,16 @@ object Graph {
       .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
       .filter(col("n_ab") >= minPairDocs)
       .select("a", "b")
-    val edges = graft.CacheTracker.track(
-      half.union(half.select(col("b").as("a"), col("a").as("b")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = CacheTracker.cache(half.union(half.select(col("b").as("a"), col("a").as("b"))))
     val seed = counts.orderBy(col("df").desc, col("token")).limit(1).select("token")
-    var visited = seed.withColumn("dist", lit(0L)).localCheckpoint(true)
+    var visited = seed.withColumn("dist", lit(0L)).transform(CacheTracker.pin)
     var frontier = visited.select("token")
     for (h <- 1 to maxHops) {
       val nxt = frontier.join(edges, frontier("token") === edges("a"))
         .select(col("b").as("token")).distinct()
         .join(visited, Seq("token"), "left_anti")
         .withColumn("dist", lit(h.toLong))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
       // visited itself stays a plain union tree: its leaves are all
       // LogicalRDDs after the checkpoints, so re-reference is free
       visited = visited.union(nxt)
@@ -271,7 +267,7 @@ object Graph {
   def tokenBfsRcte(docs: DataFrame, minPairDocs: Int = 5, maxHops: Int = 3): DataFrame = {
     val d0 = docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val counts = d0.groupBy("token").agg(count(lit(1)).as("df"))
     val qualified = counts.filter(col("df") >= minPairDocs).select("token")
     val d = d0.join(qualified, Seq("token"), "left_semi")
@@ -282,9 +278,9 @@ object Graph {
       .filter(col("n_ab") >= minPairDocs)
       .select("a", "b")
     val edges = half.union(half.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val seed = counts.orderBy(col("df").desc, col("token")).limit(1)
-      .select("token").localCheckpoint(true)
+      .select("token").transform(CacheTracker.pin)
     edges.createOrReplaceTempView("graft_bfs_edges")
     seed.createOrReplaceTempView("graft_bfs_seed")
     docs.sparkSession.sql(
@@ -317,18 +313,16 @@ object Graph {
         (x, y) => struct(x.as("w1"), y.as("w2")))).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .filter(col("w1") =!= col("w2"))
-    def pin(e: DataFrame): DataFrame = graft.CacheTracker.track(
-      e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val half = bi.select(least(col("w1"), col("w2")).as("a"),
       greatest(col("w1"), col("w2")).as("b")).distinct()
-    val edges = pin(half.union(
+    val edges = CacheTracker.cache(half.union(
       half.select(col("b").as("a"), col("a").as("b"))))
-    var labels = pin(edges.select(col("a").as("token")).distinct()
+    var labels = CacheTracker.cache(edges.select(col("a").as("token")).distinct()
       .withColumn("label", col("token")))
     for (_ <- 1 to rounds) {
       val nbMin = edges.join(labels.withColumnRenamed("token", "b"), "b")
         .groupBy(col("a").as("token")).agg(min(col("label")).as("nb_label"))
-      labels = pin(labels.join(nbMin, Seq("token"), "left")
+      labels = CacheTracker.cache(labels.join(nbMin, Seq("token"), "left")
         .select(col("token"),
           least(col("label"), coalesce(col("nb_label"), col("label")))
             .as("label")))
@@ -361,13 +355,11 @@ object Graph {
         (a, b) => struct(a.as("src"), b.as("dst")))).as("p"))
       .select(col("p.src").as("src"), col("p.dst").as("dst"))
       .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-    val ew = graft.CacheTracker.track(
-      dir.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val ew = CacheTracker.cache(dir)
     ew.count()
-    val nodes = graft.CacheTracker.track(
+    val nodes = CacheTracker.cache(
       ew.select(col("src").as("token"))
-        .unionByName(ew.select(col("dst").as("token"))).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .unionByName(ew.select(col("dst").as("token"))).distinct())
     def maxNorm(df: DataFrame, v: String): DataFrame = {
       val mx = df.agg(max(col(v)).as("mx"))
       df.crossJoin(broadcast(mx))
@@ -384,12 +376,12 @@ object Graph {
         .select(col("dst"), round(col("w") * col("h"), 9).as("c"))
         .groupBy(col("dst").as("token"))
         .agg(round(Folds.exactSum(col("c")), 9).as("a")), "a")
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
       h = maxNorm(ew.join(a, ew("dst") === a("token"))
         .select(col("src"), round(col("w") * col("a"), 9).as("c"))
         .groupBy(col("src").as("token"))
         .agg(round(Folds.exactSum(col("c")), 9).as("h")), "h")
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
     }
     nodes
       .join(h.withColumnRenamed("h", "hub"), Seq("token"), "left")
@@ -417,18 +409,16 @@ object Graph {
         (x, y) => struct(x.as("w1"), y.as("w2")))).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .filter(col("w1") =!= col("w2"))
-    def pin(e: DataFrame): DataFrame = graft.CacheTracker.track(
-      e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val half = pin(bi.select(least(col("w1"), col("w2")).as("a"),
+    val half = CacheTracker.cache(bi.select(least(col("w1"), col("w2")).as("a"),
       greatest(col("w1"), col("w2")).as("b")).distinct())
-    val edges = pin(half.union(
+    val edges = CacheTracker.cache(half.union(
       half.select(col("b").as("a"), col("a").as("b"))))
-    var labels = pin(edges.select(col("a").as("token")).distinct()
+    var labels = CacheTracker.cache(edges.select(col("a").as("token")).distinct()
       .withColumn("label", col("token")))
     for (_ <- 1 to rounds) {
       val nbMin = edges.join(labels.withColumnRenamed("token", "b"), "b")
         .groupBy(col("a").as("token")).agg(min(col("label")).as("nb_label"))
-      labels = pin(labels.join(nbMin, Seq("token"), "left")
+      labels = CacheTracker.cache(labels.join(nbMin, Seq("token"), "left")
         .select(col("token"),
           least(col("label"), coalesce(col("nb_label"), col("label")))
             .as("label")))
@@ -444,17 +434,10 @@ object Graph {
     //         labels (edges is half ∪ swap, so deg(t) = #half rows
     //         containing t) = the label explode count,
     //   e_c = same intra-community filter+count as before.
-    // localCheckpoint, NOT persist: this plan SELF-JOINS labels (a and b
-    // sides), and Spark's self-join attribute dedup re-aliases with
-    // fresh exprIds at each analysis, so the persisted plan never
-    // matches the consumers' lookups — every consumer silently
-    // re-executed the joins (measured: 1.2-1.7 s per consumer vs 0.09 s
-    // for a clean cache hit). A LogicalRDD is referenced directly by
-    // the derived frames, so reuse cannot miss.
     val labeled = half
       .join(labels.select(col("token").as("a"), col("label").as("la")), "a")
       .join(labels.select(col("token").as("b"), col("label").as("lb")), "b")
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val m = labeled.agg(count(lit(1)).as("m"))
     // d_c and e_c in ONE aggregate pass: each half row contributes +1
     // degree to BOTH endpoint labels (the explode), and +1 intra-
@@ -510,13 +493,7 @@ object Graph {
     // per downstream consumer (~6 full corpus passes for 3 rounds —
     // measured 30 s vs ~2 s at sf0.1). The pinned frames are distinct
     // bigram TYPES — vocabulary-shaped, far smaller than the corpus.
-    // localCheckpoint, not persist (the bradley_terry discipline, 3× on
-    // that query): each peel's plan then starts from materialized
-    // partitions instead of re-planning the whole unrolled chain, and
-    // the blocks cannot be evicted mid-query under a multi-hundred-query
-    // pass the way MEMORY_AND_DISK cache blocks were in the r14 bench.
-    def pin(e: DataFrame): DataFrame = e.localCheckpoint(true)
-    val edges0 = pin(bi.select(least(col("w1"), col("w2")).as("a"),
+    val edges0 = CacheTracker.pin(bi.select(least(col("w1"), col("w2")).as("a"),
       greatest(col("w1"), col("w2")).as("b")).distinct())
     def degreesOf(e: DataFrame): DataFrame =
       e.select(col("a").as("token")).union(e.select(col("b").as("token")))
@@ -525,11 +502,11 @@ object Graph {
       e.join(alive.select(col("token").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("token").as("b")), Seq("b"), "left_semi")
         .select("a", "b")
-    val d0 = pin(degreesOf(edges0))
+    val d0 = CacheTracker.pin(degreesOf(edges0))
     val a1 = d0.filter(col("degree") >= k).select("token")
-    val e1 = pin(restrict(edges0, a1))
+    val e1 = CacheTracker.pin(restrict(edges0, a1))
     val a2 = degreesOf(e1).filter(col("degree") >= k).select("token")
-    val e2 = pin(restrict(e1, a2))
+    val e2 = CacheTracker.pin(restrict(e1, a2))
     val a3 = degreesOf(e2).filter(col("degree") >= k).select("token")
     val e3 = restrict(e2, a3)
     val d3 = degreesOf(e3)
@@ -685,9 +662,7 @@ object Graph {
         slice(col("toks"), lit(2), size(col("toks")) - 1),
         (a, b) => struct(a.as("src"), b.as("dst")))).as("p"))
       .select(col("p.src").as("src"), col("p.dst").as("dst"))
-    val e = graft.CacheTracker.track(
-      bi.groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val e = CacheTracker.cache(bi.groupBy("src", "dst").agg(count(lit(1)).as("w")))
     if (e.isEmpty) {
       return e.select(col("src").as("token"), lit(0.0).as("hub"),
         lit(0.0).as("authority"))
@@ -711,7 +686,7 @@ object Graph {
         .select(col("dst"), round(col("w") * col("h"), 9).as("c"))
         .groupBy("dst")
         .agg(Folds.exactSum(col("c")).as("ar"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
       val aMax = aRaw.agg(max(col("ar")).as("am"))
       a = aRaw.crossJoin(broadcast(aMax))
         .select(col("dst").as("token"), round(col("ar") / col("am"), 9).as("a"))
@@ -719,7 +694,7 @@ object Graph {
         .select(col("src"), round(col("w") * col("a"), 9).as("c"))
         .groupBy("src")
         .agg(Folds.exactSum(col("c")).as("hr"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
       val hMax = hRaw.agg(max(col("hr")).as("hm"))
       h = hRaw.crossJoin(broadcast(hMax))
         .select(col("src").as("token"), round(col("hr") / col("hm"), 9).as("h"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -453,8 +455,7 @@ object LangModel {
     * stages. */
   def queryExpansion(docs: DataFrame, query: Seq[String] = Seq("query", "join", "scan"),
                      fb: Int = 10, k: Int = 5): DataFrame = {
-    val weights = graft.CacheTracker.track(
-      bm25(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val weights = CacheTracker.cache(bm25(docs))
     // matched docs are corpus-sized (term df): top-fb via orderBy+limit,
     // which plans a distributed TakeOrdered heap — never a global window
     val feedback = weights
@@ -508,7 +509,6 @@ object LangModel {
       .join(qdf, "token")
       .groupBy("query_id", "doc_id")
       .agg(count_distinct(col("token")).as("rel"))
-    graft.plans.TopK.register(spark)
     val wS = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))
     val topk = graft.plans.TopK.topKPerKey(
@@ -587,14 +587,13 @@ object LangModel {
     val toked = docs.select(TextOps.tokens(col("text")).as("toks"))
     val uni = toked.select(explode(col("toks")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
-    val bi = graft.CacheTracker.track(toked.filter(size(col("toks")) >= 2)
+    val bi = CacheTracker.cache(toked.filter(size(col("toks")) >= 2)
       .select(explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
         slice(col("toks"), lit(2), size(col("toks")) - 1),
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .groupBy("w1", "w2").agg(count(lit(1)).as("cnt")))
     bi.count()
     val chain = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     uni.orderBy(col("cnt").desc, col("token")).limit(1)
@@ -1144,18 +1143,16 @@ object LangModel {
     // bound attribute, or the whole regex chain re-evaluates per element.
     // Pinned: the train profile and the held-out scoring both explode
     // from this frame, so unpersisted the regex clean chain runs twice.
-    val c = graft.CacheTracker.track(
+    val c = CacheTracker.cache(
       docs.select(col("doc_id"), col("lang"),
           TextOps.cleanText(col("text")).as("clean"))
-        .filter(length(col("clean")) >= 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(length(col("clean")) >= 3))
     val g = c.select(col("doc_id"), col("lang"),
       explode(transform(sequence(lit(1), length(col("clean")) - 2),
         i => col("clean").substr(i, lit(3)))).as("gram"))
     val train = g.filter(col("doc_id") % 2 === 0)
     val cg = train.groupBy("lang", "gram").agg(count(lit(1)).as("cnt"))
     val tl = cg.groupBy("lang").agg(sum(col("cnt")).as("tot"))
-    graft.plans.TopK.register(docs.sparkSession)
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("cnt").desc, col("gram"))
     val profile = graft.plans.TopK.topKPerKey(cg, Seq("lang"),
@@ -1296,9 +1293,7 @@ object LangModel {
     * NaN comparison — engines disagree on NaN ordering). */
   def burrowsDelta(docs: DataFrame, topK: Int = 20): DataFrame = {
     val tok = docs.select(col("source"), explode(TextOps.tokens(col("text"))).as("token"))
-    val cnt = graft.CacheTracker.track(
-      tok.groupBy("source", "token").agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cnt = CacheTracker.cache(tok.groupBy("source", "token").agg(count(lit(1)).as("c")))
     val totals = cnt.groupBy("source").agg(sum(col("c")).as("tot"))
     val top = cnt.groupBy("token").agg(sum(col("c")).as("gc"))
       .orderBy(col("gc").desc, col("token")).limit(topK)

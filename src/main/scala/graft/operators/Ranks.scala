@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,10 +50,9 @@ object Ranks {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val ranged = df.repartitionByRange(parts, order: _*)
       .withColumn("_pid", spark_partition_id())
-    val local = graft.CacheTracker.track(
+    val local = CacheTracker.cache(
       ranged.withColumn("_lrnk",
-          row_number().over(Window.partitionBy(col("_pid")).orderBy(order: _*)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          row_number().over(Window.partitionBy(col("_pid")).orderBy(order: _*))))
     // numShufflePartitions rows: the only global window in this file runs
     // over a frame whose size is fixed by config, not by the data.
     val counts = local.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
@@ -84,11 +85,10 @@ object Ranks {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val ranged = df.repartitionByRange(parts, order: _*)
       .withColumn("_pid", spark_partition_id())
-    val local = graft.CacheTracker.track(
+    val local = CacheTracker.cache(
       ranged.withColumn("_lcum",
           sum(col(value)).over(Window.partitionBy(col("_pid")).orderBy(order: _*)
-            .rowsBetween(Window.unboundedPreceding, 0)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .rowsBetween(Window.unboundedPreceding, 0))))
     // numShufflePartitions rows — config-bounded, not data-bounded
     val psums = local.groupBy(col("_pid")).agg(sum(col(value)).as("_psum"))
     val offsets = psums
@@ -120,12 +120,11 @@ object Ranks {
     val ranged = df.repartitionByRange(parts, order: _*)
       .withColumn("_pid", spark_partition_id())
     val w = Window.partitionBy(col("_pid")).orderBy(order: _*)
-    val local = graft.CacheTracker.track(
+    val local = CacheTracker.cache(
       ranged
         .withColumn("_lrnk", row_number().over(w))
         .withColumn("_lcum", sum(col(value)).over(
-          w.rowsBetween(Window.unboundedPreceding, 0)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          w.rowsBetween(Window.unboundedPreceding, 0))))
     // numShufflePartitions rows — config-bounded, not data-bounded
     val per = local.groupBy(col("_pid"))
       .agg(count(lit(1)).as("_cnt"), sum(col(value)).as("_psum"))
@@ -163,10 +162,10 @@ object Ranks {
       .withColumn("_pid", spark_partition_id())
     val w = Window.partitionBy(col("_pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val local = graft.CacheTracker.track(
+    val local = CacheTracker.cache(
       values.zipWithIndex.foldLeft(ranged) { case (d, ((v, _, _), i)) =>
         d.withColumn(s"_lcum$i", sum(col(v)).over(w))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      })
     // numShufflePartitions rows — config-bounded, not data-bounded
     val psums = local.groupBy(col("_pid"))
       .agg(sum(col(values.head._1)).as("_psum0"),
@@ -215,12 +214,11 @@ object Ranks {
     val ranged = df.repartitionByRange(parts, gc ++ order: _*)
       .withColumn("_pid", spark_partition_id())
     val w = Window.partitionBy(col("_pid") +: gc: _*).orderBy(order: _*)
-    val local = graft.CacheTracker.track(
+    val local = CacheTracker.cache(
       ranged
         .withColumn("_lrnk", row_number().over(w))
         .withColumn("_lcum", sum(col(value)).over(
-          w.rowsBetween(Window.unboundedPreceding, 0)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          w.rowsBetween(Window.unboundedPreceding, 0))))
     val per = local.groupBy(col("_pid") +: gc: _*)
       .agg(count(lit(1)).as("_cnt"), sum(col(value)).as("_psum"))
     // ≤ numShufflePartitions rows per window partition, any group count

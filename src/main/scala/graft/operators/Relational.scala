@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -87,7 +89,6 @@ object Relational {
     * (graft.plans.TopK) with the final ranking done on the <=N survivors. */
   def topOrdersPerNation(orders: DataFrame, customer: DataFrame, nation: DataFrame,
                          n: Int = 3): DataFrame = {
-    graft.plans.TopK.register(orders.sparkSession)
     val joined = orders
       .join(customer, orders("o_custkey") === customer("c_custkey"))
       .join(broadcast(nation), customer("c_nationkey") === nation("n_nationkey"))
@@ -1300,12 +1301,11 @@ object Relational {
     // pinned: three quartile rankings + the final join all re-read this
     // per-customer reduction — without the persist the orders scan+agg
     // re-runs once per consumer
-    val perCust = graft.CacheTracker.track(orders.groupBy(col("o_custkey"))
+    val perCust = CacheTracker.cache(orders.groupBy(col("o_custkey"))
       .agg(
         max(col("o_orderdate")).as("lo"),
         count(lit(1)).as("frequency"),
-        sum(cents(col("o_totalprice"))).as("monetary_cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        sum(cents(col("o_totalprice"))).as("monetary_cents")))
     rfmFromPerCust(perCust)
   }
 
@@ -1350,14 +1350,13 @@ object Relational {
     // within-half rank = global rank − the half's min rank + 1 — so the
     // whole matrix costs 3 two-pass rank fits instead of the 6 (plus a
     // second orders scan) that two independent rfmSegments fits paid.
-    val perCustHalf = graft.CacheTracker.track(
+    val perCustHalf = CacheTracker.cache(
       withDay.crossJoin(broadcast(bounds))
         .groupBy(col("o_custkey"), (col("_day") <= col("mid")).as("_h1"))
         .agg(
           max(col("o_orderdate")).as("lo"),
           count(lit(1)).as("frequency"),
-          sum(cents(col("o_totalprice"))).as("monetary_cents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          sum(cents(col("o_totalprice"))).as("monetary_cents")))
     def quartile(ord: Seq[Column], name: String): DataFrame = {
       val ranked = Ranks.withGlobalRowNumber(perCustHalf, "_rnk", "_n",
         col("_h1").desc +: ord)
@@ -1785,9 +1784,7 @@ object Relational {
     * (distinct keys)-sized count frame, never the raw rows; top-1 is a
     * bounded-heap TakeOrdered, not a sort. */
   def keySkewProfile(events: DataFrame, key: String = "user_id"): DataFrame = {
-    val counts = graft.CacheTracker.track(
-      events.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val counts = CacheTracker.cache(events.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt")))
     val top1 = counts.orderBy(col("cnt").desc, col("k")).limit(1)
       .select(col("k").as("top_key"), col("cnt").as("top_count"))
     val stats = counts.agg(
@@ -2329,19 +2326,15 @@ object Relational {
       .groupBy(expr("unix_micros(ts) div 86400000000").as("d"))
       .agg(count(lit(1)).as("y"))
     val minD = daily0.agg(min(col("d")).as("d0"))
-    val daily = graft.CacheTracker.track(
+    val daily = CacheTracker.cache(
       daily0.crossJoin(broadcast(minD))
-        .select((col("d") - col("d0")).as("t"), col("y"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select((col("d") - col("d0")).as("t"), col("y")))
     val init = daily.agg(count(lit(1)).as("n_days"),
         sum(col("y")).as("sy"))
       .select(col("n_days"),
         round(log(col("sy").cast("double") / col("n_days")), 9).as("b0"),
         lit(0.0).as("b1"))
-    // the huberTrend pin discipline: params is a ONE-ROW frame consumed
-    // by a broadcast each step — checkpoint so step k's broadcast build
-    // executes a shallow plan, not the whole k-step Newton prefix
-    var params = init.localCheckpoint(true)
+    var params = init.transform(CacheTracker.pin)
     for (_ <- 1 to iters) {
       val lam = exp(col("b0") + col("b1") * col("t"))
       val terms = daily.crossJoin(broadcast(params))
@@ -2367,7 +2360,7 @@ object Relational {
         round(when(det =!= 0.0,
           col("b1") + (col("h00") * col("g1") - col("h01") * col("g0")) / det), 9)
           .as("b1"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
     }
     params.select(col("n_days"), col("b0"), col("b1"),
       round(exp(col("b1")), 6).as("daily_growth"))
@@ -2392,11 +2385,10 @@ object Relational {
     * windows are config-sized); the slope, then the intercept at x' = 0,
     * then the intercept at day 0 re-round at 6 dp per step. */
   def huberTrend(events: DataFrame, iters: Int = 3): DataFrame = {
-    val daily = graft.CacheTracker.track(events
+    val daily = CacheTracker.cache(events
       .select(expr("unix_micros(ts) div 86400000000").as("day_idx"),
         cents(col("value")).as("c"))
-      .groupBy("day_idx").agg(sum(col("c")).as("cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .groupBy("day_idx").agg(sum(col("c")).as("cents")))
     val m = daily.agg(count(lit(1)).as("n"), min(col("day_idx")).as("x0"),
       sum(col("day_idx")).as("sx"), sum(col("cents")).as("sy"),
       sum(col("day_idx").cast("decimal(38,0)") * col("cents")).as("sxy"),
@@ -2420,7 +2412,7 @@ object Relational {
     // discipline; this query read 101 scheduler jobs for 3 IRLS steps
     // on a calendar-bounded frame before the pins (r17).
     var params = ols.select(col("n"), col("x0"), col("b0"), col("b1"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     var lastScale: DataFrame = null
     for (_ <- 1 to iters) {
       val e = round(col("cents").cast("double") - col("b0")
@@ -2436,7 +2428,7 @@ object Relational {
         .withColumn("rn", row_number().over(wMed))
         .filter(col("rn") === ceil(col("n") / 2.0).cast("long"))
         .select(round(col("ae") * 1.4826, 9).as("s"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
       lastScale = scale
       val w = round(when(col("ae") <= lit(1.345) * col("s"), lit(1.0))
         .otherwise(lit(1.345) * col("s") / col("ae")), 9)
@@ -2461,7 +2453,7 @@ object Relational {
             (col("sw") * col("swxy") - col("swx") * col("swy")) / det), 6).as("b1"))
         .select(col("n"), col("x0"),
           round(a0 - col("b1") * col("x0"), 6).as("b0"), col("b1"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
     }
     params.crossJoin(broadcast(lastScale))
       .select(col("n").as("n_days"), round(col("s"), 6).as("robust_scale"),
@@ -3380,7 +3372,6 @@ object Relational {
       .filter(col("prev_cents").isNotNull)
       .withColumn("delta_cents", col("rev_cents") - col("prev_cents"))
       .withColumn("abs_delta", abs(col("delta_cents")))
-    graft.plans.TopK.register(events.sparkSession)
     val top = graft.plans.TopK.topKPerKey(deltas, Seq("week_idx"),
       Seq("abs_delta" -> false, "event_type" -> true), k)
     val rk = org.apache.spark.sql.expressions.Window
@@ -3646,7 +3637,6 @@ object Relational {
     * per-customer sort materializes — then an exact row_number over the
     * ≤3-row survivors. Ties break on orderkey. */
   def topOrdersPerCustomer(orders: DataFrame, k: Int = 3): DataFrame = {
-    graft.plans.TopK.register(orders.sparkSession)
     val o = orders.select(col("o_custkey"), col("o_orderkey"),
       cents(col("o_totalprice")).as("cents"))
     val pruned = graft.plans.TopK.topKPerKey(o, Seq("o_custkey"),
@@ -4231,14 +4221,14 @@ object Relational {
     // behind each runs ONCE, not once per consumer
     val model = base.filter(col("is_model"))
       .groupBy("g", "arm").agg(count(lit(1)).as("nm"), sum(col("c")).as("scm"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val mg = model.groupBy("g").agg(sum(col("nm")).as("nmg"))
     val karms = model.select(col("arm")).distinct().agg(count(lit(1)).as("k"))
     val evalC = base.filter(!col("is_model"))
       .groupBy("g", "arm").agg(count(lit(1)).as("ne"), sum(col("c")).as("sce"))
       .join(model, Seq("g", "arm"))
       .join(mg, "g")
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val qhat = round(col("scm").cast("double") / col("nm"), 9)
     val phat = round(col("nm").cast("double") / col("nmg"), 9)
     val nEvalG = evalC.groupBy("g").agg(sum(col("ne")).as("neg"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -708,17 +710,17 @@ object Sessionize {
     val m = counts
       .join(counts.groupBy("f").agg(sum(col("n")).as("nf")), "f")
       .select(col("f"), col("t"), round(col("n").cast("double") / col("nf"), 9).as("p"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val states = m.select(col("f").as("s")).distinct()
     var pi = states
       .crossJoin(broadcast(states.agg(count(lit(1)).as("k"))))
       .select(col("s"), round(lit(1.0) / col("k"), 9).as("pi"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     for (_ <- 1 to iters) {
       pi = pi.join(m, col("s") === col("f"))
         .groupBy(col("t").as("s"))
         .agg(round(Folds.exactSum(round(col("pi") * col("p"), 9)), 9).as("pi"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
     }
     pi.select(col("s").as("event_type"), round(col("pi"), 6).as("stationary_p"))
   }

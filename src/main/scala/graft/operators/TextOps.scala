@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -817,11 +819,10 @@ object TextOps {
     val major = docs.groupBy("source").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("source")).limit(1)
       .select(col("source").as("major"))
-    val flagged = graft.CacheTracker.track(
+    val flagged = CacheTracker.cache(
       shuf.join(docs.select(col("doc_id"), col("source")), "doc_id")
         .crossJoin(broadcast(major))
-        .select(col("ord"), (col("source") === col("major")).cast("long").as("m"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("ord"), (col("source") === col("major")).cast("long").as("m")))
     val switches = flagged
       .join(flagged.select((col("ord") - 1).as("ord"), col("m").as("m_next")), "ord")
       .agg(coalesce(sum(when(col("m") =!= col("m_next"), 1L).otherwise(0L)), lit(0L))
@@ -949,7 +950,6 @@ object TextOps {
     * (lang, token) count table is never sorted; the trivial <=k window
     * afterward only assigns ranks. */
   def topTokensPerLang(docs: DataFrame, k: Int = 5): DataFrame = {
-    graft.plans.TopK.register(docs.sparkSession)
     val counts = docs.select(col("lang"), explode(tokens(col("text"))).as("token"))
       .groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
     val pruned = graft.plans.TopK.topKPerKey(
@@ -1224,23 +1224,11 @@ object TextOps {
     * a pure execution-strategy change, proven value-identical by the
     * hash compare at both SFs (and by a python replay of both
     * strategies over the cleaned corpus). On the driver sit ≤ K rows
-    * per pass — config-bounded state, never data-bounded.
-    *
-    * localCheckpoint, not persist: a persisted corpus caches the DATA
-    * but its logical plan still chains every prior round's replace over
-    * the fat cleanText regex tree, so Catalyst re-analyzes an O(round)-
-    * deep plan per argmax (measured: build_ms ≈ 4.7 s of a 4.8 s
-    * query). Truncating to a LogicalRDD makes each round's analyzed
-    * plan constant-size. Stats loss is harmless here — the corpus is
-    * only aggregated and narrowly rewritten, never join-planned — and
-    * the eager checkpoint materializes exactly what the old persist +
-    * argmax pass did. Blocks free via CacheTracker.drainAll at the
-    * harness query boundary (checkpoint RDDs are untracked by design). */
+    * per pass — config-bounded state, never data-bounded. */
   private[graft] def bpeTrainMerges(docs: DataFrame, nMerges: Int)
       : Seq[(Long, String, String, Long)] = {
-    def persisted(df: DataFrame): DataFrame = df.localCheckpoint(true)
     val topK = 64
-    var corpus = persisted(
+    var corpus = CacheTracker.pin(
       docs.select(col("doc_id"), cleanText(col("text")).as("txt")))
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     var done = 0
@@ -1289,7 +1277,7 @@ object TextOps {
           merges += ((done.toLong, p, s"${a}_$b", cnt))
           txt = regexp_replace(txt, s"\\b$a $b\\b", s"${a}_$b")
         }
-        corpus = persisted(corpus.select(col("doc_id"), txt.as("txt")))
+        corpus = CacheTracker.pin(corpus.select(col("doc_id"), txt.as("txt")))
       }
     }
     merges.result()
@@ -1594,7 +1582,7 @@ object TextOps {
       // eviction recompute (official 4.6 s vs 1.6 s solo at r15) — the
       // minhash_calibration/text_ann class. Corpus-linear (one row per
       // win-token window), narrow, builds once pinned.
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val common = chunks.select(col("h"), col("doc_id")).distinct()
       .groupBy("h").agg(count(lit(1)).as("df_docs"))
       .filter(col("df_docs") >= minDocs)
@@ -1620,7 +1608,6 @@ object TextOps {
     * partition keeps at most k rows per source before the shuffle, so
     * the exchange carries O(sources * k), not the corpus. */
   def domainCap(docs: DataFrame, k: Int = 20): DataFrame = {
-    graft.plans.TopK.register(docs.sparkSession)
     val pruned = graft.plans.TopK.topKPerKey(
       docs.select(col("source"), col("doc_id"), col("n_chars")),
       Seq("source"), Seq("n_chars" -> false, "doc_id" -> true), k)
@@ -2262,13 +2249,12 @@ object TextOps {
     // the df frame, and the expensive join of the full gram stream back
     // to its df (a second shuffle of long string keys) disappears.
     // n_grams is size(distinct grams), computed narrow per row.
-    val base = graft.CacheTracker.track(docs
+    val base = CacheTracker.cache(docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"), array_distinct(
         expr(s"transform(sequence(1, size(toks) - ${n - 1}), i -> concat_ws(' ', slice(toks, i, $n)))"))
-        .as("gs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .as("gs")))
     val novel = base.select(col("doc_id"), explode(col("gs")).as("g"))
       .groupBy("g").agg(count(lit(1)).as("df"), min(col("doc_id")).as("doc_id"))
       .filter(col("df") === 1)
@@ -2327,7 +2313,6 @@ object TextOps {
     // bounds each partition to perGroup rows per lang BEFORE the shuffle
     // (the domainCap discipline — no per-lang full sort on one task), and
     // the residual window ranks only the ≤ perGroup·|langs| survivors.
-    graft.plans.TopK.register(docs.sparkSession)
     val keyed = docs.select(col("doc_id"), col("lang"),
       md5(concat(lit("bs:"), col("doc_id").cast("string"))).as("h"))
     val pruned = graft.plans.TopK.topKPerKey(
@@ -3154,14 +3139,13 @@ object TextOps {
     // and every MM round all derive from `games`, and each would re-run
     // the per-lang pairing window (and the quality regexes under it) on
     // an unpersisted lineage — the recompute multiplies with rounds
-    val games = graft.CacheTracker.track(
+    val games = CacheTracker.cache(
       half(odd = true, "a").join(half(odd = false, "b"),
           Seq("lang", "pair_id"))
         .filter(col("src_a") =!= col("src_b"))
         .select(col("src_a"), col("src_b"),
           when(col("q_a") >= col("q_b"), col("src_a")).otherwise(col("src_b"))
-            .as("winner"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .as("winner")))
     games.count()
     // wins/dir/items are SOURCE(²)-bounded (a handful of rows) yet
     // referenced in EVERY MM round: localCheckpoint truncates their fat
@@ -3171,14 +3155,14 @@ object TextOps {
     // (the pi-checkpoint precedent below; measured build_ms 5.5 s → sub-
     // second). Small frames only — `games` stays a tracked persist.
     val wins = games.groupBy(col("winner").as("item"))
-      .agg(count(lit(1)).as("n_wins")).localCheckpoint(true)
+      .agg(count(lit(1)).as("n_wins")).transform(CacheTracker.pin)
     val pc = games.select(least(col("src_a"), col("src_b")).as("i"),
         greatest(col("src_a"), col("src_b")).as("j"))
       .groupBy("i", "j").agg(count(lit(1)).as("n_ij"))
     val dir = pc.select(col("i").as("item"), col("j").as("opp"), col("n_ij"))
       .unionByName(pc.select(col("j").as("item"), col("i").as("opp"), col("n_ij")))
-      .localCheckpoint(true)
-    val items = dir.select("item").distinct().localCheckpoint(true)
+      .transform(CacheTracker.pin)
+    val items = dir.select("item").distinct().transform(CacheTracker.pin)
     var pi = items.withColumn("rating", lit(1.0))
     for (_ <- 1 to rounds) {
       val denom = dir
@@ -3194,14 +3178,11 @@ object TextOps {
           round(coalesce(col("n_wins"), lit(0L)) / col("denom"), 9).as("u"))
       val tot = unnorm.agg(Folds.exactSum(col("u")).as("tot"),
         count(lit(1)).as("ni"))
-      // localCheckpoint, not persist: denom references pi TWICE, so the
-      // LOGICAL plan doubles per round and Catalyst re-analysis blows up
-      // super-linearly even with the data cached (measured 2→7→9 s per
-      // reference at round 3). Truncating the 20-row frame's lineage to
-      // a LogicalRDD keeps the plan constant-size per round.
+      // pinned: denom references pi TWICE, so the logical plan would
+      // double per round (measured 2→7→9 s per reference at round 3)
       pi = unnorm.crossJoin(broadcast(tot))
         .select(col("item"), round(col("u") * col("ni") / col("tot"), 9).as("rating"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
     }
     items
       .join(dir.groupBy("item").agg(sum(col("n_ij")).as("n_games")), Seq("item"))
@@ -3303,7 +3284,6 @@ object TextOps {
     * one partial-agg count joined broadcast (strata-bounded). */
   def dpoPairs(docs: DataFrame, maxPairs: Int = 5,
                minMargin: Double = 0.05): DataFrame = {
-    graft.plans.TopK.register(docs.sparkSession)
     val scored = docs.select(col("doc_id"), col("lang"), col("source"),
       qualityComposite.as("quality"))
     val grpN = scored.groupBy("lang", "source").agg(count(lit(1)).as("n_grp"))
@@ -3671,7 +3651,6 @@ object TextOps {
       qualityComposite.as("reward"))
     val pools = scored.groupBy("source", "lang")
       .agg(count(lit(1)).as("n_candidates"))
-    graft.plans.TopK.register(docs.sparkSession)
     val accepted = scored.filter(col("reward") >= minReward)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source", "lang").orderBy(col("reward").desc, col("doc_id"))
@@ -4225,7 +4204,6 @@ object TextOps {
     * join is (langs * sources * k)^2-bounded regardless of corpus size —
     * never corpus x corpus. Ties in quality count for neither side. */
   def pairwiseWinMatrix(docs: DataFrame, k: Int = 10): DataFrame = {
-    graft.plans.TopK.register(docs.sparkSession)
     val scored = docs.select(col("doc_id"), col("lang"), col("source"),
       qualityComposite.as("q"))
     val top = graft.plans.TopK.topKPerKey(scored, Seq("lang", "source"),
@@ -4270,7 +4248,7 @@ object TextOps {
     // cell-grid-bounded, so the checkpoints are O(cells) local writes;
     // the corpus aggregates exactly once, ever.
     val cells = docs.groupBy("lang", "source").agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint(true)
+      .transform(CacheTracker.pin)
     val dims = broadcast(cells
       .agg(count_distinct(col("lang")).as("b"),
         count_distinct(col("source")).as("k")))
@@ -4283,13 +4261,13 @@ object TextOps {
       val rowNorm = w.join(broadcast(rs), "lang")
         .select(col("lang"), col("source"), col("n_docs"), col("b"), col("k"),
           round(col("w") / col("rs") / col("b"), 9).as("w"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
       val cs = rowNorm.groupBy("source")
         .agg(round(Folds.exactSum(col("w")), 9).as("cs"))
       w = rowNorm.join(broadcast(cs), "source")
         .select(col("lang"), col("source"), col("n_docs"), col("b"), col("k"),
           round(col("w") / col("cs") / col("k"), 9).as("w"))
-        .localCheckpoint(true)
+        .transform(CacheTracker.pin)
     }
     w.select(col("lang"), col("source"), col("n_docs"),
       round(col("w"), 6).as("balanced_w"))
@@ -4413,28 +4391,13 @@ object TextOps {
   def observedMetrics(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // Run the observe action on a THROWAWAY child session: Dataset.observe
-    // initializes the session's lazy ObservationManager, and a session
-    // carrying one is no longer java-serializable — which breaks any later
-    // query in the same session whose task closure captures the session
-    // (Spark ML training summaries do; see Sentiment.fitPredictFeaturized).
-    // The child shares the SparkContext (the plan is handed over via a
-    // global temp view, no data movement) and is discarded with its
-    // poisoned manager; the caller's session never observes anything.
-    val view = "graft_obs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    docs.createOrReplaceGlobalTempView(view)
-    val m =
-      try {
-        val iso = spark.newSession()
-        val obs = org.apache.spark.sql.Observation()
-        val gated = iso.table(s"global_temp.$view").observe(obs,
-          count(lit(1)).as("n_docs"),
-          sum(when(length(col("text")) >= 20, 1L).otherwise(0L)).as("n_pass_len"),
-          sum(col("n_chars")).as("tot_chars"),
-          max(col("n_chars")).as("max_chars"))
-        gated.count()
-        obs.get
-      } finally spark.catalog.dropGlobalTempView(view)
+    val (gated, obs) = graft.Graft.observed(docs,
+      "n_docs" -> count(lit(1)),
+      "n_pass_len" -> sum(when(length(col("text")) >= 20, 1L).otherwise(0L)),
+      "tot_chars" -> sum(col("n_chars")),
+      "max_chars" -> max(col("n_chars")))
+    gated.count()
+    val m = obs.get
     // sums/max are NULL on an empty corpus; the audit row still exists
     def l(k: String): Long = m(k) match { case x: Long => x; case _ => 0L }
     Seq((l("n_docs"), l("n_pass_len"), l("tot_chars"), l("max_chars")))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -226,7 +228,6 @@ object TfIdf {
     * exact row_number over the pruned (≤k per doc) frame assigns ranks.
     * Ties break on token name, so ranks are deterministic. */
   def keywordExtract(docs: DataFrame, k: Int = 5): DataFrame = {
-    graft.plans.TopK.register(docs.sparkSession)
     val scored = tfidf(docs)
     val pruned = graft.plans.TopK.topKPerKey(
       scored, Seq("doc_id"), Seq("tfidf" -> false, "token" -> true), k)
@@ -359,14 +360,12 @@ object TfIdf {
     * TopKPerKey's bounded per-key heaps, so no vocab-sized sort or
     * window exists anywhere in the plan. */
   def topicLabels(docs: DataFrame, signDims: Int = 4, k: Int = 5): DataFrame = {
-    graft.plans.TopK.register(docs.sparkSession)
     // ONE persisted tfidf frame feeds both the bucket embedding and the
     // token-mass aggregate (each previously rebuilt the two-shuffle
     // pipeline); and only the signDims bucket dims are embedded — the
     // dim filter cannot push below the dims-explode generator, so
     // computing 16 and filtering to 4 did 4x the exploded work
-    val tf = graft.CacheTracker.track(tfidf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val tf = CacheTracker.cache(tfidf(docs))
     val buckets = docEmbedHashFromTfidf(tf, signDims)
       .groupBy("doc_id")
       .agg(array_sort(collect_list(struct(col("dim"),
@@ -410,13 +409,12 @@ object TfIdf {
     // round-12's PLAN_AUDIT. localCheckpoint truncates the tiny tl to a
     // LogicalRDD; dt is data-sized so it persists (and registers with
     // CacheTracker for the harness to release).
-    val tl = topicLabels(docs, signDims, k).localCheckpoint(true)
+    val tl = topicLabels(docs, signDims, k).transform(CacheTracker.pin)
     val toks = tl.select(col("token")).distinct()
-    val dt = graft.CacheTracker.track(
+    val dt = CacheTracker.cache(
       docs.select(col("doc_id"),
           explode(TextOps.tokens(col("text"))).as("token")).distinct()
-        .join(toks, Seq("token"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .join(toks, Seq("token"), "left_semi"))
     val df = dt.groupBy("token").agg(count(lit(1)).as("d"))
     val cooc = dt.select(col("doc_id"), col("token").as("w_i"))
       .join(dt.select(col("doc_id"), col("token").as("w_j")), "doc_id")

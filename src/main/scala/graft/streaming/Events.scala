@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.CacheTracker
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -199,12 +201,11 @@ object Events {
       .partitionBy("content_hash").orderBy("doc_id")
     val firsts = hashed.withColumn("_rn", row_number().over(wIn))
       .filter(col("_rn") === 1).drop("_rn")
-    val novel =
-      (if (storeExists(spark, storeDir))
-         firsts.join(spark.read.parquet(storeDir).select("content_hash"),
-           Seq("content_hash"), "left_anti")
-       else firsts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val novel = CacheTracker.cache(
+      if (storeExists(spark, storeDir))
+        firsts.join(spark.read.parquet(storeDir).select("content_hash"),
+          Seq("content_hash"), "left_anti")
+      else firsts)
     try {
       // per-writer dynamic overwrite, same rationale as writeBatch: no
       // session-conf mutation leaks to later writes on this session
@@ -253,8 +254,7 @@ object Events {
     import graft.operators.Dedup
     val spark = batch.sparkSession
     val toked = Dedup.spanToked(batch)
-    val sh = Dedup.spanShingles(toked, win)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = CacheTracker.cache(Dedup.spanShingles(toked, win))
     try {
       val index =
         if (storeExists(spark, storeDir))
@@ -712,8 +712,7 @@ object Events {
     val spark = batch.sparkSession
     val hashesDir = s"$storeDir/hashes"
     val partialsDir = s"$storeDir/partials"
-    val flags = graft.operators.TextOps.attritionFlags(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val flags = CacheTracker.cache(graft.operators.TextOps.attritionFlags(batch))
     try {
       val prior =
         if (storeExists(spark, hashesDir))
@@ -861,9 +860,8 @@ object Events {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id").parquet(dir)
 
-    val bb = batch.select(col("vec_id"), col("embedding"),
-        Similarity.signBucket(col("embedding"), bits).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bb = CacheTracker.cache(batch.select(col("vec_id"), col("embedding"),
+      Similarity.signBucket(col("embedding"), bits).as("bucket")))
     try {
       // candidate pairs: batch-internal (a < b dedups the self-join) +
       // batch × standing index (ids are disjoint across batches, and one
@@ -879,12 +877,11 @@ object Events {
           .join(idx.select(col("bucket"), col("vec_id").as("b_id"),
             col("embedding").as("b_emb")), Seq("bucket"))
       }
-      val pairs = cross.fold(internal)(internal.unionByName(_))
+      val pairs = CacheTracker.cache(cross.fold(internal)(internal.unionByName(_))
         .select(col("a_id"), col("b_id"),
           round(Similarity.cosine(col("a_emb"), col("b_emb")), 6).as("cos"))
         .filter(col("cos") >= cosMin)
-        .select("a_id", "b_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select("a_id", "b_id"))
       try {
         val labels = readStore(labDir, labSchema).map(_.select("vec_id", "label"))
         val merges = readStore(mrgDir, mrgSchema).map(_.select("old_label", "new_label"))
@@ -903,7 +900,7 @@ object Events {
         // map pair endpoints to their current resolved labels (an
         // unlabeled endpoint — a batch vector, or an old singleton
         // pairing for the first time — is its own label)
-        val lbl = resolved.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val lbl = CacheTracker.cache(resolved)
         try {
           lbl.count()
           val e = pairs
@@ -1015,9 +1012,8 @@ object Events {
         .partitionBy("batch_id").parquet(dir)
 
     val (bands0, arrs0) = Dedup.lshDocRows(batch, numHashes, bandSize)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bands = bands0.persist(lvl)
-    val arrs = arrs0.persist(lvl)
+    val bands = CacheTracker.cache(bands0)
+    val arrs = CacheTracker.cache(arrs0)
     try {
       // batch-internal candidates (a < b dedups the self-join) + batch x
       // standing index (ids are disjoint across batches; least/greatest
@@ -1104,9 +1100,8 @@ object Events {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id").parquet(dir)
 
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sig = Dedup.wminhashSigArr(batch, numHashes).persist(lvl)
-    val bands = Dedup.wminhashBanded(sig, numHashes).persist(lvl)
+    val sig = CacheTracker.cache(Dedup.wminhashSigArr(batch, numHashes))
+    val bands = CacheTracker.cache(Dedup.wminhashBanded(sig, numHashes))
     try {
       val internal = bands.select(col("band"), col("bh"), col("doc_id").as("a_id"))
         .join(bands.select(col("band"), col("bh"), col("doc_id").as("b_id")),
@@ -1169,7 +1164,7 @@ object Events {
       .partitionBy("batch_id").parquet(storeDir)
     val merged = spark.read.parquet(storeDir)
       .groupBy("day", "reg").agg(max(col("mx")).as("mx"))
-      .localCheckpoint(true) // two consumers: the day gate + the estimate
+      .transform(CacheTracker.pin) // two consumers: the day gate + the estimate
     val days = merged.select("day").distinct()
     graft.operators.Sketches.windowEstimate(merged, days, window)
       .select(col("win_day"), col("n_used").as("n_registers_used"),

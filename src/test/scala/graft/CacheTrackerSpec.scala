@@ -1,38 +1,43 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** CacheTracker.drainAll — the round-13 harness fix: between queries it
-  * must free EVERY persisted block, including localCheckpoint blocks
-  * that [[CacheTracker.track]] never saw (iterative operators pin one
-  * per round and have no safe point to release them themselves). */
+/** CacheTracker's contract: [[CacheTracker.cache]] and [[CacheTracker.pin]]
+  * record into a scope owned by the calling thread, and
+  * [[CacheTracker.drainAll]] frees exactly that scope — every block the
+  * thread's query made, and no block it did not make. */
 class CacheTrackerSpec extends SparkSpec {
 
-  test("drainAll frees tracked caches AND untracked localCheckpoint blocks") {
-    CacheTracker.drainAll(spark) // start from a clean slate
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val tracked = CacheTracker.track(
-      spark.range(100).toDF("id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    tracked.count()
-    val orphan = spark.range(100).select(col("id"), (col("id") * 2).as("x"))
-      .localCheckpoint(true) // NOT tracked — the bradley_terry shape
-    assert(orphan.count() === 100L)
-    assert(spark.sparkContext.getPersistentRDDs.size > before)
+  private val sf = "/root/testdata/sf0.001"
+
+  private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("drainAll frees this thread's cache and pin blocks") {
     CacheTracker.drainAll(spark)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "every persisted block (tracked or checkpoint-orphaned) must be freed")
+    val before = persistentIds
+    val cached = CacheTracker.cache(spark.range(100).toDF("id"))
+    cached.count()
+    val pinned = CacheTracker.pin(spark.range(100).select(col("id"), (col("id") * 2).as("x")))
+    assert(pinned.count() === 100L)
+    assert((persistentIds -- before).size === 2, "one cached and one pinned RDD")
+    CacheTracker.drainAll(spark)
+    assert((persistentIds -- before).isEmpty, "cache and pin blocks must be freed")
   }
 
   test("drainAll after consumption leaves results usable (values already materialized)") {
-    val df = spark.range(10).toDF("id").localCheckpoint(true)
+    val df = CacheTracker.pin(spark.range(10).toDF("id"))
     val sum = df.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0)
     CacheTracker.drainAll(spark)
     assert(sum === 45L)
   }
 
-  test("cachedCount memoizes per canonicalized plan and clears on releaseAll") {
-    CacheTracker.releaseAll()
+  test("cachedCount memoizes per canonicalized plan and clears on drainAll") {
+    CacheTracker.drainAll(spark)
     @volatile var jobs = 0
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -57,10 +62,95 @@ class CacheTrackerSpec extends SparkSpec {
       val df2 = spark.range(1000).toDF("id").filter(col("id") % 2 === 0)
       assert(CacheTracker.cachedCount(df2) === 500L)
       assert(settle() === after1, "memo hit must not run a count job")
-      // the harness query boundary clears the memo: the count job re-runs
-      CacheTracker.releaseAll()
+      // the query boundary clears the memo: the count job re-runs
+      CacheTracker.drainAll(spark)
       assert(CacheTracker.cachedCount(df) === 500L)
-      assert(settle() > after1, "releaseAll must invalidate the memo")
+      assert(settle() > after1, "drainAll must invalidate the memo")
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("the memo and the frames belong to the calling thread") {
+    CacheTracker.drainAll(spark)
+    val df = spark.range(50).toDF("id")
+    val mine = CacheTracker.cachedCheckpoint(df)
+    var theirs: DataFrame = null
+    val other = new Thread(() => {
+      theirs = CacheTracker.cachedCheckpoint(df)
+      CacheTracker.drainAll(spark)
+    })
+    other.start(); other.join()
+    assert(!(theirs eq mine), "another thread must not be handed this thread's checkpoint")
+    assert(mine.count() === 50L, "another thread's drainAll must not free this thread's pin")
+    CacheTracker.drainAll(spark)
+  }
+
+  test("a frame the caller persisted survives a pinning query's drainAll") {
+    assumeTestdata(sf)
+    CacheTracker.drainAll(spark)
+    val before = persistentIds
+    val own = spark.range(1000).toDF("id").withColumn("sq", col("id") * col("id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      own.count()
+      val ownIds = persistentIds -- before
+      assert(ownIds.nonEmpty)
+      SparkEntry.queries("kmeans_lloyd")(spark, sf).write.format("noop").mode("overwrite").save()
+      CacheTracker.drainAll(spark)
+      assert(ownIds.subsetOf(persistentIds), "drainAll freed a block graft did not create")
+    } finally own.unpersist()
+  }
+
+  // one query per file that caches or pins: after its drainAll the query
+  // leaves no persisted RDD behind
+  Seq("kmeans_lloyd", "hits_scores", "bradley_terry", "token_bfs", "huber_trend",
+      "mmr_rerank", "minhash_lsh", "embed_pq", "nb_predictions", "svm_predictions",
+      "markov_stationary", "platt_scaling", "dedup_store_read").foreach { q =>
+    test(s"$q leaves no persisted RDD after its drainAll") {
+      assumeTestdata(sf)
+      CacheTracker.drainAll(spark)
+      val before = persistentIds
+      val df = SparkEntry.queries(q)(spark, sf)
+      df.write.format("noop").mode("overwrite").save()
+      assert((persistentIds -- before).nonEmpty || q == "dedup_store_read",
+        s"$q was expected to cache or pin a frame")
+      CacheTracker.drainAll(spark)
+      val leaked = persistentIds -- before
+      assert(leaked.isEmpty, s"$q leaked RDDs $leaked")
+    }
+  }
+
+  test("two queries on one session do not free each other's blocks") {
+    assumeTestdata(sf)
+    def solo(q: String): Seq[String] = {
+      val r = rows(SparkEntry.queries(q)(spark, sf))
+      CacheTracker.drainAll(spark)
+      r
+    }
+    val wantKm = solo("kmeans_lloyd")
+    val wantHits = solo("hits_scores")
+    val built = new CountDownLatch(1)
+    val aDone = new CountDownLatch(1)
+    @volatile var gotKm: Either[Throwable, Seq[String]] = null
+    @volatile var gotHits: Either[Throwable, Seq[String]] = null
+    // B pins its vectors at build time, then waits for A's whole query
+    val b = new Thread(() => {
+      gotKm = try {
+        val df = SparkEntry.queries("kmeans_lloyd")(spark, sf)
+        built.countDown()
+        aDone.await(5, TimeUnit.MINUTES)
+        Right(rows(df))
+      } catch { case e: Throwable => Left(e) }
+      finally { built.countDown(); CacheTracker.drainAll(spark) }
+    })
+    val a = new Thread(() => {
+      built.await(5, TimeUnit.MINUTES)
+      gotHits = try Right(rows(SparkEntry.queries("hits_scores")(spark, sf)))
+        catch { case e: Throwable => Left(e) }
+        finally { CacheTracker.drainAll(spark); aDone.countDown() }
+    })
+    b.start(); a.start()
+    a.join(); b.join()
+    assert(gotHits === Right(wantHits))
+    assert(gotKm === Right(wantKm))
   }
 }

@@ -55,7 +55,7 @@ class DedupSpec extends SparkSpec {
     val comp = Dedup.components(pairs).as[(Long, Long)].collect().toMap
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       8L -> 8L, 9L -> 8L))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("components: a 200-link chain converges via pointer jumping") {
@@ -64,13 +64,13 @@ class DedupSpec extends SparkSpec {
     val comp = Dedup.components(chain, maxIter = 12).as[(Long, Long)].collect()
     assert(comp.length === 200)
     assert(comp.forall(_._2 === 1L))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("components: empty pair set yields empty result, no NPE") {
     val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
     assert(Dedup.components(empty).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("no crossJoin in any dedup plan") {

@@ -58,7 +58,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(constDocs).collect().length
         catch { case e: Throwable => fail(s"$name threw on constant corpus: $e") }
       assert(n <= 8, s"$name: unexpected fan-out on a 4-doc constant corpus")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -78,7 +78,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(oneDayEvents).collect().length
         catch { case e: Throwable => fail(s"$name threw on single-day events: $e") }
       assert(n <= 8, s"$name: unexpected fan-out on single-day events")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -104,7 +104,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(constDocs).collect().length
         catch { case e: Throwable => fail(s"$name threw on single-class corpus: $e") }
       assert(n <= 24, s"$name: unexpected fan-out on a 4-doc constant corpus")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -132,7 +132,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(constEmb).collect().length
         catch { case e: Throwable => fail(s"$name threw on constant embeddings: $e") }
       assert(n <= 64, s"$name: unexpected fan-out on 4 constant vectors")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
     // ALL-ZERO vectors: both cosines hit the 0/0 path — the NaN→NULL
     // guard must answer NULL rows, never NaN and never a throw
@@ -172,7 +172,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(singleTokenDocs).collect().length
         catch { case e: Throwable => fail(s"$name threw on single-token docs: $e") }
       assert(n <= 24, s"$name: unexpected fan-out on 4 single-token docs")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -205,7 +205,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(emptyTextDocs).collect().length
         catch { case e: Throwable => fail(s"$name threw on empty-text docs: $e") }
       assert(n <= 24, s"$name: unexpected fan-out on 4 empty-text docs")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -224,7 +224,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(oneDayEvents).collect().length
         catch { case e: Throwable => fail(s"$name threw on zero-conversion stream: $e") }
       assert(n <= 24, s"$name: unexpected fan-out on a 4-event stream")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -253,7 +253,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(constDocs).collect().length
         catch { case e: Throwable => fail(s"$name threw on identical corpus: $e") }
       assert(n <= 24, s"$name: unexpected fan-out on 4 identical docs")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -265,7 +265,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(oneDayOrders).collect().length
         catch { case e: Throwable => fail(s"$name threw on single-day orders: $e") }
       assert(n <= 8, s"$name: unexpected fan-out on single-day orders")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -328,7 +328,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(singleEventUsers).collect().length
         catch { case e: Throwable => fail(s"$name threw on single-event users: $e") }
       assert(n <= 32, s"$name: unexpected fan-out on a 4-event stream")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -348,7 +348,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(zeroRevenueEvents).collect().length
         catch { case e: Throwable => fail(s"$name threw on a zero-revenue day: $e") }
       assert(n <= 64, s"$name: unexpected fan-out on an 8-event stream")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -380,7 +380,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(docs).collect().length
         catch { case e: Throwable => fail(s"$name threw on $label docs: $e") }
       assert(n <= 32, s"$name: unexpected fan-out on 4 $label docs")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -393,7 +393,7 @@ class DegenerateInputSpec extends SparkSpec {
       val n = try op(singleSourceDocs).collect().length
         catch { case e: Throwable => fail(s"$name threw on a single-source corpus: $e") }
       assert(n <= 16, s"$name: unexpected fan-out on a 4-doc corpus")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 }

@@ -122,13 +122,13 @@ class EmptyInputSpec extends SparkSpec {
       d => Relational.burstHours(d), d => Relational.paretoUsers(d))
     for ((op, i) <- eventAggs.zipWithIndex)
       assert(op(noEvents).count() === 0, s"round-12c event agg #$i not total on empty input")
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Relational.keySkewProfile(noEvents).collect().length <= 1)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     // fixed-arity channel rows with zero effect on an empty stream
     val ma = Sessionize.markovAttribution(noEvents).collect()
     assert(ma.length === 4 && ma.forall(_.getAs[Double]("removal_effect") === 0.0))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val eventAggs2: Seq[DataFrame => DataFrame] = Seq(
       d => Relational.seasonalNaiveEval(d), d => Relational.churnRate(d))
     for ((op, i) <- eventAggs2.zipWithIndex)
@@ -136,7 +136,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(Similarity.coresetSelect(
       Seq.empty[(Long, Array[Float], Int)].toDF("vec_id", "embedding", "label"))
       .count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Relational.benfordCheck(
       Seq.empty[(Long, Double)].toDF("o_orderkey", "o_totalprice"))
       .count() === 9, "benford grid always emits 9 digit rows")
@@ -154,45 +154,45 @@ class EmptyInputSpec extends SparkSpec {
   test("round-12d eval operators are total on an empty corpus") {
     // global aggregates emit their one summary row with zero counts
     val auc = Eval.rocAuc(noDocs).collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(auc.length === 1 && auc.head.getAs[Long]("n_scores") === 0L)
     val mc = Eval.mcnemarTest(noDocs).collect()
     assert(mc.length === 1 && mc.head.getAs[Long]("n") === 0L &&
       mc.head.getAs[Double]("chi2") === 0.0)
     // per-threshold / per-bin frames are simply empty
     assert(Eval.prCurve(noDocs).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Eval.calibrationBins(noDocs).count() === 0)
     assert(TextOps.gloveCooc(noDocs).count() === 0)
     assert(Relational.survivalCurve(noEvents).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val noLi = Seq.empty[(Long, Long, Int)]
       .toDF("l_orderkey", "l_partkey", "l_linenumber")
     val noOrd = Seq.empty[(Long, Long)].toDF("o_orderkey", "o_custkey")
     assert(Relational.itemCfScores(noLi, noOrd).count() === 0)
     assert(Relational.cupedAdjust(noEvents).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(TextOps.freqOfFreqs(noDocs).count() === 0)
     assert(LangModel.jmBigram(noDocs).count() === 0)
     assert(Eval.liftDeciles(noDocs).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     // global regression emits its one null-fit row on an empty corpus
     assert(LangModel.heapsLawFit(noDocs).count() === 1)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Eval.classReport(noDocs).count() === 0)
     assert(Relational.topMovers(noEvents).count() === 0)
     assert(Similarity.ivfCellBalance(
       Seq.empty[(Long, Array[Float], Int)].toDF("vec_id", "embedding", "label"))
       .count() === 0)
     assert(Relational.psiDrift(noEvents).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Relational.retentionDecayFit(noEvents).count() === 1)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Relational.equiDepthHistogram(
       Seq.empty[(Long, Double)].toDF("o_orderkey", "o_totalprice")).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Sessionize.sessionConcurrency(noEvents).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     // dq report stays fixed-arity (5 rule rows) on fully empty feeds
     val noCust = Seq.empty[(Long, String)].toDF("c_custkey", "c_name")
     val noLi2 = Seq.empty[(Long, Double, Double)]
@@ -209,29 +209,29 @@ class EmptyInputSpec extends SparkSpec {
     val edq = Relational.eventDqReport(noEvents).collect()
     assert(edq.length === 3 && edq.forall(_.getAs[Long]("n_checked") === 0L))
     assert(Relational.mannwhitneyU(noEvents).count() === 1)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Relational.discountElasticity(
       Seq.empty[(Long, Double, Double)]
         .toDF("l_orderkey", "l_quantity", "l_discount")).count() === 1)
     assert(Graph.tokenKcore(noDocs).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Relational.snapshotDiff(
       Seq.empty[(Long, Double, String)]
         .toDF("o_orderkey", "o_totalprice", "o_orderstatus")).count() === 0)
     assert(TextOps.sourceTokenHistSim(noDocs).count() === 0)
     assert(Sessionize.pathEntropy(noEvents).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Relational.spendLorenz(noOrders).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Relational.catalogCoverage(
       Seq.empty[(Long, String)].toDF("p_partkey", "p_type"),
       Seq.empty[(Long, Long)].toDF("l_orderkey", "l_partkey")).count() === 0)
     assert(Dedup.dupRateBySource(noDocs).count() === 0)
     assert(TfIdf.topicCoherence(noDocs).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(TextOps.tokenizerVocabOverlap(noDocs).count() === 1)
     assert(Sessionize.attributionWindowSweep(noEvents).count() === 3)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("order operators are total on an empty fact table") {
@@ -270,7 +270,7 @@ class EmptyInputSpec extends SparkSpec {
     for ((op, i) <- ops.zipWithIndex) {
       assert(op(noDocs).collect().length <= 1,
         s"round-16/17 text op #$i wrong on empty input")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -283,7 +283,7 @@ class EmptyInputSpec extends SparkSpec {
     for ((op, i) <- ops.zipWithIndex) {
       assert(op(noEvents).collect().length <= 1,
         s"round-16/17 event op #$i wrong on empty input")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
   }
 
@@ -294,7 +294,7 @@ class EmptyInputSpec extends SparkSpec {
     for ((op, i) <- embOps.zipWithIndex) {
       assert(op(noEmb).collect().length <= 1,
         s"emb op #$i wrong on empty input")
-      graft.CacheTracker.releaseAll()
+      graft.CacheTracker.drainAll(spark)
     }
     // ONE vector: embed_isotropy's mean-pairwise divisor is n(n-1) = 0 —
     // must yield a NULL stat, not an ANSI divide-by-zero throw
@@ -310,7 +310,7 @@ class EmptyInputSpec extends SparkSpec {
       (3L, Array(0.8f, 0.2f), 1)
     ).toDF("vec_id", "embedding", "label")
     assert(Similarity.embedMmd(singleton).count() == 0L)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     // two vectors, one label, k=4 clustering: the validity scores must
     // survive degenerate entropies without throwing
     val twoOneLabel = Seq(
@@ -318,8 +318,8 @@ class EmptyInputSpec extends SparkSpec {
       (2L, Array(0.0f, 1.0f), 0)
     ).toDF("vec_id", "embedding", "label")
     assert(Similarity.vMeasure(twoOneLabel).collect().length <= 1)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(Similarity.adjustedRand(twoOneLabel).collect().length <= 1)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 }

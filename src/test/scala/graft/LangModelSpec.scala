@@ -63,7 +63,7 @@ class LangModelSpec extends SparkSpec {
     assert(!terms.contains("unrelated"))
     // ranks are 1..n in rsv-desc order
     assert(out.sortBy(_._3).map(_._2).reverse.sorted.toSeq === out.map(_._2).sorted.toSeq)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("unigram logprob scores a doc of frequent tokens above a doc of rare ones") {

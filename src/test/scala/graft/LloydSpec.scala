@@ -148,7 +148,7 @@ class LloydSpec extends SparkSpec {
       assert(r.passed, r.status.toString)
     }
     val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(trials),
-      Prop.forAll(genCase(withNaN))(same))
+      Prop.forAllNoShrink(genCase(withNaN))(same))
     assert(res.passed, res.status.toString)
   }
 

@@ -24,7 +24,7 @@ class Round12Spec extends SparkSpec {
       (3L, "a_b a_b_c", "a_b_a_b_c", 1L),
       (4L, "a_b_c d", "a_b_c_d", 1L)),
       "greedy argmax merge sequence with early stop")
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("bpeTrain merges round-trip: un-merging restores the cleaned corpus") {
@@ -47,7 +47,7 @@ class Round12Spec extends SparkSpec {
       }
       assert(merged.replace('_', ' ') === c, s"round-trip failed for: $c")
     }
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("htmlExtract keeps text-dense content and drops boilerplate") {
@@ -108,7 +108,7 @@ class Round12Spec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     // after the 4 learned merges both docs collapse to single tokens
     assert(out.toSet === Set((1L, 1L, "a_b_a_b_c"), (2L, 1L, "a_b_c_d")))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("intervalJoin: one row per overlapping pair, touching endpoints " +
@@ -135,6 +135,6 @@ class Round12Spec extends SparkSpec {
     val noEvents = Seq.empty[(Long, Long, String, java.sql.Timestamp, Double)]
       .toDF("event_id", "user_id", "event_type", "ts", "value")
     assert(Relational.intervalJoinQuery(noEvents).count() === 0)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 }

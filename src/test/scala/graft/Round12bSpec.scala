@@ -85,7 +85,7 @@ class Round12bSpec extends SparkSpec {
       val byRank = rows.sortBy(_.getAs[Long]("rnk")).map(_.getAs[Double]("score"))
       assert(byRank.zip(byRank.tail).forall { case (a, c) => a >= c })
     }
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   private def eventsDF(rows: (Long, Long, String, String, Double)*): DataFrame =
@@ -328,7 +328,7 @@ class Round12bSpec extends SparkSpec {
     }
     assert(meanSpan("zorder") < meanSpan("natural"),
       s"z-order must localize both dims: ${meanSpan("zorder")} vs ${meanSpan("natural")}")
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("scd2Merge stitch paths: absorb, close, new user, untouched user") {

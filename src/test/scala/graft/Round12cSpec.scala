@@ -246,7 +246,7 @@ class Round12cSpec extends SparkSpec {
     val docs = docsDF(rows: _*)
     val out = graft.operators.Graph.tokenBfs(docs).collect()
       .map(r => r.getAs[String]("token") -> r.getAs[Long]("dist")).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out === Map("aa" -> 0L, "bb" -> 1L, "cc" -> 2L))
   }
 
@@ -484,7 +484,7 @@ class Round12cSpec extends SparkSpec {
       (5L, 5L, "2024-01-01 10:00:00", "view", 99.0)) // not revenue
     val out = Relational.paretoUsers(events).collect()
       .map(r => r.getAs[Long]("pct") -> r).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out(50L).getAs[Long]("n_users_needed") === 1L)
     assert(out(80L).getAs[Long]("n_users_needed") === 1L)
     assert(out(90L).getAs[Long]("n_users_needed") === 2L)
@@ -518,7 +518,7 @@ class Round12cSpec extends SparkSpec {
         Seq((100L, 2L, "2024-01-01 10:00:00", "view", 1.0),
           (101L, 3L, "2024-01-01 10:00:00", "view", 1.0)): _*)
     val r = Relational.keySkewProfile(events).collect().head
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.getAs[Long]("n_keys") === 3L)
     assert(r.getAs[Long]("n_rows") === 10L)
     assert(r.getAs[Long]("top_key") === 1L)
@@ -639,7 +639,7 @@ class Round12cSpec extends SparkSpec {
       (4L, v(100.0), 0)).toDF("vec_id", "embedding", "label")
     val out = graft.operators.Similarity.coresetSelect(emb, k = 3)
       .orderBy("selection_rank").collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.map(_.getAs[Long]("vec_id")).toSeq === Seq(1L, 4L, 3L))
     // coverage radius: farthest remaining point is vec 2 at distance 1
     // from vec 1 -> 4 dims * 1.0 = 4.0
@@ -695,7 +695,7 @@ class Round12cSpec extends SparkSpec {
       (6L, 4L, "2024-01-01 10:00:00", "error", 1.0))
     val out = graft.operators.Sessionize.markovAttribution(events).collect()
       .map(r => r.getAs[String]("channel") -> r).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val view = out("view"); val error = out("error")
     // base P(conv): START->view 3/4, view->conv 2/3 => 0.5
     assert(math.abs(view.getAs[Double]("base_pconv") - 0.5) < 1e-6)
@@ -719,7 +719,7 @@ class Round12cSpec extends SparkSpec {
       (6L, 2L, "2024-01-01 10:02:00", "purchase", 5.0))
     val out = graft.operators.Sessionize.markovAttribution(events).collect()
       .map(r => r.getAs[String]("channel") -> r).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(math.abs(out("view").getAs[Double]("base_pconv") - 1.0) < 1e-6)
     assert(out("view").getAs[Double]("attribution") === 0.5)
     assert(out("click").getAs[Double]("attribution") === 0.5)

@@ -21,7 +21,7 @@ class Round12dSpec extends SparkSpec {
   test("rocAuc: perfectly separated scores give AUC 1") {
     val d = docs((1L, hi, "en"), (2L, hi, "en"), (3L, lo, "fr"), (4L, lo, "de"))
     val r = Eval.rocAuc(d).collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.length === 1)
     assert(r.head.getAs[Long]("n_pos") === 2L)
     assert(r.head.getAs[Long]("n_neg") === 2L)
@@ -32,21 +32,21 @@ class Round12dSpec extends SparkSpec {
   test("rocAuc: tied scores earn half credit (AUC 0.5)") {
     val d = docs((1L, hi, "en"), (2L, hi, "fr"))
     val r = Eval.rocAuc(d).collect().head
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.getAs[Double]("auc") === 0.5)
   }
 
   test("rocAuc: inverted ranking gives AUC 0") {
     val d = docs((1L, lo, "en"), (2L, hi, "fr"))
     val r = Eval.rocAuc(d).collect().head
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.getAs[Double]("auc") === 0.0)
   }
 
   test("prCurve: cumulative tp/fp sweep down the thresholds") {
     val d = docs((1L, hi, "en"), (2L, hi, "en"), (3L, lo, "fr"))
     val rows = Eval.prCurve(d).orderBy($"threshold".desc).collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(rows.length === 2)
     val top = rows(0) // t = 1.0: both positives in, no negatives
     assert(top.getAs[Long]("tp") === 2L && top.getAs[Long]("fp") === 0L &&
@@ -170,7 +170,7 @@ class Round12dSpec extends SparkSpec {
       (5L, 3L, "2024-01-01 00:00:00"), (6L, 3L, "2024-01-11 00:00:00"))   // dur 10, churned
     val out = graft.operators.Relational.survivalCurve(events)
       .orderBy("duration_days").collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.length === 3)
     val t2 = out(0)
     assert(t2.getAs[Long]("duration_days") === 2L)
@@ -193,7 +193,7 @@ class Round12dSpec extends SparkSpec {
       (5L, 3L, "2024-03-01 00:00:00"))
     val out = graft.operators.Relational.survivalCurve(events)
       .orderBy("duration_days").collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.length === 2)
     // t=0: the horizon user (single event, censored) — nobody churns
     val t0 = out(0)
@@ -237,7 +237,7 @@ class Round12dSpec extends SparkSpec {
       .toDF("o_orderkey", "o_totalprice")
     val out = graft.operators.Relational.equiDepthHistogram(orders)
       .orderBy("bucket").collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.length === 10)
     assert(out.forall(_.getAs[Long]("n_orders") === 2L))
     val b1 = out.head
@@ -255,7 +255,7 @@ class Round12dSpec extends SparkSpec {
       (5L, 3L, "2024-01-01 12:00:00"),                                   // lone later
       (6L, 4L, "2024-01-01 10:10:00"))                                   // starts AT u1 end
     val out = graft.operators.Sessionize.sessionConcurrency(events).collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.length === 1)
     val d = out.head
     // at 10:10 the sweep sees u1+u2 still open and u4 starting -> 3
@@ -293,7 +293,7 @@ class Round12dSpec extends SparkSpec {
   test("liftDeciles: top deciles capture the positives") {
     val d = docs((1L, hi, "en"), (2L, hi, "en"), (3L, lo, "fr"), (4L, lo, "de"))
     val out = Eval.liftDeciles(d).orderBy("decile").collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.length === 4) // n < k: one row per rank
     assert(out(0).getAs[Double]("pos_rate") === 1.0)
     assert(out(0).getAs[Double]("cum_gain") === 0.5)
@@ -307,7 +307,7 @@ class Round12dSpec extends SparkSpec {
     // boundaries: (N=2, V=2) then (N=6, V=4)
     val d = docs((1L, "a b", "en"), (2L, "a b c d", "en"))
     val r = graft.operators.LangModel.heapsLawFit(d).collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.length === 1)
     assert(r.head.getAs[Long]("n_points") === 2L)
     // beta = ln(4/2) / ln(6/2) = ln 2 / ln 3
@@ -376,7 +376,7 @@ class Round12dSpec extends SparkSpec {
     val events = spendEv((pre ++ post): _*)
     val out = graft.operators.Relational.psiDrift(events).collect()
       .map(r => r.getAs[Long]("bin") -> r).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     // every post value (1000 cents) clears all 9 inner edges -> bin 10
     val top = out(10L)
     assert(top.getAs[Long]("n_ref") === 1L && top.getAs[Long]("n_post") === 10L)
@@ -396,7 +396,7 @@ class Round12dSpec extends SparkSpec {
       (5L, 1L, "2024-01-08 10:00:00"), (6L, 2L, "2024-01-08 10:00:00"),
       (7L, 1L, "2024-01-15 10:00:00"))
     val r = graft.operators.Relational.retentionDecayFit(events).collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.length === 1)
     assert(r.head.getAs[Long]("n_points") === 2L)
     assert(math.abs(r.head.getAs[Double]("lambda") + math.log(2.0)) < 1e-5)
@@ -483,14 +483,14 @@ class Round12dSpec extends SparkSpec {
       (1L, 2L, "2024-01-01 10:00:00", 100.0), (2L, 4L, "2024-01-01 10:00:00", 90.0),
       (3L, 1L, "2024-01-01 10:00:00", 10.0), (4L, 3L, "2024-01-01 10:00:00", 5.0))
     val r = graft.operators.Relational.mannwhitneyU(sep).collect().head
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.getAs[Long]("n_a") === 2L && r.getAs[Long]("n_b") === 2L)
     assert(r.getAs[Double]("u_stat") === 4.0) // A above B in all 4 pairs
     assert(!r.getAs[Boolean]("significant")) // n too small for |z| > 1.96
     val tied = spendEv((1L to 4L).map(u =>
       (u, u, "2024-01-01 10:00:00", 50.0)): _*)
     val t = graft.operators.Relational.mannwhitneyU(tied).collect().head
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(t.getAs[Double]("u_stat") === 2.0) // mn/2 under full ties
     assert(t.getAs[Double]("z") === 0.0)
   }
@@ -510,7 +510,7 @@ class Round12dSpec extends SparkSpec {
     val d = docs((1L, "a b c a b c a", "en"), (2L, "a z", "en"))
     val out = graft.operators.Graph.tokenKcore(d).collect()
       .map(r => r.getAs[String]("token") -> r).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out("z").getAs[Boolean]("in_core") === false)
     assert(out("z").isNullAt(out("z").fieldIndex("core_degree")))
     assert(out("a").getAs[Long]("degree0") === 3L) // b, c, z
@@ -566,7 +566,7 @@ class Round12dSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_totalprice")
     val out = graft.operators.Relational.spendLorenz(orders)
       .orderBy("decile").collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.length === 10)
     val d9 = out(8) // bottom 90% of customers hold 9% of spend
     assert(d9.getAs[Double]("cum_pop_share") === 0.9)
@@ -605,7 +605,7 @@ class Round12dSpec extends SparkSpec {
     val d = docs((1L to 4L).map(i =>
       (i, "alpha beta gamma delta epsilon", "en")): _*)
     val out = graft.operators.TfIdf.topicCoherence(d).collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.length === 1)
     assert(out.head.getAs[Long]("n_pairs") === 10L)
     val expected = 10.0 * math.log(5.0 / 4.0)

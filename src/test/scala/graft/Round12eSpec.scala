@@ -97,7 +97,7 @@ class Round12eSpec extends SparkSpec {
         Seq(col("v").desc, col("k")))
       .collect().map(x => (x.getAs[String]("g"), x.getAs[String]("k")) ->
         (x.getAs[Long]("rnk"), x.getAs[Long]("cum"), x.getAs[Long]("tot"))).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r(("g1", "a")) === ((1L, 5L, 10L)))
     assert(r(("g1", "b")) === ((2L, 8L, 10L)))
     assert(r(("g1", "c")) === ((3L, 10L, 10L)))
@@ -109,7 +109,7 @@ class Round12eSpec extends SparkSpec {
     val d = Seq((1L, "a a a a a a a a b c", "en", "s1", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val r = graft.operators.LangModel.vocabTopP(d).collect().head
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.getAs[Long]("n_vocab") === 3L)
     assert(r.getAs[Long]("n_kept") === 2L) // a (mass 0.8) + b (crosses 0.9)
     assert(r.getAs[Double]("mass_kept") === 0.9)
@@ -165,7 +165,7 @@ class Round12eSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val out = graft.operators.Graph.tokenLabelProp(d).collect()
       .map(r => r.getAs[String]("label") -> r).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.keySet === Set("a", "x"))
     assert(out("a").getAs[Long]("n_tokens") === 3L) // {a, b, c}
     assert(out("a").getAs[String]("max_token") === "c")
@@ -225,7 +225,7 @@ class Round12eSpec extends SparkSpec {
     val emb = rows.toDF("vec_id", "embedding")
     val out = graft.operators.Similarity.pcaExplained(emb).collect()
       .map(r => r.getAs[Int]("component") -> r).toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val l1 = 3.0 + math.sqrt(5.0); val l2 = 3.0 - math.sqrt(5.0)
     assert(math.abs(out(1).getAs[Double]("eigenvalue") - l1) < 0.01)
     assert(math.abs(out(2).getAs[Double]("eigenvalue") - l2) < 0.01)
@@ -244,7 +244,7 @@ class Round12eSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
     val out = graft.operators.Relational.rfmMigration(orders).collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.map(_.getAs[Long]("n_customers")).sum === 4L)
     assert(math.abs(out.map(_.getAs[Double]("share")).sum - 1.0) < 1e-6)
     // every segment is a valid r*100+f*10+m code with digits 1..4
@@ -404,7 +404,7 @@ class Round12eSpec extends SparkSpec {
       (3L, "completely different words in this other document here now", "en", "s1", 58L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val r = graft.operators.Dedup.minhashPrEval(d).collect().head
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(r.getAs[Long]("n_truth") === 1L)
     assert(r.getAs[Long]("n_tp") === 1L)
     assert(r.getAs[Double]("recall") === 1.0)
@@ -433,7 +433,7 @@ class Round12eSpec extends SparkSpec {
     val emb = rows.toDF("vec_id", "embedding")
     val out = graft.operators.Similarity.kmeansSilhouette(emb, k = 2)
       .collect()
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(out.length === 2)
     assert(out.map(_.getAs[Long]("n_vecs")).sum === 8L)
     out.foreach(r => assert(r.getAs[Double]("mean_silhouette") > 0.99))
@@ -490,7 +490,7 @@ class Round12eSpec extends SparkSpec {
     val out = graft.operators.Sessionize.shapleyAttribution(d).collect()
       .map(r => r.getAs[String]("channel") -> r.getAs[Double]("shapley_value"))
       .toMap
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     // v({click}) = 1, v({view}) = 0, everything else unobserved (0):
     // phi_click = 6 * (1 - 0) / 24 = 0.25; every other channel's only
     // nonzero term is S={click}: 2 * (v({click,c}) - v({click})) / 24
@@ -509,7 +509,7 @@ class Round12eSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val out = graft.operators.LangModel.bigramGreedyGen(d).collect()
       .sortBy(_.getAs[Int]("step"))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     // seed = most frequent token: a and b tie at 3 -> 'a' lexicographic
     assert(out.map(r => (r.getAs[Int]("step"), r.getAs[String]("token"))).toSeq
       === Seq((0, "a"), (1, "b"), (2, "c"))) // then dead end: chain stops

@@ -81,7 +81,7 @@ class SimilaritySpec extends SparkSpec {
     // probing 2/8 cells must beat blind chance (~0.25) by a wide margin;
     // measured ≈ see assertion message on failure
     assert(recall >= 0.5, f"recall@$k = $recall%.3f — IVF quality regressed")
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("annIvfKmeansDet: deterministic twin is reproducible and meets the recall floor") {
@@ -94,7 +94,7 @@ class SimilaritySpec extends SparkSpec {
     val a = Similarity.annIvfKmeansDet(emb2, maxQueryId = 10, k = k).collect()
     val b = Similarity.annIvfKmeansDet(emb2, maxQueryId = 10, k = k).collect()
     assert(a.map(_.toString).sorted.toSeq === b.map(_.toString).sorted.toSeq)
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val exact = Similarity.annTopK(emb2, maxQueryId = 10, k = k)
       .select(col("q_id"), col("n_id"))
     val approx = Similarity.annIvfKmeansDet(emb2, maxQueryId = 10, k = k)
@@ -105,7 +105,7 @@ class SimilaritySpec extends SparkSpec {
       "left_semi").count()
     val recall = hits.toDouble / total
     assert(recall >= 0.5, f"recall@$k = $recall%.3f — det IVF quality regressed")
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
   }
 
   test("nearDupPairs finds the planted duplicate, bucketed not all-pairs") {
@@ -137,9 +137,9 @@ class SimilaritySpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val full = pairs(Similarity.docSimilarity(docs))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val pruned = pairs(Similarity.docSimilarityPruned(docs))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     // every pruned pair exists in the exact result WITH the same cosine
     // (rescoring runs over full vectors, not the pruned ones)
     for ((k, v) <- pruned) assert(full.get(k).contains(v), s"pair $k")
@@ -149,7 +149,7 @@ class SimilaritySpec extends SparkSpec {
     // mechanism check instead: with pruning disabled the candidate path
     // must reproduce the exact join bit-for-bit.
     val unpruned = pairs(Similarity.docSimilarityPruned(docs, maxDfFrac = 1.0))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(unpruned === full, "maxDfFrac=1.0 must equal the exact join exactly")
   }
 
@@ -172,9 +172,9 @@ class SimilaritySpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val full = pairs(Similarity.docSimilarity(docs, simMin = 0.5))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     val pruned = pairs(Similarity.docSimilarityPruned(docs, simMin = 0.5))
-    graft.CacheTracker.releaseAll()
+    graft.CacheTracker.drainAll(spark)
     assert(full.nonEmpty, "the planted near-dup pairs must score")
     assert(pruned === full, "df-pruned candidates must keep full recall on Zipf data")
     // and the gate really engaged: stopwords (df = N) are over the cap,

@@ -819,7 +819,7 @@ class StreamingSpec extends SparkSpec {
     def batchTruth(dfs: DataFrame*): Set[(Long, Long, Double)] = {
       val r = graft.operators.Dedup.minhashLshPairs(dfs.reduce(_ unionByName _))
         .as[(Long, Long, Double)].collect().toSet
-      graft.CacheTracker.releaseAll() // minhashLshPairs pins its shingle frame
+      graft.CacheTracker.drainAll(spark) // minhashLshPairs pins its shingle frame
       r
     }
     def snapshot(): Set[(Long, Long, Double)] =
