@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.BlockShim
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
@@ -57,10 +58,18 @@ object CacheTracker {
   /** `ds.localCheckpoint(eager = true)`, freed by this thread's [[drainAll]]. */
   def pin[T](ds: Dataset[T]): Dataset[T] = {
     val p = ds.localCheckpoint(true)
-    p.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }
-      .foreach(scope.get.pinned += _)
+    pinnedRdd(p).foreach(scope.get.pinned += _)
     p
   }
+
+  private def pinnedRdd(ds: Dataset[_]): Option[Int] =
+    ds.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }
+
+  /** What the blocks of the pin `ds` reads hold, in memory plus on disk:
+    * the measured size of its data, not a plan estimate. 0 for a frame
+    * that reads no pin. */
+  def pinnedBytes(ds: Dataset[_]): Long =
+    pinnedRdd(ds).fold(0L)(BlockShim.rddBytes(ds.sparkSession.sparkContext, _))
 
   private def memoized[T](kind: String, df: DataFrame)(compute: => T): T =
     scope.get.memo.getOrElseUpdate(

@@ -114,17 +114,20 @@ object Graft {
   def observed(df: DataFrame, metrics: (String, org.apache.spark.sql.Column)*)
       : (DataFrame, org.apache.spark.sql.Observation) = {
     require(metrics.nonEmpty, "observed() needs at least one metric")
-    // The observe node is attached to a frame rebound onto a throwaway
-    // child session (plan handover via global temp view — same
-    // SparkContext, no data movement): Dataset.observe initializes the
-    // session's lazy ObservationManager, which is not java-serializable,
-    // and a session carrying one breaks any later task closure that
-    // captures the session (Spark ML training summaries do). The caller
-    // acts on the returned frame exactly as before — same rows, same
-    // metrics — while the caller's own session stays serializable.
+    // The observe node is attached to a frame rebound onto a child
+    // session (plan handover via global temp view — same SparkContext,
+    // no data movement): Dataset.observe initializes the session's lazy
+    // ObservationManager, a non-transient field of the session that is
+    // not java-serializable, and a session carrying one breaks any later
+    // task closure that captures the session (Spark ML training summaries
+    // do). The caller acts on the returned frame exactly as before — same
+    // rows, same metrics — while the caller's own session stays
+    // serializable. One child per parent session (SparkEntry's session
+    // memo), not one per call: a new session brings a new class loader,
+    // and so compiles every generated class of the frame again.
     val view = "graft_obs_" + java.util.UUID.randomUUID().toString.replace("-", "")
     df.createOrReplaceGlobalTempView(view)
-    val iso = df.sparkSession.newSession()
+    val iso = SparkEntry.observerSession(df.sparkSession)
     val rebound =
       try iso.table(s"global_temp.$view")
       finally df.sparkSession.catalog.dropGlobalTempView(view)

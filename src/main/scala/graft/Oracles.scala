@@ -325,6 +325,8 @@ object Oracles {
          |  round((SELECT list_reduce(list_sort(list(f1 * support / total)), (a, b) -> a + b) FROM per3), 6) AS weighted_f1
          |FROM tot""".stripMargin,
 
+    // per-candidate score terms sorted-folded (Spark: an exact sum), so
+    // the 6 dp score and its argmax do not depend on summation order
     "nb_scratch" ->
       s"""WITH toks AS (SELECT doc_id, lang AS label, unnest($toks) AS token FROM documents),
          |tr AS (SELECT * FROM toks WHERE doc_id % 4 < 3),
@@ -338,7 +340,8 @@ object Oracles {
          |ttf AS (SELECT doc_id, token, count(*) AS tf FROM te GROUP BY 1, 2),
          |dlen AS (SELECT doc_id, count(*) AS n_d FROM te GROUP BY 1),
          |sc AS (SELECT t.doc_id, l.label AS cand,
-         |       sum(t.tf * ln(CAST(coalesce(c.cnt, 0) + 1 AS DOUBLE))) AS s
+         |       list_reduce(list_sort(list(t.tf * ln(CAST(coalesce(c.cnt, 0) + 1 AS DOUBLE)))),
+         |         (x, y) -> x + y) AS s
          |       FROM ttf t CROSS JOIN (SELECT label FROM pri) l
          |       LEFT JOIN cnt c ON c.label = l.label AND c.token = t.token
          |       GROUP BY 1, 2),
@@ -378,7 +381,8 @@ object Oracles {
          |ttf AS (SELECT fold, doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2, 3),
          |dlen AS (SELECT fold, doc_id, count(*) AS n_d FROM toks GROUP BY 1, 2),
          |sc AS (SELECT t.fold, t.doc_id, l.label AS cand,
-         |  sum(t.tf * ln(CAST(coalesce(c.cnt, 0) + 1 AS DOUBLE))) AS s
+         |  list_reduce(list_sort(list(t.tf * ln(CAST(coalesce(c.cnt, 0) + 1 AS DOUBLE)))),
+         |    (x, y) -> x + y) AS s
          |  FROM ttf t JOIN (SELECT fold, label FROM pri) l ON l.fold = t.fold
          |  LEFT JOIN comp c ON c.fold = t.fold AND c.label = l.label AND c.token = t.token
          |  GROUP BY 1, 2, 3),
@@ -2982,10 +2986,11 @@ object Oracles {
         |FROM f JOIN fc ON f.bucket = fc.bucket GROUP BY f.lang""".stripMargin,
 
     // B306: complete-block Friedman over (lang block, source treatment)
-    // cell mean quality; average ranks on ties, tie-corrected statistic
+    // cell mean quality (the sum re-rounded to 6 dp before it divides);
+    // average ranks on ties, tie-corrected statistic
     "friedman_test" ->
       s"""WITH cm AS (SELECT lang, source,
-         |  round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b)
+         |  round(round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b), 6)
          |    / sum(sub_n), 6) AS mean_q
          |  FROM (SELECT lang, source, doc_id % 1024 AS sb,
          |        CAST(count(*) AS BIGINT) AS sub_n,
@@ -3929,7 +3934,7 @@ object Oracles {
 
     // mean 6dp composite quality per ntile(10) length decile; two-level
     // fold (Folds.scala): sorted fold per doc_id%1024 sub-bucket, then of
-    // the sub-totals
+    // the sub-totals, re-rounded to 6 dp before the mean divides
     "quality_by_length_decile" ->
       s"""WITH q AS (SELECT doc_id, n_chars, $qualitySql AS quality FROM documents),
          |d AS (SELECT *, ntile(10) OVER (ORDER BY n_chars, doc_id) AS decile FROM q),
@@ -3939,7 +3944,7 @@ object Oracles {
          |      FROM d GROUP BY 1, 2)
          |SELECT CAST(decile AS BIGINT) AS decile, CAST(sum(sub_n) AS BIGINT) AS n_docs,
          |  min(sub_min) AS min_chars, max(sub_max) AS max_chars,
-         |  round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) / sum(sub_n), 6) AS mean_quality
+         |  round(round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b), 6) / sum(sub_n), 6) AS mean_quality
          |FROM s GROUP BY 1""".stripMargin,
 
     // lang x source independence over the FULL margin grid (zero cells
@@ -4738,8 +4743,8 @@ object Oracles {
          |r AS (SELECT source, round(len / n_toks, 6) AS cpt, round(n_ws / len, 6) AS wsr
          |      FROM p WHERE n_toks > 0)
          |SELECT source, count(*) AS n_docs,
-         |  round(list_reduce(list_sort(list(cpt)), (a, b) -> a + b) / count(*), 6) AS chars_per_token,
-         |  round(list_reduce(list_sort(list(wsr)), (a, b) -> a + b) / count(*), 6) AS ws_ratio
+         |  round(round(list_reduce(list_sort(list(cpt)), (a, b) -> a + b), 6) / count(*), 6) AS chars_per_token,
+         |  round(round(list_reduce(list_sort(list(wsr)), (a, b) -> a + b), 6) / count(*), 6) AS ws_ratio
          |FROM r GROUP BY source""".stripMargin,
 
     "length_mad" ->
@@ -9504,7 +9509,8 @@ object Oracles {
 
     // self-BLEU over the per-lang 16-doc sample: full ordered pair grid
     // (zero-overlap pairs included), bleu_pairs' exact clipped-count
-    // machinery, per-lang mean of sorted 6dp terms
+    // machinery, per-lang mean of sorted 6dp terms (the sum re-rounded to
+    // 6 dp before it divides)
     "self_bleu" ->
       s"""WITH tk AS MATERIALIZED (SELECT lang, doc_id, $toks AS toks FROM documents
          |  WHERE len($toks) >= 2),
@@ -9540,7 +9546,7 @@ object Oracles {
          |    ELSE round(exp(1.0 - CAST(len_b AS DOUBLE) / len_a), 9) END)
          |    * sqrt(p1 * p2), 6) AS bleu2 FROM p)
          |SELECT lang, count(*) AS n_pairs,
-         |  round(list_reduce(list(bleu2 ORDER BY a_id, b_id, bleu2), (a, b) -> a + b)
+         |  round(round(list_reduce(list(bleu2 ORDER BY a_id, b_id, bleu2), (a, b) -> a + b), 6)
          |    / count(*), 6) AS self_bleu
          |FROM bl GROUP BY lang""".stripMargin,
 

@@ -53,8 +53,9 @@ object SparkEntry {
     }
 
   /** What SparkEntry keeps per session: the nanosAsLong child it reads
-    * events.parquet through, and the schema of each parquet path it has
-    * read. Both are built once and reused, not built per call. Spark keys
+    * events.parquet through, the child [[Graft.observed]] attaches its
+    * observations on, and the schema of each parquet path it has read.
+    * Each is built once and reused, not built per call. Spark keys
     * its codegen cache by class loader as well as by code, and each new
     * session brings its own class loader, so a fresh child per call would
     * compile every generated class of the query again. A parquet read
@@ -64,6 +65,7 @@ object SparkEntry {
     * holds can still be collected. */
   private final class SessionMemo {
     private var nanos: SparkSession = null
+    private var observer: SparkSession = null
     val schemas = new java.util.concurrent.ConcurrentHashMap[String, (FileStamp, StructType)]
 
     def nanosChild(parent: SparkSession): SparkSession = synchronized {
@@ -72,6 +74,11 @@ object SparkEntry {
         nanos.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       }
       nanos
+    }
+
+    def observerChild(parent: SparkSession): SparkSession = synchronized {
+      if (observer == null) observer = parent.newSession()
+      observer
     }
   }
 
@@ -83,6 +90,9 @@ object SparkEntry {
 
   private[graft] def nanosSession(spark: SparkSession): SparkSession =
     memo(spark).nanosChild(spark)
+
+  private[graft] def observerSession(spark: SparkSession): SparkSession =
+    memo(spark).observerChild(spark)
 
   /** File count, total length and latest modification time under a path
     * (all zero when it does not exist): a rewritten table changes it, so

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextOps
+import graft.operators.{Folds, TextOps}
 
 /** Multinomial Naive Bayes as pure DataFrame algebra — the Spark-first
   * restatement of the reference's hand-rolled Hadoop classifier
@@ -56,7 +56,7 @@ object NaiveBayesSql {
       .withColumn("part",
         col("tf") * log((coalesce(col("cnt"), lit(0L)) + 1).cast("double")))
       .groupBy("doc_id", "cand")
-      .agg(sum(col("part")).as("s"))
+      .agg(Folds.exactSum(col("part")).as("s"))
       .join(docLen, "doc_id")
       .join(broadcast(classTot.withColumnRenamed("label", "cand")), "cand")
       .crossJoin(broadcast(vocab))
@@ -134,7 +134,7 @@ object NaiveBayesSql {
         col("cnt")), Seq("fold", "cand", "token"), "left")
       .withColumn("part",
         col("tf") * log((coalesce(col("cnt"), lit(0L)) + 1).cast("double")))
-      .groupBy("fold", "doc_id", "cand").agg(sum(col("part")).as("s"))
+      .groupBy("fold", "doc_id", "cand").agg(Folds.exactSum(col("part")).as("s"))
       .join(docLen, Seq("fold", "doc_id"))
       .join(broadcast(classTot.withColumnRenamed("label", "cand")),
         Seq("fold", "cand"))

@@ -11,6 +11,7 @@ import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, Identifiable}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.operators.TextOps
@@ -79,7 +80,7 @@ object Sentiment {
     // test-side transform must not re-run the featurize chain per pass.
     // Every classifier fitted on the same frame within one query shares
     // one checkpoint.
-    val withSplit = graft.CacheTracker.cachedCheckpoint(feats.withColumn("split", splitCol("id")))
+    val withSplit = rightSized(CacheTracker.cachedCheckpoint(feats.withColumn("split", splitCol("id"))))
     val train = withSplit.filter(col("split") === "train")
     val test = withSplit.filter(col("split") === "test")
     val fitted = clf.fit(train).asInstanceOf[org.apache.spark.ml.Model[_]]
@@ -102,6 +103,22 @@ object Sentiment {
       model.transform(test).select(col("id"), col("label"), col("prediction")))
     preds.count()
     preds
+  }
+
+  /** A pinned frame narrowed, without a shuffle, to as many partitions as
+    * its measured bytes fill at `spark.sql.adaptive.advisoryPartitionSizeInBytes`:
+    * ⌈bytes / advisory⌉, clamped to [1, its current count]. An iterative
+    * fit pays one task and one partial result per partition and round
+    * (LinearSVC tree-aggregates a numFeatures-long gradient per loss
+    * evaluation), so a small training set fitted one partition per core
+    * mostly pays overhead; a large one keeps its full width. */
+  private def rightSized(pinned: DataFrame): DataFrame = {
+    val target = pinned.sparkSession.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = pinned.rdd.getNumPartitions
+    val needed = (CacheTracker.pinnedBytes(pinned) + target - 1) / target
+    val n = math.max(1L, math.min(needed, parts.toLong)).toInt
+    if (n < parts) pinned.coalesce(n) else pinned
   }
 
   /** array<float|double> embedding column → ml Vector `features`. */

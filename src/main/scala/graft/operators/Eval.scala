@@ -376,8 +376,9 @@ object Eval {
     * per-lang sort), full ordered k·(k−1) pair grid including
     * zero-overlap pairs; per-pair BLEU-2 reuses [[bleuPairs]]'s exact
     * clipped-count machinery (9 dp precisions, 9 dp brevity penalty,
-    * 6 dp geometric mean), and the per-lang mean folds the ≤k·(k−1)
-    * 6 dp terms in sorted pair order. Gram joins fan out ≤ k² per
+    * 6 dp geometric mean), and the per-lang mean divides the exact sum
+    * of the ≤k·(k−1) 6 dp terms, re-rounded to 6 dp, so an ulp of the
+    * sum never decides a rounding tie. Gram joins fan out ≤ k² per
     * (lang, gram) — sample-bounded, never corpus-paired. */
   def selfBleu(docs: DataFrame, k: Int = 16): DataFrame = {
     val sample = CacheTracker.cache(
@@ -429,7 +430,7 @@ object Eval {
     perPair
       .groupBy("lang")
       .agg(count(lit(1)).as("n_pairs"),
-        round(Folds.exactSum(col("bleu2")) / count(lit(1)), 6).as("self_bleu"))
+        round(round(Folds.exactSum(col("bleu2")), 6) / count(lit(1)), 6).as("self_bleu"))
   }
 
   /** chrF2 between the same near-duplicate candidate pairs (B209): the

@@ -1622,7 +1622,8 @@ object TextOps {
     * and whitespace fraction — the cheap signals that flag
     * under-segmenting corpora (CJK without spacing, minified HTML)
     * before a tokenizer run. Per-doc ratios round to 6 dp, the
-    * per-source mean is an exact sum over the count. Narrow scan + one
+    * per-source mean divides the exact sum, re-rounded to 6 dp, by the
+    * count (an ulp of the sum never decides a rounding tie). Narrow scan + one
     * partial-agg shuffle onto |sources| rows. */
   def compressionRatio(docs: DataFrame): DataFrame = {
     docs
@@ -1638,8 +1639,8 @@ object TextOps {
       .groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),
-        round(Folds.exactSum(col("cpt")) / count(lit(1)), 6).as("chars_per_token"),
-        round(Folds.exactSum(col("wsr")) / count(lit(1)), 6).as("ws_ratio"))
+        round(round(Folds.exactSum(col("cpt")), 6) / count(lit(1)), 6).as("chars_per_token"),
+        round(round(Folds.exactSum(col("wsr")), 6) / count(lit(1)), 6).as("ws_ratio"))
   }
 
   /** Robust per-language length profile (B52): exact interpolated median
@@ -2461,7 +2462,8 @@ object TextOps {
     * corpus, so a plain `ntile(10).over(Window.orderBy(...))` would
     * move every document to one task; [[Ranks.ntileFromRank]] derives
     * the identical bucket arithmetic from (rank, n). Quality terms are
-    * the shared 6 dp composite, summed exactly ([[Folds.exactSum]]). */
+    * the shared 6 dp composite, summed exactly ([[Folds.exactSum]]) and
+    * re-rounded to 6 dp before the mean divides. */
   def qualityByLengthDecile(docs: DataFrame): DataFrame = {
     Ranks.withGlobalRowNumber(
         docs.select(col("doc_id"), col("n_chars"), qualityComposite.as("quality")),
@@ -2471,7 +2473,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_docs"),
         min(col("n_chars")).as("min_chars"),
         max(col("n_chars")).as("max_chars"),
-        round(Folds.exactSum(col("quality")) / count(lit(1)), 6).as("mean_quality"))
+        round(round(Folds.exactSum(col("quality")), 6) / count(lit(1)), 6).as("mean_quality"))
   }
 
   /** Lang ⊥ source independence chi-square (B96): the one-number audit
@@ -4327,14 +4329,15 @@ object TextOps {
     * complete-block, and the tie-corrected statistic divides out
     * within-block rank ties.
     *
-    * Cell means are exact sums ([[Folds.exactSum]]); everything after
+    * Cell means divide exact sums ([[Folds.exactSum]]) re-rounded to
+    * 6 dp; everything after
     * is (langs × sources)-bounded.
     * Rank sums are exact multiples of 0.5, so Σ R_j² is exact and the
     * statistic's only float work is the mirrored final expression. */
   def friedmanTest(docs: DataFrame): DataFrame = {
     val scored = docs.select(col("lang"), col("source"), qualityComposite.as("q"))
     val cellMeans = scored.groupBy("lang", "source")
-      .agg(round(Folds.exactSum(col("q")) / count(lit(1)), 6).as("mean_q"))
+      .agg(round(round(Folds.exactSum(col("q")), 6) / count(lit(1)), 6).as("mean_q"))
     val nLangs = cellMeans.select("lang").distinct()
       .agg(count(lit(1)).as("b"))
     val complete = cellMeans.groupBy("source")

@@ -29,6 +29,18 @@ class CacheTrackerSpec extends SparkSpec {
     assert((persistentIds -- before).isEmpty, "cache and pin blocks must be freed")
   }
 
+  test("pinnedBytes reads the size of a pin's blocks, and 0 for a frame that reads none") {
+    CacheTracker.drainAll(spark)
+    val small = CacheTracker.pin(spark.range(1000).toDF("id"))
+    val large = CacheTracker.pin(spark.range(100000).toDF("id"))
+    val (s, l) = (CacheTracker.pinnedBytes(small), CacheTracker.pinnedBytes(large))
+    assert(s > 0L && l > 10 * s, s"small pin $s bytes, large pin $l bytes")
+    assert(CacheTracker.pinnedBytes(small.filter(col("id") > 10)) === s,
+      "a frame over a pin reads that pin's blocks")
+    assert(CacheTracker.pinnedBytes(spark.range(1000).toDF("id")) === 0L)
+    CacheTracker.drainAll(spark)
+  }
+
   test("drainAll after consumption leaves results usable (values already materialized)") {
     val df = CacheTracker.pin(spark.range(10).toDF("id"))
     val sum = df.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0)

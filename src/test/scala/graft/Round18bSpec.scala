@@ -233,4 +233,30 @@ class Round18bSpec extends SparkSpec {
     out.writeObject(spark) // throws NotSerializableException if poisoned
     out.close()
   }
+
+  test("Graft.observed attaches every call to one child session of the caller's") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val docs = Seq((1L, "a b c"), (2L, "d e"), (3L, "")).toDF("doc_id", "text")
+    def observe() = {
+      val (framed, obs) = Graft.observed(docs.filter(length(col("text")) > 0),
+        "n" -> count(lit(1)), "chars" -> sum(length(col("text"))))
+      framed.write.format("noop").mode("overwrite").save()
+      assert(obs.get("n") == 2L && obs.get("chars") == 8L)
+      framed.sparkSession
+    }
+    val first = observe()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = observe()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled,
+      "a repeated observation compiles no class")
+    assert(first eq second, "one child per parent session")
+    assert(first ne spark)
+    // the lazy ObservationManager is a non-transient field of the session
+    // and is not serializable: the caller's session must never build one
+    val field = spark.getClass.getDeclaredField("observationManager")
+    field.setAccessible(true)
+    assert(field.get(spark) == null, "the caller's session has an ObservationManager")
+    assert(field.get(first) != null)
+  }
 }

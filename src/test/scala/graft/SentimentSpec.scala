@@ -1,7 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.classification.{LinearSVC, NaiveBayes}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import graft.ml.Sentiment
 
@@ -84,6 +86,86 @@ class SentimentSpec extends SparkSpec {
       row(0.666667, 0.444444, 0.666667, 0.533333))
   }
 
+  /** Poll until a listener-fed value holds still: listener delivery is
+    * async. */
+  private def settle[T](read: => T): T = {
+    var prev = read; var stable = 0; var iters = 0
+    while (stable < 3 && iters < 50) {
+      Thread.sleep(10)
+      val now = read
+      if (now == prev) stable += 1 else { stable = 0; prev = now }
+      iters += 1
+    }
+    prev
+  }
+
+  private def withAdvisory[T](size: Option[String])(body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    size.foreach(spark.conf.set(key, _))
+    try body finally spark.conf.unset(key)
+  }
+
+  private lazy val featurized = Sentiment.featurizer().fit(corpus).transform(corpus)
+
+  private def svm = new LinearSVC().setMaxIter(10).setRegParam(0.1)
+
+  /** (stages, tasks) of every `treeAggregate at RDDLossFunction` job
+    * (one LinearSVC loss evaluation) that `body` runs. */
+  private def lossJobs(body: => Unit): Seq[(Int, Int)] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.name.startsWith("treeAggregate at RDDLossFunction")))
+          jobs.add((e.stageInfos.size, e.stageInfos.map(_.numTasks).sum))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      settle(jobs.size)
+      jobs.asScala.toSeq
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("fitPredictFeaturized: NB and LinearSVC predictions do not depend on the input's partitions") {
+    def preds(parts: Int) = {
+      val feats = featurized.repartition(parts)
+      try Seq(new NaiveBayes(), svm).map(clf =>
+        Sentiment.fitPredictFeaturized(feats, clf).as[(Long, Double, Double)].collect().toSet)
+      finally CacheTracker.drainAll(spark)
+    }
+    // the default advisory size narrows this fixture to one partition; a
+    // 1-byte one keeps each input's own partitions
+    for (advisory <- Seq(None, Some("1b"))) withAdvisory(advisory) {
+      val one = preds(1)
+      assert(one.forall(_.size == 50))
+      for (parts <- Seq(4, 7)) assert(preds(parts) === one, s"$parts partitions, advisory $advisory")
+    }
+  }
+
+  test("a LinearSVC fit on a small training set runs each loss evaluation as one task") {
+    val jobs = lossJobs {
+      try Sentiment.fitPredictFeaturized(featurized.repartition(4), svm)
+      finally CacheTracker.drainAll(spark)
+    }
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_ == ((1, 1))), s"(stages, tasks) per loss job: $jobs")
+  }
+
+  test("a fit keeps its input's partitions when its pin fills them at the advisory size") {
+    val feats = featurized.repartition(4)
+    val bytes = CacheTracker.pinnedBytes(
+      CacheTracker.cachedCheckpoint(feats.withColumn("split", Sentiment.splitCol("id"))))
+    assert(bytes > 0L)
+    val jobs = withAdvisory(Some(s"${bytes / 4 - 1}b")) {
+      lossJobs {
+        try Sentiment.fitPredictFeaturized(feats, svm)
+        finally CacheTracker.drainAll(spark)
+      }
+    }
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_ == ((2, 5))), s"(stages, tasks) per loss job: $jobs")
+  }
+
   test("classifiers on one featurized frame share one checkpoint until drainAll") {
     CacheTracker.drainAll(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_feats").toString
@@ -97,28 +179,18 @@ class SentimentSpec extends SparkSpec {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans += 1
     }
-    // listener delivery is async: poll until the counter holds still
-    def settle(): Int = {
-      var prev = scans; var stable = 0; var iters = 0
-      while (stable < 3 && iters < 50) {
-        Thread.sleep(10)
-        if (scans == prev) stable += 1 else { stable = 0; prev = scans }
-        iters += 1
-      }
-      scans
-    }
     spark.sparkContext.addSparkListener(l)
     try {
       val nb = Sentiment.fitPredictFeaturized(feats, new NaiveBayes())
         .as[(Long, Double, Double)].collect().toSet
       Sentiment.fitPredictFeaturized(feats, new LinearSVC().setMaxIter(10).setRegParam(0.1))
-      assert(settle() === 1, "both fits must share one featurize run")
+      assert(settle(scans) === 1, "both fits must share one featurize run")
       // drainAll frees the checkpoint's blocks: the next call must featurize
       // again, not read the freed blocks
       CacheTracker.drainAll(spark)
       val again = Sentiment.fitPredictFeaturized(feats, new NaiveBayes())
         .as[(Long, Double, Double)].collect().toSet
-      assert(settle() === 2)
+      assert(settle(scans) === 2)
       assert(again === nb)
     } finally {
       spark.sparkContext.removeSparkListener(l)
