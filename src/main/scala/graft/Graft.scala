@@ -57,9 +57,11 @@ object Graft {
     }
 
   /** Mount every parquet table under `dir` as a temp view, so the full
-    * engine surface is reachable from SQL. events gets its `ts` column
-    * normalized to TimestampType on the way in, whichever physical type
-    * the data generation carries (the one driver-data quirk callers
+    * engine surface is reachable from SQL. Each table is read through
+    * SparkEntry.readParquet, so mounting again on the same session infers
+    * no schema. events gets its `ts` column normalized to TimestampType
+    * on the way in, whichever physical type the data generation carries
+    * (the one driver-data quirk callers
     * should never see — see SparkEntry.normalizeEventTs). Only the
     * TIMESTAMP(NANOS) generation needs the legacy nanosAsLong conf, and
     * because the view must live — and execute — in THIS session's
@@ -75,7 +77,7 @@ object Graft {
         val df =
           if (name == "events") {
             val raw =
-              try spark.read.parquet(path)
+              try SparkEntry.readParquet(spark, path)
               catch {
                 // Retry ONLY the TIMESTAMP(NANOS) schema rejection (the
                 // reader refuses the type unless nanos surface as plain
@@ -86,11 +88,12 @@ object Graft {
                     if { val m = String.valueOf(e.getMessage)
                          m.contains("TIMESTAMP(NANOS") ||
                            m.contains("Illegal Parquet type") } =>
+                  // the failed inference memoized no schema for the path
                   spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                  spark.read.parquet(path)
+                  SparkEntry.readParquet(spark, path)
               }
             SparkEntry.normalizeEventTs(raw)
-          } else spark.read.parquet(path)
+          } else SparkEntry.readParquet(spark, path)
         df.createOrReplaceTempView(name)
       }
     }

@@ -2,38 +2,92 @@ package graft.streaming
 
 import graft.CacheTracker
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Structured Streaming twin of Relational.eventsWindow (C4): tumbling
-  * 1-hour window counts with a watermark bounding state. The same
-  * aggregation expressions serve batch and stream — the Spark way of
-  * keeping the two paths consistent.
+/** Structured Streaming twins of the batch operators: windowed counts,
+  * stateful per-user and per-session state, stream joins, and the
+  * incremental operators that keep their state in durable micro-batch
+  * stores. The same aggregation expressions serve batch and stream — the
+  * Spark way of keeping the two paths consistent.
+  *
+  * The store protocol. A store is a parquet directory partitioned by
+  * `batch_id`, one partition per micro-batch; an incremental operator is
+  * a per-batch step `(batch, batchId, storeDir, outDir)` that probes and
+  * extends its stores and publishes its report to `outDir`.
+  *  - A step writes a batch's rows only through [[writeBatch]], a
+  *    dynamic overwrite of that batch's partition. foreachBatch runs a
+  *    micro-batch at least once; a retry replaces its own partitions
+  *    instead of appending, so the files are exactly-once.
+  *  - A step reads a store only through [[readStore]], with the schema of
+  *    the frame it writes there: no read infers a schema, and a store
+  *    with no partition yet reads as an empty frame. A step that probes
+  *    the prior state filters out its own `batch_id`, so a retry after
+  *    its own write sees what the first attempt saw. Only the last,
+  *    uncommitted batch is ever retried.
+  *  - A stream starts only through [[startBatches]], which resumes from
+  *    the checkpoint when given one and drains the step's
+  *    [[graft.CacheTracker]] scope after each batch: the step runs on the
+  *    stream's thread, which no query drains.
+  *  - A query surface over a store runs its step through [[tempStore]]:
+  *    batches 0, 1 and 2 over a key of the input, then a retry of batch
+  *    2, in a temp directory it deletes once the bounded result is
+  *    localized, also when a batch fails.
+  * The merges (sum, max, union, first-seen) are idempotent per
+  * partition, so a retried batch leaves every store and report as its
+  * first attempt did. At 100 TB a store is a permanent table, not a temp
+  * directory, and the steps are unchanged.
   */
 object Events {
 
-  /** Store-existence probe for the incremental durable stores, resolved
-    * through the session's Hadoop FileSystem rather than java.io.File —
-    * File.exists() is always false for non-local URIs (hdfs://, s3a://),
-    * where a java.io gate would silently skip the standing store and,
-    * e.g., miss every cross-batch duplicate pair instead of failing
-    * loudly. Path.getFileSystem picks the scheme's FS (LocalFileSystem
-    * for bare paths, so local tests are unchanged). */
-  private[graft] def storeExists(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
+  /** Write `batch` as partition `batchId` of `outDir`, replacing only
+    * that partition. The overwrite mode is set per writer: a session-wide
+    * conf would switch every later overwrite in the session from
+    * full-directory to touched-partition semantics. */
+  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
+    batch.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(outDir)
+
+  /** Store `dir` read with the schema of `written`, the frame the step
+    * writes there, plus `batch_id`; an empty frame of that schema when
+    * there is no store yet. Existence goes through the session's Hadoop
+    * FileSystem: java.io.File sees no hdfs:// or s3a:// path, and would
+    * silently skip a standing store. */
+  private def readStore(dir: String, written: DataFrame): DataFrame = {
+    val spark = written.sparkSession
+    val schema = StructType(written.schema.fields.map(_.copy(nullable = true)) :+
+      StructField("batch_id", LongType))
     val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
-  /** [[storeExists]] AND the store already holds at least one batch_id=
-    * partition — a pre-created EMPTY dir has nothing to read and schema
-    * inference over it would throw. */
-  private[graft] def storeHasPartitions(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("batch_id="))
+  /** Write `partial` as this batch's partition of `storeDir` and read the
+    * whole store back. */
+  private def extendStore(partial: DataFrame, batchId: Long, storeDir: String): DataFrame = {
+    writeBatch(partial, batchId, storeDir)
+    readStore(storeDir, partial)
+  }
+
+  /** Publish `report` as this batch's partition of `outDir`; returns it. */
+  private def publish(report: DataFrame, batchId: Long, outDir: String): DataFrame = {
+    writeBatch(report, batchId, outDir)
+    report
+  }
+
+  /** Run `step` on every micro-batch of `df`, resuming from the committed
+    * offsets in `checkpointDir` when given. */
+  private def startBatches(df: DataFrame, checkpointDir: Option[String])(
+      step: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      try step(batch, batchId) finally CacheTracker.drainAll(batch.sparkSession)
+    }
+    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
   }
 
   case class UserActivity(userId: Long, nEvents: Long, sumValueCents: Long)
@@ -130,38 +184,15 @@ object Events {
       joinType)
   }
 
-  /** Idempotent micro-batch parquet sink (C33): foreachBatch tags every
-    * row with its batchId and dynamically overwrites ONLY that batch's
-    * partition. Structured Streaming re-runs a micro-batch after failure
-    * (at-least-once execution); because the retry rewrites the same
-    * batch_id partition instead of appending, the FILES are exactly-once
-    * — the standard idempotent-sink recipe for stores without
-    * transactional streaming writers. */
+  /** Idempotent micro-batch parquet sink (C33): each micro-batch lands as
+    * its own batch_id partition through [[writeBatch]] — the standard
+    * idempotent-sink recipe for stores without transactional streaming
+    * writers. With a checkpoint, a restarted query resumes from the
+    * committed offsets, which closes the exactly-once loop across process
+    * restarts, not just task retries. */
   def idempotentParquetSink(df: DataFrame, outDir: String,
-                            checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      writeBatch(batch, batchId, outDir)
-    }
-    // with a checkpoint, a RESTARTED query resumes from committed offsets
-    // — together with the per-batch partition overwrite this closes the
-    // exactly-once loop across process restarts, not just task retries
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
-
-  /** The per-batch write — factored out so a test can replay a batch and
-    * assert the retry replaces rather than duplicates. */
-  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit = {
-    // per-WRITER dynamic overwrite (option takes precedence over the
-    // session conf): replaces only this batch_id partition on replay,
-    // without mutating the caller's session — a session-wide conf.set
-    // here would silently switch every later overwrite write in the
-    // session from full-directory to touched-partition semantics
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
-  }
+                            checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(df, checkpointDir)(writeBatch(_, _, outDir))
 
   /** Streaming incremental corpus dedup (C94): the unbounded-horizon twin
     * of operators.Dedup.incremental — every micro-batch anti-joins its
@@ -175,45 +206,37 @@ object Events {
     * batch, not the corpus-lifetime store, whenever the store side
     * outgrows broadcast.
     *
-    * Failure discipline (at-least-once foreachBatch): the corpus write
-    * is dynamic-partition-overwrite by batch_id (a replay REPLACES its
-    * own output), and the store append tolerates replayed hashes
-    * because duplicate store rows cannot change anti-join semantics.
-    * Either half replayed in any order converges to exactly-once
-    * corpus contents. */
+    * The seen-hash store is the one append store: it has no batch_id
+    * partitions, and it needs no self-exclusion, because the corpus
+    * partition is written before the hashes are appended and a replay
+    * that finds its own hashes writes no partition, so the dynamic
+    * overwrite keeps the first attempt's. Duplicate store rows cannot
+    * change anti-join semantics. */
   def incrementalCorpusDedup(docs: DataFrame, storeDir: String, outDir: String,
-                             checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      dedupCorpusBatch(batch, batchId, storeDir, outDir)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+                             checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(docs, checkpointDir)(dedupCorpusBatch(_, _, storeDir, outDir))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * convergence. Keeps the lowest doc_id among in-batch duplicates. */
   def dedupCorpusBatch(batch: DataFrame, batchId: Long,
-                       storeDir: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
+                       storeDir: String, outDir: String): Unit =
+    dedupCorpusStep(batch, batchId, storeDir, outDir)
+
+  private def dedupCorpusStep(batch: DataFrame, batchId: Long,
+                              storeDir: String, outDir: String): DataFrame = {
     val hashed = batch.withColumn("content_hash",
       md5(graft.operators.TextOps.cleanText(col("text"))))
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy("content_hash").orderBy("doc_id")
     val firsts = hashed.withColumn("_rn", row_number().over(wIn))
       .filter(col("_rn") === 1).drop("_rn")
-    val novel = CacheTracker.cache(
-      if (storeExists(spark, storeDir))
-        firsts.join(spark.read.parquet(storeDir).select("content_hash"),
-          Seq("content_hash"), "left_anti")
-      else firsts)
+    val novel = CacheTracker.cache(firsts.join(
+      readStore(storeDir, firsts.select("content_hash")).select("content_hash"),
+      Seq("content_hash"), "left_anti"))
     try {
-      // per-writer dynamic overwrite, same rationale as writeBatch: no
-      // session-conf mutation leaks to later writes on this session
-      novel.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(outDir)
+      writeBatch(novel, batchId, outDir)
       novel.select("content_hash").write.mode("append").parquet(storeDir)
+      novel
     } finally novel.unpersist()
   }
 
@@ -226,42 +249,30 @@ object Events {
     * batch_id-partitioned parquet; per batch the probe shuffles batch
     * shingles + the store read — never re-shingling the corpus.
     *
-    * Replay discipline (at-least-once foreachBatch), BOTH halves
-    * idempotent by dynamic partition overwrite on batch_id: a replayed
-    * batch REPLACES its own report partition and its own store
-    * partition. The probe additionally EXCLUDES the store's rows tagged
-    * with the current batch_id — without that, a replay after a
-    * successful store append would see its own first-attempt shingles
-    * as "standing corpus" and flag every batch document as fully
-    * duplicated, diverging from the first attempt's report. With the
-    * exclusion, retries of the current (last uncommitted) batch — the
-    * only replay the engine's commit protocol produces — converge to
-    * the same report and store contents regardless of where the prior
-    * attempt failed. */
+    * Without the probe's self-exclusion, a replay after a successful
+    * store write would see its own first-attempt shingles as standing
+    * corpus and flag every batch document as fully duplicated. */
   def incrementalSpanDedup(docs: DataFrame, storeDir: String, outDir: String,
                            checkpointDir: Option[String] = None, win: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      spanDedupBatch(batch, batchId, storeDir, outDir, win)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : StreamingQuery =
+    startBatches(docs, checkpointDir)(spanDedupBatch(_, _, storeDir, outDir, win))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * convergence. */
   def spanDedupBatch(batch: DataFrame, batchId: Long, storeDir: String,
-                     outDir: String, win: Int = 8): Unit = {
+                     outDir: String, win: Int = 8): Unit =
+    spanDedupStep(win)(batch, batchId, storeDir, outDir)
+
+  private def spanDedupStep(win: Int)(batch: DataFrame, batchId: Long,
+                                      storeDir: String, outDir: String): DataFrame = {
     import graft.operators.Dedup
-    val spark = batch.sparkSession
     val toked = Dedup.spanToked(batch)
     val sh = CacheTracker.cache(Dedup.spanShingles(toked, win))
     try {
-      val index =
-        if (storeExists(spark, storeDir))
-          spark.read.parquet(storeDir)
-            .filter(col("batch_id") =!= batchId) // self-exclusion on replay
-            .select("h")
-        else sh.select("h").limit(0)
+      val hs = sh.select("h").distinct()
+      val index = readStore(storeDir, hs)
+        .filter(col("batch_id") =!= batchId) // self-exclusion on replay
+        .select("h")
       val batchDup = sh.groupBy("h")
         .agg(count_distinct(col("doc_id")).as("nd"))
         .filter(col("nd") > 1)
@@ -284,14 +295,9 @@ object Events {
             round(coalesce(col("n_dup_tokens"), lit(0L)).cast("double") /
               col("n_tokens"), 6))
             .when(col("n_tokens").isNotNull, lit(0.0)).as("dup_token_frac"))
-      report.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(outDir)
-      sh.select("h").distinct().withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(storeDir)
+      writeBatch(report, batchId, outDir)
+      writeBatch(hs, batchId, storeDir)
+      report
     } finally sh.unpersist()
   }
 
@@ -303,27 +309,20 @@ object Events {
     * report. Integer moments merge associatively, so as long as
     * micro-batches respect per-user event-time order the merged report
     * is BIT-identical to the batch operator over the union — the
-    * exactly-incrementalizable aggregate, no approximation.
-    *
-    * Replay discipline (at-least-once foreachBatch): both the store
-    * partial and the report are dynamic-partition-overwritten by
-    * batch_id, and the bridge lookup excludes the current batch_id's
-    * own store rows — a retried batch recomputes the identical partial
-    * from the same prior state and REPLACES its own partitions. */
+    * exactly-incrementalizable aggregate, no approximation. The bridge
+    * lookup is the probe that excludes the batch's own store rows. */
   def incrementalBotScore(events: DataFrame, storeDir: String, outDir: String,
-                          checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      botScoreBatch(batch, batchId, storeDir, outDir)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+                          checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(events, checkpointDir)(botScoreBatch(_, _, storeDir, outDir))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * bit-exact convergence with the batch operator. */
   def botScoreBatch(batch: DataFrame, batchId: Long,
-                    storeDir: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
+                    storeDir: String, outDir: String): Unit =
+    botScoreStep(batch, batchId, storeDir, outDir)
+
+  private def botScoreStep(batch: DataFrame, batchId: Long,
+                           storeDir: String, outDir: String): DataFrame = {
     val order = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val gaps = batch
@@ -335,65 +334,45 @@ object Events {
         coalesce(sum(col("gap_s")), lit(0L)).as("s"),
         coalesce(sum(col("gap_s") * col("gap_s")), lit(0L)).as("ss"),
         min(col("us")).as("first_us"), max(col("us")).as("last_us"))
-    // existence check tolerates a pre-created EMPTY dir (no partitions
-    // yet → nothing to read, schema inference would throw)
-    val prior =
-      if (storeHasPartitions(spark, storeDir))
-        spark.read.parquet(storeDir)
-          .filter(col("batch_id") =!= batchId) // self-exclusion on replay
-      else null
-    val partial =
-      (if (prior == null) inBatch.withColumn("prev_last_us",
-        lit(null).cast("long"))
-       else inBatch.join(
-         prior.groupBy("user_id").agg(max(col("last_us")).as("prev_last_us")),
-         Seq("user_id"), "left"))
-        .withColumn("bridge_s",
-          expr("(first_us - prev_last_us) div 1000000"))
-        .select(col("user_id"),
-          (col("n_gaps") + when(col("bridge_s").isNotNull, 1L).otherwise(0L))
-            .as("n_gaps"),
-          (col("s") + coalesce(col("bridge_s"), lit(0L))).as("s"),
-          (col("ss") + coalesce(col("bridge_s") * col("bridge_s"), lit(0L)))
-            .as("ss"),
-          col("last_us"))
-    partial.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    val merged = spark.read.parquet(storeDir).groupBy("user_id")
+    // the store's (user_id, last_us) columns are inBatch's
+    val prior = readStore(storeDir, inBatch.select("user_id", "last_us"))
+      .filter(col("batch_id") =!= batchId) // self-exclusion on replay
+      .groupBy("user_id").agg(max(col("last_us")).as("prev_last_us"))
+    val partial = inBatch.join(prior, Seq("user_id"), "left")
+      .withColumn("bridge_s",
+        expr("(first_us - prev_last_us) div 1000000"))
+      .select(col("user_id"),
+        (col("n_gaps") + when(col("bridge_s").isNotNull, 1L).otherwise(0L))
+          .as("n_gaps"),
+        (col("s") + coalesce(col("bridge_s"), lit(0L))).as("s"),
+        (col("ss") + coalesce(col("bridge_s") * col("bridge_s"), lit(0L)))
+          .as("ss"),
+        col("last_us"))
+    val merged = extendStore(partial, batchId, storeDir).groupBy("user_id")
       .agg(sum(col("n_gaps")).as("n_gaps"), sum(col("s")).as("s"),
         sum(col("ss")).as("ss"))
       .filter(col("n_gaps") > 0)
-    graft.operators.Sessionize.botScoreFromMoments(merged)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
+    publish(graft.operators.Sessionize.botScoreFromMoments(merged), batchId, outDir)
   }
 
   /** Streaming incremental aggregate view (C121): the foreachBatch twin
     * of [[graft.operators.Relational.ivmAgg]] — each micro-batch writes
     * its per-(user, day) PARTIAL state (count/cent-sum/min/max) into a
     * batch_id-partitioned durable store, and the published view is the
-    * associative merge of all partials. A replayed batch overwrites only
-    * its own partition (dynamic overwrite), so the merged view is
-    * replay-idempotent by construction; no bridging state is needed
+    * associative merge of all partials. No bridging state is needed
     * because the aggregate algebra is associative. */
   def incrementalAggView(events: DataFrame, storeDir: String, outDir: String,
-                         checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      aggViewBatch(batch, batchId, storeDir, outDir)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+                         checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(events, checkpointDir)(aggViewBatch(_, _, storeDir, outDir))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * bit-exact equality with the batch recompute. */
   def aggViewBatch(batch: DataFrame, batchId: Long,
-                   storeDir: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
+                   storeDir: String, outDir: String): Unit =
+    aggViewStep(batch, batchId, storeDir, outDir)
+
+  private def aggViewStep(batch: DataFrame, batchId: Long,
+                          storeDir: String, outDir: String): DataFrame = {
     val partial = batch
       .select(col("user_id"),
         expr("unix_micros(ts) div 86400000000").as("day_idx"),
@@ -402,20 +381,12 @@ object Events {
       .groupBy("user_id", "day_idx")
       .agg(count(lit(1)).as("n_events"), sum(col("vc")).as("sum_cents"),
         min(col("us")).as("first_us"), max(col("us")).as("last_us"))
-    partial.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    spark.read.parquet(storeDir)
+    publish(extendStore(partial, batchId, storeDir)
       .groupBy("user_id", "day_idx")
       .agg(sum(col("n_events")).as("n_events"),
         sum(col("sum_cents")).as("sum_cents"),
         min(col("first_us")).as("first_us"),
-        max(col("last_us")).as("last_us"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
+        max(col("last_us")).as("last_us")), batchId, outDir)
   }
 
   case class SessionSummary(userId: Long, startUs: Long, endUs: Long, nEvents: Long)
@@ -541,20 +512,13 @@ object Events {
     * associative aggregate — into a batch_id-partitioned durable store
     * and publishes the cumulative per-rule report. The merged report is
     * BIT-identical to the batch [[graft.operators.Relational
-    * .eventDqReport]] over the union of batches, and a replayed batch
-    * dynamic-overwrites only its own partition, so the monitor is
-    * replay-idempotent by construction (the aggViewBatch discipline —
-    * no bridging state, the algebra is associative). This is how a
-    * 100 TB/day feed gets continuous quality gates without ever
+    * .eventDqReport]] over the union of batches (the aggViewBatch
+    * discipline — no bridging state, the algebra is associative). This
+    * is how a 100 TB/day feed gets continuous quality gates without ever
     * rescanning history. */
   def incrementalDqMonitor(events: DataFrame, storeDir: String, outDir: String,
-                           checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      dqMonitorBatch(batch, batchId, storeDir, outDir)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+                           checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(events, checkpointDir)(dqMonitorBatch(_, _, storeDir, outDir))
 
   /** Streaming incremental token-attrition monitor (C193): each
     * micro-batch computes its docs' curation-gate flags (the batch
@@ -568,22 +532,11 @@ object Events {
     * order (an ingest sequence number), the merged report is
     * BIT-identical to the batch [[graft.operators.TextOps
     * .tokenAttrition]] over the union — keep-first dup semantics
-    * incrementalize exactly.
-    *
-    * Replay discipline (at-least-once foreachBatch): hash-store and
-    * partials partitions are dynamic-overwritten by batch_id, and the
-    * dup probe excludes the current batch_id's own store rows — a
-    * retried batch recomputes the identical partial from the same prior
-    * state and REPLACES its own partitions; the report then re-merges
-    * to the same totals. */
+    * incrementalize exactly. The dup probe is the one that excludes the
+    * batch's own store rows. */
   def incrementalTokenAttrition(docs: DataFrame, storeDir: String, outDir: String,
-                                checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      tokenAttritionBatch(batch, batchId, storeDir, outDir)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+                                checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(docs, checkpointDir)(tokenAttritionBatch(_, _, storeDir, outDir))
 
   /** Streaming incremental Count-Min sketch (C201): the foreachBatch twin
     * of [[graft.operators.Sketches.countMinErr]]'s sketch build. Each
@@ -592,40 +545,28 @@ object Events {
     * path uses, so the two cannot drift) into a batch_id-partitioned
     * durable store; the published sketch is the plain per-(row, bucket)
     * SUM of all partials — Count-Min's defining mergeability, exercised
-    * for real. A replayed batch dynamic-overwrites only its own
-    * partition, so the merged sketch is replay-idempotent by
-    * construction, and because cell addition is associative+commutative
-    * the merged sketch is BIT-identical to the batch build over the
-    * union of all micro-batches — no ordering assumption at all. */
+    * for real. Because cell addition is associative+commutative the
+    * merged sketch is BIT-identical to the batch build over the union of
+    * all micro-batches — no ordering assumption at all. */
   def incrementalCms(docs: DataFrame, storeDir: String, outDir: String,
                      depth: Int = 4, width: Int = 256,
-                     checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      cmsBatch(batch, batchId, storeDir, outDir, depth, width)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+                     checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(docs, checkpointDir)(cmsBatch(_, _, storeDir, outDir, depth, width))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * bit-exact convergence with the batch sketch over the union. */
   def cmsBatch(batch: DataFrame, batchId: Long, storeDir: String,
-               outDir: String, depth: Int = 4, width: Int = 256): Unit = {
-    val spark = batch.sparkSession
+               outDir: String, depth: Int = 4, width: Int = 256): Unit =
+    cmsStep(depth, width)(batch, batchId, storeDir, outDir)
+
+  private def cmsStep(depth: Int, width: Int)(batch: DataFrame, batchId: Long,
+                                              storeDir: String, outDir: String): DataFrame = {
     val cnt = batch
       .select(explode(graft.operators.TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("true_cnt"))
-    graft.operators.Sketches.cmsCellsFromCounts(cnt, depth, width)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    spark.read.parquet(storeDir)
-      .groupBy("r", "bucket").agg(sum(col("cell")).as("cell"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
+    publish(extendStore(graft.operators.Sketches.cmsCellsFromCounts(cnt, depth, width),
+        batchId, storeDir)
+      .groupBy("r", "bucket").agg(sum(col("cell")).as("cell")), batchId, outDir)
   }
 
   /** Streaming incremental HyperLogLog (C202): the foreachBatch twin of
@@ -636,16 +577,10 @@ object Events {
     * the per-register MAX over all partials — HLL's defining
     * mergeability. Max is associative, commutative AND idempotent, so
     * the merged registers are bit-identical to the batch build over the
-    * union regardless of batch order or replays (dynamic overwrite keeps
-    * the store itself clean too). */
+    * union regardless of batch order or replays. */
   def incrementalHll(docs: DataFrame, storeDir: String, outDir: String,
-                     checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      hllBatch(batch, batchId, storeDir, outDir)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+                     checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(docs, checkpointDir)(hllBatch(_, _, storeDir, outDir))
 
   /** Streaming incremental Bloom filter (C209): the third merge algebra
     * of the sketch family — CMS merges by SUM, HLL by MAX, Bloom by set
@@ -658,96 +593,68 @@ object Events {
     * answers exactly as against the batch-built filter over the union. */
   def incrementalBloom(docs: DataFrame, storeDir: String, outDir: String,
                        kHashes: Int = 4, mBits: Int = 4096,
-                       checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      bloomBatch(batch, batchId, storeDir, outDir, kHashes, mBits)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+                       checkpointDir: Option[String] = None): StreamingQuery =
+    startBatches(docs, checkpointDir)(bloomBatch(_, _, storeDir, outDir, kHashes, mBits))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * bit-exact convergence with the batch-built bit set over the union. */
   def bloomBatch(batch: DataFrame, batchId: Long, storeDir: String,
-                 outDir: String, kHashes: Int = 4, mBits: Int = 4096): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.Sketches.bloomPositions(
-        batch.select(explode(graft.operators.TextOps.tokens(col("text"))).as("token"))
-          .distinct(), kHashes, mBits)
+                 outDir: String, kHashes: Int = 4, mBits: Int = 4096): Unit =
+    bloomStep(kHashes, mBits)(batch, batchId, storeDir, outDir)
+
+  private def bloomStep(kHashes: Int, mBits: Int)(batch: DataFrame, batchId: Long,
+                                                  storeDir: String, outDir: String): DataFrame = {
+    val tokens = batch
+      .select(explode(graft.operators.TextOps.tokens(col("text"))).as("token")).distinct()
+    val positions = graft.operators.Sketches.bloomPositions(tokens, kHashes, mBits)
       .select("pos").distinct()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    spark.read.parquet(storeDir)
-      .select("pos").distinct()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
+    publish(extendStore(positions, batchId, storeDir).select("pos").distinct(), batchId, outDir)
   }
 
   /** The per-batch step, factored out so tests replay batches and assert
     * bit-exact convergence with the batch sketch over the union. */
   def hllBatch(batch: DataFrame, batchId: Long,
-               storeDir: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.Sketches.hllRegisters(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    spark.read.parquet(storeDir)
-      .groupBy("reg").agg(max(col("mx")).as("mx"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
-  }
+               storeDir: String, outDir: String): Unit =
+    hllStep(batch, batchId, storeDir, outDir)
+
+  private def hllStep(batch: DataFrame, batchId: Long,
+                      storeDir: String, outDir: String): DataFrame =
+    publish(extendStore(graft.operators.Sketches.hllRegisters(batch), batchId, storeDir)
+      .groupBy("reg").agg(max(col("mx")).as("mx")), batchId, outDir)
 
   /** The per-batch step, factored out so tests replay batches and
     * assert bit-exact convergence with the batch operator. */
   def tokenAttritionBatch(batch: DataFrame, batchId: Long,
                           storeDir: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
     val hashesDir = s"$storeDir/hashes"
     val partialsDir = s"$storeDir/partials"
     val flags = CacheTracker.cache(graft.operators.TextOps.attritionFlags(batch))
     try {
-      val prior =
-        if (storeExists(spark, hashesDir))
-          spark.read.parquet(hashesDir)
-            .filter(col("batch_id") =!= batchId) // self-exclusion on replay
-            .select("ch").distinct()
-        else flags.select("ch").limit(0)
+      val hashes = flags.select("ch").distinct()
+      val prior = readStore(hashesDir, hashes)
+        .filter(col("batch_id") =!= batchId) // self-exclusion on replay
+        .select("ch").distinct()
       val wIn = org.apache.spark.sql.expressions.Window
         .partitionBy("ch").orderBy("doc_id")
       val withDup = flags
         .withColumn("_rn", row_number().over(wIn))
         .join(prior.withColumn("_seen", lit(true)), Seq("ch"), "left")
         .withColumn("f_dup", coalesce(col("_seen"), lit(false)) || col("_rn") > 1)
-      def lost(c: org.apache.spark.sql.Column) =
+      def lost(c: Column) =
         coalesce(sum(when(c, col("nt")).otherwise(0L)), lit(0L))
-      withDup.agg(
+      val partials = extendStore(withDup.agg(
           coalesce(sum(col("nt")), lit(0L)).as("total_tokens"),
           lost(col("f_short")).as("short_t"),
           lost(col("f_quality")).as("quality_t"),
           lost(col("f_rep")).as("rep_t"),
           lost(col("f_dup")).as("dup_t"),
           lost(!col("f_short") && !col("f_quality") && !col("f_rep") && !col("f_dup"))
-            .as("pass_t"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(partialsDir)
-      flags.select("ch").distinct().withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(hashesDir)
+            .as("pass_t")), batchId, partialsDir)
+      writeBatch(hashes, batchId, hashesDir)
       // cumulative report from ALL partials: exact sums merge, the
       // shared projection rounds once — latest-wins plain overwrite
       graft.operators.TextOps.attritionProject(
-          spark.read.parquet(partialsDir)
+          partials
             .agg(sum(col("total_tokens")).as("total_tokens"),
               sum(col("short_t")).as("short_t"),
               sum(col("quality_t")).as("quality_t"),
@@ -761,13 +668,11 @@ object Events {
   /** The per-batch step, factored out so tests replay batches and
     * assert bit-exact convergence with the batch report. */
   def dqMonitorBatch(batch: DataFrame, batchId: Long,
-                     storeDir: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.Relational.eventDqPartials(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
+                     storeDir: String, outDir: String): Unit =
+    dqMonitorStep(batch, batchId, storeDir, outDir)
+
+  private def dqMonitorStep(batch: DataFrame, batchId: Long,
+                            storeDir: String, outDir: String): DataFrame = {
     // The cumulative report is LATEST-WINS by construction, so it writes
     // as a plain unpartitioned overwrite. Keying it by batch_id was a
     // semantics bug: replaying old batch N after later batches have run
@@ -777,7 +682,8 @@ object Events {
     // carrying newer totals. The merged totals themselves are replay-
     // idempotent either way (the store is the state; this is just its
     // projection).
-    spark.read.parquet(storeDir)
+    val report = extendStore(graft.operators.Relational.eventDqPartials(batch),
+        batchId, storeDir)
       .groupBy("rule")
       .agg(sum(col("n_checked")).as("n_checked"),
         sum(col("n_violations")).as("n_violations"))
@@ -785,7 +691,8 @@ object Events {
         round(when(col("n_checked") > 0,
           col("n_violations").cast("double") / col("n_checked"))
           .otherwise(lit(0.0)), 6).as("violation_rate"))
-      .write.mode("overwrite").parquet(outDir)
+    report.write.mode("overwrite").parquet(outDir)
+    report
   }
 
   /** Streaming incremental near-dup components (C195): the one dedup
@@ -815,23 +722,17 @@ object Events {
     * resolved snapshot per batch is one small components() pass plus a
     * label-store map join.
     *
-    * Replay discipline (at-least-once foreachBatch): all three stores
-    * dynamic-partition-overwrite their own batch_id partition, and every
-    * store read EXCLUDES the current batch_id's rows — a retried batch
-    * neither pairs against its own first-attempt index rows nor chases
-    * its own first-attempt merges, so it reproduces identical store
-    * partitions regardless of where the prior attempt failed. The
-    * published snapshot is latest-wins plain overwrite (the dqMonitor
-    * precedent): the stores are the state, the snapshot its projection. */
+    * Every prior-state read excludes the batch's own rows, so a retried
+    * batch neither pairs against its own first-attempt index rows nor
+    * chases its own first-attempt merges. The published snapshot is
+    * latest-wins plain overwrite (the dqMonitor precedent): the stores
+    * are the state, the snapshot its projection. */
   def incrementalComponents(vecs: DataFrame, storeDir: String, outDir: String,
                             checkpointDir: Option[String] = None,
                             cosMin: Double = 0.3, bits: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      componentsBatch(batch, batchId, storeDir, outDir, cosMin, bits)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : StreamingQuery =
+    startBatches(vecs, checkpointDir)(
+      componentsBatch(_, _, storeDir, outDir, cosMin, bits))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * convergence against the batch operator over the union. */
@@ -839,64 +740,46 @@ object Events {
                       outDir: String, cosMin: Double = 0.3,
                       bits: Int = 8): Unit = {
     import graft.operators.{Dedup, Similarity}
-    val spark = batch.sparkSession
     val (idxDir, labDir, mrgDir) =
       (s"$storeDir/index", s"$storeDir/labels", s"$storeDir/merges")
-    val idxSchema = "bucket STRING, vec_id BIGINT, embedding ARRAY<FLOAT>, batch_id BIGINT"
-    val labSchema = "vec_id BIGINT, label BIGINT, batch_id BIGINT"
-    val mrgSchema = "old_label BIGINT, new_label BIGINT, batch_id BIGINT"
-    // schema-explicit reads: a batch with nothing to record still
-    // overwrites its (then file-less) partition, and schema INFERENCE
-    // over a store directory holding only _SUCCESS would fail — with
-    // the declared schema an empty store reads as an empty frame
-    def readStore(dir: String, schema: String): Option[DataFrame] =
-      if (storeExists(spark, dir))
-        Some(spark.read.schema(schema).parquet(dir)
-          .filter(col("batch_id") =!= batchId))
-      else None
-    def writePartition(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
+    // a stored label resolves to the min label reachable through the
+    // merge graph — merge-event-sized, so this components() pass is tiny
+    def resolve(labels: DataFrame, merges: DataFrame): DataFrame = {
+      val remap = Dedup.components(merges, "old_label", "new_label")
+        .select(col("id").as("label"), col("component").as("rlabel"))
+      labels.join(remap, Seq("label"), "left")
+        .select(col("vec_id"), coalesce(col("rlabel"), col("label")).as("label"))
+    }
 
     val bb = CacheTracker.cache(batch.select(col("vec_id"), col("embedding"),
       Similarity.signBucket(col("embedding"), bits).as("bucket")))
     try {
+      val index = bb.select("bucket", "vec_id", "embedding")
       // candidate pairs: batch-internal (a < b dedups the self-join) +
       // batch × standing index (ids are disjoint across batches, and one
       // bucket per vector means no pair arrives twice)
-      val internal = bb.select(col("bucket"), col("vec_id").as("a_id"),
-          col("embedding").as("a_emb"))
-        .join(bb.select(col("bucket"), col("vec_id").as("b_id"),
-          col("embedding").as("b_emb")), Seq("bucket"))
-        .filter(col("a_id") < col("b_id"))
-      val cross = readStore(idxDir, idxSchema).map { idx =>
-        bb.select(col("bucket"), col("vec_id").as("a_id"),
-            col("embedding").as("a_emb"))
-          .join(idx.select(col("bucket"), col("vec_id").as("b_id"),
+      def pairsWith(other: DataFrame) =
+        bb.select(col("bucket"), col("vec_id").as("a_id"), col("embedding").as("a_emb"))
+          .join(other.select(col("bucket"), col("vec_id").as("b_id"),
             col("embedding").as("b_emb")), Seq("bucket"))
-      }
-      val pairs = CacheTracker.cache(cross.fold(internal)(internal.unionByName(_))
+      val pairs = CacheTracker.cache(pairsWith(bb).filter(col("a_id") < col("b_id"))
+        .unionByName(pairsWith(readStore(idxDir, index)
+          .filter(col("batch_id") =!= batchId))) // self-exclusion on replay
         .select(col("a_id"), col("b_id"),
           round(Similarity.cosine(col("a_emb"), col("b_emb")), 6).as("cos"))
         .filter(col("cos") >= cosMin)
         .select("a_id", "b_id"))
       try {
-        val labels = readStore(labDir, labSchema).map(_.select("vec_id", "label"))
-        val merges = readStore(mrgDir, mrgSchema).map(_.select("old_label", "new_label"))
-        // resolve stored labels through the accumulated merge graph —
-        // merge-event-sized, so this components() pass is tiny
-        val resolved = (labels, merges) match {
-          case (Some(l), Some(m)) =>
-            val remap = Dedup.components(m, "old_label", "new_label")
-              .select(col("id").as("label"), col("component").as("rlabel"))
-            l.join(remap, Seq("label"), "left")
-              .select(col("vec_id"), coalesce(col("rlabel"), col("label")).as("label"))
-          case (Some(l), None) => l
-          case _ => spark.emptyDataFrame
-              .select(lit(0L).as("vec_id"), lit(0L).as("label")).limit(0)
-        }
+        // every label is a vec_id: the label and merge stores hold vec_id-typed columns
+        val ids = bb.select(col("vec_id"))
+        val resolved = resolve(
+          readStore(labDir, ids.select(col("vec_id"), col("vec_id").as("label")))
+            .filter(col("batch_id") =!= batchId) // self-exclusion on replay
+            .select("vec_id", "label"),
+          readStore(mrgDir,
+              ids.select(col("vec_id").as("old_label"), col("vec_id").as("new_label")))
+            .filter(col("batch_id") =!= batchId)
+            .select("old_label", "new_label"))
         // map pair endpoints to their current resolved labels (an
         // unlabeled endpoint — a batch vector, or an old singleton
         // pairing for the first time — is its own label)
@@ -928,20 +811,12 @@ object Events {
             .join(comp, Seq("label"))
             .filter(col("component") < col("label"))
             .select(col("label").as("old_label"), col("component").as("new_label"))
-          writePartition(bb.select("bucket", "vec_id", "embedding"), idxDir)
-          writePartition(newLabelRows, labDir)
-          writePartition(mergeRows, mrgDir)
+          writeBatch(index, batchId, idxDir)
           // publish the resolved snapshot (latest-wins overwrite): every
           // labeled vector at its min reachable label through ALL merges
-          val allLabels = spark.read.schema(labSchema).parquet(labDir)
-            .select("vec_id", "label")
-          val allMergesDf = spark.read.schema(mrgSchema).parquet(mrgDir)
-            .select("old_label", "new_label")
-          val finalRemap = Dedup.components(allMergesDf, "old_label", "new_label")
-            .select(col("id").as("label"), col("component").as("rlabel"))
-          allLabels.join(finalRemap, Seq("label"), "left")
-            .select(col("vec_id").as("id"),
-              coalesce(col("rlabel"), col("label")).as("component"))
+          resolve(extendStore(newLabelRows, batchId, labDir).select("vec_id", "label"),
+              extendStore(mergeRows, batchId, mrgDir).select("old_label", "new_label"))
+            .select(col("vec_id").as("id"), col("label").as("component"))
             .write.mode("overwrite").parquet(outDir)
         } finally lbl.unpersist()
       } finally pairs.unpersist()
@@ -970,23 +845,17 @@ object Events {
     *     batch; the published snapshot at `outDir` is the union of all
     *     pair partitions.
     *
-    * Replay discipline (at-least-once foreachBatch): every store read
-    * EXCLUDES the current batch_id's rows and every write
-    * dynamic-partition-overwrites its own partition, so a retried batch
-    * reproduces identical store partitions (the C94/C195 pattern).
-    * Scale: per batch the work is batch-tokenize + one (band, bh)
+    * Every prior-state read excludes the batch's own rows (the C195
+    * pattern). Scale: per batch the work is batch-tokenize + one (band, bh)
     * probe join against the index + per-candidate narrow verification —
     * the corpus is never re-paired. */
   def incrementalMinhashPairs(docs: DataFrame, storeDir: String, outDir: String,
                               checkpointDir: Option[String] = None,
                               numHashes: Int = 16, bandSize: Int = 8,
                               jacMin: Double = 0.9)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      minhashPairsBatch(batch, batchId, storeDir, outDir, numHashes, bandSize, jacMin)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : StreamingQuery =
+    startBatches(docs, checkpointDir)(
+      minhashPairsBatch(_, _, storeDir, outDir, numHashes, bandSize, jacMin))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * convergence against Dedup.minhashLshPairs over the union. */
@@ -994,23 +863,8 @@ object Events {
                         outDir: String, numHashes: Int = 16, bandSize: Int = 8,
                         jacMin: Double = 0.9): Unit = {
     import graft.operators.Dedup
-    val spark = batch.sparkSession
     val (bandsDir, arrsDir, pairsDir) =
       (s"$storeDir/bands", s"$storeDir/arrs", s"$storeDir/pairs")
-    val bandSchema = "band BIGINT, bh STRING, doc_id BIGINT, batch_id BIGINT"
-    val arrSchema = "doc_id BIGINT, arr ARRAY<STRING>, batch_id BIGINT"
-    val pairSchema = "a_id BIGINT, b_id BIGINT, jac DOUBLE, batch_id BIGINT"
-    def readStore(dir: String, schema: String): Option[DataFrame] =
-      if (storeExists(spark, dir))
-        Some(spark.read.schema(schema).parquet(dir)
-          .filter(col("batch_id") =!= batchId))
-      else None
-    def writePartition(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-
     val (bands0, arrs0) = Dedup.lshDocRows(batch, numHashes, bandSize)
     val bands = CacheTracker.cache(bands0)
     val arrs = CacheTracker.cache(arrs0)
@@ -1023,19 +877,19 @@ object Events {
           Seq("band", "bh"))
         .filter(col("a_id") < col("b_id"))
         .select("a_id", "b_id")
-      val cross = readStore(bandsDir, bandSchema).map { idx =>
-        bands.select(col("band"), col("bh"), col("doc_id").as("n_id"))
-          .join(idx.select(col("band"), col("bh"), col("doc_id").as("o_id")),
-            Seq("band", "bh"))
-          .select(least(col("n_id"), col("o_id")).as("a_id"),
-            greatest(col("n_id"), col("o_id")).as("b_id"))
-      }
-      val cand = cross.fold(internal)(internal.unionByName(_)).distinct()
+      val cross = bands.select(col("band"), col("bh"), col("doc_id").as("n_id"))
+        .join(readStore(bandsDir, bands)
+          .filter(col("batch_id") =!= batchId) // self-exclusion on replay
+          .select(col("band"), col("bh"), col("doc_id").as("o_id")),
+          Seq("band", "bh"))
+        .select(least(col("n_id"), col("o_id")).as("a_id"),
+          greatest(col("n_id"), col("o_id")).as("b_id"))
+      val cand = internal.unionByName(cross).distinct()
       // arr lookup over batch + stored docs (doc ids are unique, so the
       // union is a plain dictionary for both pair endpoints)
-      val allArrs = readStore(arrsDir, arrSchema)
-        .map(_.select("doc_id", "arr").unionByName(arrs))
-        .getOrElse(arrs)
+      val allArrs = readStore(arrsDir, arrs)
+        .filter(col("batch_id") =!= batchId) // self-exclusion on replay
+        .select("doc_id", "arr").unionByName(arrs)
       val pairs = cand
         .join(allArrs.select(col("doc_id").as("a_id"), col("arr").as("a_arr")), "a_id")
         .join(allArrs.select(col("doc_id").as("b_id"), col("arr").as("b_arr")), "b_id")
@@ -1043,11 +897,10 @@ object Events {
           round(graft.functions.GraftFunctions.jaccard(col("a_arr"), col("b_arr")), 6)
             .as("jac"))
         .filter(col("jac") >= jacMin)
-      writePartition(bands, bandsDir)
-      writePartition(arrs, arrsDir)
-      writePartition(pairs, pairsDir)
+      writeBatch(bands, batchId, bandsDir)
+      writeBatch(arrs, batchId, arrsDir)
       // publish the cumulative verified pair set (latest-wins overwrite)
-      spark.read.schema(pairSchema).parquet(pairsDir)
+      extendStore(pairs, batchId, pairsDir)
         .select("a_id", "b_id", "jac")
         .write.mode("overwrite").parquet(outDir)
     } finally { bands.unpersist(); arrs.unpersist() }
@@ -1064,18 +917,14 @@ object Events {
     * incremental); candidates are batch-internal band-bucket pairs plus
     * batch × the standing band index, verified against the union of
     * stored and batch signature arrays by the shared wminhashVerify.
-    * Replay discipline as the unweighted twin: every store half is
-    * dynamic-partition-overwritten by batch_id and reads exclude the
-    * current batch_id, so retries converge. */
+    * Its probes exclude the batch's own rows, as the unweighted twin's
+    * do. */
   def incrementalWminhashPairs(docs: DataFrame, storeDir: String, outDir: String,
                                checkpointDir: Option[String] = None,
                                numHashes: Int = 16, simMin: Double = 0.9)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      wminhashPairsBatch(batch, batchId, storeDir, outDir, numHashes, simMin)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : StreamingQuery =
+    startBatches(docs, checkpointDir)(
+      wminhashPairsBatch(_, _, storeDir, outDir, numHashes, simMin))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * convergence against Dedup.weightedMinhashPairs over the union. */
@@ -1083,23 +932,8 @@ object Events {
                          outDir: String, numHashes: Int = 16,
                          simMin: Double = 0.9): Unit = {
     import graft.operators.Dedup
-    val spark = batch.sparkSession
     val (bandsDir, sigsDir, pairsDir) =
       (s"$storeDir/bands", s"$storeDir/sigs", s"$storeDir/pairs")
-    val bandSchema = "doc_id BIGINT, band INT, bh STRING, batch_id BIGINT"
-    val sigSchema = "doc_id BIGINT, sig ARRAY<STRING>, batch_id BIGINT"
-    val pairSchema = "a_id BIGINT, b_id BIGINT, n_match BIGINT, est_wjac DOUBLE, batch_id BIGINT"
-    def readStore(dir: String, schema: String): Option[DataFrame] =
-      if (storeExists(spark, dir))
-        Some(spark.read.schema(schema).parquet(dir)
-          .filter(col("batch_id") =!= batchId))
-      else None
-    def writePartition(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-
     val sig = CacheTracker.cache(Dedup.wminhashSigArr(batch, numHashes))
     val bands = CacheTracker.cache(Dedup.wminhashBanded(sig, numHashes))
     try {
@@ -1108,23 +942,22 @@ object Events {
           Seq("band", "bh"))
         .filter(col("a_id") < col("b_id"))
         .select("a_id", "b_id")
-      val cross = readStore(bandsDir, bandSchema).map { idx =>
-        bands.select(col("band"), col("bh"), col("doc_id").as("n_id"))
-          .join(idx.select(col("band"), col("bh"), col("doc_id").as("o_id")),
-            Seq("band", "bh"))
-          .select(least(col("n_id"), col("o_id")).as("a_id"),
-            greatest(col("n_id"), col("o_id")).as("b_id"))
-      }
-      val cand = cross.fold(internal)(internal.unionByName(_)).distinct()
-      val allSigs = readStore(sigsDir, sigSchema)
-        .map(_.select("doc_id", "sig").unionByName(sig))
-        .getOrElse(sig)
+      val cross = bands.select(col("band"), col("bh"), col("doc_id").as("n_id"))
+        .join(readStore(bandsDir, bands)
+          .filter(col("batch_id") =!= batchId) // self-exclusion on replay
+          .select(col("band"), col("bh"), col("doc_id").as("o_id")),
+          Seq("band", "bh"))
+        .select(least(col("n_id"), col("o_id")).as("a_id"),
+          greatest(col("n_id"), col("o_id")).as("b_id"))
+      val cand = internal.unionByName(cross).distinct()
+      val allSigs = readStore(sigsDir, sig)
+        .filter(col("batch_id") =!= batchId) // self-exclusion on replay
+        .select("doc_id", "sig").unionByName(sig)
       val pairs = Dedup.wminhashVerify(cand, allSigs, numHashes, simMin)
-      writePartition(bands, bandsDir)
-      writePartition(sig, sigsDir)
-      writePartition(pairs, pairsDir)
+      writeBatch(bands, batchId, bandsDir)
+      writeBatch(sig, batchId, sigsDir)
       // publish the cumulative verified pair set (latest-wins overwrite)
-      spark.read.schema(pairSchema).parquet(pairsDir)
+      extendStore(pairs, batchId, pairsDir)
         .select("a_id", "b_id", "n_match", "est_wjac")
         .write.mode("overwrite").parquet(outDir)
     } finally { sig.unpersist(); bands.unpersist() }
@@ -1145,82 +978,70 @@ object Events {
   def incrementalHllWindow(events: DataFrame, storeDir: String, outDir: String,
                            window: Int = 7,
                            checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      hllWindowBatch(batch, batchId, storeDir, outDir, window)
-    }
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : StreamingQuery =
+    startBatches(events, checkpointDir)(hllWindowBatch(_, _, storeDir, outDir, window))
 
   /** The per-batch step, factored out so tests replay batches and assert
     * bit-exact convergence with the batch estimate over the union. */
   def hllWindowBatch(batch: DataFrame, batchId: Long, storeDir: String,
                      outDir: String, window: Int = 7): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.Sketches.dailyUserRegisters(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    val merged = spark.read.parquet(storeDir)
+    val merged = extendStore(graft.operators.Sketches.dailyUserRegisters(batch),
+        batchId, storeDir)
       .groupBy("day", "reg").agg(max(col("mx")).as("mx"))
       .transform(CacheTracker.pin) // two consumers: the day gate + the estimate
     val days = merged.select("day").distinct()
-    graft.operators.Sketches.windowEstimate(merged, days, window)
+    writeBatch(graft.operators.Sketches.windowEstimate(merged, days, window)
       .select(col("win_day"), col("n_used").as("n_registers_used"),
-        round(col("estimate"), 6).as("estimate"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
+        round(col("estimate"), 6).as("estimate")), batchId, outDir)
   }
 
-  // ---- SQL-surface readbacks of the incremental sketch stores --------
+  // ---- Store reads: the durable stores as oracled query surfaces -----
   //
-  // C213-C215: the merged CMS/HLL/Bloom durable stores as queryable
-  // tables. Each builds its store with the SAME per-batch step the
-  // streaming query runs (three doc_id-keyed micro-batches, plus an
-  // out-of-order REPLAY of batch 0 so the dynamic-overwrite idempotence
-  // is exercised on the query surface, not just in StreamingSpec),
-  // registers the merged sketch as a temp view, and returns the view's
-  // readback. Because each sketch's merge algebra (SUM / MAX / set
-  // UNION) is associative+commutative — and idempotent where it must
-  // be — the merged table is BIT-identical to the batch build over the
-  // whole corpus, which is exactly what the DuckDB oracle computes from
-  // scratch: the oracle check IS the mergeability proof.
+  // C213-C215 (the merged CMS/HLL/Bloom sketches) and C264-C268 (the
+  // seen-hash, aggregate-view, DQ, shingle and moment stores) read a
+  // store back as a batch frame. Each drives the SAME per-batch step the
+  // streaming sink runs, so the query surface and the stream cannot
+  // drift, and the retry of the last batch runs on the oracled surface
+  // itself, not just in StreamingSpec. The DuckDB oracle recomputes each
+  // result from scratch, so the hash check IS the merge proof: store
+  // merge ≡ batch recompute, bit for bit.
 
-  private def buildStore(docs: DataFrame,
-                         prefix: String,
-                         step: (DataFrame, Long, String, String) => Unit)
-      : (String, String, String) = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
-    val (store, out) = (s"$tmp/store", s"$tmp/out")
-    Seq(0L, 1L, 2L, 0L).foreach { b =>
-      step(docs.filter(col("doc_id") % 3 === b), b, store, out)
+  /** A per-batch step `(batch, batchId, storeDir, outDir)` that returns
+    * the frame it published to `outDir` (without `batch_id`). */
+  private type Step = (DataFrame, Long, String, String) => DataFrame
+
+  private val LastBatch = 2L
+
+  /** The temp-store driver: runs `step` on batches 0, 1 and 2 of `input`
+    * (the rows whose `key` is the batch id), then retries batch 2, in a
+    * fresh temp store. `result` picks the bounded answer from the
+    * published reports, read with the schema of the frame the last step
+    * published. */
+  private def tempStore(prefix: String, input: DataFrame, key: Column)(step: Step)(
+      result: DataFrame => DataFrame): DataFrame =
+    inTempDir(prefix) { dir =>
+      val (store, out) = (s"$dir/store", s"$dir/out")
+      val published = ((0L to LastBatch) :+ LastBatch)
+        .map(b => step(input.filter(key === b), b, store, out)).last
+      result(readStore(out, published))
     }
-    (tmp, store, out)
-  }
 
-  /** Materialize a BOUNDED store projection to a driver-local relation,
-    * then recursively delete `baseDir`. Every store-backed query surface
-    * in this file spills a temp store/checkpoint under java.io.tmpdir;
-    * returning a lazy reader over it means the dir can never be deleted
-    * (the r17 ADVICE leak: each bench warmup + timed + solo re-time left
-    * a full parquet copy behind, accumulating over multi-hundred-query
-    * passes and growing with SF). The frames localized here are all
-    * DIMENSION-bounded, never corpus/stream-bounded — sketch cells
-    * (depth×width / registers / mBits), per-rule DQ counts, per-type agg
-    * state, the (user × day) view, the distinct-hash corpus keeps — so
-    * the collect is a bounded license, documented per call site. At
-    * 100 TB the store is a permanent table, not a temp dir, and this
-    * seam disappears; eager cleanup is the single-JVM-harness hygiene. */
-  private def localizeAndDelete(df: DataFrame, baseDir: String): DataFrame = {
-    val spark = df.sparkSession
-    val rows = df.collect()
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-    deleteRecursively(baseDir)
-    local
+  /** The BOUNDED frame `run` builds over a fresh directory under
+    * java.io.tmpdir, materialized to a driver-local relation; the
+    * directory is deleted afterwards, also when `run` or the collect
+    * fails. A lazy reader over the directory could never delete it: each
+    * bench warmup, timed call and re-time would leave a parquet copy
+    * behind. Every frame localized here is DIMENSION-bounded, never
+    * stream-bounded — sketch cells (depth×width, registers, mBits),
+    * per-rule DQ counts, per-type agg state, the (user × day) view, the
+    * distinct-hash keeps — so the collect is a bounded license, noted per
+    * call site. */
+  private def inTempDir(prefix: String)(run: String => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try {
+      val df = run(dir)
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    } finally deleteRecursively(dir)
   }
 
   private def deleteRecursively(dir: String): Unit = {
@@ -1234,48 +1055,34 @@ object Events {
   }
 
   /** Merged incremental Count-Min store as table `graft_sketch_cms`
-    * (C213): per-(row, bucket) SUM over the per-batch cell partials. */
+    * (C213): per-(row, bucket) SUM over the per-batch cell partials,
+    * depth×width-bounded. */
   def sketchCmsTable(docs: DataFrame, depth: Int = 4, width: Int = 256): DataFrame = {
-    val spark = docs.sparkSession
-    val (base, store, _) = buildStore(docs, "graft_sketch_cms_",
-      (b, id, s, o) => cmsBatch(b, id, s, o, depth, width))
-    // depth×width-bounded cells: localize, then drop the temp store
-    localizeAndDelete(
-      spark.read.parquet(store)
-        .groupBy("r", "bucket").agg(sum(col("cell")).as("cell"))
-        .select(col("r").cast("long").as("r"), col("bucket"), col("cell")),
-      base)
+    tempStore("graft_sketch_cms_", docs, col("doc_id") % 3)(cmsStep(depth, width))(
+      _.filter(col("batch_id") === LastBatch)
+        .select(col("r").cast("long").as("r"), col("bucket"), col("cell")))
       .createOrReplaceTempView("graft_sketch_cms")
-    spark.table("graft_sketch_cms")
+    docs.sparkSession.table("graft_sketch_cms")
   }
 
   /** Merged incremental HyperLogLog store as table `graft_sketch_hll`
-    * (C214): per-register MAX over the per-batch register partials. */
+    * (C214): per-register MAX over the per-batch register partials,
+    * register-count-bounded. */
   def sketchHllTable(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val (base, store, _) = buildStore(docs, "graft_sketch_hll_",
-      (b, id, s, o) => hllBatch(b, id, s, o))
-    // register-count-bounded: localize, then drop the temp store
-    localizeAndDelete(
-      spark.read.parquet(store)
-        .groupBy("reg").agg(max(col("mx")).as("mx")),
-      base)
+    tempStore("graft_sketch_hll_", docs, col("doc_id") % 3)(hllStep)(
+      _.filter(col("batch_id") === LastBatch).select("reg", "mx"))
       .createOrReplaceTempView("graft_sketch_hll")
-    spark.table("graft_sketch_hll")
+    docs.sparkSession.table("graft_sketch_hll")
   }
 
   /** Merged incremental Bloom store as table `graft_sketch_bloom`
-    * (C215): the distinct set-bit positions across all batch partials. */
+    * (C215): the distinct set-bit positions across all batch partials,
+    * at most mBits of them. */
   def sketchBloomTable(docs: DataFrame, kHashes: Int = 4, mBits: Int = 4096): DataFrame = {
-    val spark = docs.sparkSession
-    val (base, store, _) = buildStore(docs, "graft_sketch_bloom_",
-      (b, id, s, o) => bloomBatch(b, id, s, o, kHashes, mBits))
-    // ≤ mBits set positions: localize, then drop the temp store
-    localizeAndDelete(
-      spark.read.parquet(store).select("pos").distinct(),
-      base)
+    tempStore("graft_sketch_bloom_", docs, col("doc_id") % 3)(bloomStep(kHashes, mBits))(
+      _.filter(col("batch_id") === LastBatch).select("pos"))
       .createOrReplaceTempView("graft_sketch_bloom")
-    spark.table("graft_sketch_bloom")
+    docs.sparkSession.table("graft_sketch_bloom")
   }
 
   /** Committed streaming-aggregation state as a QUERY surface (C263):
@@ -1296,59 +1103,41 @@ object Events {
     * distributed parquet spill that feeds the file source. */
   def stateStoreRead(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    val base = java.nio.file.Files.createTempDirectory("graft_ss_query_").toString
-    val (src, ckpt) = (s"$base/src", s"$base/ckpt")
-    events.select(col("event_type"), col("value"))
-      .repartition(3)
-      .write.mode("overwrite").parquet(src)
-    val q = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-      .writeStream.format("noop")
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    // Bounded wait: a wedged micro-batch (checkpoint FS trouble) must
-    // surface as this query's -1 in the harness, not hang the whole
-    // bench/verify pass inside awaitTermination(). 10 min is ~100× the
-    // drain's observed cost at sf0.1.
-    if (!q.awaitTermination(600000L)) {
-      q.stop()
-      throw new IllegalStateException(
-        "stateStoreRead: AvailableNow drain did not terminate within 10 min")
-    }
-    // |event_types|-bounded state: localize, then drop src + checkpoint
-    localizeAndDelete(
+    inTempDir("graft_ss_query_") { dir =>
+      val (src, ckpt) = (s"$dir/src", s"$dir/ckpt")
+      events.select(col("event_type"), col("value"))
+        .repartition(3)
+        .write.mode("overwrite").parquet(src)
+      val q = spark.readStream
+        .schema(StructType(Seq(
+          StructField("event_type", org.apache.spark.sql.types.StringType),
+          StructField("value", org.apache.spark.sql.types.DoubleType))))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n_events"),
+          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
+        .writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      // Bounded wait: a wedged micro-batch (checkpoint FS trouble) must
+      // surface as this query's -1 in the harness, not hang the whole
+      // bench/verify pass inside awaitTermination(). 10 min is ~100× the
+      // drain's observed cost at sf0.1.
+      if (!q.awaitTermination(600000L)) {
+        q.stop()
+        throw new IllegalStateException(
+          "stateStoreRead: AvailableNow drain did not terminate within 10 min")
+      }
+      // |event_types|-bounded state
       spark.read.format("statestore").load(ckpt)
         .select(col("key.event_type").as("event_type"),
           col("value.count").cast("long").as("n_events"),
-          col("value.sum").cast("long").as("cents")),
-      base)
+          col("value.sum").cast("long").as("cents"))
+    }
   }
-
-  // ---- Durable incremental STORES as oracled query surfaces ----------
-  //
-  // C264-C266 (r18): the three remaining test-only foreachBatch stores
-  // (C94 seen-hash corpus dedup, C121 aggregate-view partials, C143 DQ
-  // rule partials) read back as batch frames and DuckDB-oracled against
-  // the from-scratch recompute — the statestore_read (C263) upgrade
-  // path applied to the foreachBatch family. Each surface drives the
-  // SAME factored per-batch step the streaming sink executes (so the
-  // query surface and the stream cannot drift), over three
-  // deterministic key-ranged micro-batches PLUS a replay of the final
-  // batch — the only replay the AvailableNow commit protocol produces —
-  // so dynamic-overwrite idempotence is exercised on the oracled
-  // surface itself, not just in StreamingSpec. The oracle hash check IS
-  // the merge proof: store-merge ≡ batch recompute, bit for bit.
 
   /** C94's seen-hash store as an oracled query (C264): the kept-corpus
     * decision set (doc_id, content_hash, batch_id) after three
@@ -1357,19 +1146,9 @@ object Events {
     * row_number() over (hash ORDER BY doc_id % 3, doc_id) = 1. Result
     * is distinct-hash-bounded (≤ |documents|), projected to the three
     * decision columns, never the text. */
-  def dedupStoreRead(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val base = java.nio.file.Files.createTempDirectory("graft_dedup_store_").toString
-    val (store, out) = (s"$base/store", s"$base/out")
-    Seq(0L, 1L, 2L, 2L).foreach { b =>
-      dedupCorpusBatch(docs.filter(col("doc_id") % 3 === b), b, store, out)
-    }
-    localizeAndDelete(
-      spark.read.parquet(out)
-        .select(col("doc_id"), col("content_hash"),
-          col("batch_id").cast("long").as("batch_id")),
-      base)
-  }
+  def dedupStoreRead(docs: DataFrame): DataFrame =
+    tempStore("graft_dedup_store_", docs, col("doc_id") % 3)(dedupCorpusStep)(
+      _.select("doc_id", "content_hash", "batch_id"))
 
   /** C121's durable aggregate-view store as an oracled query (C265):
     * the published per-(user, day) view after three event_id-keyed
@@ -1378,33 +1157,18 @@ object Events {
     * oracle hash check proves the associative partial MERGE, not just
     * batch disjointness. Result is (users × days)-bounded — the view's
     * own dimensionality, never the stream's. */
-  def ivmStoreRead(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val base = java.nio.file.Files.createTempDirectory("graft_ivm_store_").toString
-    val (store, out) = (s"$base/store", s"$base/out")
-    Seq(0L, 1L, 2L, 2L).foreach { b =>
-      aggViewBatch(events.filter(col("event_id") % 3 === b), b, store, out)
-    }
-    localizeAndDelete(
-      spark.read.parquet(out).filter(col("batch_id") === 2)
-        .select("user_id", "day_idx", "n_events", "sum_cents",
-          "first_us", "last_us"),
-      base)
-  }
+  def ivmStoreRead(events: DataFrame): DataFrame =
+    tempStore("graft_ivm_store_", events, col("event_id") % 3)(aggViewStep)(
+      _.filter(col("batch_id") === LastBatch)
+        .select("user_id", "day_idx", "n_events", "sum_cents", "first_us", "last_us"))
 
   /** C143's durable DQ-partials store as an oracled query (C266): the
     * cumulative per-rule report after three event_id-keyed
     * micro-batches + a final-batch replay, vs the from-scratch
     * eventDqReport recompute in DuckDB. Three rules, three rows. */
-  def dqStoreRead(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val base = java.nio.file.Files.createTempDirectory("graft_dq_store_").toString
-    val (store, out) = (s"$base/store", s"$base/out")
-    Seq(0L, 1L, 2L, 2L).foreach { b =>
-      dqMonitorBatch(events.filter(col("event_id") % 3 === b), b, store, out)
-    }
-    localizeAndDelete(spark.read.parquet(out), base)
-  }
+  def dqStoreRead(events: DataFrame): DataFrame =
+    tempStore("graft_dq_store_", events, col("event_id") % 3)(dqMonitorStep)(
+      _.drop("batch_id")) // the report is one plain overwrite, not partitioned
 
   /** C99's durable shingle store as an oracled query (C267): the per-doc
     * span-dup report after three doc_id-keyed micro-batches + a
@@ -1413,31 +1177,13 @@ object Events {
     * by a win-8 shingle already in the store — any doc of an EARLIER
     * batch, singletons included: the store keeps every distinct batch
     * shingle, which is exactly standing-corpus semantics — or shared by
-    * another doc of its OWN batch; the self-exclusion +
-    * dynamic-overwrite replay discipline is exercised on the oracled
-    * surface itself. Each doc is reported exactly once (by its own
-    * batch), so the union of report partitions is corpus-keyed — the
-    * same bounded-localize license as [[dedupStoreRead]]'s keep set. */
-  def spanStoreRead(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    if (docs.isEmpty)
-      // degenerate empty corpus: an all-empty store has no partitions to
-      // read back — answer with the probe shape's (empty) report instead
-      return graft.operators.Dedup
-        .spanDedupIncremental(docs.limit(0), docs.limit(0))
-        .withColumn("batch_id", lit(0L))
-    val base = java.nio.file.Files.createTempDirectory("graft_span_store_").toString
-    val (store, out) = (s"$base/store", s"$base/out")
-    Seq(0L, 1L, 2L, 2L).foreach { b =>
-      spanDedupBatch(docs.filter(col("doc_id") % 3 === b), b, store, out)
-    }
-    localizeAndDelete(
-      spark.read.parquet(out)
-        .select(col("doc_id"), col("n_tokens"), col("n_shingles"),
-          col("n_dup_tokens"), col("dup_token_frac"),
-          col("batch_id").cast("long").as("batch_id")),
-      base)
-  }
+    * another doc of its OWN batch. Each doc is reported exactly once (by
+    * its own batch), so the union of report partitions is corpus-keyed —
+    * the same bounded-localize license as [[dedupStoreRead]]'s keep set. */
+  def spanStoreRead(docs: DataFrame): DataFrame =
+    tempStore("graft_span_store_", docs, col("doc_id") % 3)(spanDedupStep(8))(
+      _.select("doc_id", "n_tokens", "n_shingles", "n_dup_tokens", "dup_token_frac",
+        "batch_id"))
 
   /** C107's durable moment store as an oracled query (C268): the
     * cumulative per-user bot-score report after three TIME-RANGE
@@ -1457,23 +1203,16 @@ object Events {
       .agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).head()
     if (bounds.isNullAt(0))
-      // degenerate empty stream: no gaps, empty report — skip the store
-      // path entirely (an all-empty store has no partitions to read)
+      // degenerate empty stream: no bounds to split on, and no gaps
       return graft.operators.Sessionize.botScoreFromMoments(
         spark.range(0).select(col("id").as("user_id"),
           col("id").as("n_gaps"), col("id").as("s"), col("id").as("ss")))
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val span = hi - lo + 1 // (us-lo)*3 div span ∈ [0, 2] with no clamp
-    val base = java.nio.file.Files.createTempDirectory("graft_bot_store_").toString
-    val (store, out) = (s"$base/store", s"$base/out")
-    val bucket = expr(s"((unix_micros(ts) - ${lo}L) * 3) div ${span}L")
-    Seq(0L, 1L, 2L, 2L).foreach { b =>
-      botScoreBatch(events.filter(bucket === b), b, store, out)
-    }
-    localizeAndDelete(
-      spark.read.parquet(out).filter(col("batch_id") === 2)
-        .select("user_id", "n_gaps", "mean_gap_s", "cv_gap", "is_regular"),
-      base)
+    tempStore("graft_bot_store_", events,
+        expr(s"((unix_micros(ts) - ${lo}L) * 3) div ${span}L"))(botScoreStep)(
+      _.filter(col("batch_id") === LastBatch)
+        .select("user_id", "n_gaps", "mean_gap_s", "cv_gap", "is_regular"))
   }
 }
 

@@ -165,4 +165,28 @@ class CacheTrackerSpec extends SparkSpec {
     assert(gotHits === Right(wantHits))
     assert(gotKm === Right(wantKm))
   }
+
+  test("a stream's foreachBatch steps leave no persisted RDD once each batch returns") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_drain").toString
+    val stream = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long, java.sql.Timestamp)]
+    CacheTracker.drainAll(spark)
+    val before = persistentIds
+    // hllWindowBatch pins its merged registers on the stream's thread
+    val q = streaming.Events.incrementalHllWindow(
+      stream.toDF().toDF("event_id", "user_id", "ts"), s"$dir/store", s"$dir/out")
+    try {
+      for (b <- 0L until 3L) {
+        stream.addData((0L until 20L).map { i =>
+          val id = b * 20L + i
+          (id, id % 7, new java.sql.Timestamp(1704067200000L + id * 3600000L))
+        }: _*)
+        q.processAllAvailable()
+        val leaked = persistentIds -- before
+        assert(leaked.isEmpty, s"batch $b left RDDs $leaked")
+      }
+    } finally q.stop()
+  }
 }

@@ -322,4 +322,33 @@ class EmptyInputSpec extends SparkSpec {
     assert(Similarity.adjustedRand(twoOneLabel).collect().length <= 1)
     graft.CacheTracker.drainAll(spark)
   }
+
+  test("the store reads return their usual schema on empty input") {
+    import graft.streaming.Events
+    def ts(sec: Long) = new Timestamp(1704067200000L + sec * 1000L)
+    val someDocs = Seq(
+      (1L, "one two three four five six seven eight nine", "en", "s1", 44L),
+      (2L, "alpha beta gamma delta epsilon zeta eta theta", "en", "s1", 46L),
+      (3L, "one two three four five six seven eight nine", "en", "s2", 44L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val someEvents = (0L until 6L).map(i => (i, i % 2, "view", ts(i * 600), 1.5 * i))
+      .toDF("event_id", "user_id", "event_type", "ts", "value")
+    val reads: Seq[(String, DataFrame => DataFrame, Boolean)] = Seq(
+      ("dedupStoreRead", Events.dedupStoreRead, true),
+      ("sketchCmsTable", Events.sketchCmsTable(_), true),
+      ("sketchHllTable", Events.sketchHllTable, true),
+      ("sketchBloomTable", Events.sketchBloomTable(_), true),
+      ("spanStoreRead", Events.spanStoreRead, true),
+      ("ivmStoreRead", Events.ivmStoreRead, false),
+      ("dqStoreRead", Events.dqStoreRead, false),
+      ("botScoreStoreRead", Events.botScoreStoreRead, false))
+    def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    for ((name, read, onDocs) <- reads) {
+      val usual = shape(read(if (onDocs) someDocs else someEvents))
+      val empty = read(if (onDocs) noDocs else noEvents)
+      assert(shape(empty) === usual, s"$name changes its schema on empty input")
+      empty.collect()
+    }
+    graft.CacheTracker.drainAll(spark)
+  }
 }

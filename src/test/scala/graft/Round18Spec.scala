@@ -157,4 +157,12 @@ class Round18Spec extends SparkSpec {
       .map(tmpEntries)
     assert(after == before, "a sketch table left its temp store behind")
   }
+
+  test("a store read whose batches fail still deletes its temp store") {
+    val noText = spark.range(6).toDF("doc_id")
+    val before = tmpEntries("graft_dedup_store_")
+    intercept[org.apache.spark.sql.AnalysisException](streaming.Events.dedupStoreRead(noText))
+    assert(tmpEntries("graft_dedup_store_") == before,
+      "a failed dedupStoreRead left its temp store behind")
+  }
 }

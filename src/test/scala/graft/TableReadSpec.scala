@@ -41,6 +41,15 @@ class TableReadSpec extends SparkSpec {
     assert(second === 0)
   }
 
+  test("building a SQL-surface query again on one session launches no job") {
+    assumeTestdata(sf)
+    val session = spark.newSession()
+    val first = jobsDuring(SparkEntry.queries("sql_tpch_q6")(session, sf))
+    val second = jobsDuring(SparkEntry.queries("sql_tpch_q6")(session, sf))
+    info(s"jobs while building sql_tpch_q6: first $first, second $second")
+    assert(second === 0)
+  }
+
   test("a rewritten file is read with its new schema") {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("graft_read").resolve("t.parquet").toString
