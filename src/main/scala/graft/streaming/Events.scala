@@ -673,15 +673,11 @@ object Events {
 
   private def dqMonitorStep(batch: DataFrame, batchId: Long,
                             storeDir: String, outDir: String): DataFrame = {
-    // The cumulative report is LATEST-WINS by construction, so it writes
-    // as a plain unpartitioned overwrite. Keying it by batch_id was a
-    // semantics bug: replaying old batch N after later batches have run
-    // rewrites "partition N" with a cumulative that already includes
-    // those later batches, so partitions stop meaning "state as of
-    // batch N" and a reader picking max(batch_id) can see a stale id
-    // carrying newer totals. The merged totals themselves are replay-
-    // idempotent either way (the store is the state; this is just its
-    // projection).
+    // The cumulative report is latest-wins, so it is one plain overwrite,
+    // not a batch_id partition: a retry of old batch N after later
+    // batches would rewrite partition N with totals that include them,
+    // and a reader picking max(batch_id) could see a stale id carrying
+    // newer totals.
     val report = extendStore(graft.operators.Relational.eventDqPartials(batch),
         batchId, storeDir)
       .groupBy("rule")
