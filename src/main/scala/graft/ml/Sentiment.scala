@@ -6,13 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ml.{Pipeline, Transformer}
 import org.apache.spark.ml.classification.{LinearSVC, NaiveBayes}
-import org.apache.spark.ml.feature.{HashingTF, IDF, RegexTokenizer}
-import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.attribute.AttributeGroup
+import org.apache.spark.ml.feature.IDF
+import org.apache.spark.ml.param.{IntParam, ParamMap, ParamValidators}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, Identifiable}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.TextOps
 
@@ -27,7 +29,14 @@ import graft.operators.TextOps
   *  - the split is `id % 4 < 3` — deterministic, partition-independent,
   *    and reproducible by the DuckDB oracle (randomSplit is neither
   *    partition-stable nor reproducible outside Spark);
-  *  - cleaning is the shared [[TextOps.cleanText]] chain;
+  *  - cleaning is the shared [[TextOps.cleanText]] chain, and tokenize +
+  *    HashingTF is one native pass over its output
+  *    ([[TextOps.termCounts]]), bit-identical to `RegexTokenizer("\\s+")`
+  *    + `HashingTF` on the cleaned text;
+  *  - the chain up to the term counts (ingest, clean, hash) runs once per
+  *    input: [[CleanHashingTF]] caches its output, IDF's fit fills the
+  *    cache and the fitted featurizer's transform of the same input reads
+  *    it;
   *  - metrics come from the confusion matrix, collected once: a few
   *    cells whose weighted sums are computed locally, with no further
   *    Spark job (NB.scala:94's `.rdd.map(...)` round-trip ships every
@@ -43,16 +52,13 @@ object Sentiment {
     docs.groupBy(splitCol("doc_id").as("split")).agg(count(lit(1)).as("n_rows"))
 
   /** Featurize: clean → tokenize → HashingTF → IDF(minDocFreq), the
-    * NB.scala:71-80 pipeline on a `label`/`text` frame. */
+    * NB.scala:71-80 pipeline on a `label`/`text` frame; the first three
+    * steps are one stage, [[CleanHashingTF]]. */
   def featurizer(numFeatures: Int = 1 << 16, minDocFreq: Int = 0): Pipeline = {
-    val clean = new TextCleaner()
-    val tok = new RegexTokenizer().setInputCol("clean").setOutputCol("words")
-      .setPattern("\\s+")
-    val tf = new HashingTF().setInputCol("words").setOutputCol("rawFeatures")
-      .setNumFeatures(numFeatures)
+    val tf = new CleanHashingTF().setNumFeatures(numFeatures)
     val idf = new IDF().setInputCol("rawFeatures").setOutputCol("features")
       .setMinDocFreq(minDocFreq)
-    new Pipeline().setStages(Array(clean, tok, tf, idf))
+    new Pipeline().setStages(Array(tf, idf))
   }
 
   /** Train NaiveBayes (NB.scala:86) on the train split, predict the test
@@ -80,7 +86,7 @@ object Sentiment {
     // test-side transform must not re-run the featurize chain per pass.
     // Every classifier fitted on the same frame within one query shares
     // one checkpoint.
-    val withSplit = rightSized(CacheTracker.cachedCheckpoint(feats.withColumn("split", splitCol("id"))))
+    val withSplit = rightSized(CacheTracker.cachedCheckpoint(fitInput(feats)))
     val train = withSplit.filter(col("split") === "train")
     val test = withSplit.filter(col("split") === "test")
     val fitted = clf.fit(train).asInstanceOf[org.apache.spark.ml.Model[_]]
@@ -104,6 +110,11 @@ object Sentiment {
     preds.count()
     preds
   }
+
+  /** The columns a fit reads, split-tagged: what [[fitPredictFeaturized]]
+    * pins. */
+  private[graft] def fitInput(feats: DataFrame): DataFrame =
+    feats.select(col("id"), col("label"), col("features"), splitCol("id").as("split"))
 
   /** A pinned frame narrowed, without a shuffle, to as many partitions as
     * its measured bytes fill at `spark.sql.adaptive.advisoryPartitionSizeInBytes`:
@@ -210,25 +221,43 @@ object Sentiment {
   }
 }
 
-/** The featurizer's clean stage: `text` → `clean` through
-  * [[TextOps.cleanText]]. A plain persistable Transformer rather than a
-  * SQLTransformer, so it needs no SQL-registered function and runs in
-  * any session, with or without graft's extensions. */
-class TextCleaner(override val uid: String) extends Transformer with DefaultParamsWritable {
+/** The featurizer's term-count stage: `text` → `rawFeatures`, ml
+  * `RegexTokenizer("\\s+")` + `HashingTF(numFeatures)` over the cleaned
+  * text in one native pass ([[TextOps.termCounts]]). Its output is cached
+  * through [[CacheTracker.cache]] (lazily, and only when that plan is not
+  * cached already): the plan holds no closure, so the same input gives
+  * the same plan, and a pipeline's fit and its fitted model's transform
+  * of one input run the chain once. A plain persistable Transformer, so
+  * it needs no SQL-registered function and runs in any session, with or
+  * without graft's extensions. */
+class CleanHashingTF(override val uid: String) extends Transformer with DefaultParamsWritable {
 
-  def this() = this(Identifiable.randomUID("textCleaner"))
+  def this() = this(Identifiable.randomUID("cleanHashingTF"))
+
+  final val numFeatures = new IntParam(this, "numFeatures",
+    "number of hash buckets (> 0)", ParamValidators.gt(0))
+  setDefault(numFeatures -> (1 << 18))
+
+  def setNumFeatures(n: Int): this.type = set(numFeatures, n)
+
+  def getNumFeatures: Int = $(numFeatures)
+
+  private def outputField = new AttributeGroup("rawFeatures", $(numFeatures)).toStructField()
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
-    dataset.withColumn("clean", TextOps.cleanText(col("text")))
+    val field = outputField
+    val out = dataset.withColumn(field.name,
+      TextOps.termCounts(col("text"), $(numFeatures)).as(field.name, field.metadata))
+    if (out.storageLevel == StorageLevel.NONE) CacheTracker.cache(out) else out
   }
 
   override def transformSchema(schema: StructType): StructType = {
-    require(schema.fieldNames.contains("text"), "TextCleaner needs a `text` column")
-    schema.add("clean", StringType)
+    require(schema.fieldNames.contains("text"), "CleanHashingTF needs a `text` column")
+    schema.add(outputField)
   }
 
-  override def copy(extra: ParamMap): TextCleaner = defaultCopy(extra)
+  override def copy(extra: ParamMap): CleanHashingTF = defaultCopy(extra)
 }
 
-object TextCleaner extends DefaultParamsReadable[TextCleaner]
+object CleanHashingTF extends DefaultParamsReadable[CleanHashingTF]

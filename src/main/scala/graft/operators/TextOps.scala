@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
 
-import graft.functions.CleanText
+import graft.functions.{CleanText, HashedTermCounts}
 
 /** Text cleaning + tokenization + per-document text analysis, as Column
   * expressions that whole-stage codegen compiles (no UDFs, no RDDs).
@@ -43,6 +43,13 @@ object TextOps {
     * (reference ml.Tokenizer, NB.scala:71). */
   def tokens(c: Column): Column =
     filter(split(cleanText(c), " "), t => t =!= "")
+
+  /** ml `RegexTokenizer("\\s+")` + `HashingTF(numFeatures)` over
+    * [[cleanText]] as one native pass ([[graft.functions.HashedTermCounts]]):
+    * the document's sparse term-count vector, or with `asStruct` the same
+    * value as a (type, size, indices, values) struct. */
+  def termCounts(c: Column, numFeatures: Int, asStruct: Boolean = false): Column =
+    ColumnShim.column(HashedTermCounts(CleanText(ColumnShim.expression(c)), numFeatures, asStruct))
 
   /** doc_id, clean — the cleaned corpus. */
   def cleanDocs(docs: DataFrame): DataFrame =

@@ -288,15 +288,18 @@ object TfIdf {
       .select("phrase", "n_words", "n_occurrences", "score")
   }
 
-  /** HashingTF-equivalent bucketed term frequency (A7b): murmur3-hashed
-    * token -> fixed-width bucket, like ml.HashingTF (NB.scala:74). The
-    * fixed width bounds state at any corpus size. Not DuckDB-expressible
-    * (murmur3 seed differs) — covered by ScalaTest instead. */
+  /** Bucketed term frequency (A7b): one row per document and non-empty
+    * bucket of ml.HashingTF(numFeatures) (NB.scala:74) over the
+    * document's [[TextOps.tokens]], with the bucket's token count. The
+    * buckets are HashingTF's own (`indexOf`: murmur3 `hashUnsafeBytes2`,
+    * seed 42), read off [[TextOps.termCounts]]' vector, so the query is
+    * narrow: no shuffle. The fixed width bounds state at any corpus size.
+    * Not DuckDB-expressible (DuckDB has no murmur3) — covered by
+    * ScalaTest instead. */
   def hashingTf(docs: DataFrame, numFeatures: Int = 1 << 18): DataFrame =
-    docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-      .select(col("doc_id"), pmod(hash(col("token")), lit(numFeatures)).as("bucket"))
-      .groupBy("doc_id", "bucket")
-      .agg(count(lit(1)).as("tf"))
+    docs.select(col("doc_id"), TextOps.termCounts(col("text"), numFeatures, asStruct = true).as("v"))
+      .select(col("doc_id"), explode(arrays_zip(col("v.indices"), col("v.values"))).as("e"))
+      .select(col("doc_id"), col("e.indices").as("bucket"), col("e.values").cast("long").as("tf"))
 
   /** Feature-hashing doc embedding (B127): the hashing-trick projection
     * of each document's sparse TF-IDF vector into a dense `dims`-wide

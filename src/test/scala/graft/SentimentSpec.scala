@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ml.classification.{LinearSVC, NaiveBayes}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.ml.Sentiment
 
@@ -153,8 +153,8 @@ class SentimentSpec extends SparkSpec {
 
   test("a fit keeps its input's partitions when its pin fills them at the advisory size") {
     val feats = featurized.repartition(4)
-    val bytes = CacheTracker.pinnedBytes(
-      CacheTracker.cachedCheckpoint(feats.withColumn("split", Sentiment.splitCol("id"))))
+    // the frame fitPredictFeaturized pins: the memo hands it the same pin
+    val bytes = CacheTracker.pinnedBytes(CacheTracker.cachedCheckpoint(Sentiment.fitInput(feats)))
     assert(bytes > 0L)
     val jobs = withAdvisory(Some(s"${bytes / 4 - 1}b")) {
       lossJobs {
@@ -170,32 +170,31 @@ class SentimentSpec extends SparkSpec {
     CacheTracker.drainAll(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_feats").toString
     corpus.write.mode("overwrite").parquet(dir)
-    val data = spark.read.parquet(dir)
-    val feats = Sentiment.featurizer().fit(data).transform(data)
-    // stages that scan the parquet source: one per featurize-chain run
-    // (a read from checkpoint blocks has no file scan in its lineage)
-    @volatile var scans = 0
-    val l = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans += 1
-    }
-    spark.sparkContext.addSparkListener(l)
+    // every row the parquet source hands the featurize chain is counted:
+    // one corpus of rows per chain run (a read from cached or checkpoint
+    // blocks does not evaluate the source's columns again)
+    val sourced = spark.sparkContext.longAccumulator("source rows")
+    val counted = udf { (t: String) => sourced.add(1); t }
+    val data = spark.read.parquet(dir).withColumn("text", counted(col("text")))
+    val n = corpus.count()
+    def runs = sourced.sum.toDouble / n
     try {
+      // IDF's fit runs the chain and fills the term-count stage's cache;
+      // the fitted featurizer's transform and both fits read it
+      val feats = Sentiment.featurizer().fit(data).transform(data)
       val nb = Sentiment.fitPredictFeaturized(feats, new NaiveBayes())
         .as[(Long, Double, Double)].collect().toSet
       Sentiment.fitPredictFeaturized(feats, new LinearSVC().setMaxIter(10).setRegParam(0.1))
-      assert(settle(scans) === 1, "both fits must share one featurize run")
-      // drainAll frees the checkpoint's blocks: the next call must featurize
-      // again, not read the freed blocks
+      assert(runs === 1.0, "the featurizer's fit, its transform and both fits " +
+        "must share one featurize run")
+      // drainAll frees the cache and the checkpoint's blocks: the next call
+      // must featurize again, not read the freed blocks
       CacheTracker.drainAll(spark)
       val again = Sentiment.fitPredictFeaturized(feats, new NaiveBayes())
         .as[(Long, Double, Double)].collect().toSet
-      assert(settle(scans) === 2)
+      assert(runs === 2.0)
       assert(again === nb)
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      CacheTracker.drainAll(spark)
-    }
+    } finally CacheTracker.drainAll(spark)
   }
 
   test("fitted pipeline persists and reloads with identical predictions") {

@@ -55,4 +55,18 @@ class TfIdfSpec extends SparkSpec {
     assert(buckets.forall(b => b >= 0 && b < 16))
     assert(out.agg(sum("tf")).as[Long].head() === 7L) // total tokens
   }
+
+  test("hashingTf buckets are ml.HashingTF's indexOf for tokens of 1 to 9 bytes") {
+    // byte lengths 1-9, several not a multiple of 4 (where SQL hash() differs)
+    val tokens = Seq("a", "z", "ab", "qx", "abc", "cat", "good", "dasi", "hello", "kitty",
+      "abcdef", "engine", "letters", "shuffle", "absolute", "parquets", "beautiful", "whiskered")
+    val twice = tokens.zipWithIndex.map { case (t, i) => (i.toLong, s"$t ${t.toUpperCase}") }
+      .toDF("doc_id", "text")
+    for (n <- Seq(7, 1 << 16, 1 << 18)) {
+      val ml = new org.apache.spark.ml.feature.HashingTF().setNumFeatures(n)
+      val out = TfIdf.hashingTf(twice, n).as[(Long, Int, Long)].collect().toSet
+      assert(out === tokens.zipWithIndex.map { case (t, i) => (i.toLong, ml.indexOf(t), 2L) }.toSet,
+        s"numFeatures $n")
+    }
+  }
 }
